@@ -1822,45 +1822,71 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ORDER MATTERS: the driver's correctness harness checks the FIRST 50
         # entries only. RULE (VERDICT-r5, enforced by tests/test_face_manifest.py):
         # any face whose code changes, and any NEW face, must be inside the
-        # window the round it ships. r15 curation (OPTIMIZATION round 2/2):
-        # the window is (A) every face whose source hash changed under this
-        # round's OPTIMIZATION edits, proven oracle-exact (or parity-pinned)
-        # after the change — OPTIMIZATION_r15.md has the per-face evidence:
-        # the chained-lap sequence materialization (em_trace, ghmm_em_trace,
-        # ghmm_loglik_trace, ghmm_fit, ghmm_trace), the corpus gate fusion
-        # (clean_corpus, prepare_training_corpus, leakage_split, doc_quality,
-        # canonical_docs riders), the IVF-PQ serving-path job cuts
-        # (knn_ivfpq, knn_ivfpq_query, ivfpq_append), and the CDC/IVM family
-        # whose shared-log checkpoint comment records this round's A/B
-        # adjudication (cdc_* x5, ivm_segment_stats,
-        # ivm_stream_segment_stats); (B) the r14 window's unchanged
-        # residents keep their slots up to the 50 cap. Displaced to head the
-        # below-window order (code-unchanged, r14 driver evidence stands):
-        # ewma_user_spend, cosine_neardup_lsh, minhash_lsh,
-        # trigram_lm_score, asset_neardup, and the r14-rotated trainer block
-        # (hmm_fit_grouped, grouped_decode, hmm_select, hmm_fit_restarts).
+        # window the round it ships.
+        #
+        # EM-engine block: the 16 faces whose source hash changed when every
+        # trainer moved onto the one EM loop and stripe codec (hmm/em.py).
+        # Each is oracle-exact after the change (tools/check_oracle.py, sf0.01
+        # and sf0.001) or, for the rows-only trainers, pinned by its parity
+        # pytest. Chained-lap and one-step re-estimation faces (DuckDB-exact):
+        "em_trace": _q_em_trace,
+        "ghmm_em_trace": _q_ghmm_em_trace,
+        "ghmm_loglik_trace": _q_ghmm_loglik_trace,
+        "em_reestimate": _q_em_reestimate,
+        "viterbi_reestimate": _q_viterbi_reestimate,
+        "ghmm_reestimate": _q_ghmm_reestimate,
+        "em_reestimate_grouped": _q_em_reestimate_grouped,
+        # rows-only trainers on the shared loop (each named with its non-SQL
+        # pin in tests/test_lint.py::test_driver_window_stays_oracle_dense):
+        "ghmm_fit": _q_ghmm_fit,
+        "ghmm_trace": _q_ghmm_trace,
+        "hmm_fit": _q_hmm_fit,
+        "hmm_fit_bakis": _q_hmm_fit_bakis,
+        "hmm_fit_semisup": _q_hmm_fit_semisup,
+        "hmm_online": _q_hmm_online,
+        "hmm_fit_grouped_dist": _q_hmm_fit_grouped_dist,
+        "hmm_select": _q_hmm_select,
+        "hmm_fit_restarts": _q_hmm_fit_restarts,
+        # r15 window residents, code-unchanged since their r15 evidence, keep
+        # their slots up to the 50 cap (the TPC-H/spend block and the
+        # rows-only IVF-PQ serving family rotated out to make room):
         "pca_power_parity": _q_pca_power_parity,
         "logreg_gd_parity": _q_logreg_gd_parity,
         "decontaminate_bloom": _q_decontaminate_bloom,
         "bpe_merges": _q_bpe_merges,
         "ivm_stream_segment_stats": _q_ivm_stream_segment_stats,
-        "em_trace": _q_em_trace,
-        "ghmm_em_trace": _q_ghmm_em_trace,
         "neardup_jaccard": _q_neardup_jaccard,
         "neardup_containment": _q_neardup_containment,
-        "ghmm_loglik_trace": _q_ghmm_loglik_trace,
         "dedup_clusters": _q_dedup_clusters,
         "canonical_docs": _q_canonical_docs,
         "leakage_split": _q_leakage_split,
         "clean_corpus": _q_clean_corpus,
         "prepare_training_corpus": _q_prepare_training_corpus,
-        "ghmm_fit": _q_ghmm_fit,
         "ppl_filter": _q_ppl_filter,
         "bigram_lm_score": _q_bigram_lm_score,
         "pagerank_docs": _q_pagerank_docs,
         "triangle_docs": _q_triangle_docs,
         "label_prop_docs": _q_label_prop_docs,
-        "ghmm_trace": _q_ghmm_trace,
+        "cdc_apply_batch": _q_cdc_apply_batch,
+        "cdc_changes": _q_cdc_changes,
+        "cdc_compact": _q_cdc_compact,
+        "cdc_schema_evolution": _q_cdc_schema_evolution,
+        "cdc_time_travel": _q_cdc_time_travel,
+        "convergence_distance": _q_model_half_distance,
+        "simhash": _q_simhash,
+        "copy_spans": _q_copy_spans,
+        "ivm_segment_stats": _q_ivm_segment_stats,
+        "knn_brute": _q_knn_brute,
+        "knn_ivf": _q_knn_ivf,
+        "basket_rules": _q_basket_rules,
+        "doc_quality": _q_doc_quality,
+        "kmeans_parity": _q_kmeans_parity,
+        "bm25_topk": _q_bm25_topk,
+        "hybrid_search": _q_hybrid_search,
+        "neardup_incremental": _q_neardup_incremental,
+        # ---- driver's 50-entry window ends here. Below: faces driver-verified
+        # green in earlier rounds and code-unchanged since (face-hash
+        # manifest), headed by those displaced from the window this round.
         "q1_pricing_summary": _q_q1,
         "q3_top_orders": _q_q3,
         "q5_region_revenue": _q_q5,
@@ -1869,44 +1895,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "user_spend_rank": _q_user_spend_rank,
         "user_spend_deciles": _q_user_spend_deciles,
         "cohort_retention": _q_cohort_retention,
-        "cdc_apply_batch": _q_cdc_apply_batch,
-        "cdc_changes": _q_cdc_changes,
-        "cdc_compact": _q_cdc_compact,
-        "cdc_schema_evolution": _q_cdc_schema_evolution,
-        "cdc_time_travel": _q_cdc_time_travel,
-        "convergence_distance": _q_model_half_distance,
-        # batch-3b OPTIMIZATION rewrites (materialize-once checkpoints in
-        # simhash/copy_spans/basket_rules; lazy per-iteration checkpoints in
-        # bpe_train; the shared CDC change-log checkpoint), each proven
-        # oracle-exact after the change — rotated in, displacing the
-        # code-unchanged em_reestimate/emb_covariance/normalize (r15 head)
-        "simhash": _q_simhash,
-        "copy_spans": _q_copy_spans,
-        "ivm_segment_stats": _q_ivm_segment_stats,
-        "knn_brute": _q_knn_brute,
-        "knn_ivf": _q_knn_ivf,
-        "basket_rules": _q_basket_rules,
-        # batch-2 OPTIMIZATION rewrites (rows-only trainers): fit_grouped's
-        # in-task EM now runs the batched length-bucketed kernel
-        # (hmm_fit_grouped, grouped_decode), and the candidate/restart
-        # sweeps overlap as driver threads (hmm_select, hmm_fit_restarts) —
-        # rotated in for driver evidence, displacing the code-unchanged
-        # q17/q18/q19/q22 (r15 rotation head with the other displaced faces)
-        "doc_quality": _q_doc_quality,
         "knn_ivfpq": _q_knn_ivfpq,
         "knn_ivfpq_query": _q_knn_ivfpq_query,
         "ivfpq_append": _q_ivfpq_append,
-        # batch-3 OPTIMIZATION rewrites, each proven oracle-exact after the
-        # change: kmeans_parity stepwise (48->6 Exchanges), bm25_topk's
-        # single tokenize pass (hybrid_search composes it), the one-pass
-        # per-half transition model (convergence_distance, in the stale
-        # block above), and neardup_incremental's materialized candidate
-        # pairs — rotated in, displacing the code-unchanged q13/q15/
-        # lineitem_stats/merge_upsert (r15 rotation head)
-        "kmeans_parity": _q_kmeans_parity,
-        "bm25_topk": _q_bm25_topk,
-        "hybrid_search": _q_hybrid_search,
-        "neardup_incremental": _q_neardup_incremental,
         "ewma_user_spend": _q_ewma_user_spend,
         "cosine_neardup_lsh": _q_cosine_neardup_lsh,
         "minhash_lsh": _q_minhash,
@@ -1914,12 +1905,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asset_neardup": _q_asset_neardup,
         "hmm_fit_grouped": _q_hmm_fit_grouped,
         "grouped_decode": _q_grouped_decode,
-        "hmm_select": _q_hmm_select,
-        "hmm_fit_restarts": _q_hmm_fit_restarts,
-        # ---- driver's 50-entry window ends here (r14). The faces below
-        # were driver-verified green in r9-r13 and are code-unchanged
-        # since their last check (face-hash manifest).
-        "em_reestimate": _q_em_reestimate,
         "emb_covariance": _q_emb_covariance,
         "normalize": _q_transition_model,
         "lineitem_stats": _q_lineitem_stats,
@@ -1940,7 +1925,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stripe_agg": _q_transition_counts,
         "time_bucket_interpolate": _q_time_bucket_interpolate,
         "viterbi_decode": _q_viterbi_decode,
-        "viterbi_reestimate": _q_viterbi_reestimate,
         "emb_standardize": _q_emb_standardize,
         "posterior_decode": _q_posterior_decode,
         "ewma_spend_stream": _q_ewma_spend_stream,
@@ -1983,7 +1967,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q2_min_cost_supplier": _q_q2_min_cost_supplier,
         "q16_supplier_count": _q_q16_supplier_count,
         "q20_excess_stock": _q_q20_excess_stock,
-        "ghmm_reestimate": _q_ghmm_reestimate,
         "asset_frame_plan": _q_asset_frame_plan,
         "asset_resize": _q_asset_resize,
         "knn_ivf_kmeans": _q_knn_ivf_kmeans,
@@ -2017,8 +2000,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hll_overlap_custs": _q_hll_overlap_custs,
         "hll_distinct_users": _q_hll_distinct_users,
         "value_sampled_quantiles": _q_value_sampled_quantiles,
-        "em_reestimate_grouped": _q_em_reestimate_grouped,
-        "hmm_fit_grouped_dist": _q_hmm_fit_grouped_dist,
         "q12_late_priority": _q_q12_late_priority,
         "q21_waiting_suppliers": _q_q21_waiting_suppliers,
         "viterbi_topk": _q_viterbi_topk,
@@ -2039,10 +2020,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "trending_topk": _q_trending_topk,
         "ghmm_viterbi": _q_ghmm_viterbi,
         "approx_distinct_users": _q_approx_distinct_users,
-        "hmm_fit": _q_hmm_fit,
-        "hmm_fit_bakis": _q_hmm_fit_bakis,
-        "hmm_fit_semisup": _q_hmm_fit_semisup,
-        "hmm_online": _q_hmm_online,
     }
 
 

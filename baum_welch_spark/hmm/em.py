@@ -1,0 +1,208 @@
+"""One distributed EM engine for every Baum-Welch trainer.
+
+The reference is one dataflow (BaumWelchDriver.java:114-184): a driver loop
+around a forward-backward map (BaumWelchMapper), a stripe sum
+(BaumWelchCombiner / BaumWelchReducer) and a convergence test. It lives here
+once; ``fit``, ``fit_semisupervised``, ``fit_viterbi`` and ``fit_gaussian``
+supply only their E-step frame, broadcast payload and M-step to
+:func:`run_em`.
+
+Every E-step UDF combines its batch's statistics into NumPy blocks and
+emits them through the stripe codec (:func:`encode`, read back by
+:func:`decode`), so the per-iteration shuffle and collect are model-sized,
+O(partitions * N * (N + M)) rows, whatever the corpus size.
+"""
+
+from __future__ import annotations
+
+from contextlib import contextmanager
+from dataclasses import dataclass
+from functools import reduce
+from typing import Any, Callable, Iterator
+
+import numpy as np
+import pandas as pd
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+COUNTS_SCHEMA = "kind string, i int, j int, weight double"
+GROUPED_COUNTS_SCHEMA = "group string, " + COUNTS_SCHEMA
+KIND_LOGLIK = "loglik"  # side-channel row: per-batch partial log-likelihood
+
+
+def encode(
+    blocks: dict[str, np.ndarray], loglik: float | None = None, group: str | None = None
+) -> pd.DataFrame:
+    """Named blocks -> one stripe frame: every cell of every block as a
+    ``(kind, i, j, weight)`` row (in block order, row-major), then the
+    ``(loglik, 0, 0, loglik)`` row when ``loglik`` is given. With ``group``
+    the frame gets a leading constant ``group`` column."""
+    kinds, iis, jjs, ws = [], [], [], []
+    for kind, arr in blocks.items():
+        arr = np.asarray(arr, dtype=np.float64)
+        rows, cols = (1, arr.shape[0]) if arr.ndim == 1 else arr.shape
+        kinds += [kind] * arr.size
+        iis.append(np.repeat(np.arange(rows, dtype=np.int32), cols))
+        jjs.append(np.tile(np.arange(cols, dtype=np.int32), rows))
+        ws.append(arr.ravel())
+    if loglik is not None:
+        kinds.append(KIND_LOGLIK)
+        iis.append(np.zeros(1, dtype=np.int32))
+        jjs.append(np.zeros(1, dtype=np.int32))
+        ws.append(np.array([loglik], dtype=np.float64))
+    out = pd.DataFrame(
+        {"kind": kinds, "i": np.concatenate(iis), "j": np.concatenate(jjs),
+         "weight": np.concatenate(ws)}
+    )
+    if group is not None:
+        out.insert(0, "group", group)
+    return out
+
+
+def decode(
+    rows, shapes: dict[str, tuple[int, ...]], value: str = "weight"
+) -> tuple[dict[str, np.ndarray], float]:
+    """Collected stripe rows (Spark Rows or dicts, one per cell, the cell
+    value in column ``value``) -> ({kind: array of ``shapes[kind]``},
+    loglik). Absent cells and an absent loglik row read 0. A non-finite
+    count array raises ``FloatingPointError`` naming its kind: NaN counts
+    (a sequence with probability 0 under the model poisons its whole Arrow
+    batch) must never reach an M-step as a plausible-looking model."""
+    out = {kind: np.zeros(shape) for kind, shape in shapes.items()}
+    ll = 0.0
+    for r in rows:
+        kind = r["kind"]
+        if kind == KIND_LOGLIK:
+            ll = r[value]
+            continue
+        arr = out.get(kind)
+        if arr is None:
+            raise ValueError(f"decode: unexpected stripe kind {kind!r}")
+        if arr.ndim == 1:
+            arr[r["j"]] = r[value]
+        else:
+            arr[r["i"], r["j"]] = r[value]
+    for kind, arr in out.items():
+        if not np.isfinite(arr).all():
+            raise FloatingPointError(
+                f"non-finite {kind!r} EM statistics: a sequence with zero "
+                "probability under the model, or a NaN input, reached the E-step"
+            )
+    return out, ll
+
+
+def sum_stripes(raw: DataFrame, *by: str) -> DataFrame:
+    """The stripe sum (reference combiner + reducer): per-batch stripe rows
+    -> one summed row per ``(*by, kind, i, j)``.
+
+    A NaN weight crosses the Arrow boundary out of the UDF as null, and
+    ``sum`` skips nulls, so a poisoned batch would silently drop out of the
+    total. The weight is turned back into NaN before the sum, which then
+    carries it to :func:`decode`."""
+    weight = F.coalesce(F.col("weight"), F.lit(float("nan")))
+    return raw.groupBy(*by, "kind", "i", "j").agg(F.sum(weight).alias("weight"))
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """Yield ``df`` persisted for repeated passes. A cache the caller
+    manages is used as is and left alone; otherwise the frame is persisted
+    here and unpersisted on exit."""
+    if df.storageLevel.useMemory or df.storageLevel.useDisk:
+        yield df
+        return
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+@dataclass
+class FitResult:
+    model: Any  # HMM or GaussianHMM
+    loglik_trace: list[float]
+    iterations: int
+    converged: bool
+
+
+def run_em(
+    spark: SparkSession,
+    corpus: DataFrame,
+    model,
+    estep: Callable[[DataFrame, Any], DataFrame],
+    payload: Callable[[Any], Any],
+    mstep: Callable[[Any, dict[str, np.ndarray]], Any],
+    shapes: dict[str, tuple[int, ...]],
+    max_iter: int,
+    tol: float,
+    model_out: str | None = None,
+) -> FitResult:
+    """The distributed EM loop (reference driver D2,
+    BaumWelchDriver.java:114-134). Per iteration: broadcast
+    ``payload(model)``, collect ``estep(corpus, bc)`` (the summed stripe
+    frame) over the cached corpus, decode it into ``shapes``, and take
+    ``mstep(model, blocks)`` as the next model — written to
+    ``{model_out}/model-{it}`` when set (reference S3/S4 sinks,
+    BaumWelchDriver.java:128,178). Stops once the model moves less than
+    ``tol`` (``model.distance``, the reference's D4 test); ``tol=0`` runs
+    all ``max_iter`` laps. The trace holds each iteration's loglik row,
+    under the model that iteration started from."""
+    sc = spark.sparkContext
+    trace: list[float] = []
+    converged = False
+    iterations = 0
+    with cached(corpus) as data:
+        for it in range(max_iter):
+            bc = sc.broadcast(payload(model))
+            try:
+                rows = estep(data, bc).collect()
+            finally:
+                bc.unpersist()
+            blocks, ll = decode(rows, shapes)
+            trace.append(ll)
+            new_model = mstep(model, blocks)
+            if model_out is not None:
+                new_model.write(spark, f"{model_out}/model-{it}")
+            delta = model.distance(new_model)
+            model = new_model
+            iterations = it + 1
+            if tol > 0 and delta < tol:
+                converged = True
+                break
+    return FitResult(model=model, loglik_trace=trace, iterations=iterations, converged=converged)
+
+
+def lap_trace(
+    spark: SparkSession,
+    sequences: DataFrame,
+    model,
+    n_iters: int,
+    reestimate: Callable[[DataFrame, Any], DataFrame],
+    next_model: Callable[[list], Any],
+    value: str,
+) -> DataFrame:
+    """Chained EM laps as one tidy trace ``(iter, kind, i, j, <value>)``:
+    lap k+1 runs ``reestimate`` under ``next_model`` of lap k's collected
+    rows (modelOut -> modelIn, BaumWelchDriver.java:114-134). The corpus is
+    built once (a lazy local checkpoint), and laps before the last come
+    back as literal frames of the rows the hand-off collects anyway."""
+    if n_iters < 1:
+        raise ValueError(f"n_iters must be >= 1, got {n_iters}")
+    if n_iters > 1:
+        sequences = sequences.localCheckpoint(eager=False)
+    schema = f"iter int, kind string, i int, j int, {value} double"
+    frames = []
+    for it in range(1, n_iters + 1):
+        step = reestimate(sequences, model)
+        if it == n_iters:
+            frames.append(step.select(F.lit(it).alias("iter"), "kind", "i", "j", value))
+        else:
+            rows = step.collect()
+            frames.append(
+                spark.createDataFrame([(it, r.kind, r.i, r.j, r[value]) for r in rows], schema)
+            )
+            model = next_model(rows)
+    return reduce(DataFrame.unionByName, frames)

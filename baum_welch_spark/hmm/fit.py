@@ -1,39 +1,20 @@
-"""Distributed Baum-Welch EM on Spark DataFrames.
+"""Discrete Baum-Welch EM on Spark DataFrames: the soft-EM trainer and the
+faces built on its E-step. The driver loop itself is ``em.run_em``.
 
-The reference's dataflow (one Hadoop MR job per EM iteration,
-BaumWelchDriver.java:114-184) re-expressed Spark-first:
-
-  E-step  (reference mapper M2-M6, BaumWelchMapper.java:143-258)
-      -> mapInPandas over the cached ``sequences`` DataFrame. Each Arrow
-         batch accumulates expected counts for *all* its sequences into
-         local NumPy arrays and emits ONE flattened count block
-         (~N + N^2 + N*M rows). This is the map-side combine the reference
-         wrote but disabled (BaumWelchCombiner.java, off at
-         BaumWelchDriver.java:171) — done in-UDF, so per-iteration shuffle
-         volume is O(partitions * N * (N + M)) regardless of corpus size.
-         The reference shuffles O(S*T*(2N+1)) stripe records (its T-fold
-         duplicate-emission bug included, SURVEY §2.6 Q1).
-
-  shuffle + M-step  (reference A1-A4, BaumWelchReducer.java:49-149)
-      -> groupBy(kind, i, j).sum(weight) + window normalize. Catalyst runs
-         partial aggregation before the exchange automatically.
-
-  model distribution  (reference: every map task re-reads the model from
-      HDFS, BaumWelchMapper.java:54-117)
-      -> one sc.broadcast of the (pi, A, B) NumPy triple per iteration.
-
-  convergence  (reference D4: two full model re-scans + Frobenius test,
-      BaumWelchDriver.java:196-207)
-      -> driver-side NumPy on the already-collected tiny model.
-
-Scale posture: the only per-iteration actions are one job over the cached
-sequences (scan stays resident via persist) and a collect of ~N*(N+M)+N rows.
-Nothing data-sized ever reaches the driver.
+- E-step (reference mapper M2-M6, BaumWelchMapper.java:143-258):
+  :func:`e_step_udf`, whose Arrow batches each emit ONE count block — the
+  map-side combine the reference wrote but disabled (BaumWelchCombiner.java,
+  off at BaumWelchDriver.java:171). The reference shuffles O(S*T*(2N+1))
+  stripe records instead (its T-fold duplicate emission included, SURVEY
+  §2.6 Q1).
+- M-step (reference A1-A4, BaumWelchReducer.java:49-149): ``kernel.m_step``
+  on the driver for the trainers; :func:`normalize_counts`, a Catalyst
+  window, for the DuckDB-exact re-estimation faces (:func:`em_reestimate`,
+  :func:`em_trace`).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
@@ -41,8 +22,19 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from baum_welch_spark.hmm.em import (
+    COUNTS_SCHEMA,
+    GROUPED_COUNTS_SCHEMA,
+    KIND_LOGLIK,
+    FitResult,
+    cached,
+    decode,
+    encode,
+    lap_trace,
+    run_em,
+    sum_stripes,
+)
 from baum_welch_spark.hmm.kernel import e_step_counts_batch, m_step
 from baum_welch_spark.hmm.model import (
     HMM,
@@ -51,15 +43,12 @@ from baum_welch_spark.hmm.model import (
     KIND_TRANSITION,
 )
 
-COUNTS_SCHEMA = "kind string, i int, j int, weight double"
-KIND_LOGLIK = "loglik"  # side-channel row: per-batch partial log-likelihood
-
 
 def e_step_udf(bc_model, weighted: bool = False):
     """Build the mapInPandas function for one E-step pass.
 
-    One output block per Arrow batch: flattened expected-count rows
-    (kind, i, j, weight) plus a single (loglik, 0, 0, sum) row.
+    One stripe block per Arrow batch (``em.encode``): the batch's expected
+    counts plus its loglik side-channel row.
 
     ``weighted``: the input carries a ``weight`` column and every
     sequence's counts/loglik scale by it (deduplicated-corpus multiplicity
@@ -102,30 +91,8 @@ def e_step_udf(bc_model, weighted: bool = False):
                 pi, A, B, obs_list, cpi, cA, cB,
                 weights=np.array([wt for _, wt in kept]) if weighted else None,
             )
-        if not saw_data:
-            return
-        kinds = [KIND_INITIAL] * n
-        iis = [0] * n
-        jjs = list(range(n))
-        weights = list(cpi)
-        for i in range(n):
-            kinds += [KIND_TRANSITION] * n
-            iis += [i] * n
-            jjs += list(range(n))
-            weights += list(cA[i])
-        for i in range(n):
-            kinds += [KIND_EMISSION] * m
-            iis += [i] * m
-            jjs += list(range(m))
-            weights += list(cB[i])
-        kinds.append(KIND_LOGLIK)
-        iis.append(0)
-        jjs.append(0)
-        weights.append(ll)
-        yield pd.DataFrame(
-            {"kind": kinds, "i": np.array(iis, dtype=np.int32),
-             "j": np.array(jjs, dtype=np.int32), "weight": weights}
-        )
+        if saw_data:
+            yield encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_EMISSION: cB}, ll)
 
     return compute
 
@@ -139,13 +106,18 @@ def expected_counts(
         inp = sequences.select("obs")
     else:
         inp = sequences.select("obs", F.col(weight_col).cast("double").alias("weight"))
-    raw = inp.mapInPandas(
-        e_step_udf(bc_model, weighted=weight_col is not None), schema=COUNTS_SCHEMA
+    return sum_stripes(
+        inp.mapInPandas(e_step_udf(bc_model, weighted=weight_col is not None), schema=COUNTS_SCHEMA)
     )
-    return raw.groupBy("kind", "i", "j").agg(F.sum("weight").alias("weight"))
 
 
-GROUPED_COUNTS_SCHEMA = "group string, kind string, i int, j int, weight double"
+def count_shapes(n_hidden: int, n_observed: int) -> dict[str, tuple[int, ...]]:
+    """Block shapes of the discrete count stripes (and tidy model rows)."""
+    return {
+        KIND_INITIAL: (n_hidden,),
+        KIND_TRANSITION: (n_hidden, n_hidden),
+        KIND_EMISSION: (n_hidden, n_observed),
+    }
 
 
 def grouped_e_step_udf(bc_models):
@@ -156,10 +128,11 @@ def grouped_e_step_udf(bc_models):
     (and no default) are skipped — that is how the driver loop freezes
     converged groups without repartitioning the corpus.
 
-    Emits one flattened count block per (Arrow batch, group): the same
-    in-UDF map-side combine as ``e_step_udf``, so per-iteration shuffle
-    volume is O(partitions × groups-per-partition × N(N+M)) — corpus-size
-    independent, exactly the single-model posture with a group key added.
+    Emits one stripe block per (Arrow batch, group), keyed by a ``group``
+    column: the same in-UDF map-side combine as ``e_step_udf``, so
+    per-iteration shuffle volume is O(partitions × groups-per-partition ×
+    N(N+M)) — corpus-size independent, exactly the single-model posture
+    with a group key added.
     """
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -184,39 +157,15 @@ def grouped_e_step_udf(bc_models):
                     [np.zeros_like(pi), np.zeros_like(A), np.zeros(B.shape), 0.0],
                 )
                 a[3] += e_step_counts_batch(pi, A, B, obs_list, a[0], a[1], a[2])
-        if not acc:
-            return
-        groups, kinds, iis, jjs, weights = [], [], [], [], []
-        for group, (cpi, cA, cB, ll) in acc.items():
-            n, m = cA.shape[0], cB.shape[1]
-            block_kinds = [KIND_INITIAL] * n
-            block_i = [0] * n
-            block_j = list(range(n))
-            block_w = list(cpi)
-            for i in range(n):
-                block_kinds += [KIND_TRANSITION] * n
-                block_i += [i] * n
-                block_j += list(range(n))
-                block_w += list(cA[i])
-            for i in range(n):
-                block_kinds += [KIND_EMISSION] * m
-                block_i += [i] * m
-                block_j += list(range(m))
-                block_w += list(cB[i])
-            block_kinds.append(KIND_LOGLIK)
-            block_i.append(0)
-            block_j.append(0)
-            block_w.append(ll)
-            groups += [group] * len(block_kinds)
-            kinds += block_kinds
-            iis += block_i
-            jjs += block_j
-            weights += block_w
-        yield pd.DataFrame(
-            {"group": groups, "kind": kinds,
-             "i": np.array(iis, dtype=np.int32),
-             "j": np.array(jjs, dtype=np.int32), "weight": weights}
-        )
+        if acc:
+            yield pd.concat(
+                [
+                    encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_EMISSION: cB},
+                           ll, group=group)
+                    for group, (cpi, cA, cB, ll) in acc.items()
+                ],
+                ignore_index=True,
+            )
 
     return compute
 
@@ -227,7 +176,7 @@ def expected_counts_grouped(sequences_with_group: DataFrame, bc_models) -> DataF
     raw = sequences_with_group.select("group", "obs").mapInPandas(
         grouped_e_step_udf(bc_models), schema=GROUPED_COUNTS_SCHEMA
     )
-    return raw.groupBy("group", "kind", "i", "j").agg(F.sum("weight").alias("weight"))
+    return sum_stripes(raw, "group")
 
 
 def em_reestimate_grouped(
@@ -240,22 +189,20 @@ def em_reestimate_grouped(
     iterates). Output: (group, kind, i, j, prob) rounded to 6 dp."""
     bc = spark.sparkContext.broadcast({None: (model.pi, model.A, model.B)})
     counts = expected_counts_grouped(sequences_with_group, bc)
-    w = Window.partitionBy("group", "kind", "i")
-    return (
-        counts.filter((F.col("kind") != KIND_LOGLIK) & (F.col("weight") > 0))
-        .withColumn("prob", F.col("weight") / F.sum("weight").over(w))
-        .select("group", "kind", "i", "j", F.round(F.col("prob"), 6).alias("prob"))
+    return normalize_counts(counts.filter(F.col("weight") > 0), "group").select(
+        "group", "kind", "i", "j", F.round(F.col("prob"), 6).alias("prob")
     )
 
 
-def normalize_counts(counts: DataFrame) -> DataFrame:
-    """M-step normalize as a Catalyst window — the DuckDB-checkable face of
-    the reference reducer's normalize (BaumWelchReducer.java:133-149)."""
-    w = Window.partitionBy("kind", "i")
+def normalize_counts(counts: DataFrame, *by: str) -> DataFrame:
+    """M-step normalize as a Catalyst window over ``(*by, kind, i)`` — the
+    DuckDB-checkable face of the reference reducer's normalize
+    (BaumWelchReducer.java:133-149)."""
+    w = Window.partitionBy(*by, "kind", "i")
     return (
         counts.filter(F.col("kind") != KIND_LOGLIK)
         .withColumn("prob", F.col("weight") / F.sum("weight").over(w))
-        .select("kind", "i", "j", "prob")
+        .select(*by, "kind", "i", "j", "prob")
     )
 
 
@@ -276,12 +223,33 @@ def _masked(model: HMM, mask: np.ndarray) -> HMM:
     ).validate()
 
 
-@dataclass
-class FitResult:
-    model: HMM
-    loglik_trace: list[float]
-    iterations: int
-    converged: bool
+def run_discrete_em(
+    spark: SparkSession,
+    sequences: DataFrame,
+    init: HMM,
+    estep,
+    payload,
+    max_iter: int,
+    tol: float,
+    topology_mask: np.ndarray | None = None,
+    model_out: str | None = None,
+) -> FitResult:
+    """:func:`em.run_em` for a discrete (pi, A, B) model: validated (and
+    masked) init, ``kernel.m_step`` re-estimation (re-masked each time)."""
+    model = init.validate()
+    if topology_mask is not None:
+        topology_mask = np.asarray(topology_mask, dtype=bool)
+        model = _masked(model, topology_mask)
+
+    def mstep(_, blocks: dict[str, np.ndarray]) -> HMM:
+        new = m_step(blocks[KIND_INITIAL], blocks[KIND_TRANSITION], blocks[KIND_EMISSION])
+        return new if topology_mask is None else _masked(new, topology_mask)
+
+    return run_em(
+        spark, sequences, model, estep=estep, payload=payload, mstep=mstep,
+        shapes=count_shapes(model.n_hidden, model.n_observed),
+        max_iter=max_iter, tol=tol, model_out=model_out,
+    )
 
 
 def fit(
@@ -294,10 +262,9 @@ def fit(
     weight_col: str | None = None,
     topology_mask: np.ndarray | None = None,
 ) -> FitResult:
-    """Distributed EM loop (reference driver D2, BaumWelchDriver.java:114-134).
-
-    Per iteration: broadcast model -> E-step mapInPandas -> groupBy sum ->
-    collect tiny counts -> NumPy M-step -> convergence test. Optionally writes
+    """Distributed soft EM (reference driver D2, BaumWelchDriver.java:114-134)
+    on :func:`em.run_em`: the E-step is :func:`expected_counts` under the
+    broadcast (pi, A, B) triple. Optionally writes
     ``{model_out}/model-{it}`` parquet per iteration (reference S3/S4 sinks,
     BaumWelchUtils.java:147-226, BaumWelchDriver.java:128,178).
 
@@ -317,56 +284,12 @@ def fit(
     resets zero-mass rows of an unreachable state to uniform — the
     re-application makes those uniform over ALLOWED transitions instead.
     """
-    model = init.validate()
-    if topology_mask is not None:
-        topology_mask = np.asarray(topology_mask, dtype=bool)
-        model = _masked(model, topology_mask)
-    sc = spark.sparkContext
-    # respect a caller-managed cache: persisting is fit's job only when the
-    # caller didn't already, and then so is the unpersist (ADVICE r1)
-    caller_persisted = sequences.storageLevel.useMemory or sequences.storageLevel.useDisk
-    if not caller_persisted:
-        sequences = sequences.persist(StorageLevel.MEMORY_AND_DISK)
-    trace: list[float] = []
-    converged = False
-    iterations = 0
-    try:
-        for it in range(max_iter):
-            bc = sc.broadcast((model.pi, model.A, model.B))
-            try:
-                rows = expected_counts(sequences, bc, weight_col=weight_col).collect()
-            finally:
-                bc.unpersist()
-            n, m = model.n_hidden, model.n_observed
-            cpi = np.zeros(n)
-            cA = np.zeros((n, n))
-            cB = np.zeros((n, m))
-            ll = 0.0
-            for r in rows:
-                if r.kind == KIND_LOGLIK:
-                    ll += r.weight
-                elif r.kind == KIND_INITIAL:
-                    cpi[r.j] += r.weight
-                elif r.kind == KIND_TRANSITION:
-                    cA[r.i, r.j] += r.weight
-                elif r.kind == KIND_EMISSION:
-                    cB[r.i, r.j] += r.weight
-            trace.append(ll)
-            new_model = m_step(cpi, cA, cB)
-            if topology_mask is not None:
-                new_model = _masked(new_model, topology_mask)
-            if model_out is not None:
-                new_model.write(spark, f"{model_out}/model-{it}")
-            delta = model.distance(new_model)
-            model = new_model
-            iterations = it + 1
-            if tol > 0 and delta < tol:
-                converged = True
-                break
-    finally:
-        if not caller_persisted:
-            sequences.unpersist()
-    return FitResult(model=model, loglik_trace=trace, iterations=iterations, converged=converged)
+    return run_discrete_em(
+        spark, sequences, init,
+        estep=lambda data, bc: expected_counts(data, bc, weight_col=weight_col),
+        payload=lambda m: (m.pi, m.A, m.B),
+        max_iter=max_iter, tol=tol, topology_mask=topology_mask, model_out=model_out,
+    )
 
 
 def fit_restarts(
@@ -406,38 +329,32 @@ def fit_restarts(
     checkpoint trail should re-run ``fit`` with the winning seed and
     ``model_out`` set. Returns (best FitResult, final loglik per restart).
     """
-    from baum_welch_spark.hmm.model import HMM
-
     if n_restarts < 1:
         raise ValueError("n_restarts must be >= 1")
-    caller_persisted = sequences.storageLevel.useMemory or sequences.storageLevel.useDisk
-    if not caller_persisted:
-        sequences = sequences.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # Restarts are independent EM loops over the same cached corpus —
-        # overlap them as driver threads (optimization guide §2.6) so each
-        # restart's tiny per-iteration stages back-fill executors idled by
-        # another restart's stage tail. pool.map preserves restart order, so
-        # `finals` and the first-max tiebreak are identical to the
-        # sequential sweep; per-restart arithmetic is untouched.
-        from concurrent.futures import ThreadPoolExecutor
+    inits = [HMM.random(n_hidden, n_observed, seed=base_seed + r) for r in range(n_restarts)]
+    results = fit_many(spark, sequences, inits, max_iter=max_iter, tol=tol)
+    best: FitResult | None = None
+    finals: list[float] = []
+    for res in results:
+        finals.append(res.loglik_trace[-1])
+        if best is None or res.loglik_trace[-1] > best.loglik_trace[-1]:
+            best = res
+    return best, finals
 
-        def one(r: int) -> FitResult:
-            init = HMM.random(n_hidden, n_observed, seed=base_seed + r)
-            return fit(spark, sequences, init, max_iter=max_iter, tol=tol)
 
-        with ThreadPoolExecutor(max_workers=min(3, n_restarts)) as pool:
-            results = list(pool.map(one, range(n_restarts)))
-        best: FitResult | None = None
-        finals: list[float] = []
-        for res in results:
-            finals.append(res.loglik_trace[-1])
-            if best is None or res.loglik_trace[-1] > best.loglik_trace[-1]:
-                best = res
-        return best, finals
-    finally:
-        if not caller_persisted:
-            sequences.unpersist()
+def fit_many(
+    spark: SparkSession, sequences: DataFrame, inits: list[HMM], max_iter: int, tol: float
+) -> list[FitResult]:
+    """:func:`fit` from each of ``inits`` over ONE cached corpus. The fits
+    are independent EM loops, so they overlap as a small pool of driver
+    threads (optimization guide §2.6): each fit's tiny per-iteration stages
+    back-fill executors idled by another's stage tail. Results come back in
+    ``inits`` order and each fit's arithmetic is untouched, so they are
+    bit-identical to a sequential sweep."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with cached(sequences) as data, ThreadPoolExecutor(max_workers=min(3, len(inits))) as pool:
+        return list(pool.map(lambda m: fit(spark, data, m, max_iter=max_iter, tol=tol), inits))
 
 
 def em_reestimate(
@@ -558,27 +475,6 @@ FROM raw
     )
 
 
-def model_from_tidy(rows, n_hidden: int, n_observed: int) -> HMM:
-    """Rebuild an :class:`HMM` from tidy ``(kind, i, j, prob)`` row dicts
-    (the re-estimation faces' rounded output; absent sparse cells are
-    exactly 0). The UNVALIDATED sibling of :meth:`HMM.from_rows` — keep
-    the two fill loops in sync if the tidy-row convention ever changes.
-    No validate/renormalize here: rounded rows sum to 1 only within ~2e-6
-    (outside validate's 1e-8), and the chained E-step must use the rounded
-    values verbatim — a renormalization the oracle would not perform."""
-    pi = np.zeros(n_hidden)
-    A = np.zeros((n_hidden, n_hidden))
-    B = np.zeros((n_hidden, n_observed))
-    for r in rows:
-        if r["kind"] == KIND_INITIAL:
-            pi[r["j"]] = r["prob"]
-        elif r["kind"] == KIND_TRANSITION:
-            A[r["i"], r["j"]] = r["prob"]
-        elif r["kind"] == KIND_EMISSION:
-            B[r["i"], r["j"]] = r["prob"]
-    return HMM(pi=pi, A=A, B=B)
-
-
 def em_trace(
     spark: SparkSession, sequences: DataFrame, model: HMM, n_iters: int = 2
 ) -> DataFrame:
@@ -599,45 +495,22 @@ def em_trace(
     ~1e-12-at-6dp agreement class as the single-step face, with no error
     compounding across laps.
 
-    The per-lap ``collect`` is model-sized (N^2 + N*M + N rows) — the same
-    driver-side footprint as :func:`fit`'s convergence test. Laps before
-    the last are rebuilt as literal frames from their collected rows (they
-    were computed anyway for the chaining), so nothing is persisted and
-    nothing recomputes at the caller's collect — no cache accumulation
-    across repeated bench invocations (review finding, r12).
+    The laps run on :func:`em.lap_trace`; the per-lap ``collect`` is
+    model-sized (N^2 + N*M + N rows) — the same driver-side footprint as
+    :func:`fit`'s convergence test.
     """
-    if n_iters < 1:
-        raise ValueError(f"n_iters must be >= 1, got {n_iters}")
-    frames = []
-    cur = model
-    schema = "iter int, kind string, i int, j int, prob double"
-    # one sequence build shared by every chained lap (r15, guide §3.3): lap
-    # 1's collect materializes it, later laps (and the caller's action on
-    # the returned last-lap frame) read the checkpoint instead of re-running
-    # the corpus groupBy/collect_list per lap. Lazy and session-scoped —
-    # nothing persists across invocations (the r12 review posture holds).
-    if n_iters > 1:
-        sequences = sequences.localCheckpoint(eager=False)
-    for it in range(1, n_iters + 1):
-        step = em_reestimate(spark, sequences, cur)
-        if it < n_iters:
-            rows = step.collect()
-            frames.append(
-                spark.createDataFrame(
-                    [(it, r.kind, r.i, r.j, r.prob) for r in rows], schema
-                )
-            )
-            cur = model_from_tidy(
-                [r.asDict() for r in rows], cur.n_hidden, cur.n_observed
-            )
-        else:
-            frames.append(
-                step.select(F.lit(it).alias("iter"), "kind", "i", "j", "prob")
-            )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    shapes = count_shapes(model.n_hidden, model.n_observed)
+
+    def next_model(rows) -> HMM:
+        # the rounded rows verbatim: no validate/renormalize — they sum to 1
+        # only within ~2e-6, and the oracle does not renormalize either
+        b, _ = decode(rows, shapes, "prob")
+        return HMM(pi=b[KIND_INITIAL], A=b[KIND_TRANSITION], B=b[KIND_EMISSION])
+
+    return lap_trace(
+        spark, sequences, model, n_iters,
+        lambda seqs, m: em_reestimate(spark, seqs, m), next_model, "prob",
+    )
 
 
 def em_trace_oracle_sql(model: HMM, n_iters: int = 2) -> str:

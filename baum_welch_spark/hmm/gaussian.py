@@ -3,12 +3,12 @@
 The reference engine is discrete-only (its ``HmmModel`` emission matrix is
 N x M over a finite alphabet, BaumWelchUtils.java:127-134); Rabiner 1989
 §VI extends the same EM machinery to continuous densities. This module
-re-expresses that published extension over the engine's existing
-distributed-stripe architecture (hmm/fit.py): per Arrow batch the E-step
-accumulates model-sized sufficient statistics — initial γ₀, transition ξ
-sums, and per-state emission MOMENTS (Σγ, Σγx, Σγx²) instead of per-symbol
-counts — one Catalyst partial agg combines them, and the driver's M-step is
-closed-form:
+re-expresses that published extension on the engine's shared EM loop
+(``em.run_em``): per Arrow batch the E-step accumulates model-sized
+sufficient statistics — initial γ₀, transition ξ sums, and per-state
+emission MOMENTS (Σγ, Σγx, Σγx²) instead of per-symbol counts — encoded as
+stripes by ``em.encode``; the shared stripe sum combines them, and the
+driver's M-step is closed-form:
 
     μ_j  = Σ_t γ_t(j) x_t / Σ_t γ_t(j)
     σ²_j = Σ_t γ_t(j) x_t² / Σ_t γ_t(j) − μ_j²      (floored for safety)
@@ -23,14 +23,15 @@ precomputed doubles embedded as literals) is plain SQL arithmetic, so the
 same recursive-CTE Viterbi/forward oracles pin the distributed kernels
 bit-for-bit modulo the engines' ln/exp last-ulp, absorbed by round(6).
 
-Scale posture: identical to the discrete family — model broadcast, narrow
-``mapInPandas`` E-step, one model-sized shuffle per iteration, no
-data-sized driver materialization.
+``fit_gaussian`` supplies only the moment E-step, the model as broadcast
+payload and the closed-form M-step; caching, broadcast lifecycle, collect,
+decode and the stop test are the loop's.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
@@ -39,14 +40,21 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from baum_welch_spark.hmm.em import (
+    COUNTS_SCHEMA,
+    FitResult,
+    encode,
+    lap_trace,
+    run_em,
+    sum_stripes,
+)
+
 VAR_FLOOR = 1e-6
 
 KIND_INITIAL = "initial"
 KIND_TRANSITION = "transition"
 KIND_MOMENT = "moment"  # j = 0 (Σγ), 1 (Σγx), 2 (Σγx²)
-KIND_LOGLIK = "loglik"
 
-GCOUNTS_SCHEMA = "kind string, i int, j int, weight double"
 VALUE_SEQUENCES_SCHEMA = "seq_id bigint, obs array<double>"
 
 
@@ -290,14 +298,6 @@ def build_value_sequences(
     )
 
 
-@dataclass
-class GaussFitResult:
-    model: GaussianHMM
-    loglik_trace: list[float]
-    iterations: int
-    converged: bool
-
-
 def _gauss_estep_udf(bc_model):
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = bc_model.value
@@ -312,32 +312,17 @@ def _gauss_estep_udf(bc_model):
                 ll += e_step_moments(
                     model, np.asarray(obs, dtype=np.float64), cpi, cA, cm
                 )
-        if not saw:
-            return
-        kinds = [KIND_INITIAL] * n
-        iis = [0] * n
-        jjs = list(range(n))
-        weights = list(cpi)
-        for i in range(n):
-            kinds += [KIND_TRANSITION] * n
-            iis += [i] * n
-            jjs += list(range(n))
-            weights += list(cA[i])
-        for i in range(n):
-            kinds += [KIND_MOMENT] * 3
-            iis += [i] * 3
-            jjs += [0, 1, 2]
-            weights += list(cm[i])
-        kinds.append(KIND_LOGLIK)
-        iis.append(0)
-        jjs.append(0)
-        weights.append(ll)
-        yield pd.DataFrame(
-            {"kind": kinds, "i": np.array(iis, dtype=np.int32),
-             "j": np.array(jjs, dtype=np.int32), "weight": weights}
-        )
+        if saw:
+            yield encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_MOMENT: cm}, ll)
 
     return compute
+
+
+def _gauss_counts(sequences: DataFrame, bc_model) -> DataFrame:
+    """One Gaussian E-step over the corpus -> summed moment stripes."""
+    return sum_stripes(
+        sequences.select("obs").mapInPandas(_gauss_estep_udf(bc_model), schema=COUNTS_SCHEMA)
+    )
 
 
 def fit_gaussian(
@@ -346,51 +331,17 @@ def fit_gaussian(
     init: GaussianHMM,
     max_iter: int = 10,
     tol: float = 0.0,
-) -> GaussFitResult:
-    """Distributed EM for the Gaussian family — the fit.py loop shape:
-    broadcast model -> E-step mapInPandas -> model-sized groupBy sum ->
-    collect stripes -> closed-form M-step -> convergence test."""
-    model = init.validate()
-    trace: list[float] = []
-    converged = False
-    # materialize the sequence build once across EM iterations (the discrete
-    # fit()'s persist pattern, guide §3.3/§5): without it every iteration's
-    # E-step re-runs the corpus groupBy/collect_list from the events scan —
-    # max_iter corpus shuffles for one build's worth of work. Lazy local
-    # checkpoint: the first E-step materializes it; partitioning equals the
-    # un-checkpointed plan's post-AQE layout, so per-task accumulation order
-    # (and hence every float) is unchanged.
-    src = sequences.select("obs").localCheckpoint(eager=False)
-    it = 0
-    for it in range(1, max_iter + 1):
-        bc = spark.sparkContext.broadcast(model)
-        agg = (
-            src.mapInPandas(_gauss_estep_udf(bc), schema=GCOUNTS_SCHEMA)
-            .groupBy("kind", "i", "j")
-            .agg(F.sum("weight").alias("weight"))
-            .collect()
-        )
-        bc.destroy()
-        n = model.pi.shape[0]
-        cpi, cA, cm = np.zeros(n), np.zeros((n, n)), np.zeros((n, 3))
-        ll = 0.0
-        for r in agg:
-            if r.kind == KIND_LOGLIK:
-                ll = r.weight
-            elif r.kind == KIND_INITIAL:
-                cpi[r.j] = r.weight
-            elif r.kind == KIND_TRANSITION:
-                cA[r.i, r.j] = r.weight
-            elif r.kind == KIND_MOMENT:
-                cm[r.i, r.j] = r.weight
-        trace.append(ll)
-        new_model = m_step_gauss(model, cpi, cA, cm)
-        delta = model.distance(new_model)
-        model = new_model
-        if tol > 0 and delta < tol:
-            converged = True
-            break
-    return GaussFitResult(model=model, loglik_trace=trace, iterations=it, converged=converged)
+) -> FitResult:
+    """Distributed EM for the Gaussian family on :func:`em.run_em`: the
+    moment E-step under the broadcast model, then the closed-form
+    :func:`m_step_gauss`."""
+    n = init.pi.shape[0]
+    return run_em(
+        spark, sequences, init.validate(), estep=_gauss_counts, payload=lambda m: m,
+        mstep=lambda m, b: m_step_gauss(m, b[KIND_INITIAL], b[KIND_TRANSITION], b[KIND_MOMENT]),
+        shapes={KIND_INITIAL: (n,), KIND_TRANSITION: (n, n), KIND_MOMENT: (n, 3)},
+        max_iter=max_iter, tol=tol,
+    )
 
 
 # --- decode / score (DuckDB-exact faces) -----------------------------------
@@ -658,15 +609,8 @@ def _ghmm_reestimate_unchecked(
     """ghmm_reestimate body without the validate() gate: the chained trace
     (ghmm_em_trace) feeds 6-dp-ROUNDED models whose pi/A sums are off by up
     to ~2e-6 — within the trace contract but outside validate's 1e-8."""
-    from pyspark.sql import Window
-
     bc = spark.sparkContext.broadcast(model)
-    counts = (
-        sequences.select("obs")
-        .mapInPandas(_gauss_estep_udf(bc), schema=GCOUNTS_SCHEMA)
-        .groupBy("kind", "i", "j")
-        .agg(F.sum("weight").alias("weight"))
-    )
+    counts = _gauss_counts(sequences, bc)
     w = Window.partitionBy("kind", "i")
     probs = (
         counts.filter(F.col("kind").isin(KIND_INITIAL, KIND_TRANSITION))
@@ -837,24 +781,21 @@ FROM m
     )
 
 
-def gauss_model_from_tidy(rows, n_hidden: int) -> GaussianHMM:
-    """Rebuild a :class:`GaussianHMM` from tidy ``(kind, i, j, val)`` rows
-    (ghmm_reestimate's output; absent sparse cells are exactly 0). Does NOT
-    validate — rounded rows sum to ~1 only (see ghmm_em_trace)."""
-    pi = np.zeros(n_hidden)
-    A = np.zeros((n_hidden, n_hidden))
-    mu = np.zeros(n_hidden)
-    s2 = np.zeros(n_hidden)
-    for r in rows:
-        if r["kind"] == KIND_INITIAL:
-            pi[r["j"]] = r["val"]
-        elif r["kind"] == KIND_TRANSITION:
-            A[r["i"], r["j"]] = r["val"]
-        elif r["kind"] == "mu":
-            mu[r["i"]] = r["val"]
-        elif r["kind"] == "var":
-            s2[r["i"]] = r["val"]
-    return GaussianHMM(pi=pi, A=A, mu=mu, sigma2=s2)
+def _tidy_gauss_model(rows, n_hidden: int) -> GaussianHMM:
+    """The GaussianHMM in ghmm_reestimate's tidy ``(kind, i, j, val)``
+    rows, used verbatim: no validate — rounded rows sum to ~1 only."""
+    # imported here: viterbi_gauss's local ``decode`` must not resolve to it
+    from baum_welch_spark.hmm.em import decode
+
+    b, _ = decode(
+        rows,
+        {KIND_INITIAL: (n_hidden,), KIND_TRANSITION: (n_hidden, n_hidden),
+         "mu": (n_hidden, 1), "var": (n_hidden, 1)},
+        "val",
+    )
+    return GaussianHMM(
+        pi=b[KIND_INITIAL], A=b[KIND_TRANSITION], mu=b["mu"][:, 0], sigma2=b["var"][:, 0]
+    )
 
 
 def ghmm_em_trace(
@@ -871,39 +812,14 @@ def ghmm_em_trace(
     recomputed INSIDE DuckDB from the rounded mu/var (`ln` may differ from
     np.log by ~1 ulp; far inside the 6-dp contract) — and feeds it to lap
     k+1's recursions, so no model values cross from the Python driver.
-    Per-lap collect is model-sized (N^2 + 3N + N rows)."""
-    if n_iters < 1:
-        raise ValueError(f"n_iters must be >= 1, got {n_iters}")
-    frames = []
-    cur = model.validate()
-    n = cur.pi.shape[0]
-    schema = "iter int, kind string, i int, j int, val double"
-    # one sequence build shared by every chained lap (guide §3.3): lap 1's
-    # collect materializes it, lap 2+ (and the caller's final action) read
-    # the checkpoint instead of re-running the corpus groupBy per lap
-    if n_iters > 1:
-        sequences = sequences.localCheckpoint(eager=False)
-    for it in range(1, n_iters + 1):
-        step = _ghmm_reestimate_unchecked(spark, sequences, cur)
-        if it < n_iters:
-            # laps before the last become literal frames from the rows the
-            # chaining collects anyway — no persist, no recompute, no cache
-            # accumulation across bench invocations (fit.em_trace's pattern)
-            rows = step.collect()
-            frames.append(
-                spark.createDataFrame(
-                    [(it, r.kind, r.i, r.j, r.val) for r in rows], schema
-                )
-            )
-            cur = gauss_model_from_tidy([r.asDict() for r in rows], n)
-        else:
-            frames.append(
-                step.select(F.lit(it).alias("iter"), "kind", "i", "j", "val")
-            )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    The laps run on :func:`em.lap_trace`; the per-lap collect is
+    model-sized (N^2 + 3N + N rows)."""
+    n = model.pi.shape[0]
+    return lap_trace(
+        spark, sequences, model.validate(), n_iters,
+        lambda seqs, m: _ghmm_reestimate_unchecked(spark, seqs, m),
+        lambda rows: _tidy_gauss_model(rows, n), "val",
+    )
 
 
 def ghmm_loglik_trace(
@@ -941,11 +857,8 @@ def ghmm_loglik_trace(
         )
         if it < n_iters:
             rows = _ghmm_reestimate_unchecked(spark, sequences, cur).collect()
-            cur = gauss_model_from_tidy([r.asDict() for r in rows], n)
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+            cur = _tidy_gauss_model(rows, n)
+    return reduce(DataFrame.unionByName, frames)
 
 
 def gauss_trace_oracle_sql(model: GaussianHMM, n_iters: int = 2) -> str:

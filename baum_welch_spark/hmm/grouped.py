@@ -119,28 +119,25 @@ def fit_grouped_distributed(
 
     Output: the same tidy GROUPED_MODEL_SCHEMA rows as fit_grouped.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    from baum_welch_spark.hmm.fit import expected_counts_grouped
+    from baum_welch_spark.hmm.em import cached, decode
+    from baum_welch_spark.hmm.fit import count_shapes, expected_counts_grouped
     from baum_welch_spark.hmm.kernel import m_step
     from baum_welch_spark.hmm.model import (
         KIND_EMISSION,
         KIND_INITIAL,
         KIND_TRANSITION,
     )
-    from baum_welch_spark.hmm.fit import KIND_LOGLIK
 
     init = HMM.random(n_hidden, n_observed, seed=seed)
+    shapes = count_shapes(n_hidden, n_observed)
     # cast the group key to string up front: the broadcast model dict is
     # keyed by str, and a non-string group column would otherwise miss the
     # lookup inside the E-step UDF and silently drop the group
-    data = sequences_with_group.select(
-        F.col("group").cast("string").alias("group"), "seq_id", "obs"
-    )
-    caller_persisted = data.storageLevel.useMemory or data.storageLevel.useDisk
-    if not caller_persisted:
-        data = data.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with cached(
+        sequences_with_group.select(
+            F.col("group").cast("string").alias("group"), "seq_id", "obs"
+        )
+    ) as data:
         # group inventory + sequence counts: one group-cardinality-sized
         # collect (the trainer's output is per-group models, so group count
         # bounds driver memory by definition)
@@ -165,49 +162,23 @@ def fit_grouped_distributed(
                 rows = expected_counts_grouped(src, bc).collect()
             finally:
                 bc.unpersist()
-            acc: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-            ll_now: dict[str, float] = {}
+            by_group: dict[str, list] = {}
             for r in rows:
-                g = str(r.group)
-                if r.kind == KIND_LOGLIK:
-                    ll_now[g] = r.weight
-                    continue
-                if g not in acc:
-                    acc[g] = (
-                        np.zeros(n_hidden),
-                        np.zeros((n_hidden, n_hidden)),
-                        np.zeros((n_hidden, n_observed)),
-                    )
-                cpi, cA, cB = acc[g]
-                if r.kind == KIND_INITIAL:
-                    cpi[r.j] += r.weight
-                elif r.kind == KIND_TRANSITION:
-                    cA[r.i, r.j] += r.weight
-                elif r.kind == KIND_EMISSION:
-                    cB[r.i, r.j] += r.weight
+                by_group.setdefault(str(r.group), []).append(r)
             # iterate over ACTIVE groups, not just groups that produced
             # counts: a group whose sequences are all empty emits nothing,
             # and sequential EM (fit_grouped) still runs its M-step on zero
             # counts (-> uniform model, loglik 0.0) — parity demands the
             # same here
             for g in sorted(active):
-                tri = acc.get(
-                    g,
-                    (
-                        np.zeros(n_hidden),
-                        np.zeros((n_hidden, n_hidden)),
-                        np.zeros((n_hidden, n_observed)),
-                    ),
+                blocks, last_ll[g] = decode(by_group.get(g, []), shapes)
+                new_model = m_step(
+                    blocks[KIND_INITIAL], blocks[KIND_TRANSITION], blocks[KIND_EMISSION]
                 )
-                new_model = m_step(*tri)
                 delta = models[g].distance(new_model)
                 models[g] = new_model
-                last_ll[g] = ll_now.get(g, 0.0)
                 if tol > 0 and delta < tol:
                     active.discard(g)
-    finally:
-        if not caller_persisted:
-            data.unpersist()
 
     out_rows = []
     for g in sorted(models):

@@ -4,10 +4,11 @@ reference trains offline only, BaumWelchDriver.java:114-184; algorithm per
 Cappe & Moulines 2009, "On-line expectation-maximization algorithm for
 latent data models", and Liang & Klein 2009's stepwise-EM formulation).
 
-Per micro-batch t the SAME distributed E-step the batch loop uses
+Per micro-batch t the discrete E-step every trainer uses
 (``fit.expected_counts`` — mapInPandas with in-UDF combine, model
-broadcast) produces the batch's expected counts; the running sufficient
-statistics then take a stepwise-decaying interpolation
+broadcast) produces the batch's expected counts, read back with the shared
+stripe codec (``em.decode``); the running sufficient statistics then take
+a stepwise-decaying interpolation
 
     s  <-  (1 - eta_t) * s + eta_t * (batch_counts / batch_sequences)
     eta_t = (t + 2) ** -alpha          (alpha in (0.5, 1])
@@ -17,8 +18,8 @@ stream this converges to the batch-EM fixed point while touching each
 record once — the training loop a 100 TB/day corpus needs when "cache the
 corpus and iterate" stops being an option.
 
-Scale posture: identical per-batch shape to one ``fit`` iteration — one
-job over the micro-batch, a model-sized collect, a driver-side
+One update is one step, not a loop, so it does not run on ``em.run_em``:
+one job over the micro-batch, a model-sized collect, a driver-side
 re-normalize, one broadcast. State is the O(N^2 + N*M) stats triple on
 the driver (checkpoint-friendly: it is re-derivable from the written
 model trail). Nothing batch-sized ever reaches the driver.
@@ -32,10 +33,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 
-from baum_welch_spark.hmm.fit import (
-    KIND_LOGLIK,
-    expected_counts,
-)
+from baum_welch_spark.hmm.em import decode
+from baum_welch_spark.hmm.fit import count_shapes, expected_counts
 from baum_welch_spark.hmm.kernel import m_step
 from baum_welch_spark.hmm.model import (
     HMM,
@@ -66,19 +65,8 @@ class OnlineEM:
             rows = expected_counts(batch, bc).collect()
         finally:
             bc.unpersist()
-        cpi = np.zeros(n)
-        cA = np.zeros((n, n))
-        cB = np.zeros((n, m))
-        ll = 0.0
-        for r in rows:
-            if r.kind == KIND_LOGLIK:
-                ll += r.weight
-            elif r.kind == KIND_INITIAL:
-                cpi[r.j] += r.weight
-            elif r.kind == KIND_TRANSITION:
-                cA[r.i, r.j] += r.weight
-            elif r.kind == KIND_EMISSION:
-                cB[r.i, r.j] += r.weight
+        blocks, ll = decode(rows, count_shapes(n, m))
+        cpi, cA, cB = blocks[KIND_INITIAL], blocks[KIND_TRANSITION], blocks[KIND_EMISSION]
         n_seqs = float(cpi.sum())  # every sequence contributes exactly 1 to pi
         if n_seqs == 0:
             return self.model  # empty micro-batch: state unchanged
@@ -142,21 +130,17 @@ def online_fit_face(
     (an iterative trainer); pytest pins the loglik-gain bar vs batch EM
     (tests/test_online.py)."""
     from baum_welch_spark.functions.columns import portable_hash60
+    from baum_welch_spark.hmm.em import cached
     from baum_welch_spark.operators.sequences import build_sequences, symbol_dictionary
     from pyspark.sql import functions as F
-    from pyspark.storagelevel import StorageLevel
 
     n_observed = symbol_dictionary(events, "event_type").count()
-    seqs = (
+    state = OnlineEM(model=HMM.random(n_hidden, n_observed, seed=seed), alpha=alpha)
+    with cached(
         build_sequences(events)
         .withColumn("_b", (portable_hash60(F.col("seq_id")) % n_batches).cast("int"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
-        state = OnlineEM(model=HMM.random(n_hidden, n_observed, seed=seed), alpha=alpha)
+    ) as seqs:
         for _ in range(epochs):
             for b in range(n_batches):
                 state.update(spark, seqs.filter(F.col("_b") == b).select("seq_id", "obs"))
-        return state.model.to_df(spark)
-    finally:
-        seqs.unpersist()
+    return state.model.to_df(spark)

@@ -29,9 +29,9 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from baum_welch_spark.hmm.fit import FitResult, fit
+from baum_welch_spark.hmm.em import FitResult, cached
+from baum_welch_spark.hmm.fit import fit_many
 from baum_welch_spark.hmm.model import HMM
 
 
@@ -58,46 +58,25 @@ def select_n_hidden(
     """
     if not candidates:
         raise ValueError("select_n_hidden: no candidates")
-    caller_persisted = sequences.storageLevel.useMemory or sequences.storageLevel.useDisk
-    if not caller_persisted:
-        sequences = sequences.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        t_total = sequences.select(F.sum(F.size("obs")).alias("t")).collect()[0].t or 0
+    with cached(sequences) as data:
+        t_total = data.select(F.sum(F.size("obs")).alias("t")).collect()[0].t or 0
         if t_total == 0:
             raise ValueError(
                 "select_n_hidden: corpus has zero observations (empty frame "
                 "or all-empty obs arrays) — BIC's ln(T) term is undefined"
             )
-        # Candidates are INDEPENDENT EM loops over the same cached corpus, so
-        # run them as overlapping driver threads (optimization guide §2.6):
-        # Spark schedules concurrent jobs FIFO and each candidate's tiny
-        # per-iteration stages back-fill the executors the previous
-        # candidate's stage tail leaves idle. Per-candidate arithmetic is
-        # untouched (each fit broadcasts its own model and collects its own
-        # counts), so results are bit-identical to the sequential sweep.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def train(n: int) -> tuple[int, FitResult]:
-            return n, fit(
-                spark, sequences, HMM.random(n, n_observed, seed=seed),
-                max_iter=max_iter, tol=tol,
-            )
-
-        with ThreadPoolExecutor(max_workers=min(3, len(candidates))) as pool:
-            fits = dict(pool.map(train, candidates))
-        rows = []
-        for n in candidates:
-            res = fits[n]
-            ll = res.loglik_trace[-1] if res.loglik_trace else float("nan")
-            p = free_params(n, n_observed)
-            rows.append(
-                (n, p, float(ll),
-                 float(p * np.log(t_total) - 2.0 * ll),
-                 float(2.0 * p - 2.0 * ll))
-            )
-    finally:
-        if not caller_persisted:
-            sequences.unpersist()
+        inits = [HMM.random(n, n_observed, seed=seed) for n in candidates]
+        fits = dict(zip(candidates, fit_many(spark, data, inits, max_iter=max_iter, tol=tol)))
+    rows = []
+    for n in candidates:
+        res = fits[n]
+        ll = res.loglik_trace[-1] if res.loglik_trace else float("nan")
+        p = free_params(n, n_observed)
+        rows.append(
+            (n, p, float(ll),
+             float(p * np.log(t_total) - 2.0 * ll),
+             float(2.0 * p - 2.0 * ll))
+        )
     best = min(range(len(rows)), key=lambda i: rows[i][3])
     out = [
         (*r, i == best)

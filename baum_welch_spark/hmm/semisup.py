@@ -21,9 +21,10 @@ sum_labeled log P(O,S) + sum_unlabeled log P(O) is non-decreasing per
 iteration (EM monotonicity holds: labeled terms are exact, unlabeled terms
 get the usual Q-function bound).
 
-Scale shape: identical to fit() — broadcast model, ONE mapInPandas pass
-over the mixed corpus (each Arrow batch splits itself into labeled/
-unlabeled rows), model-sized count shuffle, driver M-step.
+Runs on the shared EM loop (``em.run_em`` via ``fit.run_discrete_em``):
+the only trainer-specific piece is the E-step UDF below, which splits each
+Arrow batch into its labeled and unlabeled rows and emits one pooled count
+block.
 """
 
 from __future__ import annotations
@@ -35,10 +36,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from baum_welch_spark.hmm.fit import COUNTS_SCHEMA, KIND_LOGLIK, FitResult
-from baum_welch_spark.hmm.kernel import e_step_counts_batch, m_step
+from baum_welch_spark.hmm.em import COUNTS_SCHEMA, FitResult, encode, sum_stripes
+from baum_welch_spark.hmm.fit import run_discrete_em
+from baum_welch_spark.hmm.kernel import e_step_counts_batch
 from baum_welch_spark.hmm.model import (
     HMM,
     KIND_EMISSION,
@@ -105,31 +106,8 @@ def _semisup_udf(bc_model):
             if unlab:
                 saw = True
                 ll += e_step_counts_batch(pi, A, B, unlab, cpi, cA, cB)
-        if not saw:
-            return
-        kinds, iis, jjs, weights = [], [], [], []
-        kinds += [KIND_INITIAL] * n
-        iis += [0] * n
-        jjs += list(range(n))
-        weights += list(cpi)
-        for i in range(n):
-            kinds += [KIND_TRANSITION] * n
-            iis += [i] * n
-            jjs += list(range(n))
-            weights += list(cA[i])
-        for i in range(n):
-            kinds += [KIND_EMISSION] * m
-            iis += [i] * m
-            jjs += list(range(m))
-            weights += list(cB[i])
-        kinds.append(KIND_LOGLIK)
-        iis.append(0)
-        jjs.append(0)
-        weights.append(ll)
-        yield pd.DataFrame(
-            {"kind": kinds, "i": np.array(iis, dtype=np.int32),
-             "j": np.array(jjs, dtype=np.int32), "weight": weights}
-        )
+        if saw:
+            yield encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_EMISSION: cB}, ll)
 
     return compute
 
@@ -146,51 +124,13 @@ def fit_semisupervised(
 
     ``sequences``: (seq_id, obs, <states_col>) — states null (or
     length-mismatched, treated as unlabeled) for EM rows. The loglik trace
-    is the mixed objective. Same cache/convergence discipline as fit()."""
-    model = init.validate()
-    sc = spark.sparkContext
-    caller_persisted = sequences.storageLevel.useMemory or sequences.storageLevel.useDisk
-    if not caller_persisted:
-        sequences = sequences.persist(StorageLevel.MEMORY_AND_DISK)
-    inp = sequences.select("obs", F.col(states_col).alias("states"))
-    trace: list[float] = []
-    converged = False
-    iterations = 0
-    try:
-        for it in range(max_iter):
-            bc = sc.broadcast((model.pi, model.A, model.B))
-            try:
-                rows = (
-                    inp.mapInPandas(_semisup_udf(bc), schema=COUNTS_SCHEMA)
-                    .groupBy("kind", "i", "j")
-                    .agg(F.sum("weight").alias("weight"))
-                    .collect()
-                )
-            finally:
-                bc.unpersist()
-            n, m = model.n_hidden, model.n_observed
-            cpi = np.zeros(n)
-            cA = np.zeros((n, n))
-            cB = np.zeros((n, m))
-            ll = 0.0
-            for r in rows:
-                if r.kind == KIND_LOGLIK:
-                    ll += r.weight
-                elif r.kind == KIND_INITIAL:
-                    cpi[r.j] += r.weight
-                elif r.kind == KIND_TRANSITION:
-                    cA[r.i, r.j] += r.weight
-                elif r.kind == KIND_EMISSION:
-                    cB[r.i, r.j] += r.weight
-            trace.append(ll)
-            new_model = m_step(cpi, cA, cB)
-            delta = model.distance(new_model)
-            model = new_model
-            iterations = it + 1
-            if tol > 0 and delta < tol:
-                converged = True
-                break
-    finally:
-        if not caller_persisted:
-            sequences.unpersist()
-    return FitResult(model=model, loglik_trace=trace, iterations=iterations, converged=converged)
+    is the mixed objective."""
+    return run_discrete_em(
+        spark, sequences, init,
+        estep=lambda data, bc: sum_stripes(
+            data.select("obs", F.col(states_col).alias("states"))
+            .mapInPandas(_semisup_udf(bc), schema=COUNTS_SCHEMA)
+        ),
+        payload=lambda m: (m.pi, m.A, m.B),
+        max_iter=max_iter, tol=tol,
+    )

@@ -9,12 +9,10 @@ re-estimates from the resulting HARD counts:
     A_ij  = #(path transitions i -> j)                    / #(i in path[:-1])
     B_ik  = #(path visits i while emitting symbol k)      / #(i in path)
 
-Same dataflow shape as the soft fit (reference driver D2,
-BaumWelchDriver.java:114-134, re-expressed Spark-first): broadcast model ->
-one mapInPandas pass accumulating per-batch count stripes -> groupBy sum of
-the tiny (kind, i, j) blocks -> driver-side NumPy normalize. Shuffle volume
-per iteration is O(partitions * N * (N + M)), corpus-size-free; the Viterbi
-joint log-likelihood (sum of best-path scores) is the convergence metric.
+The distributed trainer runs on the shared EM loop (``em.run_em`` via
+``fit.run_discrete_em``); what is specific here is the hard-count UDF and
+its broadcast payload, the log-model. The Viterbi joint log-likelihood
+(sum of best-path scores) is the loglik trace.
 
 It converges in far fewer, far cheaper iterations than soft EM (each pass is
 a single max-product DP, no backward sweep / xi accumulation) at the cost of
@@ -37,15 +35,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from baum_welch_spark.hmm.decode import _viterbi_one, viterbi_ctes
-from baum_welch_spark.hmm.fit import (
-    COUNTS_SCHEMA,
-    KIND_LOGLIK,
-    FitResult,
-    normalize_counts,
-)
+from baum_welch_spark.hmm.em import COUNTS_SCHEMA, FitResult, encode, sum_stripes
+from baum_welch_spark.hmm.fit import normalize_counts, run_discrete_em
 from baum_welch_spark.hmm.kernel import m_step
 from baum_welch_spark.hmm.model import (
     HMM,
@@ -58,8 +51,8 @@ from baum_welch_spark.hmm.model import (
 def hard_count_udf(bc_log_model):
     """mapInPandas function for one hard-EM pass: Viterbi-decode every
     sequence in the Arrow batch, accumulate path counts into local NumPy
-    arrays, and emit ONE flattened (kind, i, j, weight) block per batch plus
-    the Viterbi joint log-likelihood side-channel row (the in-UDF map-side
+    arrays, and emit ONE stripe block per batch (``em.encode``) with the
+    Viterbi joint log-likelihood as its loglik row (the in-UDF map-side
     combine, same shape as fit.e_step_udf)."""
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -82,30 +75,8 @@ def hard_count_udf(bc_log_model):
                 if path.shape[0] > 1:
                     np.add.at(cA, (path[:-1], path[1:]), 1.0)
                 np.add.at(cB, (path, o), 1.0)
-        if not saw_data:
-            return
-        kinds = [KIND_INITIAL] * n
-        iis = [0] * n
-        jjs = list(range(n))
-        weights = list(cpi)
-        for i in range(n):
-            kinds += [KIND_TRANSITION] * n
-            iis += [i] * n
-            jjs += list(range(n))
-            weights += list(cA[i])
-        for i in range(n):
-            kinds += [KIND_EMISSION] * m
-            iis += [i] * m
-            jjs += list(range(m))
-            weights += list(cB[i])
-        kinds.append(KIND_LOGLIK)
-        iis.append(0)
-        jjs.append(0)
-        weights.append(ll)
-        yield pd.DataFrame(
-            {"kind": kinds, "i": np.array(iis, dtype=np.int32),
-             "j": np.array(jjs, dtype=np.int32), "weight": weights}
-        )
+        if saw_data:
+            yield encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_EMISSION: cB}, ll)
 
     return compute
 
@@ -113,10 +84,15 @@ def hard_count_udf(bc_log_model):
 def hard_counts(sequences: DataFrame, bc_log_model) -> DataFrame:
     """One hard-EM pass over the corpus -> aggregated (kind, i, j, weight)
     counts, including the loglik side-channel row."""
-    raw = sequences.select("obs").mapInPandas(
-        hard_count_udf(bc_log_model), schema=COUNTS_SCHEMA
+    return sum_stripes(
+        sequences.select("obs").mapInPandas(hard_count_udf(bc_log_model), schema=COUNTS_SCHEMA)
     )
-    return raw.groupBy("kind", "i", "j").agg(F.sum("weight").alias("weight"))
+
+
+def _log_model(model: HMM) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The hard-EM broadcast payload: log pi/A/B (-inf at structural zeros)."""
+    with np.errstate(divide="ignore"):
+        return np.log(model.pi), np.log(model.A), np.log(model.B)
 
 
 def viterbi_reestimate(
@@ -132,10 +108,7 @@ def viterbi_reestimate(
     loop applies the uniform fallback driver-side (kernel.m_step).
     Integer-count / integer-count division is one exact IEEE op on both
     engines, so the oracle needs no rounding."""
-    with np.errstate(divide="ignore"):
-        bc = spark.sparkContext.broadcast(
-            (np.log(model.pi), np.log(model.A), np.log(model.B))
-        )
+    bc = spark.sparkContext.broadcast(_log_model(model))
     counts = hard_counts(sequences, bc)
     return normalize_counts(counts.filter(F.col("weight") > 0))
 
@@ -179,10 +152,7 @@ def fit_viterbi(
     """Distributed segmental k-means loop: per iteration broadcast the
     log-model, hard-count via one mapInPandas pass, collect the tiny count
     blocks, normalize driver-side (kernel.m_step — zero-mass rows fall back
-    to uniform), and test convergence on the Viterbi joint log-likelihood.
-
-    Same cache discipline as fit(): persists the corpus only if the caller
-    didn't, and then unpersists it.
+    to uniform), and trace the Viterbi joint log-likelihood.
 
     ``topology_mask``: structural transition topology, same contract as
     ``fit(topology_mask=...)``. Hard EM preserves it on its own even more
@@ -190,59 +160,12 @@ def fit_viterbi(
     Viterbi path ever uses one and masked counts are exactly zero — but
     ``m_step``'s uniform fallback for never-visited states must still be
     re-masked (uniform over allowed, not the full row)."""
-    model = init.validate()
-    if topology_mask is not None:
-        from baum_welch_spark.hmm.fit import _masked
-
-        topology_mask = np.asarray(topology_mask, dtype=bool)
-        model = _masked(model, topology_mask)
-    sc = spark.sparkContext
-    caller_persisted = sequences.storageLevel.useMemory or sequences.storageLevel.useDisk
-    if not caller_persisted:
-        sequences = sequences.persist(StorageLevel.MEMORY_AND_DISK)
-    trace: list[float] = []
-    converged = False
-    iterations = 0
-    try:
-        for it in range(max_iter):
-            with np.errstate(divide="ignore"):
-                bc = sc.broadcast((np.log(model.pi), np.log(model.A), np.log(model.B)))
-            try:
-                rows = hard_counts(sequences, bc).collect()
-            finally:
-                bc.unpersist()
-            n, m = model.n_hidden, model.n_observed
-            cpi = np.zeros(n)
-            cA = np.zeros((n, n))
-            cB = np.zeros((n, m))
-            ll = 0.0
-            for r in rows:
-                if r.kind == KIND_LOGLIK:
-                    ll += r.weight
-                elif r.kind == KIND_INITIAL:
-                    cpi[r.j] += r.weight
-                elif r.kind == KIND_TRANSITION:
-                    cA[r.i, r.j] += r.weight
-                elif r.kind == KIND_EMISSION:
-                    cB[r.i, r.j] += r.weight
-            trace.append(ll)
-            new_model = m_step(cpi, cA, cB)
-            if topology_mask is not None:
-                from baum_welch_spark.hmm.fit import _masked
-
-                new_model = _masked(new_model, topology_mask)
-            delta = model.distance(new_model)
-            model = new_model
-            iterations = it + 1
-            # hard EM's loglik is not monotone in general; converge on the
-            # model-space Frobenius distance like the reference's D4 test
-            if tol > 0 and delta < tol:
-                converged = True
-                break
-    finally:
-        if not caller_persisted:
-            sequences.unpersist()
-    return FitResult(model=model, loglik_trace=trace, iterations=iterations, converged=converged)
+    # hard EM's loglik is not monotone in general; convergence is on the
+    # model-space distance, like the reference's D4 test
+    return run_discrete_em(
+        spark, sequences, init, estep=hard_counts, payload=_log_model,
+        max_iter=max_iter, tol=tol, topology_mask=topology_mask,
+    )
 
 
 def sequential_viterbi_train(
@@ -257,8 +180,7 @@ def sequential_viterbi_train(
     model = init.validate()
     trace: list[float] = []
     for _ in range(max_iter):
-        with np.errstate(divide="ignore"):
-            log_pi, log_A, log_B = np.log(model.pi), np.log(model.A), np.log(model.B)
+        log_pi, log_A, log_B = _log_model(model)
         n, m = model.n_hidden, model.n_observed
         cpi = np.zeros(n)
         cA = np.zeros((n, n))

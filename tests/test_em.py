@@ -1,0 +1,235 @@
+"""The shared EM engine (hmm/em.py): the stripe codec round-trips exactly,
+non-finite statistics fail loudly, and every trainer on the shared loop
+keeps the per-iteration Spark job count."""
+
+import uuid
+
+import numpy as np
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+from baum_welch_spark.hmm import HMM
+from baum_welch_spark.hmm.em import KIND_LOGLIK, decode, encode
+from baum_welch_spark.hmm.fit import count_shapes, fit
+from baum_welch_spark.operators.sequences import build_sequences
+from baum_welch_spark.sources.io import load_table
+
+from conftest import SF0001
+
+
+def _roundtrip(blocks, loglik=None, group=None):
+    frame = encode(blocks, loglik, group=group)
+    shapes = {k: np.shape(v) for k, v in blocks.items()}
+    return frame, decode(frame.to_dict("records"), shapes)
+
+
+def _assert_bits_equal(got: np.ndarray, want: np.ndarray):
+    assert got.shape == want.shape
+    assert got.tobytes() == np.asarray(want, dtype=np.float64).tobytes()
+
+
+# -- codec round trip (no Spark) ---------------------------------------------
+
+
+def test_codec_roundtrip_discrete_blocks_bit_exact():
+    rng = np.random.default_rng(0)
+    blocks = {"initial": rng.random(4) * 1e3, "transition": rng.random((4, 4)) / 7,
+              "emission": rng.random((4, 6)) ** 9}
+    frame, (got, ll) = _roundtrip(blocks, loglik=-12345.678901234567)
+    assert list(frame.columns) == ["kind", "i", "j", "weight"]
+    assert frame["i"].dtype == np.int32 and frame["j"].dtype == np.int32
+    assert len(frame) == 4 + 16 + 24 + 1
+    assert frame.iloc[-1].kind == KIND_LOGLIK
+    # 1-D blocks ride on i = 0, indexed by j
+    init = frame[frame.kind == "initial"]
+    assert (init.i == 0).all() and list(init.j) == [0, 1, 2, 3]
+    assert ll == -12345.678901234567
+    for k, v in blocks.items():
+        _assert_bits_equal(got[k], v)
+
+
+def test_codec_roundtrip_gaussian_moment_blocks_bit_exact():
+    rng = np.random.default_rng(1)
+    n = 3
+    moments = np.column_stack([rng.random(n), rng.normal(size=n) * 1e5, rng.random(n) * 1e11])
+    blocks = {"initial": rng.random(n), "transition": rng.random((n, n)), "moment": moments}
+    frame, (got, ll) = _roundtrip(blocks, loglik=3.5)
+    m = frame[frame.kind == "moment"]
+    assert list(m.i) == [0, 0, 0, 1, 1, 1, 2, 2, 2] and list(m.j) == [0, 1, 2] * 3
+    assert ll == 3.5
+    for k, v in blocks.items():
+        _assert_bits_equal(got[k], v)
+
+
+def test_codec_roundtrip_grouped_blocks_bit_exact():
+    rng = np.random.default_rng(2)
+    per_group = {
+        g: ({"initial": rng.random(2), "transition": rng.random((2, 2)),
+             "emission": rng.random((2, 3))}, float(rng.normal()))
+        for g in ("seg0", "seg1", "seg2")
+    }
+    frame = pd.concat(
+        [encode(b, ll, group=g) for g, (b, ll) in per_group.items()], ignore_index=True
+    )
+    assert list(frame.columns) == ["group", "kind", "i", "j", "weight"]
+    for g, (blocks, ll) in per_group.items():
+        rows = frame[frame.group == g].to_dict("records")
+        got, got_ll = decode(rows, {k: v.shape for k, v in blocks.items()})
+        assert got_ll == ll
+        for k, v in blocks.items():
+            _assert_bits_equal(got[k], v)
+
+
+def test_codec_sparse_model_rows_absent_cells_are_exact_zero():
+    """Tidy model rows (the chained-lap hand-off) drop zero cells and carry
+    the value in ``prob``; absent cells must decode to exactly 0.0, and a
+    missing loglik row to 0.0."""
+    rows = [
+        {"kind": "initial", "i": 0, "j": 1, "prob": 1.0},
+        {"kind": "transition", "i": 0, "j": 0, "prob": 0.25},
+        {"kind": "transition", "i": 0, "j": 1, "prob": 0.75},
+        {"kind": "transition", "i": 1, "j": 1, "prob": 1.0},
+        {"kind": "emission", "i": 1, "j": 2, "prob": 0.123456},
+    ]
+    got, ll = decode(rows, count_shapes(2, 3), "prob")
+    assert ll == 0.0
+    _assert_bits_equal(got["initial"], np.array([0.0, 1.0]))
+    _assert_bits_equal(got["transition"], np.array([[0.25, 0.75], [0.0, 1.0]]))
+    want_b = np.zeros((2, 3))
+    want_b[1, 2] = 0.123456
+    _assert_bits_equal(got["emission"], want_b)
+    assert not np.signbit(got["emission"]).any()
+
+
+def test_decode_rejects_unknown_kind():
+    with pytest.raises(ValueError, match="unexpected stripe kind"):
+        decode([{"kind": "bogus", "i": 0, "j": 0, "weight": 1.0}], count_shapes(2, 2))
+
+
+@pytest.mark.parametrize("bad", [np.nan, np.inf])
+def test_decode_raises_on_non_finite_counts_naming_the_kind(bad):
+    frame = encode({"initial": np.ones(2), "transition": np.array([[1.0, bad], [1.0, 1.0]]),
+                    "emission": np.ones((2, 2))}, loglik=0.0)
+    with pytest.raises(FloatingPointError, match="'transition'"):
+        decode(frame.to_dict("records"), count_shapes(2, 2))
+
+
+def test_decode_allows_non_finite_loglik():
+    """A -inf loglik (e.g. a labeled path the model rules out) is a value,
+    not corrupted statistics."""
+    frame = encode({"initial": np.ones(2)}, loglik=-np.inf)
+    _, ll = decode(frame.to_dict("records"), {"initial": (2,)})
+    assert ll == -np.inf
+
+
+# -- loud failure on impossible sequences (Spark) -----------------------------
+
+
+def _impossible(spark, one_batch: bool):
+    """[1, 0, 1] under pi = [1, 0], B[0] = [1, 0]: t = 0 must be state 0,
+    which never emits symbol 1, so P(O | model) = 0 and the kernel's scaled
+    forward pass divides by a zero scale — NaN counts for the whole batch."""
+    model = HMM(
+        pi=np.array([1.0, 0.0]),
+        A=np.full((2, 2), 0.5),
+        B=np.array([[1.0, 0.0], [0.5, 0.5]]),
+    ).validate()
+    seqs = spark.createDataFrame(
+        [(1, [1, 0, 1]), (2, [0, 0, 1])], "seq_id bigint, obs array<int>"
+    ).repartition(2, "seq_id")
+    return model, seqs.coalesce(1) if one_batch else seqs
+
+
+# one partition: both sequences in one Arrow batch, whose counts all turn
+# NaN; default layout: the impossible sequence's batch alone is NaN (its NaN
+# rows reach Spark as nulls, which a plain sum would skip)
+LAYOUTS = [pytest.param(True, id="one-batch"), pytest.param(False, id="split")]
+
+
+@pytest.mark.parametrize("one_batch", LAYOUTS)
+def test_fit_raises_on_zero_probability_sequence(spark, one_batch):
+    model, seqs = _impossible(spark, one_batch)
+    with pytest.raises(FloatingPointError, match="non-finite"):
+        fit(spark, seqs, model, max_iter=2)
+
+
+@pytest.mark.parametrize("one_batch", LAYOUTS)
+def test_online_update_raises_on_zero_probability_sequence(spark, one_batch):
+    from baum_welch_spark.hmm.online import OnlineEM
+
+    model, seqs = _impossible(spark, one_batch)
+    state = OnlineEM(model=model)
+    with pytest.raises(FloatingPointError, match="non-finite"):
+        state.update(spark, seqs)
+    assert state.model is model and state.t == 0
+
+
+# -- per-iteration Spark job count --------------------------------------------
+
+# Jobs each trainer launched for max_iter=3 on a cached, materialized corpus
+# before the trainers shared one loop (2 per iteration: the E-step's
+# shuffle-map stage and the collect). More means a lost cache or an extra
+# action per iteration.
+PARENT_JOBS_3_ITERS = 6
+
+
+def _jobs(spark, fn) -> int:
+    sc = spark.sparkContext
+    group = f"em-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "EM job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_trainers_launch_no_more_jobs_per_iteration(spark):
+    from baum_welch_spark.hmm.gaussian import GaussianHMM, build_value_sequences, fit_gaussian
+    from baum_welch_spark.hmm.semisup import fit_semisupervised
+    from baum_welch_spark.hmm.viterbi_train import fit_viterbi
+
+    events = load_table(spark, SF0001, "events")
+    # the no-op filters keep these plans distinct from frames other test
+    # modules cached, so unpersisting them here touches nothing else
+    seqs = build_sequences(events).filter(F.col("seq_id") >= -(10**9))
+    labeled = seqs.withColumn("states", F.lit(None).cast("array<int>"))
+    values = build_value_sequences(events).filter(F.col("seq_id") >= -(10**9))
+    frames = [f.persist(StorageLevel.MEMORY_AND_DISK) for f in (seqs, labeled, values)]
+    try:
+        for f in frames:
+            f.count()
+        init = HMM.random(3, 5, seed=1)
+        ginit = GaussianHMM.random(3, seed=42, lo=0.0, hi=500.0)
+        got = {
+            "fit": _jobs(spark, lambda: fit(spark, seqs, init, max_iter=3)),
+            "fit_semisupervised": _jobs(
+                spark, lambda: fit_semisupervised(spark, labeled, init, max_iter=3)
+            ),
+            "fit_viterbi": _jobs(spark, lambda: fit_viterbi(spark, seqs, init, max_iter=3)),
+            "fit_gaussian": _jobs(
+                spark, lambda: fit_gaussian(spark, values, ginit, max_iter=3)
+            ),
+        }
+    finally:
+        for f in frames:
+            f.unpersist()
+    assert all(0 < n <= PARENT_JOBS_3_ITERS for n in got.values()), got
+
+
+# -- session default cores (no new session) ----------------------------------
+
+
+def test_default_cpus_follows_affinity_unless_overridden(monkeypatch):
+    import os
+
+    from baum_welch_spark.session import default_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3

@@ -228,6 +228,20 @@ def test_ghmm_reestimate_matches_numpy_estep(spark):
     assert len(got) == N + N * N + 2 * N
 
 
+def _tidy_model(rows, n):
+    """The unvalidated GaussianHMM in tidy (kind, i, j, val) rows."""
+    from baum_welch_spark.hmm.em import decode
+
+    b, _ = decode(
+        rows,
+        {"initial": (n,), "transition": (n, n), "mu": (n, 1), "var": (n, 1)},
+        "val",
+    )
+    return GaussianHMM(
+        pi=b["initial"], A=b["transition"], mu=b["mu"][:, 0], sigma2=b["var"][:, 0]
+    )
+
+
 def test_ghmm_em_trace_chains_rounded_models_and_matches_duckdb(spark):
     """Gaussian twin of the EM-loop pin: lap 2 of ghmm_em_trace must equal a
     fresh re-estimation step from lap 1's rounded model, and the trace must
@@ -239,7 +253,6 @@ def test_ghmm_em_trace_chains_rounded_models_and_matches_duckdb(spark):
         GaussianHMM,
         _ghmm_reestimate_unchecked,
         build_value_sequences,
-        gauss_model_from_tidy,
         gauss_trace_oracle_sql,
         ghmm_em_trace,
     )
@@ -252,7 +265,7 @@ def test_ghmm_em_trace_chains_rounded_models_and_matches_duckdb(spark):
     it2 = {(r.kind, r.i, r.j): r.val for r in trace if r.iter == 2}
     assert it1 and it2
 
-    m1 = gauss_model_from_tidy([r.asDict() for r in it1], 4)
+    m1 = _tidy_model(it1, 4)
     fresh = {
         (r.kind, r.i, r.j): r.val
         for r in _ghmm_reestimate_unchecked(spark, seqs, m1).collect()
@@ -285,7 +298,6 @@ def test_ghmm_loglik_trace_matches_score_chain_and_duckdb(spark):
         _score_gauss_unchecked,
         build_value_sequences,
         gauss_loglik_trace_oracle_sql,
-        gauss_model_from_tidy,
         ghmm_loglik_trace,
     )
     from pyspark.sql import functions as F
@@ -307,10 +319,7 @@ def test_ghmm_loglik_trace_matches_score_chain_and_duckdb(spark):
         }
 
     assert scored(model) == got1
-    m1 = gauss_model_from_tidy(
-        [r.asDict() for r in _ghmm_reestimate_unchecked(spark, seqs, model).collect()],
-        4,
-    )
+    m1 = _tidy_model(_ghmm_reestimate_unchecked(spark, seqs, model).collect(), 4)
     assert scored(m1) == got2
 
     con = duckdb.connect()

@@ -33,31 +33,28 @@ ALLOWED = {
     # prepare_training_corpus dq gate: one rule-count-sized report collect
     # (4 rows) — gate semantics, raises instead of emitting a bad corpus
     "operators/corpus.py": {"collect": 1, "toPandas": 0},
-    # PQ: n_codes seed rows, m*k*(ds+1) Lloyd partials per iteration,
-    # n_queries query rows for flat-PQ / IVF-PQ / index-served search, and
-    # the centroid+codebook model tables on index read — all model-sized
-    "operators/pq.py": {"collect": 7, "toPandas": 0},
+    # PQ: n_codes seed rows, m*k*(ds+1) Lloyd partials per iteration, and
+    # n_queries query rows for flat-PQ / IVF-PQ / index-served search — all
+    # model-sized (the index read loads its model tables with pyarrow)
+    "operators/pq.py": {"collect": 5, "toPandas": 0},
     "operators/sequences.py": {"collect": 1, "toPandas": 0},
     "hmm/model.py": {"collect": 1, "toPandas": 0},
-    # fit loop's model-sized expected-counts collect + em_trace's per-lap
-    # chained-model collect (N^2 + N*M + N rows, r12 EM-loop pin)
-    "hmm/fit.py": {"collect": 2, "toPandas": 0},
+    # the one EM loop's per-iteration stripe collect (N^2 + N*M + N rows;
+    # every trainer — fit, fit_semisupervised, fit_viterbi, fit_gaussian —
+    # runs on it) + lap_trace's per-lap chained-model collect (em_trace and
+    # ghmm_em_trace, r12/r13 EM-loop pins)
+    "hmm/em.py": {"collect": 2, "toPandas": 0},
     # distributed grouped EM: one group-cardinality meta collect + the
     # per-iteration (groups x model)-sized count-stripe collect — the
     # grouped analogue of fit.py's site (groups bound driver memory by
     # the trainer's own output contract)
     "hmm/grouped.py": {"collect": 2, "toPandas": 0},
-    # online EM: same model-sized expected-counts collect as fit.py
+    # online EM: the same model-sized stripe collect, one step per batch
     "hmm/online.py": {"collect": 1, "toPandas": 0},
-    # Gaussian-emission EM: model-sized stripe collect (fit loop) + the
-    # model-codec read (tidy model rows) + ghmm_em_trace's and
-    # ghmm_loglik_trace's per-lap chained-model collects (r12/r13
-    # EM-loop pins)
-    "hmm/gaussian.py": {"collect": 4, "toPandas": 0},
-    # semi-supervised EM: same model-sized count-stripe collect as fit.py
-    "hmm/semisup.py": {"collect": 1, "toPandas": 0},
-    # hard EM (segmental k-means): same model-sized count-stripe collect
-    "hmm/viterbi_train.py": {"collect": 1, "toPandas": 0},
+    # Gaussian-emission EM: the model-codec read (tidy model rows) +
+    # ghmm_loglik_trace's per-lap chained-model collect (r13 EM-loop pin);
+    # its fit and ghmm_em_trace run on hmm/em.py
+    "hmm/gaussian.py": {"collect": 2, "toPandas": 0},
     # order selection: one 1-row T_total aggregate (fits use fit.py's site)
     "hmm/select.py": {"collect": 1, "toPandas": 0},
     # CLI select: prints the len(candidates)-row score frame as JSON;
@@ -221,8 +218,8 @@ def test_no_datasized_driver_collects():
 
 def test_driver_window_stays_oracle_dense():
     """The driver's correctness harness samples the FIRST 50 queries()
-    entries; keep that window packed with DuckDB-exact checks (only the
-    flagship fit and the eigh-based PCA are allowed rows-only there) and
+    entries; keep that window packed with DuckDB-exact checks (a rows-only
+    face is allowed there only if named below with its non-SQL pin) and
     every oracle key valid."""
     import sys
 
@@ -234,35 +231,42 @@ def test_driver_window_stays_oracle_dense():
     assert len(qs) == len(set(qs))
     assert set(osql) <= set(qs), sorted(set(osql) - set(qs))
     rows_only_in_window = [q for q in qs[:50] if q not in osql]
-    # r13 window (VERDICT-r12 #1 rotation): the window carries this round's
-    # graduations + changed faces plus 34 r8/r9-vintage exact rotation
-    # targets; only three rows-only faces remain in it, each with its own
-    # non-SQL oracle:
+    # The window carries the EM-engine block: every face whose hash changed
+    # when the trainers moved onto the one EM loop (hmm/em.py). Nine of them
+    # are iterative trainers with no SQL oracle; each has its own non-SQL pin:
     assert set(rows_only_in_window) <= {
-        # iterative Gaussian EM fit: 1e-8 sequential-NumPy parity pytest;
+        # Gaussian EM fit: distributed == sequential NumPy oracle at 1e-8
+        # (tests/test_gaussian.py::test_fit_gaussian_matches_sequential_oracle);
         # its chaining and loglik evidence are driver-exact via the
-        # ghmm_em_trace / ghmm_loglik_trace faces. In-window for r15: its
-        # sequence build is now materialized once across EM laps.
+        # ghmm_em_trace / ghmm_loglik_trace faces
         "ghmm_fit",
-        # per-iteration TOTAL loglik trace: corpus-order float summation
-        # has no cross-engine pin (see ghmm_loglik_trace, its per-sequence
-        # driver-exact graduation); monotonicity asserted in-face. Same
-        # r15 sequence-materialization change as ghmm_fit.
+        # per-iteration TOTAL loglik trace: corpus-order float summation has
+        # no cross-engine pin (ghmm_loglik_trace is its per-sequence
+        # driver-exact graduation); monotonicity asserted in-face
         "ghmm_trace",
-        # r15 OPTIMIZATION rotation (manifest rule: changed faces must be
-        # in-window the round they change): the IVF-PQ serving family —
-        # ivfpq_read_index now loads the model tables via pyarrow and
-        # ivfpq_write_index shares one persisted normalized frame between
-        # training and encode (identical doubles; pytest pins recall vs
-        # knn_brute, the pruned-scan plan shape, and byte-identical
-        # appends). Rows-only by nature (k-means + residual-PQ training).
-        # r14's rotated trainer block (hmm_fit_grouped/grouped_decode/
-        # hmm_select/hmm_fit_restarts) and asset_neardup rotated OUT,
-        # code-unchanged with r14 driver evidence — the window is DENSER
-        # in exact faces than r14's (5 rows-only vs 7).
-        "knn_ivfpq",
-        "knn_ivfpq_query",
-        "ivfpq_append",
+        # discrete soft EM: distributed == sequential oracle at 1e-8
+        # (tests/test_fit.py::test_distributed_matches_sequential)
+        "hmm_fit",
+        # masked (left-to-right) fit: masked entries stay exactly zero and
+        # the fit matches the sequential oracle at 1e-8 (tests/test_fit.py
+        # test_masked_fit_matches_sequential_oracle)
+        "hmm_fit_bakis",
+        # semi-supervised EM: all-unlabeled == plain fit at 1e-10, all-labeled
+        # == closed-form counting (tests/test_semisup.py)
+        "hmm_fit_semisup",
+        # stepwise online EM: the loglik-gain bar vs batch EM
+        # (tests/test_online.py::test_online_em_improves_and_approaches_batch)
+        "hmm_online",
+        # distributed grouped EM: per-group parity with fit_grouped's
+        # sequential EM at 1e-8 (tests/test_grouped.py
+        # test_distributed_grouped_fit_matches_sequential_per_group)
+        "hmm_fit_grouped_dist",
+        # order selection: BIC/AIC arithmetic and the argmin marking against
+        # standalone fits (tests/test_select.py)
+        "hmm_select",
+        # best-of-restarts selection and the one shared corpus persist
+        # (tests/test_fit.py test_fit_restarts_*)
+        "hmm_fit_restarts",
     }, rows_only_in_window
 
 
