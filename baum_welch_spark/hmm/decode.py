@@ -11,10 +11,22 @@ they are first-class distributed operators over the ``sequences`` corpus:
   * score_sequences   — per-sequence log-likelihood under a model
   * top_k_sequences   — k most likely sequences under the model (window rank)
 
-All are mapInPandas Arrow-batch operators: the model broadcasts, each batch
-is decoded vectorized in NumPy, and output stays distributed. Scale: no
-shuffle at all for decode/score (narrow map); top-k is one tiny global sort
-of the scores projection.
+All are mapInPandas Arrow-batch operators: the model broadcasts and output
+stays distributed. Scale: no shuffle at all for decode/score (narrow map);
+top-k is one tiny global sort of the scores projection.
+
+viterbi_decode and score_sequences run each Arrow batch through one batched
+kernel call (``kernel.viterbi_batch`` / ``kernel.loglik_batch``): octave
+length buckets, one padded NumPy DP per bucket across all its sequences, so
+the Python-level loop runs max_T times per bucket rather than sum(T_s)
+times. Scoring is forward-only (no backward pass). Their contracts:
+
+  * a sequence with probability 0 under the model scores ``-inf`` (Viterbi
+    path arbitrary), never NULL/NaN, and does not disturb its batch-mates;
+  * a symbol outside ``0..M-1`` raises ``ValueError`` naming it and M.
+
+posterior_decode and state_occupancy still run the per-sequence
+``kernel.forward_backward``; viterbi_topk has its own batched list-Viterbi.
 """
 
 from __future__ import annotations
@@ -34,7 +46,10 @@ SCORE_SCHEMA = "seq_id bigint, t_len int, loglik double, avg_loglik double"
 
 
 def _viterbi_one(log_pi, log_A, log_B, obs):
-    """Log-space Viterbi for one sequence: returns (best path, best log-prob)."""
+    """Log-space Viterbi for one sequence: returns (best path, best log-prob).
+
+    The sequential reference: the Spark operators run ``kernel.viterbi_batch``,
+    which is pinned bitwise-equal to this (tests/test_kernel.py)."""
     T = obs.shape[0]
     N = log_pi.shape[0]
     delta = log_pi + log_B[:, obs[0]]
@@ -50,11 +65,24 @@ def _viterbi_one(log_pi, log_A, log_B, obs):
     return path, float(np.max(delta))
 
 
+def _nonempty(pdf: pd.DataFrame) -> tuple[list, list]:
+    """An Arrow batch's (seq_ids, obs arrays), skipping null/empty sequences."""
+    ids, obs_list = [], []
+    for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
+        if obs is not None and len(obs) > 0:
+            ids.append(seq_id)
+            obs_list.append(obs)
+    return ids, obs_list
+
+
 def viterbi_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> DataFrame:
     """sequences(seq_id, obs) -> (seq_id, loglik, path) under ``model``.
 
     loglik here is the joint log-probability of the best path (Viterbi
     score), not the marginal likelihood — use score_sequences for that.
+    A sequence the model rules out (probability 0) gets loglik ``-inf`` and
+    an arbitrary path; a symbol outside ``0..M-1`` raises ``ValueError``.
+    Each Arrow batch is one ``kernel.viterbi_batch`` call.
     """
     with np.errstate(divide="ignore"):
         bc = spark.sparkContext.broadcast(
@@ -62,17 +90,15 @@ def viterbi_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> Dat
         )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from baum_welch_spark.hmm.kernel import viterbi_batch
+
         log_pi, log_A, log_B = bc.value
         for pdf in batches:
-            ids, lls, paths = [], [], []
-            for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
-                if obs is None or len(obs) == 0:
-                    continue
-                path, ll = _viterbi_one(log_pi, log_A, log_B, np.asarray(obs, dtype=np.int64))
-                ids.append(seq_id)
-                lls.append(ll)
-                paths.append(path.tolist())
-            yield pd.DataFrame({"seq_id": ids, "loglik": lls, "path": paths})
+            ids, obs_list = _nonempty(pdf)
+            paths, lls = viterbi_batch(log_pi, log_A, log_B, obs_list)
+            yield pd.DataFrame(
+                {"seq_id": ids, "loglik": lls, "path": [p.tolist() for p in paths]}
+            )
 
     return sequences.mapInPandas(decode, schema=DECODE_SCHEMA)
 
@@ -575,30 +601,23 @@ fin AS (
 
 def score_sequences(spark: SparkSession, sequences: DataFrame, model: HMM) -> DataFrame:
     """Per-sequence marginal log-likelihood log P(O|λ) via the scaled forward
-    pass (sum of log scale factors — kernel.forward_backward convention)."""
+    pass (sum of log scale factors — kernel.forward_backward convention),
+    forward-only and batched: each Arrow batch is one ``kernel.loglik_batch``
+    call. A sequence with probability 0 under the model scores ``-inf``
+    (loglik and avg_loglik), not NULL; a symbol outside ``0..M-1`` raises
+    ``ValueError``."""
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from baum_welch_spark.hmm.kernel import forward_backward
+        from baum_welch_spark.hmm.kernel import loglik_batch
 
         pi, A, B = bc.value
         for pdf in batches:
-            ids, lens, lls = [], [], []
-            for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
-                if obs is None or len(obs) == 0:
-                    continue
-                o = np.asarray(obs, dtype=np.int64)
-                _, _, _, ll = forward_backward(pi, A, B, o)
-                ids.append(seq_id)
-                lens.append(len(o))
-                lls.append(ll)
+            ids, obs_list = _nonempty(pdf)
+            lens = np.array([len(o) for o in obs_list], dtype=np.int32)
+            lls = loglik_batch(pi, A, B, obs_list)
             yield pd.DataFrame(
-                {
-                    "seq_id": ids,
-                    "t_len": np.array(lens, dtype=np.int32),
-                    "loglik": lls,
-                    "avg_loglik": np.array(lls) / np.array(lens),
-                }
+                {"seq_id": ids, "t_len": lens, "loglik": lls, "avg_loglik": lls / lens}
             )
 
     return sequences.mapInPandas(score, schema=SCORE_SCHEMA)

@@ -217,7 +217,7 @@ def decode_grouped(
     Output: (group, seq_id, loglik, path_str) — Viterbi joint log-prob and
     the comma-joined best path.
     """
-    from baum_welch_spark.hmm.decode import _viterbi_one
+    from baum_welch_spark.hmm.kernel import viterbi_batch
 
     def decode(models_pdf: pd.DataFrame, seqs_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(models_pdf) or not len(seqs_pdf):
@@ -239,16 +239,17 @@ def decode_grouped(
                 B[r.i, r.j] = r.weight
         with np.errstate(divide="ignore"):
             log_pi, log_A, log_B = np.log(pi), np.log(A), np.log(B)
-        ids, lls, paths = [], [], []
-        for r in seqs_pdf.sort_values("seq_id").itertuples():
-            if r.obs is None or len(r.obs) == 0:
-                continue
-            path, ll = _viterbi_one(log_pi, log_A, log_B, np.asarray(r.obs, dtype=np.int64))
-            ids.append(r.seq_id)
-            lls.append(ll)
-            paths.append(",".join(str(int(s)) for s in path))
+        seqs_pdf = seqs_pdf.sort_values("seq_id")
+        keep = [o is not None and len(o) > 0 for o in seqs_pdf["obs"]]
+        seqs_pdf = seqs_pdf[keep]
+        paths, lls = viterbi_batch(log_pi, log_A, log_B, list(seqs_pdf["obs"]))
         return pd.DataFrame(
-            {"group": group, "seq_id": ids, "loglik": lls, "path_str": paths}
+            {
+                "group": group,
+                "seq_id": seqs_pdf["seq_id"].to_numpy(),
+                "loglik": lls,
+                "path_str": [",".join(map(str, p.tolist())) for p in paths],
+            }
         )
 
     return (

@@ -193,6 +193,129 @@ def _length_buckets(lens: list[int]) -> list[list[int]]:
     return [buckets[k] for k in sorted(buckets)]
 
 
+#: max S × N × N cells of one Viterbi step's candidate block: buckets are
+#: split on the sequence axis above this, so a wide model on a large Arrow
+#: batch cannot allocate a GB-sized temporary (each sequence's DP is
+#: independent, so the split is bitwise-invisible; N=16 never splits an
+#: Arrow batch of 10k sequences)
+_VITERBI_CAND_BUDGET = 1 << 22
+
+
+def _padded_buckets(obs_list: list, n_symbols: int, max_seqs: int | None = None):
+    """Yield ``(idxs, obs_pad, lens)`` per octave length bucket of
+    ``obs_list`` (:func:`_length_buckets`), at most ``max_seqs`` sequences
+    each: ``obs_pad`` is the bucket's symbols as a (Tmax, S) int64 array,
+    zero-padded past each sequence's end, and ``lens`` its (S,) lengths.
+
+    Every bucket is range-checked once: a symbol outside ``0 <= o < M``
+    raises ``ValueError``, where NumPy indexing would silently wrap a
+    negative id into a plausible score or fail with a bare IndexError."""
+    for bucket in _length_buckets([len(o) for o in obs_list]):
+        step = max_seqs or len(bucket)
+        for lo in range(0, len(bucket), step):
+            idxs = bucket[lo : lo + step]
+            lens = np.array([len(obs_list[i]) for i in idxs], dtype=np.int64)
+            obs_pad = np.zeros((int(lens.max()), len(idxs)), dtype=np.int64)
+            for col, i in enumerate(idxs):
+                obs_pad[: lens[col], col] = obs_list[i]
+            lo_sym, hi_sym = int(obs_pad.min()), int(obs_pad.max())
+            if lo_sym < 0 or hi_sym >= n_symbols:
+                bad = lo_sym if lo_sym < 0 else hi_sym
+                raise ValueError(
+                    f"observation symbol {bad} is out of range for a model "
+                    f"with M={n_symbols} symbols (valid: 0..{n_symbols - 1})"
+                )
+            yield idxs, obs_pad, lens
+
+
+def viterbi_batch(
+    log_pi: np.ndarray,
+    log_A: np.ndarray,
+    log_B: np.ndarray,
+    obs_list: list,
+) -> tuple[list[np.ndarray], np.ndarray]:
+    """Log-space Viterbi for a batch of sequences: returns (paths, scores)
+    aligned with ``obs_list`` — each path an int32 array of its sequence's
+    length, each score the best path's joint log-probability.
+
+    Per octave length bucket (:func:`_padded_buckets`) the max-product
+    recursion runs across all S sequences at once, so the Python-level loop
+    runs max_T times per bucket, not sum(T_s) times. BITWISE equal to
+    looping ``decode._viterbi_one``: every DP cell is the same two-operand
+    IEEE add (delta + log A, then + log B), and the argmax over the
+    previous state is first-max like np.argmax (the candidate block is laid
+    out (S, cur, prev) so that reduction runs over the contiguous axis).
+    Past a sequence's end its delta row is carried unchanged, so the final
+    block holds each sequence's delta at its own last step; the backtrack
+    is vectorized and starts each sequence at its own T-1.
+
+    A sequence with probability 0 under the model scores ``-inf``; its
+    path is then arbitrary (first-max over all -inf). A symbol outside
+    ``0..M-1`` raises ``ValueError``."""
+    n = log_pi.shape[0]
+    log_AT = np.ascontiguousarray(log_A.T)  # [cur, prev]
+    log_BT = np.ascontiguousarray(log_B.T)  # [symbol, state]
+    paths: list = [None] * len(obs_list)
+    scores = np.empty(len(obs_list))
+    max_seqs = max(1, _VITERBI_CAND_BUDGET // (n * n))
+    for idxs, obs_pad, lens in _padded_buckets(obs_list, log_B.shape[1], max_seqs):
+        t_max, s = obs_pad.shape
+        delta = log_pi[None, :] + log_BT[obs_pad[0]]  # (S, N)
+        psi = np.zeros((t_max, s, n), dtype=np.min_scalar_type(n - 1))
+        for t in range(1, t_max):
+            cand = delta[:, None, :] + log_AT  # (S, N cur, N prev)
+            arg = cand.argmax(axis=2)
+            psi[t] = arg
+            step = np.take_along_axis(cand, arg[:, :, None], axis=2)[:, :, 0]
+            delta = np.where((t < lens)[:, None], step + log_BT[obs_pad[t]], delta)
+        best = delta.max(axis=1)
+        state = delta.argmax(axis=1)
+        path_pad = np.empty((t_max, s), dtype=np.int32)
+        cols = np.arange(s)
+        for t in range(t_max - 1, 0, -1):
+            path_pad[t] = state
+            state = np.where(t < lens, psi[t, cols, state], state)
+        path_pad[0] = state
+        rows = np.ascontiguousarray(path_pad.T)
+        for col, i in enumerate(idxs):
+            paths[i] = rows[col, : lens[col]]
+        scores[idxs] = best
+    return paths, scores
+
+
+def loglik_batch(
+    pi: np.ndarray, A: np.ndarray, B: np.ndarray, obs_list: list
+) -> np.ndarray:
+    """Per-sequence marginal log-likelihood log P(O|λ), aligned with
+    ``obs_list``: the scaled forward recursion of :func:`forward_backward`
+    only — no backward pass, no stored alpha history — run across each
+    octave length bucket at once (:func:`_padded_buckets`). The loglik is
+    the sum of log scale factors accumulated step by step; it agrees with
+    ``forward_backward``'s (whose sum is pairwise) to ~1e-15 relative.
+
+    Padding follows the batched E-step: past a sequence's end its scale is
+    pinned to 1, so it adds nothing. A sequence with probability 0 under
+    the model (a zero scale factor) scores ``-inf``: its alpha row is left
+    unnormalized (all zeros) rather than turned NaN by 0/0, so it stays
+    ``-inf`` and every other sequence in the bucket is untouched. A symbol
+    outside ``0..M-1`` raises ``ValueError``."""
+    BT = np.ascontiguousarray(B.T)  # [symbol, state]
+    out = np.empty(len(obs_list))
+    with np.errstate(divide="ignore"):
+        for idxs, obs_pad, lens in _padded_buckets(obs_list, B.shape[1]):
+            a = pi[None, :] * BT[obs_pad[0]]  # (S, N)
+            sc = a.sum(axis=1)
+            ll = np.log(sc)
+            alpha = a / np.where(sc > 0, sc, 1.0)[:, None]
+            for t in range(1, obs_pad.shape[0]):
+                a = (alpha @ A) * BT[obs_pad[t]]
+                sc = np.where(t < lens, a.sum(axis=1), 1.0)
+                ll += np.log(sc)
+                alpha = a / np.where(sc > 0, sc, 1.0)[:, None]
+            out[idxs] = ll
+    return out
+
+
 def e_step_counts_batch(
     pi: np.ndarray,
     A: np.ndarray,

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from baum_welch_spark.hmm.decode import _viterbi_one, viterbi_ctes
 from baum_welch_spark.hmm.em import COUNTS_SCHEMA, FitResult, encode, sum_stripes
 from baum_welch_spark.hmm.fit import normalize_counts, run_discrete_em
-from baum_welch_spark.hmm.kernel import m_step
+from baum_welch_spark.hmm.kernel import m_step, viterbi_batch
 from baum_welch_spark.hmm.model import (
     HMM,
     KIND_EMISSION,
@@ -49,11 +49,14 @@ from baum_welch_spark.hmm.model import (
 
 
 def hard_count_udf(bc_log_model):
-    """mapInPandas function for one hard-EM pass: Viterbi-decode every
-    sequence in the Arrow batch, accumulate path counts into local NumPy
-    arrays, and emit ONE stripe block per batch (``em.encode``) with the
-    Viterbi joint log-likelihood as its loglik row (the in-UDF map-side
-    combine, same shape as fit.e_step_udf)."""
+    """mapInPandas function for one hard-EM pass: Viterbi-decode each Arrow
+    batch with one ``kernel.viterbi_batch`` call, accumulate path counts
+    into local NumPy arrays, and emit ONE stripe block per partition
+    (``em.encode``) with the Viterbi joint log-likelihood as its loglik row
+    (the in-UDF map-side combine, same shape as fit.e_step_udf).
+
+    Counts are integers, so their summation order is immaterial; the
+    loglik is accumulated in sequence order, like the sequential loop."""
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         log_pi, log_A, log_B = bc_log_model.value
@@ -64,17 +67,18 @@ def hard_count_udf(bc_log_model):
         ll = 0.0
         saw_data = False
         for pdf in batches:
-            for obs in pdf["obs"]:
-                if obs is None or len(obs) == 0:
-                    continue
-                saw_data = True
-                o = np.asarray(obs, dtype=np.int64)
-                path, score = _viterbi_one(log_pi, log_A, log_B, o)
+            obs_list = [o for o in pdf["obs"] if o is not None and len(o) > 0]
+            if not obs_list:
+                continue
+            saw_data = True
+            paths, scores = viterbi_batch(log_pi, log_A, log_B, obs_list)
+            for score in scores:
                 ll += score
-                cpi[path[0]] += 1.0
-                if path.shape[0] > 1:
-                    np.add.at(cA, (path[:-1], path[1:]), 1.0)
-                np.add.at(cB, (path, o), 1.0)
+            np.add.at(cpi, [p[0] for p in paths], 1.0)
+            src = np.concatenate([p[:-1] for p in paths])
+            dst = np.concatenate([p[1:] for p in paths])
+            np.add.at(cA, (src, dst), 1.0)
+            np.add.at(cB, (np.concatenate(paths), np.concatenate(obs_list)), 1.0)
         if saw_data:
             yield encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_EMISSION: cB}, ll)
 

@@ -294,3 +294,48 @@ def test_viterbi_topk_batch_seq_chunk_cap_is_bitwise_invisible(monkeypatch):
         for (ll_a, p_a), (ll_b, p_b) in zip(a, b):
             assert ll_a == ll_b
             assert np.array_equal(p_a, p_b)
+
+
+# -- zero-probability and out-of-range sequences -------------------------------
+
+# [1, 0, 1] under pi = [1, 0], B[0] = [1, 0]: t = 0 must be state 0, which
+# never emits symbol 1, so P(O | model) = 0
+ZERO_MODEL = HMM(
+    pi=np.array([1.0, 0.0]),
+    A=np.full((2, 2), 0.5),
+    B=np.array([[1.0, 0.0], [0.5, 0.5]]),
+).validate()
+GOOD_SEQS = [(1, [0, 0, 1]), (3, [0, 1, 0, 1, 1]), (4, [0])]
+
+
+def _one_batch(spark, rows):
+    return spark.createDataFrame(rows, "seq_id bigint, obs array<int>").coalesce(1)
+
+
+def test_zero_probability_sequence_scores_minus_inf(spark):
+    """The impossible sequence, mixed into one Arrow batch with normal ones,
+    scores -inf (not NULL) in score_sequences and viterbi_decode; every
+    other sequence gets exactly the values it gets without it."""
+    mixed = _one_batch(spark, GOOD_SEQS + [(2, [1, 0, 1])])
+    clean = _one_batch(spark, GOOD_SEQS)
+    for op, cols in ((score_sequences, ("loglik", "avg_loglik")), (viterbi_decode, ("loglik",))):
+        got = {r.seq_id: r for r in op(spark, mixed, ZERO_MODEL).collect()}
+        ref = {r.seq_id: r for r in op(spark, clean, ZERO_MODEL).collect()}
+        assert set(got) == {1, 2, 3, 4}
+        for c in cols:
+            assert getattr(got[2], c) == -np.inf, (op.__name__, c)
+        for seq_id, row in ref.items():
+            assert got[seq_id] == row, (op.__name__, seq_id)
+            assert all(np.isfinite(getattr(row, c)) for c in cols)
+
+
+@pytest.mark.parametrize("bad", [-1, 5])
+def test_out_of_range_symbol_raises(spark, bad):
+    """A symbol id outside 0..M-1 fails the decode and score jobs with a
+    ValueError naming it and M; before, -1 wrapped to the last symbol."""
+    from pyspark.errors import PythonException
+
+    df = _one_batch(spark, [(1, [0, 1, 2]), (2, [0, bad, 0])])
+    for op in (score_sequences, viterbi_decode):
+        with pytest.raises(PythonException, match=rf"ValueError: observation symbol {bad} .*M=5"):
+            op(spark, df, MODEL).collect()

@@ -226,3 +226,99 @@ def test_batch_e_step_length_skew_weighted_matches():
     np.testing.assert_allclose(p1, p2, atol=1e-10)
     np.testing.assert_allclose(A1, A2, rtol=1e-9, atol=1e-10)
     np.testing.assert_allclose(B1, B2, rtol=1e-9, atol=1e-10)
+
+
+# -- batched decode kernels: viterbi_batch / loglik_batch ---------------------
+
+# structural zeros: state 0 only at t = 0 and no 0 -> 2 / 1 -> 0 / 2 -> 1
+# moves, so some (state, step) cells have every Viterbi candidate at -inf and
+# argmax resolves an all -inf tie; B has full support, so every sequence
+# keeps a finite likelihood
+MODEL_ZEROS = HMM(
+    pi=np.array([1.0, 0.0, 0.0]),
+    A=np.array([[0.5, 0.5, 0.0], [0.0, 0.5, 0.5], [0.3, 0.0, 0.7]]),
+    B=np.array([[0.6, 0.3, 0.1], [0.1, 0.6, 0.3], [0.3, 0.1, 0.6]]),
+).validate()
+
+# one skewed batch: octave edges, repeats inside a bucket, and a >1000 tail
+SKEW_LENS = [1, 2, 3, 4, 7, 8, 15, 16, 1, 16, 40, 1500, 2]
+
+
+def _log_model(m: HMM):
+    with np.errstate(divide="ignore"):
+        return np.log(m.pi), np.log(m.A), np.log(m.B)
+
+
+@pytest.mark.parametrize(
+    "model", [MODEL_ZEROS, HMM.random(4, 5, seed=42)], ids=["structural-zeros", "random"]
+)
+def test_batch_decode_kernels_match_per_sequence(model):
+    """viterbi_batch is BITWISE equal to looping decode._viterbi_one (paths,
+    path dtype and scores), and loglik_batch agrees with forward_backward's
+    loglik to 1e-12 relative, over one length-skewed batch."""
+    from baum_welch_spark.hmm.decode import _viterbi_one
+    from baum_welch_spark.hmm.kernel import loglik_batch, viterbi_batch
+
+    rng = np.random.default_rng(41)
+    seqs = [rng.integers(0, model.n_observed, size=t) for t in SKEW_LENS]
+    lp, lA, lB = _log_model(model)
+    paths, scores = viterbi_batch(lp, lA, lB, seqs)
+    lls = loglik_batch(model.pi, model.A, model.B, seqs)
+    assert len(paths) == len(scores) == len(lls) == len(seqs)
+    for obs, path, score, ll in zip(seqs, paths, scores, lls):
+        ref_path, ref_score = _viterbi_one(lp, lA, lB, obs)
+        assert path.dtype == ref_path.dtype and np.array_equal(path, ref_path)
+        assert score == ref_score  # bitwise, not approx
+        ref_ll = forward_backward(model.pi, model.A, model.B, obs)[3]
+        assert np.isfinite(ll) and abs(ll - ref_ll) <= 1e-12 * abs(ref_ll)
+
+
+def test_viterbi_batch_seq_chunk_cap_is_bitwise_invisible(monkeypatch):
+    """The sequence-axis cap on the per-step candidate block must not change
+    results: a budget of 1 cell splits every bucket into one-sequence DPs."""
+    import baum_welch_spark.hmm.kernel as kernel
+
+    rng = np.random.default_rng(43)
+    seqs = [rng.integers(0, 3, size=t) for t in SKEW_LENS]
+    lp, lA, lB = _log_model(MODEL_ZEROS)
+    full_paths, full_scores = kernel.viterbi_batch(lp, lA, lB, seqs)
+    monkeypatch.setattr(kernel, "_VITERBI_CAND_BUDGET", 1)
+    paths, scores = kernel.viterbi_batch(lp, lA, lB, seqs)
+    assert np.array_equal(scores, full_scores)
+    assert all(np.array_equal(a, b) for a, b in zip(paths, full_paths))
+
+
+def test_batch_decode_kernels_zero_probability_sequence():
+    """[1, 0, 1] under pi = [1, 0], B[0] = [1, 0] has probability 0: it
+    scores -inf in both kernels (forward_backward gives NaN), and its
+    batch-mates score bit-for-bit what they score without it."""
+    from baum_welch_spark.hmm.kernel import loglik_batch, viterbi_batch
+
+    m = HMM(
+        pi=np.array([1.0, 0.0]),
+        A=np.full((2, 2), 0.5),
+        B=np.array([[1.0, 0.0], [0.5, 0.5]]),
+    ).validate()
+    lp, lA, lB = _log_model(m)
+    good = [np.array([0, 0, 1]), np.array([0, 1, 0]), np.array([0, 1, 1])]
+    mixed = [good[0], np.array([1, 0, 1]), good[1], good[2]]
+    with np.errstate(invalid="raise", divide="raise"):
+        lls = loglik_batch(m.pi, m.A, m.B, mixed)
+        _, scores = viterbi_batch(lp, lA, lB, mixed)
+    assert lls[1] == -np.inf and scores[1] == -np.inf
+    keep = [0, 2, 3]
+    assert np.array_equal(lls[keep], loglik_batch(m.pi, m.A, m.B, good))
+    assert np.array_equal(scores[keep], viterbi_batch(lp, lA, lB, good)[1])
+    assert np.all(np.isfinite(lls[keep]))
+
+
+@pytest.mark.parametrize("bad", [-1, 5])
+def test_batch_decode_kernels_reject_out_of_range_symbols(bad):
+    from baum_welch_spark.hmm.kernel import loglik_batch, viterbi_batch
+
+    m = HMM.random(3, 5, seed=5)
+    seqs = [np.array([0, 1, 2]), np.array([0, bad, 0])]
+    with pytest.raises(ValueError, match=rf"symbol {bad} .*M=5"):
+        loglik_batch(m.pi, m.A, m.B, seqs)
+    with pytest.raises(ValueError, match=rf"symbol {bad} .*M=5"):
+        viterbi_batch(*_log_model(m), seqs)

@@ -231,10 +231,15 @@ def test_driver_window_stays_oracle_dense():
     assert len(qs) == len(set(qs))
     assert set(osql) <= set(qs), sorted(set(osql) - set(qs))
     rows_only_in_window = [q for q in qs[:50] if q not in osql]
-    # The window carries the EM-engine block: every face whose hash changed
-    # when the trainers moved onto the one EM loop (hmm/em.py). Nine of them
-    # are iterative trainers with no SQL oracle; each has its own non-SQL pin:
+    # The window carries the batched-decode block and the EM-engine block:
+    # every face whose hash changed when the decode operators moved onto the
+    # batch kernels or the trainers onto the one EM loop (hmm/em.py). Ten of
+    # them have no SQL oracle; each has its own non-SQL pin:
     assert set(rows_only_in_window) <= {
+        # per-group Viterbi decode: paths and logliks equal the single-model
+        # broadcast decoder's on each group (tests/test_grouped.py
+        # test_decode_grouped_matches_single_model_decoder)
+        "grouped_decode",
         # Gaussian EM fit: distributed == sequential NumPy oracle at 1e-8
         # (tests/test_gaussian.py::test_fit_gaussian_matches_sequential_oracle);
         # its chaining and loglik evidence are driver-exact via the
