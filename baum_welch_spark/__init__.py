@@ -14,4 +14,8 @@ Layout:
   streaming/  structured-streaming sessionization & scoring
 """
 
+from baum_welch_spark import _zipcache
+
+_zipcache.install()
+
 __version__ = "0.1.0"

@@ -676,10 +676,11 @@ def _viterbi_topk_one(log_pi, log_A, log_B, obs, k):
     return out
 
 
-def _viterbi_topk_batch_core(log_pi, log_A, log_B, obs_list, k):
-    """One padded (S, N, k) list-Viterbi DP for a batch of sequences whose
-    lengths are within one octave (see _viterbi_topk_batch). Bitwise-equal
-    to looping :func:`_viterbi_topk_one`: every DP cell is the same
+def _viterbi_topk_batch_core(log_pi, log_A, log_B, obs_pad, lens, k):
+    """One padded (S, N, k) list-Viterbi DP over ``obs_pad`` (Tmax, S) and
+    its (S,) ``lens``, for sequences whose lengths are within one octave
+    (see _viterbi_topk_batch). Bitwise-equal to looping
+    :func:`_viterbi_topk_one`: every DP cell is the same
     two-operand IEEE add in the same order, the candidate flattening is the
     same i-major/r-minor ravel, and the stable argsort resolves ties by the
     same flat ordinal — asserted exactly in tests/test_decode.py.
@@ -688,14 +689,10 @@ def _viterbi_topk_batch_core(log_pi, log_A, log_B, obs_list, k):
     carried forward unchanged, so the final block equals the block at the
     sequence's own last step; backpointers written at padded steps are
     never read (backtrack starts at each sequence's own T-1).
-    Returns a list aligned with obs_list of [(loglik, path)] best-first."""
-    S = len(obs_list)
+    Returns a list aligned with the columns of obs_pad of [(loglik, path)]
+    best-first."""
+    Tmax, S = obs_pad.shape
     N = log_pi.shape[0]
-    lens = np.array([len(o) for o in obs_list], dtype=np.int64)
-    Tmax = int(lens.max())
-    obs_pad = np.zeros((Tmax, S), dtype=np.int64)
-    for s_i, o in enumerate(obs_list):
-        obs_pad[: len(o), s_i] = o
     valid = np.arange(Tmax)[:, None] < lens[None, :]  # (T, S)
 
     delta = np.full((S, N, k), -np.inf)
@@ -750,23 +747,22 @@ def _viterbi_topk_batch(log_pi, log_A, log_B, obs_list, k):
     dispatch that made this the slowest decode face is gone. Buckets are
     further chunked on the sequence axis so the per-call backpointer
     tensor stays under ``_TOPK_DP_BUDGET`` cells (each sequence's DP is
-    independent, so chunking is bitwise-invisible). Returns a list
-    aligned with obs_list."""
-    from baum_welch_spark.hmm.kernel import _length_buckets
+    independent, so chunking is bitwise-invisible). A symbol outside
+    ``0..M-1`` raises ``ValueError`` (kernel._padded_buckets), as in the
+    other decode operators. Returns a list aligned with obs_list."""
+    from baum_welch_spark.hmm.kernel import _padded_buckets
 
-    if not obs_list:
-        return []
     N = log_pi.shape[0]
     results: list = [None] * len(obs_list)
-    for idxs in _length_buckets([len(o) for o in obs_list]):
-        t_max = max(len(obs_list[i]) for i in idxs)
-        cap = max(1, _TOPK_DP_BUDGET // max(1, t_max * N * k))
+    for idxs, obs_pad, lens in _padded_buckets(obs_list, log_B.shape[1]):
+        cap = max(1, _TOPK_DP_BUDGET // max(1, obs_pad.shape[0] * N * k))
         for lo in range(0, len(idxs), cap):
-            sub = idxs[lo : lo + cap]
+            sub_lens = lens[lo : lo + cap]
+            sub_pad = obs_pad[: int(sub_lens.max()), lo : lo + cap]
             outs = _viterbi_topk_batch_core(
-                log_pi, log_A, log_B, [obs_list[i] for i in sub], k
+                log_pi, log_A, log_B, sub_pad, sub_lens, k
             )
-            for i, out in zip(sub, outs):
+            for i, out in zip(idxs[lo : lo + cap], outs):
                 results[i] = out
     return results
 

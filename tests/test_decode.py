@@ -331,11 +331,14 @@ def test_zero_probability_sequence_scores_minus_inf(spark):
 
 @pytest.mark.parametrize("bad", [-1, 5])
 def test_out_of_range_symbol_raises(spark, bad):
-    """A symbol id outside 0..M-1 fails the decode and score jobs with a
-    ValueError naming it and M; before, -1 wrapped to the last symbol."""
+    """A symbol id outside 0..M-1 fails the decode, top-k and score jobs
+    with a ValueError naming it and M; before, -1 wrapped to the last
+    symbol."""
     from pyspark.errors import PythonException
 
+    from baum_welch_spark.hmm.decode import viterbi_topk
+
     df = _one_batch(spark, [(1, [0, 1, 2]), (2, [0, bad, 0])])
-    for op in (score_sequences, viterbi_decode):
+    for op in (score_sequences, viterbi_decode, viterbi_topk):
         with pytest.raises(PythonException, match=rf"ValueError: observation symbol {bad} .*M=5"):
             op(spark, df, MODEL).collect()

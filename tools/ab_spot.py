@@ -3,10 +3,16 @@ time each named face alternating a module-level knob between runs, so both
 variants share machine conditions (the bench-noise protocol). The knob is a
 (module, attribute, a_value, b_value) triple given on the command line as
 ``--knob module.path:ATTR`` with A = the attribute's current value and
-B = its negation (boolean knobs only — which is what _LOG_MAT is).
+B = its negation (boolean knobs only).
 
-Usage:
-  python tools/ab_spot.py --runs 4 --knob baum_welch_spark.streaming.upsert:_LOG_MAT \
+The package keeps no such knob: the ``_LOG_MAT`` flag that the r15 CDC
+measurement (tools/ab_cdc_log_r15.json) switched is not in the committed
+tree. To A/B a code path, first add a temporary module-level boolean
+that selects it, in a local patch that is not committed, for example
+``_MY_KNOB = True`` in ``baum_welch_spark/streaming/upsert.py``.
+
+Usage (with that temporary knob in place):
+  python tools/ab_spot.py --runs 4 --knob baum_welch_spark.streaming.upsert:_MY_KNOB \
       cdc_changes cdc_time_travel cdc_schema_evolution cdc_compact cdc_apply_batch
 """
 
