@@ -116,6 +116,21 @@ def viterbi_decode_face(spark: SparkSession, sequences: DataFrame, model: HMM) -
     )
 
 
+def _posteriors(pi, A, B, obs) -> np.ndarray | None:
+    """gamma (T, N), the unnormalized alpha * beta of the scaled
+    forward-backward kernel, for one non-empty sequence; ``None`` when the
+    sequence has probability 0 under the model (a zero scale factor turns
+    alpha and beta into NaN, whose argmax would read state 0). A symbol
+    outside ``0..M-1`` raises ``ValueError`` (``kernel.check_symbols``)."""
+    from baum_welch_spark.hmm.kernel import check_symbols, forward_backward
+
+    obs = np.asarray(obs, dtype=np.int64)
+    check_symbols(obs, B.shape[1])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        alpha, beta, _, loglik = forward_backward(pi, A, B, obs)
+    return alpha * beta if np.isfinite(loglik) else None
+
+
 def posterior_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> DataFrame:
     """Posterior (gamma) decoding: per step t, the state maximizing the
     marginal P(s_t = q | O, λ) = gamma_t(q) from the scaled forward-backward
@@ -126,25 +141,25 @@ def posterior_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> D
     per-step accuracy is the loss. Same scale shape as viterbi_decode: the
     model broadcasts, the map is narrow, no shuffle.
 
-    Output: (seq_id, path_str) with path_str the comma-joined argmax states.
+    Output: (seq_id, path_str) with path_str the comma-joined argmax states;
+    NULL for a sequence with probability 0 under the model, which has no
+    posterior (:func:`_posteriors`). A symbol outside ``0..M-1`` raises
+    ``ValueError``.
     """
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from baum_welch_spark.hmm.kernel import forward_backward
-
         pi, A, B = bc.value
         for pdf in batches:
             ids, paths = [], []
             for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
                 if obs is None or len(obs) == 0:
                     continue
-                alpha, beta, _, _ = forward_backward(
-                    pi, A, B, np.asarray(obs, dtype=np.int64)
-                )
-                states = np.argmax(alpha * beta, axis=1)
+                g = _posteriors(pi, A, B, obs)
                 ids.append(seq_id)
-                paths.append(",".join(str(int(s)) for s in states))
+                paths.append(
+                    None if g is None else ",".join(str(int(s)) for s in np.argmax(g, axis=1))
+                )
             yield pd.DataFrame({"seq_id": ids, "path_str": paths})
 
     return sequences.mapInPandas(decode, schema="seq_id bigint, path_str string")
@@ -363,13 +378,13 @@ def state_occupancy(spark: SparkSession, sequences: DataFrame, model: HMM) -> Da
     per step — Rabiner's occupancy statistic (1989 eq. 27 numerator), the
     soft version of counting a decoded path's states. Same scale shape as
     the decodes: model broadcast, narrow map, no shuffle; output is
-    N rows per sequence.
+    N rows per sequence. A sequence with probability 0 under the model has
+    no posterior: its N rows carry a NULL occupancy (:func:`_posteriors`).
+    A symbol outside ``0..M-1`` raises ``ValueError``.
     """
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
 
     def occupancy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from baum_welch_spark.hmm.kernel import forward_backward
-
         pi, A, B = bc.value
         n = pi.shape[0]
         for pdf in batches:
@@ -377,14 +392,14 @@ def state_occupancy(spark: SparkSession, sequences: DataFrame, model: HMM) -> Da
             for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
                 if obs is None or len(obs) == 0:
                     continue
-                alpha, beta, _, _ = forward_backward(
-                    pi, A, B, np.asarray(obs, dtype=np.int64)
-                )
-                g = alpha * beta
-                g = g / g.sum(axis=1, keepdims=True)
-                occ = g.sum(axis=0)
+                g = _posteriors(pi, A, B, obs)
                 ids.extend([seq_id] * n)
                 states.extend(range(n))
+                if g is None:
+                    occs.extend([None] * n)
+                    continue
+                g = g / g.sum(axis=1, keepdims=True)
+                occ = g.sum(axis=0)
                 # round half-AWAY-from-zero to match DuckDB's round():
                 # np.round is half-even, so an occupancy landing exactly on
                 # an x.xxxxxx5 boundary would round differently per engine

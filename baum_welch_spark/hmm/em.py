@@ -7,10 +7,13 @@ once; ``fit``, ``fit_semisupervised``, ``fit_viterbi`` and ``fit_gaussian``
 supply only their E-step frame, broadcast payload and M-step to
 :func:`run_em`.
 
-Every E-step UDF combines its batch's statistics into NumPy blocks and
-emits them through the stripe codec (:func:`encode`, read back by
-:func:`decode`), so the per-iteration shuffle and collect are model-sized,
-O(partitions * N * (N + M)) rows, whatever the corpus size.
+Every E-step UDF combines its partition's statistics into NumPy blocks and
+emits them through the stripe codec (:func:`encode`), so one iteration's
+stripes are model-sized, O(partitions * N * (N + M)) rows, whatever the
+corpus size. :func:`run_em` collects them unsummed over Arrow in one job
+and one stage, and :func:`decode` sums them on the driver in partition
+order: no shuffle, and the same sum on every run. The Catalyst stripe sum
+(:func:`sum_stripes`) serves the callers that need a summed DataFrame.
 """
 
 from __future__ import annotations
@@ -22,8 +25,10 @@ from typing import Any, Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -64,38 +69,54 @@ def encode(
 def decode(
     rows, shapes: dict[str, tuple[int, ...]], value: str = "weight"
 ) -> tuple[dict[str, np.ndarray], float]:
-    """Collected stripe rows (Spark Rows or dicts, one per cell, the cell
-    value in column ``value``) -> ({kind: array of ``shapes[kind]``},
-    loglik). Absent cells and an absent loglik row read 0. A non-finite
-    count array raises ``FloatingPointError`` naming its kind: NaN counts
-    (a sequence with probability 0 under the model poisons its whole Arrow
-    batch) must never reach an M-step as a plausible-looking model."""
+    """Stripe rows -> ({kind: array of ``shapes[kind]``}, loglik). ``rows``
+    is an Arrow table (what :func:`run_em` collects) or a sequence of Spark
+    Rows or dicts, with the cell value in column ``value``.
+
+    Rows of the same cell add up, in row order: the unsummed per-partition
+    stripes :func:`run_em` collects (partition order, so the sum is the same
+    on every run) and already-summed rows alike (0.0 + x == x, so those
+    decode bit for bit). Absent cells and an absent loglik row read 0.
+
+    A non-finite count array raises ``FloatingPointError`` naming its kind:
+    NaN counts (a sequence with probability 0 under the model poisons its
+    whole Arrow batch) must never reach an M-step as a plausible-looking
+    model. The NaN crosses Arrow as a null, which reads NaN here."""
+    if not isinstance(rows, pa.Table):
+        rows = pa.Table.from_pylist(
+            [r.asDict() if isinstance(r, Row) else r for r in rows],
+            pa.schema([("kind", pa.string()), ("i", pa.int64()), ("j", pa.int64()),
+                       (value, pa.float64())]),
+        )
+    kinds = pc.dictionary_encode(rows.column("kind")).combine_chunks()
+    codes = kinds.indices.to_numpy(zero_copy_only=False)
+    ii, jj = (rows.column(c).to_numpy().astype(np.int64) for c in ("i", "j"))
+    w = rows.column(value).to_numpy()
     out = {kind: np.zeros(shape) for kind, shape in shapes.items()}
-    ll = 0.0
-    for r in rows:
-        kind = r["kind"]
-        if kind == KIND_LOGLIK:
-            ll = r[value]
-            continue
-        arr = out.get(kind)
+    ll = np.zeros(1)  # the loglik rows are (loglik, 0, 0, value)
+    cells = {**out, KIND_LOGLIK: ll}
+    for code, kind in enumerate(kinds.dictionary.to_pylist()):
+        arr = cells.get(kind)
         if arr is None:
             raise ValueError(f"decode: unexpected stripe kind {kind!r}")
-        if arr.ndim == 1:
-            arr[r["j"]] = r[value]
-        else:
-            arr[r["i"], r["j"]] = r[value]
+        sel = codes == code
+        # 1-D blocks ride on i = 0, so i * cols + j is the flat cell either way
+        np.add.at(arr.reshape(-1), ii[sel] * arr.shape[-1] + jj[sel], w[sel])
     for kind, arr in out.items():
         if not np.isfinite(arr).all():
             raise FloatingPointError(
                 f"non-finite {kind!r} EM statistics: a sequence with zero "
                 "probability under the model, or a NaN input, reached the E-step"
             )
-    return out, ll
+    return out, float(ll[0])
 
 
 def sum_stripes(raw: DataFrame, *by: str) -> DataFrame:
-    """The stripe sum (reference combiner + reducer): per-batch stripe rows
-    -> one summed row per ``(*by, kind, i, j)``.
+    """The stripe sum (reference combiner + reducer) as a Catalyst
+    aggregate: per-batch stripe rows -> one summed row per
+    ``(*by, kind, i, j)``. :func:`run_em` sums on the driver instead; this
+    serves the faces that return the summed frame itself and the grouped
+    trainer (``grouped.fit_grouped_distributed``).
 
     A NaN weight crosses the Arrow boundary out of the UDF as null, and
     ``sum`` skips nulls, so a poisoned batch would silently drop out of the
@@ -142,8 +163,10 @@ def run_em(
 ) -> FitResult:
     """The distributed EM loop (reference driver D2,
     BaumWelchDriver.java:114-134). Per iteration: broadcast
-    ``payload(model)``, collect ``estep(corpus, bc)`` (the summed stripe
-    frame) over the cached corpus, decode it into ``shapes``, and take
+    ``payload(model)``, collect ``estep(corpus, bc)`` (the E-step UDF's
+    unsummed per-partition stripe frame) over the cached corpus with
+    ``toArrow`` (one job, one stage, no shuffle), sum and decode it into
+    ``shapes`` on the driver, and take
     ``mstep(model, blocks)`` as the next model — written to
     ``{model_out}/model-{it}`` when set (reference S3/S4 sinks,
     BaumWelchDriver.java:128,178). Stops once the model moves less than
@@ -158,10 +181,10 @@ def run_em(
         for it in range(max_iter):
             bc = sc.broadcast(payload(model))
             try:
-                rows = estep(data, bc).collect()
+                stripes = estep(data, bc).toArrow()
             finally:
                 bc.unpersist()
-            blocks, ll = decode(rows, shapes)
+            blocks, ll = decode(stripes, shapes)
             trace.append(ll)
             new_model = mstep(model, blocks)
             if model_out is not None:

@@ -2,11 +2,13 @@
 faces built on its E-step. The driver loop itself is ``em.run_em``.
 
 - E-step (reference mapper M2-M6, BaumWelchMapper.java:143-258):
-  :func:`e_step_udf`, whose Arrow batches each emit ONE count block — the
+  :func:`e_step_udf`, whose partitions each emit ONE count block — the
   map-side combine the reference wrote but disabled (BaumWelchCombiner.java,
   off at BaumWelchDriver.java:171). The reference shuffles O(S*T*(2N+1))
   stripe records instead (its T-fold duplicate emission included, SURVEY
-  §2.6 Q1).
+  §2.6 Q1). The trainers sum the blocks on the driver (``em.run_em``, no
+  shuffle); the re-estimation faces sum them with a Catalyst aggregate
+  (:func:`expected_counts`).
 - M-step (reference A1-A4, BaumWelchReducer.java:49-149): ``kernel.m_step``
   on the driver for the trainers; :func:`normalize_counts`, a Catalyst
   window, for the DuckDB-exact re-estimation faces (:func:`em_reestimate`,
@@ -47,8 +49,8 @@ from baum_welch_spark.hmm.model import (
 def e_step_udf(bc_model, weighted: bool = False):
     """Build the mapInPandas function for one E-step pass.
 
-    One stripe block per Arrow batch (``em.encode``): the batch's expected
-    counts plus its loglik side-channel row.
+    One stripe block per partition (``em.encode``): the partition's
+    expected counts plus its loglik side-channel row.
 
     ``weighted``: the input carries a ``weight`` column and every
     sequence's counts/loglik scale by it (deduplicated-corpus multiplicity
@@ -97,18 +99,27 @@ def e_step_udf(bc_model, weighted: bool = False):
     return compute
 
 
+def e_step_stripes(
+    sequences: DataFrame, bc_model, weight_col: str | None = None
+) -> DataFrame:
+    """One E-step over the corpus -> the unsummed stripe frame
+    (kind, i, j, weight): one count block and loglik row per partition,
+    which ``em.decode`` sums on the driver."""
+    if weight_col is None:
+        inp = sequences.select("obs")
+    else:
+        inp = sequences.select("obs", F.col(weight_col).cast("double").alias("weight"))
+    return inp.mapInPandas(
+        e_step_udf(bc_model, weighted=weight_col is not None), schema=COUNTS_SCHEMA
+    )
+
+
 def expected_counts(
     sequences: DataFrame, bc_model, weight_col: str | None = None
 ) -> DataFrame:
     """One E-step over the corpus -> aggregated count DataFrame
     (kind, i, j, weight), including the loglik side-channel row."""
-    if weight_col is None:
-        inp = sequences.select("obs")
-    else:
-        inp = sequences.select("obs", F.col(weight_col).cast("double").alias("weight"))
-    return sum_stripes(
-        inp.mapInPandas(e_step_udf(bc_model, weighted=weight_col is not None), schema=COUNTS_SCHEMA)
-    )
+    return sum_stripes(e_step_stripes(sequences, bc_model, weight_col))
 
 
 def count_shapes(n_hidden: int, n_observed: int) -> dict[str, tuple[int, ...]]:
@@ -263,8 +274,9 @@ def fit(
     topology_mask: np.ndarray | None = None,
 ) -> FitResult:
     """Distributed soft EM (reference driver D2, BaumWelchDriver.java:114-134)
-    on :func:`em.run_em`: the E-step is :func:`expected_counts` under the
-    broadcast (pi, A, B) triple. Optionally writes
+    on :func:`em.run_em`: the E-step is :func:`e_step_stripes` under the
+    broadcast (pi, A, B) triple, one job and one stage per iteration whose
+    per-partition stripes the driver sums. Optionally writes
     ``{model_out}/model-{it}`` parquet per iteration (reference S3/S4 sinks,
     BaumWelchUtils.java:147-226, BaumWelchDriver.java:128,178).
 
@@ -286,7 +298,7 @@ def fit(
     """
     return run_discrete_em(
         spark, sequences, init,
-        estep=lambda data, bc: expected_counts(data, bc, weight_col=weight_col),
+        estep=lambda data, bc: e_step_stripes(data, bc, weight_col=weight_col),
         payload=lambda m: (m.pi, m.A, m.B),
         max_iter=max_iter, tol=tol, topology_mask=topology_mask, model_out=model_out,
     )

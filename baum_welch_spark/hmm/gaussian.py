@@ -7,8 +7,8 @@ re-expresses that published extension on the engine's shared EM loop
 (``em.run_em``): per Arrow batch the E-step accumulates model-sized
 sufficient statistics — initial γ₀, transition ξ sums, and per-state
 emission MOMENTS (Σγ, Σγx, Σγx²) instead of per-symbol counts — encoded as
-stripes by ``em.encode``; the shared stripe sum combines them, and the
-driver's M-step is closed-form:
+stripes by ``em.encode``; the driver sums them in partition order
+(``em.decode``), and its M-step is closed-form:
 
     μ_j  = Σ_t γ_t(j) x_t / Σ_t γ_t(j)
     σ²_j = Σ_t γ_t(j) x_t² / Σ_t γ_t(j) − μ_j²      (floored for safety)
@@ -318,10 +318,11 @@ def _gauss_estep_udf(bc_model):
     return compute
 
 
-def _gauss_counts(sequences: DataFrame, bc_model) -> DataFrame:
-    """One Gaussian E-step over the corpus -> summed moment stripes."""
-    return sum_stripes(
-        sequences.select("obs").mapInPandas(_gauss_estep_udf(bc_model), schema=COUNTS_SCHEMA)
+def _gauss_stripes(sequences: DataFrame, bc_model) -> DataFrame:
+    """One Gaussian E-step over the corpus -> unsummed per-partition moment
+    stripes."""
+    return sequences.select("obs").mapInPandas(
+        _gauss_estep_udf(bc_model), schema=COUNTS_SCHEMA
     )
 
 
@@ -337,7 +338,7 @@ def fit_gaussian(
     :func:`m_step_gauss`."""
     n = init.pi.shape[0]
     return run_em(
-        spark, sequences, init.validate(), estep=_gauss_counts, payload=lambda m: m,
+        spark, sequences, init.validate(), estep=_gauss_stripes, payload=lambda m: m,
         mstep=lambda m, b: m_step_gauss(m, b[KIND_INITIAL], b[KIND_TRANSITION], b[KIND_MOMENT]),
         shapes={KIND_INITIAL: (n,), KIND_TRANSITION: (n, n), KIND_MOMENT: (n, 3)},
         max_iter=max_iter, tol=tol,
@@ -610,7 +611,7 @@ def _ghmm_reestimate_unchecked(
     (ghmm_em_trace) feeds 6-dp-ROUNDED models whose pi/A sums are off by up
     to ~2e-6 — within the trace contract but outside validate's 1e-8."""
     bc = spark.sparkContext.broadcast(model)
-    counts = _gauss_counts(sequences, bc)
+    counts = sum_stripes(_gauss_stripes(sequences, bc))
     w = Window.partitionBy("kind", "i")
     probs = (
         counts.filter(F.col("kind").isin(KIND_INITIAL, KIND_TRANSITION))

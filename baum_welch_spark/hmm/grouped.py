@@ -105,7 +105,11 @@ def fit_grouped_distributed(
     groups' sequences (parallelism = partitions, wherever the data sits),
     an in-UDF map-side combine per (batch, group), a
     groupBy(group, kind, i, j) count shuffle that is model×groups-sized,
-    and a driver M-step per group on the collected tiny counts. Converged
+    and a driver M-step per group on the collected tiny counts. The
+    single-model trainers (``em.run_em``) skip that shuffle and sum each
+    partition's stripes on the driver; here the unsummed frame is
+    partitions × groups × model rows, so the shuffle (``em.sum_stripes``)
+    stays and the driver receives groups × model rows. Converged
     groups freeze out of later iterations (their sequences are filtered
     before the E-step, so finished groups cost nothing).
 

@@ -201,15 +201,27 @@ def _length_buckets(lens: list[int]) -> list[list[int]]:
 _VITERBI_CAND_BUDGET = 1 << 22
 
 
+def check_symbols(obs: np.ndarray, n_symbols: int) -> None:
+    """Raise ``ValueError`` naming the first bad bound when a symbol in the
+    (non-empty) int array ``obs`` lies outside ``0 <= o < n_symbols``: NumPy
+    indexing would silently wrap a negative id into a plausible result, or
+    fail with a bare IndexError."""
+    lo_sym, hi_sym = int(obs.min()), int(obs.max())
+    if lo_sym < 0 or hi_sym >= n_symbols:
+        bad = lo_sym if lo_sym < 0 else hi_sym
+        raise ValueError(
+            f"observation symbol {bad} is out of range for a model "
+            f"with M={n_symbols} symbols (valid: 0..{n_symbols - 1})"
+        )
+
+
 def _padded_buckets(obs_list: list, n_symbols: int, max_seqs: int | None = None):
     """Yield ``(idxs, obs_pad, lens)`` per octave length bucket of
     ``obs_list`` (:func:`_length_buckets`), at most ``max_seqs`` sequences
     each: ``obs_pad`` is the bucket's symbols as a (Tmax, S) int64 array,
     zero-padded past each sequence's end, and ``lens`` its (S,) lengths.
 
-    Every bucket is range-checked once: a symbol outside ``0 <= o < M``
-    raises ``ValueError``, where NumPy indexing would silently wrap a
-    negative id into a plausible score or fail with a bare IndexError."""
+    Every bucket is range-checked once (:func:`check_symbols`)."""
     for bucket in _length_buckets([len(o) for o in obs_list]):
         step = max_seqs or len(bucket)
         for lo in range(0, len(bucket), step):
@@ -218,13 +230,7 @@ def _padded_buckets(obs_list: list, n_symbols: int, max_seqs: int | None = None)
             obs_pad = np.zeros((int(lens.max()), len(idxs)), dtype=np.int64)
             for col, i in enumerate(idxs):
                 obs_pad[: lens[col], col] = obs_list[i]
-            lo_sym, hi_sym = int(obs_pad.min()), int(obs_pad.max())
-            if lo_sym < 0 or hi_sym >= n_symbols:
-                bad = lo_sym if lo_sym < 0 else hi_sym
-                raise ValueError(
-                    f"observation symbol {bad} is out of range for a model "
-                    f"with M={n_symbols} symbols (valid: 0..{n_symbols - 1})"
-                )
+            check_symbols(obs_pad, n_symbols)
             yield idxs, obs_pad, lens
 
 
@@ -333,21 +339,14 @@ def e_step_counts_batch(
     accumulate into the same out arrays; the summed loglik is returned.
     Equality with the per-sequence kernel is pinned by the same batch
     tests (bucket boundaries only change float accumulation ORDER, which
-    the existing 1e-10 pins already absorb)."""
-    if len(obs_list) == 0:
-        return 0.0
-    groups = _length_buckets([len(o) for o in obs_list])
-    if len(groups) == 1:
-        return _e_step_counts_batch_core(
-            pi, A, B, obs_list, out_pi, out_A, out_B, weights
-        )
+    the existing 1e-10 pins already absorb). The buckets come from
+    :func:`_padded_buckets`, so a symbol outside ``0..M-1`` raises
+    ``ValueError``."""
     warr = None if weights is None else np.asarray(weights, dtype=np.float64)
     total = 0.0
-    for idxs in groups:
+    for idxs, obs_pad, lens in _padded_buckets(obs_list, B.shape[1]):
         total += _e_step_counts_batch_core(
-            pi, A, B,
-            [obs_list[i] for i in idxs],
-            out_pi, out_A, out_B,
+            pi, A, B, obs_pad, lens, out_pi, out_A, out_B,
             None if warr is None else warr[idxs],
         )
     return total
@@ -357,17 +356,19 @@ def _e_step_counts_batch_core(
     pi: np.ndarray,
     A: np.ndarray,
     B: np.ndarray,
-    obs_list: list[np.ndarray],
+    obs_pad: np.ndarray,
+    lens: np.ndarray,
     out_pi: np.ndarray,
     out_A: np.ndarray,
     out_B: np.ndarray,
     weights: np.ndarray | None = None,
 ) -> float:
     """Batched E-step: the same expected counts as looping e_step_counts over
-    obs_list, but vectorized ACROSS sequences (padded to the batch max
-    length) so the Python-level loop runs max_T times, not sum(T_s) times.
-    This is the hot kernel inside the distributed fit's Arrow batches
-    (entered via the length-bucketing wrapper e_step_counts_batch).
+    one padded bucket (``obs_pad`` (Tmax, S), zero past each of the
+    ``lens``, from :func:`_padded_buckets`), but vectorized ACROSS sequences
+    so the Python-level loop runs max_T times, not sum(T_s) times. This is
+    the hot kernel inside the distributed fit's Arrow batches (entered via
+    the length-bucketing wrapper e_step_counts_batch).
 
     Padding semantics: for t beyond a sequence's end, scale is pinned to 1
     (no loglik contribution), alpha is carried forward unchanged, and beta's
@@ -385,15 +386,8 @@ def _e_step_counts_batch_core(
 
     Returns the (weighted) summed log-likelihood of the batch.
     """
-    S = len(obs_list)
-    if S == 0:
-        return 0.0
+    Tmax, S = obs_pad.shape
     N, M = A.shape[0], B.shape[1]
-    lens = np.array([len(o) for o in obs_list], dtype=np.int64)
-    Tmax = int(lens.max())
-    obs_pad = np.zeros((Tmax, S), dtype=np.int64)
-    for s_i, o in enumerate(obs_list):
-        obs_pad[: len(o), s_i] = o
     valid = np.arange(Tmax)[:, None] < lens[None, :]  # (T, S)
 
     alpha = np.empty((Tmax, S, N))

@@ -5,10 +5,10 @@ Cappe & Moulines 2009, "On-line expectation-maximization algorithm for
 latent data models", and Liang & Klein 2009's stepwise-EM formulation).
 
 Per micro-batch t the discrete E-step every trainer uses
-(``fit.expected_counts`` — mapInPandas with in-UDF combine, model
-broadcast) produces the batch's expected counts, read back with the shared
-stripe codec (``em.decode``); the running sufficient statistics then take
-a stepwise-decaying interpolation
+(``fit.e_step_stripes`` — mapInPandas with in-UDF combine, model
+broadcast) produces the batch's per-partition expected counts, collected
+over Arrow and summed with the shared stripe codec (``em.decode``); the
+running sufficient statistics then take a stepwise-decaying interpolation
 
     s  <-  (1 - eta_t) * s + eta_t * (batch_counts / batch_sequences)
     eta_t = (t + 2) ** -alpha          (alpha in (0.5, 1])
@@ -19,10 +19,11 @@ record once — the training loop a 100 TB/day corpus needs when "cache the
 corpus and iterate" stops being an option.
 
 One update is one step, not a loop, so it does not run on ``em.run_em``:
-one job over the micro-batch, a model-sized collect, a driver-side
-re-normalize, one broadcast. State is the O(N^2 + N*M) stats triple on
-the driver (checkpoint-friendly: it is re-derivable from the written
-model trail). Nothing batch-sized ever reaches the driver.
+one job and one stage over the micro-batch (no shuffle), a model-sized
+Arrow collect, a driver-side re-normalize, one broadcast. State is the
+O(N^2 + N*M) stats triple on the driver (checkpoint-friendly: it is
+re-derivable from the written model trail). Nothing batch-sized ever
+reaches the driver.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from baum_welch_spark.hmm.em import decode
-from baum_welch_spark.hmm.fit import count_shapes, expected_counts
+from baum_welch_spark.hmm.fit import count_shapes, e_step_stripes
 from baum_welch_spark.hmm.kernel import m_step
 from baum_welch_spark.hmm.model import (
     HMM,
@@ -62,10 +63,10 @@ class OnlineEM:
         sc = spark.sparkContext
         bc = sc.broadcast((self.model.pi, self.model.A, self.model.B))
         try:
-            rows = expected_counts(batch, bc).collect()
+            stripes = e_step_stripes(batch, bc).toArrow()
         finally:
             bc.unpersist()
-        blocks, ll = decode(rows, count_shapes(n, m))
+        blocks, ll = decode(stripes, count_shapes(n, m))
         cpi, cA, cB = blocks[KIND_INITIAL], blocks[KIND_TRANSITION], blocks[KIND_EMISSION]
         n_seqs = float(cpi.sum())  # every sequence contributes exactly 1 to pi
         if n_seqs == 0:

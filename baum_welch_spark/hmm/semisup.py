@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from baum_welch_spark.hmm.em import COUNTS_SCHEMA, FitResult, encode, sum_stripes
+from baum_welch_spark.hmm.em import COUNTS_SCHEMA, FitResult, encode
 from baum_welch_spark.hmm.fit import run_discrete_em
 from baum_welch_spark.hmm.kernel import e_step_counts_batch
 from baum_welch_spark.hmm.model import (
@@ -127,10 +127,9 @@ def fit_semisupervised(
     is the mixed objective."""
     return run_discrete_em(
         spark, sequences, init,
-        estep=lambda data, bc: sum_stripes(
-            data.select("obs", F.col(states_col).alias("states"))
-            .mapInPandas(_semisup_udf(bc), schema=COUNTS_SCHEMA)
-        ),
+        estep=lambda data, bc: data.select(
+            "obs", F.col(states_col).alias("states")
+        ).mapInPandas(_semisup_udf(bc), schema=COUNTS_SCHEMA),
         payload=lambda m: (m.pi, m.A, m.B),
         max_iter=max_iter, tol=tol,
     )

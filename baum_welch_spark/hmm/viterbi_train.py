@@ -85,11 +85,11 @@ def hard_count_udf(bc_log_model):
     return compute
 
 
-def hard_counts(sequences: DataFrame, bc_log_model) -> DataFrame:
-    """One hard-EM pass over the corpus -> aggregated (kind, i, j, weight)
-    counts, including the loglik side-channel row."""
-    return sum_stripes(
-        sequences.select("obs").mapInPandas(hard_count_udf(bc_log_model), schema=COUNTS_SCHEMA)
+def hard_count_stripes(sequences: DataFrame, bc_log_model) -> DataFrame:
+    """One hard-EM pass over the corpus -> the unsummed per-partition
+    (kind, i, j, weight) stripes, including the loglik side-channel rows."""
+    return sequences.select("obs").mapInPandas(
+        hard_count_udf(bc_log_model), schema=COUNTS_SCHEMA
     )
 
 
@@ -113,7 +113,7 @@ def viterbi_reestimate(
     Integer-count / integer-count division is one exact IEEE op on both
     engines, so the oracle needs no rounding."""
     bc = spark.sparkContext.broadcast(_log_model(model))
-    counts = hard_counts(sequences, bc)
+    counts = sum_stripes(hard_count_stripes(sequences, bc))
     return normalize_counts(counts.filter(F.col("weight") > 0))
 
 
@@ -167,7 +167,7 @@ def fit_viterbi(
     # hard EM's loglik is not monotone in general; convergence is on the
     # model-space distance, like the reference's D4 test
     return run_discrete_em(
-        spark, sequences, init, estep=hard_counts, payload=_log_model,
+        spark, sequences, init, estep=hard_count_stripes, payload=_log_model,
         max_iter=max_iter, tol=tol, topology_mask=topology_mask,
     )
 

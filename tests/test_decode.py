@@ -329,16 +329,37 @@ def test_zero_probability_sequence_scores_minus_inf(spark):
             assert all(np.isfinite(getattr(row, c)) for c in cols)
 
 
+def test_zero_probability_sequence_has_null_posterior(spark):
+    """posterior_decode and state_occupancy give the impossible sequence a
+    NULL result (NULL path_str; N rows of NULL occupancy), not the argmax
+    of an all-NaN posterior (state 0); every other sequence in its Arrow
+    batch gets exactly the rows it gets without it."""
+    from baum_welch_spark.hmm.decode import posterior_decode, state_occupancy
+
+    mixed = _one_batch(spark, GOOD_SEQS + [(2, [1, 0, 1])])
+    clean = _one_batch(spark, GOOD_SEQS)
+    for op, key, col, n_rows in (
+        (posterior_decode, ("seq_id",), "path_str", 1),
+        (state_occupancy, ("seq_id", "state"), "occupancy", ZERO_MODEL.n_hidden),
+    ):
+        got = {tuple(r[k] for k in key): r for r in op(spark, mixed, ZERO_MODEL).collect()}
+        ref = {tuple(r[k] for k in key): r for r in op(spark, clean, ZERO_MODEL).collect()}
+        bad = [r for k, r in got.items() if k[0] == 2]
+        assert len(bad) == n_rows and all(r[col] is None for r in bad), (op.__name__, bad)
+        assert {k: r for k, r in got.items() if k[0] != 2} == ref, op.__name__
+        assert all(r[col] is not None for r in ref.values()), op.__name__
+
+
 @pytest.mark.parametrize("bad", [-1, 5])
 def test_out_of_range_symbol_raises(spark, bad):
-    """A symbol id outside 0..M-1 fails the decode, top-k and score jobs
-    with a ValueError naming it and M; before, -1 wrapped to the last
-    symbol."""
+    """A symbol id outside 0..M-1 fails the decode, top-k, score and
+    posterior jobs with a ValueError naming it and M; before, -1 wrapped
+    to the last symbol."""
     from pyspark.errors import PythonException
 
-    from baum_welch_spark.hmm.decode import viterbi_topk
+    from baum_welch_spark.hmm.decode import posterior_decode, state_occupancy, viterbi_topk
 
     df = _one_batch(spark, [(1, [0, 1, 2]), (2, [0, bad, 0])])
-    for op in (score_sequences, viterbi_decode, viterbi_topk):
+    for op in (score_sequences, viterbi_decode, viterbi_topk, posterior_decode, state_occupancy):
         with pytest.raises(PythonException, match=rf"ValueError: observation symbol {bad} .*M=5"):
             op(spark, df, MODEL).collect()

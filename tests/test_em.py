@@ -1,11 +1,13 @@
-"""The shared EM engine (hmm/em.py): the stripe codec round-trips exactly,
-non-finite statistics fail loudly, and every trainer on the shared loop
-keeps the per-iteration Spark job count."""
+"""The shared EM engine (hmm/em.py): the stripe codec round-trips exactly
+and sums per-partition stripes in partition order, non-finite statistics
+fail loudly, and every trainer on the shared loop runs one Spark job per
+iteration."""
 
 import uuid
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -124,6 +126,69 @@ def test_decode_allows_non_finite_loglik():
     assert ll == -np.inf
 
 
+# -- driver-side stripe sum (no Spark) ----------------------------------------
+
+
+def _partition_stripes(n_parts: int, seed: int = 3):
+    """Per-partition stripe blocks as the E-step UDFs emit them, and the
+    Arrow table of their concatenation in partition order (what
+    ``toArrow`` returns for the unsummed frame)."""
+    rng = np.random.default_rng(seed)
+    parts = [
+        ({"initial": rng.random(3) * 10.0 ** rng.integers(-3, 4),
+          "transition": rng.random((3, 3)) * 10.0 ** rng.integers(-3, 4),
+          "emission": rng.random((3, 4)) ** 7},
+         float(rng.normal() * 1e4))
+        for _ in range(n_parts)
+    ]
+    frame = pd.concat([encode(b, ll) for b, ll in parts], ignore_index=True)
+    return parts, pa.Table.from_pandas(frame, preserve_index=False)
+
+
+def test_decode_sums_partitions_in_partition_order_bit_exact():
+    parts, table = _partition_stripes(7)
+    got, ll = decode(table, count_shapes(3, 4))
+    want_ll = 0.0
+    for _, p_ll in parts:
+        want_ll += p_ll
+    assert ll == want_ll
+    for kind in ("initial", "transition", "emission"):
+        want = np.zeros_like(parts[0][0][kind])
+        for blocks, _ in parts:
+            want = want + blocks[kind]
+        _assert_bits_equal(got[kind], want)
+    # the same rows as a list of dicts decode to the same bits
+    records, rec_ll = decode(table.to_pylist(), count_shapes(3, 4))
+    assert rec_ll == ll
+    for kind, arr in got.items():
+        _assert_bits_equal(records[kind], arr)
+
+
+def test_decode_raises_on_null_weight_from_arrow():
+    """A NaN count leaves the E-step UDF through Arrow as a null; the
+    decoder must read it back as NaN and raise, not skip it."""
+    _, table = _partition_stripes(3)
+    w = table.column("weight").to_pylist()
+    kinds = table.column("kind").to_pylist()
+    w[kinds.index("emission", len(w) // 3)] = None  # in the second partition
+    table = table.set_column(
+        table.schema.get_field_index("weight"), "weight", pa.array(w, pa.float64())
+    )
+    with pytest.raises(FloatingPointError, match="'emission'"):
+        decode(table, count_shapes(3, 4))
+
+
+def test_decode_reads_an_empty_arrow_table_as_zero():
+    """A corpus with no sequences: the E-step emits no stripes at all."""
+    table = pa.table(
+        {"kind": pa.array([], pa.string()), "i": pa.array([], pa.int32()),
+         "j": pa.array([], pa.int32()), "weight": pa.array([], pa.float64())}
+    )
+    got, ll = decode(table, count_shapes(2, 2))
+    assert ll == 0.0
+    assert all(not arr.any() for arr in got.values())
+
+
 # -- loud failure on impossible sequences (Spark) -----------------------------
 
 
@@ -166,13 +231,56 @@ def test_online_update_raises_on_zero_probability_sequence(spark, one_batch):
     assert state.model is model and state.t == 0
 
 
+@pytest.mark.parametrize("bad", [-1, 5])
+def test_fit_estep_raises_on_out_of_range_symbol(spark, bad):
+    """fit, OnlineEM.update and em_reestimate fail with the decode
+    operators' ValueError on a symbol outside 0..M-1; before, -1 wrapped
+    to the last symbol and M failed with a bare IndexError."""
+    from pyspark.errors import PythonException
+
+    from baum_welch_spark.hmm.fit import em_reestimate
+    from baum_welch_spark.hmm.online import OnlineEM
+
+    model = HMM.random(2, 5, seed=3)
+    seqs = spark.createDataFrame(
+        [(1, [0, 1, 2]), (2, [0, bad, 0])], "seq_id bigint, obs array<int>"
+    ).coalesce(1)
+    runs = {
+        "fit": lambda: fit(spark, seqs, model, max_iter=1),
+        "online": lambda: OnlineEM(model=model).update(spark, seqs),
+        "em_reestimate": lambda: em_reestimate(spark, seqs, model).collect(),
+    }
+    for run in runs.values():
+        with pytest.raises(PythonException, match=rf"ValueError: observation symbol {bad} .*M=5"):
+            run()
+
+
+def test_fit_is_deterministic_across_partitions(spark):
+    """Two fits over the same 4-partition corpus: the driver sums the
+    partitions' stripes in partition order, so traces and models agree
+    bit for bit."""
+    events = load_table(spark, SF0001, "events")
+    seqs = build_sequences(events).repartition(4, "seq_id")
+    init = HMM.random(3, 5, seed=11)
+    a = fit(spark, seqs, init, max_iter=3)
+    b = fit(spark, seqs, init, max_iter=3)
+    assert seqs.rdd.getNumPartitions() == 4
+    assert np.array(a.loglik_trace).tobytes() == np.array(b.loglik_trace).tobytes()
+    for attr in ("pi", "A", "B"):
+        _assert_bits_equal(getattr(a.model, attr), getattr(b.model, attr))
+
+
 # -- per-iteration Spark job count --------------------------------------------
 
-# Jobs each trainer launched for max_iter=3 on a cached, materialized corpus
-# before the trainers shared one loop (2 per iteration: the E-step's
-# shuffle-map stage and the collect). More means a lost cache or an extra
-# action per iteration.
-PARENT_JOBS_3_ITERS = 6
+# Jobs each trainer on the shared loop launches for max_iter=3 on a cached,
+# materialized corpus: one per iteration, the E-step's Arrow collect of its
+# unsummed per-partition stripes (the driver sums them; there is no shuffle
+# stage). More means a lost cache or an extra action per iteration.
+JOBS_3_ITERS = 3
+# fit_grouped_distributed keeps the Catalyst stripe sum (its driver volume
+# would grow with partitions x groups), so it keeps its count: 3 jobs for
+# the group inventory, then a shuffle-map job and a collect per iteration.
+GROUPED_JOBS_3_ITERS = 9
 
 
 def _jobs(spark, fn) -> int:
@@ -190,6 +298,8 @@ def _jobs(spark, fn) -> int:
 
 def test_trainers_launch_no_more_jobs_per_iteration(spark):
     from baum_welch_spark.hmm.gaussian import GaussianHMM, build_value_sequences, fit_gaussian
+    from baum_welch_spark.hmm.grouped import fit_grouped_distributed
+    from baum_welch_spark.hmm.online import OnlineEM
     from baum_welch_spark.hmm.semisup import fit_semisupervised
     from baum_welch_spark.hmm.viterbi_train import fit_viterbi
 
@@ -215,10 +325,20 @@ def test_trainers_launch_no_more_jobs_per_iteration(spark):
                 spark, lambda: fit_gaussian(spark, values, ginit, max_iter=3)
             ),
         }
+        online = _jobs(spark, lambda: OnlineEM(model=init).update(spark, seqs))
+        grouped = _jobs(
+            spark,
+            lambda: fit_grouped_distributed(
+                spark, seqs.withColumn("group", (F.col("seq_id") % 2).cast("string")),
+                3, 5, max_iter=3,
+            ),
+        )
     finally:
         for f in frames:
             f.unpersist()
-    assert all(0 < n <= PARENT_JOBS_3_ITERS for n in got.values()), got
+    assert got == dict.fromkeys(got, JOBS_3_ITERS), got
+    assert online == 1
+    assert grouped == GROUPED_JOBS_3_ITERS
 
 
 # -- session default cores (no new session) ----------------------------------
