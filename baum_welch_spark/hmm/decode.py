@@ -15,18 +15,15 @@ All are mapInPandas Arrow-batch operators: the model broadcasts and output
 stays distributed. Scale: no shuffle at all for decode/score (narrow map);
 top-k is one tiny global sort of the scores projection.
 
-viterbi_decode and score_sequences run each Arrow batch through one batched
-kernel call (``kernel.viterbi_batch`` / ``kernel.loglik_batch``): octave
-length buckets, one padded NumPy DP per bucket across all its sequences, so
-the Python-level loop runs max_T times per bucket rather than sum(T_s)
-times. Scoring is forward-only (no backward pass). Their contracts:
+Each Arrow batch runs through the batched kernels of ``hmm/kernel.py``
+(viterbi_topk: its own batched list-Viterbi), one padded DP per octave
+length bucket, so the Python-level loop runs max_T times per bucket rather
+than sum(T_s) times. Their contracts:
 
   * a sequence with probability 0 under the model scores ``-inf`` (Viterbi
-    path arbitrary), never NULL/NaN, and does not disturb its batch-mates;
+    path arbitrary) and has a NULL posterior, never NaN or a plausible
+    path, and does not disturb its batch-mates;
   * a symbol outside ``0..M-1`` raises ``ValueError`` naming it and M.
-
-posterior_decode and state_occupancy still run the per-sequence
-``kernel.forward_backward``; viterbi_topk has its own batched list-Viterbi.
 """
 
 from __future__ import annotations
@@ -39,6 +36,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from baum_welch_spark.hmm.kernel import (
+    _padded_buckets,
+    forward_backward_batch,
+    loglik_batch,
+    symbol_emit,
+    viterbi_paths,
+)
 from baum_welch_spark.hmm.model import HMM
 
 DECODE_SCHEMA = "seq_id bigint, loglik double, path array<int>"
@@ -82,7 +86,7 @@ def viterbi_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> Dat
     score), not the marginal likelihood — use score_sequences for that.
     A sequence the model rules out (probability 0) gets loglik ``-inf`` and
     an arbitrary path; a symbol outside ``0..M-1`` raises ``ValueError``.
-    Each Arrow batch is one ``kernel.viterbi_batch`` call.
+    Each Arrow batch is one ``kernel.viterbi_paths`` call.
     """
     with np.errstate(divide="ignore"):
         bc = spark.sparkContext.broadcast(
@@ -90,12 +94,13 @@ def viterbi_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> Dat
         )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from baum_welch_spark.hmm.kernel import viterbi_batch
-
         log_pi, log_A, log_B = bc.value
+        log_emit = symbol_emit(log_B)
         for pdf in batches:
             ids, obs_list = _nonempty(pdf)
-            paths, lls = viterbi_batch(log_pi, log_A, log_B, obs_list)
+            paths, lls = viterbi_paths(
+                log_pi, log_A, log_emit, _padded_buckets(obs_list, log_B.shape[1]), len(ids)
+            )
             yield pd.DataFrame(
                 {"seq_id": ids, "loglik": lls, "path": [p.tolist() for p in paths]}
             )
@@ -116,19 +121,17 @@ def viterbi_decode_face(spark: SparkSession, sequences: DataFrame, model: HMM) -
     )
 
 
-def _posteriors(pi, A, B, obs) -> np.ndarray | None:
-    """gamma (T, N), the unnormalized alpha * beta of the scaled
-    forward-backward kernel, for one non-empty sequence; ``None`` when the
-    sequence has probability 0 under the model (a zero scale factor turns
-    alpha and beta into NaN, whose argmax would read state 0). A symbol
-    outside ``0..M-1`` raises ``ValueError`` (``kernel.check_symbols``)."""
-    from baum_welch_spark.hmm.kernel import check_symbols, forward_backward
-
-    obs = np.asarray(obs, dtype=np.int64)
-    check_symbols(obs, B.shape[1])
-    with np.errstate(divide="ignore", invalid="ignore"):
-        alpha, beta, _, loglik = forward_backward(pi, A, B, obs)
-    return alpha * beta if np.isfinite(loglik) else None
+def _posterior_buckets(pi, A, B, obs_list):
+    """Yield ``(idxs, lens, alpha, beta, scale, ok)`` per range-checked
+    bucket of the non-empty ``obs_list`` (one
+    ``kernel.forward_backward_batch`` each). ``ok[s]`` is False for a
+    sequence with probability 0, whose NaN alpha has no posterior: callers
+    emit NULL for it, never its argmax (state 0)."""
+    emit = symbol_emit(B)
+    for idxs, obs_pad, lens in _padded_buckets(obs_list, B.shape[1]):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            alpha, beta, scale = forward_backward_batch(pi, A, emit, obs_pad, lens)
+        yield idxs, lens, alpha, beta, scale, (scale > 0).all(axis=0)
 
 
 def posterior_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> DataFrame:
@@ -143,23 +146,21 @@ def posterior_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> D
 
     Output: (seq_id, path_str) with path_str the comma-joined argmax states;
     NULL for a sequence with probability 0 under the model, which has no
-    posterior (:func:`_posteriors`). A symbol outside ``0..M-1`` raises
-    ``ValueError``.
+    posterior (:func:`_posterior_buckets`). A symbol outside ``0..M-1``
+    raises ``ValueError``.
     """
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pi, A, B = bc.value
         for pdf in batches:
-            ids, paths = [], []
-            for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
-                if obs is None or len(obs) == 0:
-                    continue
-                g = _posteriors(pi, A, B, obs)
-                ids.append(seq_id)
-                paths.append(
-                    None if g is None else ",".join(str(int(s)) for s in np.argmax(g, axis=1))
-                )
+            ids, obs_list = _nonempty(pdf)
+            paths = [None] * len(ids)
+            for idxs, lens, alpha, beta, _, ok in _posterior_buckets(pi, A, B, obs_list):
+                states = np.ascontiguousarray((alpha * beta).argmax(axis=2).T)
+                for col, i in enumerate(idxs):
+                    if ok[col]:
+                        paths[i] = ",".join(map(str, states[col, : lens[col]].tolist()))
             yield pd.DataFrame({"seq_id": ids, "path_str": paths})
 
     return sequences.mapInPandas(decode, schema="seq_id bigint, path_str string")
@@ -216,33 +217,46 @@ def _blist(row) -> str:
     return "[" + ", ".join(_lit(v) for v in row) + "]"
 
 
-def score_oracle_sql(model: HMM) -> str:
-    """ANSI-SQL (DuckDB) oracle for score_sequences_face: the scaled forward
-    recursion (kernel.forward_backward, reference M2) as a recursive CTE.
+def _symbol_emis(table: np.ndarray):
+    """The discrete family's SQL emission term of state j (1-based) at the
+    coded row ``c``: a lookup into row j of ``table`` (B, or log B)."""
+    return lambda j: f"({_blist(table[j - 1])})[c.sym + 1]"
 
-    Per step the unnormalized alphas u_j, their sum s, the running
-    log-likelihood ll += ln(s), and the normalized alphas p_j are carried as
-    plain columns (lateral aliases). Values agree with the NumPy kernel to
-    ~1e-12; both sides round to 6 decimals."""
-    N = model.pi.shape[0]
-    pi, A, B = model.pi, model.A, model.B
-    j1 = range(1, N + 1)
-    base_u = ",\n         ".join(
-        f"{_lit(pi[j - 1])} * ({_blist(B[j - 1])})[c.sym + 1] AS u{j}" for j in j1
-    )
+
+def _alpha_terms(pi: np.ndarray, A: np.ndarray, emis) -> tuple[str, ...]:
+    """(base_u, step_u, usum, nusum, norm, nnorm): the column lists of the
+    scaled forward recursion's base and recursive members, with the model
+    embedded as full-precision literals and ``emis(j)`` the emission term
+    of state j (:func:`_symbol_emis`, or the Gaussian density)."""
+    j1 = range(1, pi.shape[0] + 1)
+    base_u = ",\n         ".join(f"{_lit(pi[j - 1])} * {emis(j)} AS u{j}" for j in j1)
     # recursive member: FRESH alias names (nu/ns/...) — unqualified u1/s/ll
     # would bind to the working table's same-named columns, not the lateral
     # aliases, silently freezing the recursion. Output names are positional.
     step_u = ",\n         ".join(
         "("
         + " + ".join(f"a.p{i} * {_lit(A[i - 1][j - 1])}" for i in j1)
-        + f") * ({_blist(B[j - 1])})[c.sym + 1] AS nu{j}"
+        + f") * {emis(j)} AS nu{j}"
         for j in j1
     )
-    usum = " + ".join(f"u{j}" for j in j1)
-    nusum = " + ".join(f"nu{j}" for j in j1)
-    norm = ", ".join(f"u{j} / s AS p{j}" for j in j1)
-    nnorm = ", ".join(f"nu{j} / ns AS np{j}" for j in j1)
+    return (
+        base_u,
+        step_u,
+        " + ".join(f"u{j}" for j in j1),
+        " + ".join(f"nu{j}" for j in j1),
+        ", ".join(f"u{j} / s AS p{j}" for j in j1),
+        ", ".join(f"nu{j} / ns AS np{j}" for j in j1),
+    )
+
+
+def _forward_ctes(pi: np.ndarray, A: np.ndarray, emis, coded: str) -> str:
+    """WITH-prefix of the scaled forward recursion (kernel.loglik_batch,
+    reference M2) as recursive CTEs over the ``coded`` events query:
+    coded, lens and ``alpha``, which carries per step the unnormalized
+    alphas u_j, their sum s, the running log-likelihood ll += ln(s) and the
+    normalized alphas p_j as plain columns (lateral aliases). Ends at
+    alpha's closing parenthesis."""
+    base_u, step_u, usum, nusum, norm, nnorm = _alpha_terms(pi, A, emis)
     # MATERIALIZED on every CTE a recursion references: DuckDB (1.0)
     # otherwise INLINES the referenced CTE into each recursive iteration —
     # coded's window functions would re-run per step, and in the two-CTE
@@ -251,7 +265,7 @@ def score_oracle_sql(model: HMM) -> str:
     # before this). The inner WITH RECURSIVE inside a materialized CTE
     # evaluates once; values are bit-identical either way.
     return f"""
-WITH coded AS MATERIALIZED ({_CODED_SQL}),
+WITH coded AS MATERIALIZED ({coded}),
 lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
 alpha AS MATERIALIZED (
   WITH RECURSIVE alpha_r AS (
@@ -265,11 +279,23 @@ alpha AS MATERIALIZED (
            ({nusum}) AS ns, a.ll + ln(ns) AS nll, {nnorm}
     FROM alpha_r a JOIN coded c ON c.user_id = a.user_id AND c.t = a.t + 1
   ) SELECT * FROM alpha_r
-)
+)"""
+
+
+#: the score oracles' final select: each sequence's loglik at its last step
+_SCORE_SELECT_SQL = """
 SELECT a.user_id AS seq_id, l.t_len::INTEGER AS t_len,
        round(a.ll, 6) AS loglik, round(a.ll / l.t_len, 6) AS avg_loglik
 FROM alpha a JOIN lens l ON l.user_id = a.user_id AND a.t = l.t_len - 1
 """
+
+
+def score_oracle_sql(model: HMM) -> str:
+    """ANSI-SQL (DuckDB) oracle for score_sequences_face: the scaled forward
+    recursion (:func:`_forward_ctes`) read at each sequence's last step.
+    Values agree with the NumPy kernel to ~1e-12; both sides round to 6
+    decimals."""
+    return _forward_ctes(model.pi, model.A, _symbol_emis(model.B), _CODED_SQL) + _SCORE_SELECT_SQL
 
 
 def _argmax_case(cand: list[str]) -> str:
@@ -308,40 +334,30 @@ FROM g GROUP BY user_id
 
 
 def _fb_ctes(model: HMM) -> str:
-    """Shared WITH-prefix for γ-based oracles: coded/lens/alpha/beta CTEs
-    (scaled forward + scaled backward recursions with the model embedded as
-    full-precision literals). Ends with a trailing comma — append the
+    """Shared WITH-prefix for the discrete γ-based oracles
+    (:func:`_fb_sql`)."""
+    return _fb_sql(model.pi, model.A, _symbol_emis(model.B), _CODED_SQL)
+
+
+def _fb_sql(pi: np.ndarray, A: np.ndarray, emis, coded: str) -> str:
+    """WITH-prefix for γ-based oracles over the ``coded`` events query:
+    coded/lens/alpha/beta CTEs (scaled forward + scaled backward recursions
+    with the model embedded as full-precision literals, ``emis`` as in
+    :func:`_alpha_terms`). Ends with a trailing comma — append the
     consuming CTE/SELECT."""
-    N = model.pi.shape[0]
-    pi, A, B = model.pi, model.A, model.B
-    j1 = range(1, N + 1)
-    base_u = ",\n         ".join(
-        f"{_lit(pi[j - 1])} * ({_blist(B[j - 1])})[c.sym + 1] AS u{j}" for j in j1
-    )
-    step_u = ",\n         ".join(
-        "("
-        + " + ".join(f"a.p{i} * {_lit(A[i - 1][j - 1])}" for i in j1)
-        + f") * ({_blist(B[j - 1])})[c.sym + 1] AS nu{j}"
-        for j in j1
-    )
-    usum = " + ".join(f"u{j}" for j in j1)
-    nusum = " + ".join(f"nu{j}" for j in j1)
-    norm = ", ".join(f"u{j} / s AS p{j}" for j in j1)
-    nnorm = ", ".join(f"nu{j} / ns AS np{j}" for j in j1)
+    j1 = range(1, pi.shape[0] + 1)
+    base_u, step_u, usum, nusum, norm, nnorm = _alpha_terms(pi, A, emis)
     base_b = ", ".join(f"{_lit(1.0)} AS b{j}" for j in j1)
     step_b = ",\n         ".join(
         "("
-        + " + ".join(
-            f"{_lit(A[i - 1][j - 1])} * ({_blist(B[j - 1])})[c.sym + 1] * b.b{j}"
-            for j in j1
-        )
+        + " + ".join(f"{_lit(A[i - 1][j - 1])} * {emis(j)} * b.b{j}" for j in j1)
         + f") / a.s AS nb{i}"
         for i in j1
     )
     # MATERIALIZED is load-bearing: without it DuckDB inlines alpha (a full
-    # recursion) into EVERY step of beta's recursion — see score_oracle_sql
+    # recursion) into EVERY step of beta's recursion — see _forward_ctes
     return f"""
-WITH coded AS MATERIALIZED ({_CODED_SQL}),
+WITH coded AS MATERIALIZED ({coded}),
 lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
 alpha AS MATERIALIZED (
   WITH RECURSIVE alpha_r AS (
@@ -379,8 +395,9 @@ def state_occupancy(spark: SparkSession, sequences: DataFrame, model: HMM) -> Da
     soft version of counting a decoded path's states. Same scale shape as
     the decodes: model broadcast, narrow map, no shuffle; output is
     N rows per sequence. A sequence with probability 0 under the model has
-    no posterior: its N rows carry a NULL occupancy (:func:`_posteriors`).
-    A symbol outside ``0..M-1`` raises ``ValueError``.
+    no posterior: its N rows carry a NULL occupancy
+    (:func:`_posterior_buckets`). A symbol outside ``0..M-1`` raises
+    ``ValueError``.
     """
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
 
@@ -388,25 +405,26 @@ def state_occupancy(spark: SparkSession, sequences: DataFrame, model: HMM) -> Da
         pi, A, B = bc.value
         n = pi.shape[0]
         for pdf in batches:
-            ids, states, occs = [], [], []
-            for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
-                if obs is None or len(obs) == 0:
-                    continue
-                g = _posteriors(pi, A, B, obs)
-                ids.extend([seq_id] * n)
-                states.extend(range(n))
-                if g is None:
-                    occs.extend([None] * n)
-                    continue
-                g = g / g.sum(axis=1, keepdims=True)
-                occ = g.sum(axis=0)
-                # round half-AWAY-from-zero to match DuckDB's round():
-                # np.round is half-even, so an occupancy landing exactly on
-                # an x.xxxxxx5 boundary would round differently per engine
-                # and flip the byte-exact driver hash. Occupancy is >= 0,
-                # so floor(x*1e6 + 0.5) is exactly DuckDB's convention.
-                occs.extend(np.floor(occ * 1e6 + 0.5) / 1e6)
-            yield pd.DataFrame({"seq_id": ids, "state": states, "occupancy": occs})
+            ids, obs_list = _nonempty(pdf)
+            # NaN crosses Arrow as NULL: the impossible sequences' rows
+            occ = np.full((len(ids), n), np.nan)
+            for idxs, lens, alpha, beta, _, ok in _posterior_buckets(pi, A, B, obs_list):
+                g = alpha * beta
+                g = g / g.sum(axis=2, keepdims=True)
+                valid = np.arange(len(g))[:, None] < lens
+                occ[idxs] = np.where(
+                    ok[:, None], np.where(valid[:, :, None], g, 0.0).sum(axis=0), np.nan
+                )
+            # round half-AWAY-from-zero to match DuckDB's round():
+            # np.round is half-even, so an occupancy landing exactly on
+            # an x.xxxxxx5 boundary would round differently per engine
+            # and break the byte-exact oracle match. Occupancy is >= 0,
+            # so floor(x*1e6 + 0.5) is exactly DuckDB's convention.
+            yield pd.DataFrame({
+                "seq_id": np.repeat(np.asarray(ids, dtype=np.int64), n),
+                "state": np.tile(np.arange(n, dtype=np.int32), len(ids)),
+                "occupancy": (np.floor(occ * 1e6 + 0.5) / 1e6).ravel(),
+            })
 
     return sequences.mapInPandas(
         occupancy, schema="seq_id bigint, state int, occupancy double"
@@ -451,17 +469,21 @@ def viterbi_ctes(model: HMM) -> str:
     two-operand IEEE sum, so the deltas are BITWISE equal to _viterbi_one's —
     argmax ties (first-max, matching np.argmax) resolve identically and
     paths match exactly, not just approximately."""
-    N = model.pi.shape[0]
     with np.errstate(divide="ignore"):
         lpi, lA, lB = np.log(model.pi), np.log(model.A), np.log(model.B)
-    j1 = range(1, N + 1)
-    base_d = ",\n         ".join(
-        f"{_lit(lpi[j - 1])} + ({_blist(lB[j - 1])})[c.sym + 1] AS d{j}" for j in j1
-    )
+    return _viterbi_sql(lpi, lA, _symbol_emis(lB), _CODED_SQL)
+
+
+def _viterbi_sql(lpi: np.ndarray, lA: np.ndarray, emis, coded: str) -> str:
+    """:func:`viterbi_ctes` over the ``coded`` events query, with
+    ``emis(j)`` the log-emission term of state j (as in
+    :func:`_alpha_terms`)."""
+    j1 = range(1, lpi.shape[0] + 1)
+    base_d = ",\n         ".join(f"{_lit(lpi[j - 1])} + {emis(j)} AS d{j}" for j in j1)
     step_d = ",\n         ".join(
         "greatest("
         + ", ".join(f"p.d{i} + {_lit(lA[i - 1][j - 1])}" for i in j1)
-        + f") + ({_blist(lB[j - 1])})[c.sym + 1] AS d{j}"
+        + f") + {emis(j)} AS d{j}"
         for j in j1
     )
 
@@ -477,8 +499,8 @@ def viterbi_ctes(model: HMM) -> str:
     back_argmax = _argmax_case(back_cand)
     dmax = ", ".join(f"d.d{j}" for j in j1)
     # MATERIALIZED is load-bearing: without it DuckDB inlines delta (a full
-    # recursion) into EVERY step of back's recursion — see score_oracle_sql
-    return f"""coded AS MATERIALIZED ({_CODED_SQL}),
+    # recursion) into EVERY step of back's recursion — see _forward_ctes
+    return f"""coded AS MATERIALIZED ({coded}),
 lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
 delta AS MATERIALIZED (
   WITH RECURSIVE delta_r AS (
@@ -624,13 +646,14 @@ def score_sequences(spark: SparkSession, sequences: DataFrame, model: HMM) -> Da
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from baum_welch_spark.hmm.kernel import loglik_batch
-
         pi, A, B = bc.value
+        emit = symbol_emit(B)
         for pdf in batches:
             ids, obs_list = _nonempty(pdf)
             lens = np.array([len(o) for o in obs_list], dtype=np.int32)
-            lls = loglik_batch(pi, A, B, obs_list)
+            lls = np.empty(len(ids))
+            for idxs, obs_pad, bucket_lens in _padded_buckets(obs_list, B.shape[1]):
+                lls[idxs] = loglik_batch(pi, A, emit, obs_pad, bucket_lens).sum(axis=0)
             yield pd.DataFrame(
                 {"seq_id": ids, "t_len": lens, "loglik": lls, "avg_loglik": lls / lens}
             )
@@ -765,8 +788,6 @@ def _viterbi_topk_batch(log_pi, log_A, log_B, obs_list, k):
     independent, so chunking is bitwise-invisible). A symbol outside
     ``0..M-1`` raises ``ValueError`` (kernel._padded_buckets), as in the
     other decode operators. Returns a list aligned with obs_list."""
-    from baum_welch_spark.hmm.kernel import _padded_buckets
-
     N = log_pi.shape[0]
     results: list = [None] * len(obs_list)
     for idxs, obs_pad, lens in _padded_buckets(obs_list, log_B.shape[1]):
@@ -802,12 +823,7 @@ def viterbi_topk(
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         log_pi, log_A, log_B = bc.value
         for pdf in batches:
-            ids, obs_list = [], []
-            for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
-                if obs is None or len(obs) == 0:
-                    continue
-                ids.append(int(seq_id))
-                obs_list.append(np.asarray(obs, dtype=np.int64))
+            ids, obs_list = _nonempty(pdf)
             out_ids, ranks, lls, paths = [], [], [], []
             for seq_id, hyp in zip(
                 ids, _viterbi_topk_batch(log_pi, log_A, log_B, obs_list, k)

@@ -17,11 +17,17 @@ Observations are the ``events.value`` column (sequences built by
 :func:`build_value_sequences` with the same (ts, event_id) total order as
 the discrete corpus).
 
-Decode/score are DuckDB-exact where the discrete family is: the Gaussian
-log-density ``c1_j − (x − μ_j)²·c2_j`` (c1 = −½ln 2πσ², c2 = 1/2σ²,
-precomputed doubles embedded as literals) is plain SQL arithmetic, so the
-same recursive-CTE Viterbi/forward oracles pin the distributed kernels
-bit-for-bit modulo the engines' ln/exp last-ulp, absorbed by round(6).
+The E-step, score and Viterbi run the discrete family's batched kernels
+(hmm/kernel.py) on length buckets of the padded values; only the emission
+term differs: the log-density ``c1_j − (x − μ_j)²·c2_j`` (c1 = −½ln 2πσ²,
+c2 = 1/2σ², :func:`log_density`) and its exp. A zero forward mass raises
+``FloatingPointError`` naming the step.
+
+Decode/score are DuckDB-exact where the discrete family is: the log-density,
+with its precomputed doubles embedded as literals, is plain SQL arithmetic,
+so the same recursive-CTE Viterbi/forward oracles pin the distributed
+kernels bit-for-bit modulo the engines' ln/exp last-ulp, absorbed by
+round(6).
 
 ``fit_gaussian`` supplies only the moment E-step, the model as broadcast
 payload and the closed-form M-step; caching, broadcast lifecycle, collect,
@@ -40,6 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from baum_welch_spark.hmm.decode import _nonempty
 from baum_welch_spark.hmm.em import (
     COUNTS_SCHEMA,
     FitResult,
@@ -47,6 +54,15 @@ from baum_welch_spark.hmm.em import (
     lap_trace,
     run_em,
     sum_stripes,
+)
+from baum_welch_spark.hmm.kernel import (
+    _pad_buckets,
+    _valid,
+    forward_backward,
+    forward_backward_batch,
+    loglik_batch,
+    transition_factors,
+    viterbi_paths,
 )
 
 VAR_FLOOR = 1e-6
@@ -158,52 +174,38 @@ def _log_coeffs(model: GaussianHMM) -> tuple[np.ndarray, np.ndarray]:
     return c1, c2
 
 
-def log_emissions(model: GaussianHMM, x: np.ndarray) -> np.ndarray:
-    """(T, N) log-densities, elementwise c1 − d·d·c2 (see _log_coeffs)."""
+def log_density(model: GaussianHMM):
+    """The family's ``log_emit`` (hmm/kernel.py): values (any shape) ->
+    (..., N) log-densities c1 − d·d·c2 with d = x − μ (see _log_coeffs)."""
     c1, c2 = _log_coeffs(model)
-    d = x[:, None] - model.mu[None, :]
-    return c1[None, :] - (d * d) * c2[None, :]
+    mu = model.mu
+
+    def log_emit(x: np.ndarray) -> np.ndarray:
+        d = x[..., None] - mu
+        return c1 - (d * d) * c2
+
+    return log_emit
 
 
-def forward_backward_gauss(
-    model: GaussianHMM, x: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
-    """Rabiner-scaled forward/backward with per-t Gaussian densities.
-    Returns (alpha_hat, beta_hat, scale, loglik); same convention as the
-    discrete kernel (hmm/kernel.py module doc)."""
-    b = np.exp(log_emissions(model, x))  # (T, N)
-    T, N = b.shape
-    alpha = np.empty((T, N))
-    beta = np.empty((T, N))
-    scale = np.empty(T)
-    a = model.pi * b[0]
-    scale[0] = a.sum()
-    # underflow guard: once a fitted sigma2 hits VAR_FLOOR=1e-6, exp()
-    # underflows to 0 beyond |x-mu| ~ 0.04 — an all-zero emission row makes
-    # scale[t]=0, which without this check silently NaNs every downstream
-    # alpha/loglik through fit/score/decode instead of surfacing an error.
-    if scale[0] == 0.0:
+def _emit(model: GaussianHMM):
+    """The family's ``emit``: the densities exp(log_density)."""
+    log_emit = log_density(model)
+    return lambda x: np.exp(log_emit(x))
+
+
+def _check_mass(log_scale: np.ndarray) -> None:
+    """Raise ``FloatingPointError`` naming the first step (axis 0 of the
+    log scale factors; padding is 0) with zero forward mass. Once a fitted
+    sigma2 hits VAR_FLOOR=1e-6, exp() underflows to 0 beyond |x-mu| ~ 0.04:
+    an all-zero emission row would otherwise silently NaN every downstream
+    alpha/loglik."""
+    dead = np.isneginf(log_scale).reshape(len(log_scale), -1).any(axis=1)
+    if dead.any():
         raise FloatingPointError(
-            "forward_backward_gauss: zero forward mass at t=0 — every "
-            "state's density underflowed (far-outlier observation or a "
-            "collapsed sigma2); widen the variance floor or rescale inputs"
+            f"zero forward mass at t={int(dead.argmax())} — every state's "
+            "density underflowed (far-outlier observation or a collapsed "
+            "sigma2); widen the variance floor or rescale inputs"
         )
-    alpha[0] = a / scale[0]
-    for t in range(1, T):
-        a = (alpha[t - 1] @ model.A) * b[t]
-        scale[t] = a.sum()
-        if scale[t] == 0.0:
-            raise FloatingPointError(
-                f"forward_backward_gauss: zero forward mass at t={t} — "
-                "every state's density underflowed (far-outlier "
-                "observation or a collapsed sigma2); widen the variance "
-                "floor or rescale inputs"
-            )
-        alpha[t] = a / scale[t]
-    beta[T - 1] = 1.0
-    for t in range(T - 2, -1, -1):
-        beta[t] = (model.A @ (b[t + 1] * beta[t + 1])) / scale[t + 1]
-    return alpha, beta, scale, float(np.log(scale).sum())
 
 
 def e_step_moments(
@@ -213,9 +215,15 @@ def e_step_moments(
     out_A: np.ndarray,
     out_m: np.ndarray,  # (N, 3): Σγ, Σγx, Σγx²
 ) -> float:
-    """Accumulate one sequence's expected counts + emission moments."""
-    b = np.exp(log_emissions(model, x))
-    alpha, beta, scale, ll = forward_backward_gauss(model, x)
+    """Accumulate one sequence's expected counts + emission moments on the
+    per-sequence ``kernel.forward_backward`` (its (T, N) densities as the
+    per-step emission table): the reference :func:`e_step_moments_batch`
+    is pinned against."""
+    b = _emit(model)(x)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        alpha, beta, scale, _ = forward_backward(model.pi, model.A, b.T, np.arange(len(x)))
+        log_scale = np.log(scale)
+    _check_mass(log_scale)
     gamma = alpha * beta  # rows sum to 1
     out_pi += gamma[0]
     if x.shape[0] > 1:
@@ -224,7 +232,38 @@ def e_step_moments(
     out_m[:, 0] += gamma.sum(axis=0)
     out_m[:, 1] += gamma.T @ x
     out_m[:, 2] += gamma.T @ (x * x)
-    return ll
+    return float(log_scale.sum())
+
+
+def e_step_moments_batch(
+    model: GaussianHMM,
+    x_list: list[np.ndarray],
+    out_pi: np.ndarray,
+    out_A: np.ndarray,
+    out_m: np.ndarray,  # (N, 3): Σγ, Σγx, Σγx²
+) -> float:
+    """The E-step over non-empty value sequences: looping
+    :func:`e_step_moments`, as one ``kernel.forward_backward_batch`` per
+    length bucket, masked by validity. Returns the summed loglik."""
+    emit = _emit(model)
+    total = 0.0
+    for _, x_pad, lens in _pad_buckets(x_list, np.float64):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            alpha, beta, scale = forward_backward_batch(model.pi, model.A, emit, x_pad, lens)
+            log_scale = np.log(scale)
+        _check_mass(log_scale)
+        valid = _valid(x_pad, lens)
+        gamma = alpha * beta  # (T, S, N); rows at valid t sum to 1
+        out_pi += gamma[0].sum(axis=0)
+        g, x = gamma[valid], x_pad[valid]
+        out_m[:, 0] += g.sum(axis=0)
+        out_m[:, 1] += g.T @ x
+        out_m[:, 2] += g.T @ (x * x)
+        if x_pad.shape[0] > 1:
+            wa, wb = transition_factors(alpha, beta, scale, emit, x_pad, valid)
+            out_A += model.A * (wa.T @ wb)
+        total += float(log_scale.sum())
+    return total
 
 
 def m_step_gauss(
@@ -305,13 +344,10 @@ def _gauss_estep_udf(bc_model):
         cpi, cA, cm = np.zeros(n), np.zeros((n, n)), np.zeros((n, 3))
         ll, saw = 0.0, False
         for pdf in batches:
-            for obs in pdf["obs"]:
-                if obs is None or len(obs) == 0:
-                    continue
+            x_list = [o for o in pdf["obs"] if o is not None and len(o) > 0]
+            if x_list:
                 saw = True
-                ll += e_step_moments(
-                    model, np.asarray(obs, dtype=np.float64), cpi, cA, cm
-                )
+                ll += e_step_moments_batch(model, x_list, cpi, cA, cm)
         if saw:
             yield encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_MOMENT: cm}, ll)
 
@@ -348,46 +384,30 @@ def fit_gaussian(
 # --- decode / score (DuckDB-exact faces) -----------------------------------
 
 
-def _viterbi_gauss_one(model: GaussianHMM, x: np.ndarray) -> tuple[np.ndarray, float]:
-    with np.errstate(divide="ignore"):
-        lpi, lA = np.log(model.pi), np.log(model.A)
-    logb = log_emissions(model, x)
-    T, N = logb.shape
-    delta = np.empty((T, N))
-    back = np.zeros((T, N), dtype=np.int64)
-    delta[0] = lpi + logb[0]
-    for t in range(1, T):
-        cand = delta[t - 1][:, None] + lA  # (i, j)
-        back[t] = np.argmax(cand, axis=0)
-        delta[t] = cand[back[t], np.arange(N)] + logb[t]
-    path = np.empty(T, dtype=np.int64)
-    path[T - 1] = int(np.argmax(delta[T - 1]))
-    for t in range(T - 2, -1, -1):
-        path[t] = back[t + 1][path[t + 1]]
-    return path, float(np.max(delta[T - 1]))
-
-
 def viterbi_gauss(
     spark: SparkSession, sequences: DataFrame, model: GaussianHMM
 ) -> DataFrame:
     """(seq_id, loglik, path_str): MAP state path under the Gaussian model.
     Face-shaped output (path as comma-joined string, loglik rounded by the
-    caller) — broadcast model, narrow Arrow map, no shuffle."""
+    caller) — broadcast model, narrow Arrow map, no shuffle; each Arrow
+    batch is one ``kernel.viterbi_paths`` call."""
     model = model.validate()
     bc = spark.sparkContext.broadcast(model)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         m = bc.value
+        with np.errstate(divide="ignore"):
+            lpi, lA = np.log(m.pi), np.log(m.A)
+        log_emit = log_density(m)
         for pdf in batches:
-            ids, lls, paths = [], [], []
-            for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
-                if obs is None or len(obs) == 0:
-                    continue
-                path, ll = _viterbi_gauss_one(m, np.asarray(obs, dtype=np.float64))
-                ids.append(int(seq_id))
-                lls.append(ll)
-                paths.append(",".join(str(int(s)) for s in path))
-            yield pd.DataFrame({"seq_id": ids, "loglik": lls, "path_str": paths})
+            ids, x_list = _nonempty(pdf)
+            paths, lls = viterbi_paths(
+                lpi, lA, log_emit, _pad_buckets(x_list, np.float64), len(ids)
+            )
+            yield pd.DataFrame({
+                "seq_id": ids, "loglik": lls,
+                "path_str": [",".join(map(str, p.tolist())) for p in paths],
+            })
 
     return sequences.mapInPandas(decode, schema="seq_id bigint, loglik double, path_str string")
 
@@ -404,7 +424,9 @@ def score_gauss(
     spark: SparkSession, sequences: DataFrame, model: GaussianHMM
 ) -> DataFrame:
     """(seq_id, t_len, loglik, avg_loglik): marginal log-likelihood via the
-    scaled forward recursion."""
+    scaled forward recursion, one ``kernel.loglik_batch`` call per length
+    bucket of an Arrow batch. A zero forward mass raises
+    ``FloatingPointError``."""
     return _score_gauss_unchecked(spark, sequences, model.validate())
 
 
@@ -419,19 +441,17 @@ def _score_gauss_unchecked(
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         m = bc.value
+        emit = _emit(m)
         for pdf in batches:
-            ids, tls, lls = [], [], []
-            for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
-                if obs is None or len(obs) == 0:
-                    continue
-                x = np.asarray(obs, dtype=np.float64)
-                _, _, _, ll = forward_backward_gauss(m, x)
-                ids.append(int(seq_id))
-                tls.append(len(x))
-                lls.append(ll)
+            ids, x_list = _nonempty(pdf)
+            tls = np.array([len(x) for x in x_list], dtype=np.int32)
+            lls = np.empty(len(ids))
+            for idxs, x_pad, lens in _pad_buckets(x_list, np.float64):
+                log_scale = loglik_batch(m.pi, m.A, emit, x_pad, lens)
+                _check_mass(log_scale)
+                lls[idxs] = log_scale.sum(axis=0)
             yield pd.DataFrame(
-                {"seq_id": ids, "t_len": np.array(tls, dtype=np.int32),
-                 "loglik": lls, "avg_loglik": [l / t for l, t in zip(lls, tls)]}
+                {"seq_id": ids, "t_len": tls, "loglik": lls, "avg_loglik": lls / tls}
             )
 
     return sequences.mapInPandas(
@@ -449,9 +469,9 @@ def score_gauss_face(
     )
 
 
-# SQL oracle machinery: self-contained (decode.py's generators stay
-# untouched so the discrete faces' source hashes are stable), sharing only
-# the literal formatter.
+# SQL oracle machinery: decode.py's forward, forward-backward and Viterbi
+# CTE generators with the Gaussian emission term (_gauss_emis) and coded
+# events query in place of the symbol lookup.
 
 _GCODED_SQL = """
   SELECT user_id,
@@ -463,7 +483,7 @@ _GCODED_SQL = """
 
 def _logb_expr(model: GaussianHMM, j: int, xref: str) -> str:
     """SQL for log N(x; μ_j, σ²_j) with the exact literal/operation shape
-    log_emissions uses: c1 − (x − μ)·(x − μ)·c2."""
+    log_density uses: c1 − (x − μ)·(x − μ)·c2."""
     from baum_welch_spark.hmm.decode import _lit
 
     c1, c2 = _log_coeffs(model)
@@ -471,65 +491,24 @@ def _logb_expr(model: GaussianHMM, j: int, xref: str) -> str:
     return f"({_lit(c1[j])} - ({xref} - {mu}) * ({xref} - {mu}) * {_lit(c2[j])})"
 
 
+def _gauss_emis(model: GaussianHMM):
+    """The family's SQL emission term of state j (1-based) at the coded row
+    ``c`` (decode._alpha_terms): the density exp(logb) inline."""
+    return lambda j: f"exp({_logb_expr(model, j - 1, 'c.x')})"
+
+
 def gauss_viterbi_oracle_sql(model: GaussianHMM) -> str:
     """DuckDB oracle for viterbi_gauss_face: the log-space Viterbi DP as
-    recursive CTEs (the decode.py viterbi_ctes shape) with the emission
-    lookup replaced by the inline Gaussian log-density. Deltas are the same
-    two-operand IEEE sums both engines compute; ties resolve first-max."""
-    from baum_welch_spark.hmm.decode import _argmax_case, _lit
+    recursive CTEs (decode.viterbi_ctes) with the emission lookup replaced
+    by the inline Gaussian log-density. Deltas are the same two-operand
+    IEEE sums both engines compute; ties resolve first-max."""
+    from baum_welch_spark.hmm.decode import _viterbi_sql
 
     model = model.validate()
-    N = model.pi.shape[0]
     with np.errstate(divide="ignore"):
         lpi, lA = np.log(model.pi), np.log(model.A)
-    j1 = range(1, N + 1)
-    base_d = ",\n         ".join(
-        f"{_lit(lpi[j - 1])} + {_logb_expr(model, j - 1, 'c.x')} AS d{j}" for j in j1
-    )
-    step_d = ",\n         ".join(
-        "greatest("
-        + ", ".join(f"p.d{i} + {_lit(lA[i - 1][j - 1])}" for i in j1)
-        + f") + {_logb_expr(model, j - 1, 'c.x')} AS d{j}"
-        for j in j1
-    )
-    final_argmax = _argmax_case([f"d.d{j}" for j in j1])
-    back_cand = [
-        f"(d.d{i} + CASE b.state "
-        + " ".join(f"WHEN {j - 1} THEN {_lit(lA[i - 1][j - 1])}" for j in j1)
-        + " END)"
-        for i in j1
-    ]
-    back_argmax = _argmax_case(back_cand)
-    dmax = ", ".join(f"d.d{j}" for j in j1)
     return f"""
-WITH coded AS MATERIALIZED ({_GCODED_SQL}),
-lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
-delta AS MATERIALIZED (
-  WITH RECURSIVE delta_r AS (
-    SELECT c.user_id, 0 AS t,
-           {base_d}
-    FROM coded c WHERE c.t = 0
-    UNION ALL
-    SELECT p.user_id, p.t + 1,
-           {step_d}
-    FROM delta_r p JOIN coded c ON c.user_id = p.user_id AND c.t = p.t + 1
-  ) SELECT * FROM delta_r
-),
-back AS MATERIALIZED (
-  WITH RECURSIVE back_r AS (
-    SELECT d.user_id, d.t,
-           ({final_argmax}) AS state,
-           greatest({dmax}) AS loglik,
-           ({final_argmax})::VARCHAR AS path
-    FROM delta d JOIN lens l ON l.user_id = d.user_id AND d.t = l.t_len - 1
-    UNION ALL
-    SELECT b.user_id, b.t - 1,
-           ({back_argmax}) AS state,
-           b.loglik,
-           ({back_argmax})::VARCHAR || ',' || b.path AS path
-    FROM back_r b JOIN delta d ON d.user_id = b.user_id AND d.t = b.t - 1
-  ) SELECT * FROM back_r
-)
+WITH {_viterbi_sql(lpi, lA, lambda j: _logb_expr(model, j - 1, "c.x"), _GCODED_SQL)}
 SELECT user_id AS seq_id, round(loglik, 6) AS loglik, path AS path_str
 FROM back WHERE t = 0
 """
@@ -537,46 +516,11 @@ FROM back WHERE t = 0
 
 def gauss_score_oracle_sql(model: GaussianHMM) -> str:
     """DuckDB oracle for score_gauss_face: the scaled forward recursion
-    (score_oracle_sql's alpha CTE shape) with densities exp(logb) inline."""
-    from baum_welch_spark.hmm.decode import _lit
+    (decode._forward_ctes) with densities exp(logb) inline."""
+    from baum_welch_spark.hmm.decode import _SCORE_SELECT_SQL, _forward_ctes
 
     model = model.validate()
-    N = model.pi.shape[0]
-    j1 = range(1, N + 1)
-    base_u = ",\n         ".join(
-        f"{_lit(model.pi[j - 1])} * exp({_logb_expr(model, j - 1, 'c.x')}) AS u{j}"
-        for j in j1
-    )
-    step_u = ",\n         ".join(
-        "("
-        + " + ".join(f"a.p{i} * {_lit(model.A[i - 1][j - 1])}" for i in j1)
-        + f") * exp({_logb_expr(model, j - 1, 'c.x')}) AS nu{j}"
-        for j in j1
-    )
-    usum = " + ".join(f"u{j}" for j in j1)
-    nusum = " + ".join(f"nu{j}" for j in j1)
-    norm = ", ".join(f"u{j} / s AS p{j}" for j in j1)
-    nnorm = ", ".join(f"nu{j} / ns AS np{j}" for j in j1)
-    return f"""
-WITH coded AS MATERIALIZED ({_GCODED_SQL}),
-lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
-alpha AS MATERIALIZED (
-  WITH RECURSIVE alpha_r AS (
-    SELECT c.user_id, 0 AS t,
-           {base_u},
-           ({usum}) AS s, ln(s) AS ll, {norm}
-    FROM coded c WHERE c.t = 0
-    UNION ALL
-    SELECT a.user_id, a.t + 1,
-           {step_u},
-           ({nusum}) AS ns, a.ll + ln(ns) AS nll, {nnorm}
-    FROM alpha_r a JOIN coded c ON c.user_id = a.user_id AND c.t = a.t + 1
-  ) SELECT * FROM alpha_r
-)
-SELECT a.user_id AS seq_id, l.t_len::INTEGER AS t_len,
-       round(a.ll, 6) AS loglik, round(a.ll / l.t_len, 6) AS avg_loglik
-FROM alpha a JOIN lens l ON l.user_id = a.user_id AND a.t = l.t_len - 1
-"""
+    return _forward_ctes(model.pi, model.A, _gauss_emis(model), _GCODED_SQL) + _SCORE_SELECT_SQL
 
 
 def ghmm_reestimate(
@@ -643,81 +587,14 @@ def _ghmm_reestimate_unchecked(
     return probs.unionByName(mu_rows).unionByName(var_rows)
 
 
-def _gfb_ctes(model: GaussianHMM) -> str:
-    """Gaussian twin of decode._fb_ctes: shared coded/lens/alpha/beta
-    WITH-prefix (scaled forward + scaled backward) with the emission
-    probability computed inline as exp(c1 − (x−μ)²·c2) from full-precision
-    literals. Ends with a trailing comma — append the consuming CTE."""
-    from baum_welch_spark.hmm.decode import _lit
-
-    N = model.pi.shape[0]
-    pi, A = model.pi, model.A
-    j1 = range(1, N + 1)
-    base_u = ",\n         ".join(
-        f"{_lit(pi[j - 1])} * exp({_logb_expr(model, j - 1, 'c.x')}) AS u{j}"
-        for j in j1
-    )
-    step_u = ",\n         ".join(
-        "("
-        + " + ".join(f"a.p{i} * {_lit(A[i - 1][j - 1])}" for i in j1)
-        + f") * exp({_logb_expr(model, j - 1, 'c.x')}) AS nu{j}"
-        for j in j1
-    )
-    usum = " + ".join(f"u{j}" for j in j1)
-    nusum = " + ".join(f"nu{j}" for j in j1)
-    norm = ", ".join(f"u{j} / s AS p{j}" for j in j1)
-    nnorm = ", ".join(f"nu{j} / ns AS np{j}" for j in j1)
-    base_b = ", ".join(f"{_lit(1.0)} AS b{j}" for j in j1)
-    step_b = ",\n         ".join(
-        "("
-        + " + ".join(
-            f"{_lit(A[i - 1][j - 1])} * exp({_logb_expr(model, j - 1, 'c.x')}) * b.b{j}"
-            for j in j1
-        )
-        + f") / a.s AS nb{i}"
-        for i in j1
-    )
-    # MATERIALIZED is load-bearing (see decode._fb_ctes)
-    return f"""
-WITH coded AS MATERIALIZED ({_GCODED_SQL}),
-lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
-alpha AS MATERIALIZED (
-  WITH RECURSIVE alpha_r AS (
-    SELECT c.user_id, 0 AS t,
-           {base_u},
-           ({usum}) AS s, {norm}
-    FROM coded c WHERE c.t = 0
-    UNION ALL
-    SELECT a.user_id, a.t + 1,
-           {step_u},
-           ({nusum}) AS ns, {nnorm}
-    FROM alpha_r a JOIN coded c ON c.user_id = a.user_id AND c.t = a.t + 1
-  ) SELECT * FROM alpha_r
-),
-beta AS MATERIALIZED (
-  WITH RECURSIVE beta_r AS (
-    SELECT l.user_id, l.t_len - 1 AS t, {base_b}
-    FROM lens l
-    UNION ALL
-    SELECT b.user_id, b.t - 1,
-           {step_b}
-    FROM beta_r b
-    JOIN coded c ON c.user_id = b.user_id AND c.t = b.t
-    JOIN alpha a ON a.user_id = b.user_id AND a.t = b.t
-    WHERE b.t > 0
-  ) SELECT * FROM beta_r
-),
-"""
-
-
 def gauss_reestimate_oracle_sql(model: GaussianHMM) -> str:
     """ANSI-SQL (DuckDB) oracle for ghmm_reestimate: γ = alpha_hat·beta_hat
     (already sums to 1 per step), ξ_t(i,j) = p_i(t)·A_ij·exp(logb_j(x_{t+1}))
     ·b_j(t+1)/s(t+1), moments Σγ/Σγx/Σγx² by plain GROUP BYs, then the same
     count/Σcount window normalize and closed-form mu/var expressions as the
     Spark side. Engines sum in different float orders (~1e-12 agreement);
-    both round to 6 dp."""
-    from baum_welch_spark.hmm.decode import _lit
+    both round to 6 dp. The alpha/beta CTEs are decode._fb_sql's."""
+    from baum_welch_spark.hmm.decode import _fb_sql, _lit
 
     model = model.validate()
     N = model.pi.shape[0]
@@ -746,7 +623,7 @@ def gauss_reestimate_oracle_sql(model: GaussianHMM) -> str:
         for j in j1
     )
     return (
-        _gfb_ctes(model)
+        _fb_sql(model.pi, A, _gauss_emis(model), _GCODED_SQL)
         + f"""
 g AS MATERIALIZED (
   SELECT al.user_id, al.t,
@@ -882,7 +759,7 @@ def gauss_loglik_trace_oracle_sql(model: GaussianHMM, n_iters: int = 2) -> str:
     """ANSI-SQL (DuckDB) oracle for :func:`ghmm_loglik_trace`: the shared
     chained-lap CTE prefix already carries the sequentially-accumulated
     ``ll`` column (ln(s) at t=0, then a.ll + ln(ns) — the exact
-    gauss_score_oracle_sql accumulation order forward_backward_gauss
+    gauss_score_oracle_sql accumulation order ``kernel.loglik_batch``
     uses), so each lap's per-sequence loglik is one join against lens."""
     union = "\nUNION ALL\n".join(
         f"SELECT {k} AS iter, a.user_id AS seq_id, round(a.ll, 6) AS loglik\n"

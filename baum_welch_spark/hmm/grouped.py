@@ -221,7 +221,7 @@ def decode_grouped(
     Output: (group, seq_id, loglik, path_str) — Viterbi joint log-prob and
     the comma-joined best path.
     """
-    from baum_welch_spark.hmm.kernel import viterbi_batch
+    from baum_welch_spark.hmm.kernel import _padded_buckets, symbol_emit, viterbi_paths
 
     def decode(models_pdf: pd.DataFrame, seqs_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(models_pdf) or not len(seqs_pdf):
@@ -246,7 +246,10 @@ def decode_grouped(
         seqs_pdf = seqs_pdf.sort_values("seq_id")
         keep = [o is not None and len(o) > 0 for o in seqs_pdf["obs"]]
         seqs_pdf = seqs_pdf[keep]
-        paths, lls = viterbi_batch(log_pi, log_A, log_B, list(seqs_pdf["obs"]))
+        obs_list = list(seqs_pdf["obs"])
+        paths, lls = viterbi_paths(
+            log_pi, log_A, symbol_emit(log_B), _padded_buckets(obs_list, m), len(obs_list)
+        )
         return pd.DataFrame(
             {
                 "group": group,

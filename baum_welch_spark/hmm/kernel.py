@@ -1,4 +1,12 @@
-"""NumPy DP kernel: scaled forward-backward + E-step expected counts.
+"""NumPy DP kernels: one batched scaled forward-backward, forward-only and
+Viterbi recursion for every HMM operator of both emission families.
+
+Each batched kernel runs one padded octave length bucket at once
+(:func:`_pad_buckets`) and sees the observations only through ``emit``,
+which maps a step's observations to their (S, N) emission rows:
+:func:`symbol_emit` of B (or log B) for the discrete family, the Gaussian
+densities in ``hmm/gaussian.py``. The per-sequence :func:`forward_backward`
+and :func:`e_step_counts` stay as the references tests pin them against.
 
 This is the vectorized re-expression of the reference's E-step
 (BaumWelchMapper.java:143,151 forward/backward; 157-240 stripe computation),
@@ -32,7 +40,9 @@ from baum_welch_spark.hmm.model import HMM
 def forward_backward(
     pi: np.ndarray, A: np.ndarray, B: np.ndarray, obs: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, float]:
-    """Scaled forward/backward for one sequence.
+    """Scaled forward/backward for one sequence — the per-sequence
+    recurrence of both families (a Gaussian caller passes its (N, T)
+    per-step densities as B and obs = 0..T-1).
 
     Returns (alpha_hat (T,N), beta_hat (T,N), scale (T,), loglik).
     Vectorized recurrences (reference M2/M3, BaumWelchMapper.java:143,151):
@@ -215,111 +225,178 @@ def check_symbols(obs: np.ndarray, n_symbols: int) -> None:
         )
 
 
-def _padded_buckets(obs_list: list, n_symbols: int, max_seqs: int | None = None):
-    """Yield ``(idxs, obs_pad, lens)`` per octave length bucket of
-    ``obs_list`` (:func:`_length_buckets`), at most ``max_seqs`` sequences
-    each: ``obs_pad`` is the bucket's symbols as a (Tmax, S) int64 array,
-    zero-padded past each sequence's end, and ``lens`` its (S,) lengths.
+def _pad_buckets(seqs: list, dtype):
+    """Yield ``(idxs, pad, lens)`` per octave length bucket of ``seqs``
+    (:func:`_length_buckets`): ``pad`` is the bucket's observations as a
+    (Tmax, S) array of ``dtype``, zero past each sequence's end, and
+    ``lens`` its (S,) lengths."""
+    for idxs in _length_buckets([len(o) for o in seqs]):
+        lens = np.array([len(seqs[i]) for i in idxs], dtype=np.int64)
+        pad = np.zeros((int(lens.max()), len(idxs)), dtype=dtype)
+        for col, i in enumerate(idxs):
+            pad[: lens[col], col] = seqs[i]
+        yield idxs, pad, lens
 
-    Every bucket is range-checked once (:func:`check_symbols`)."""
-    for bucket in _length_buckets([len(o) for o in obs_list]):
-        step = max_seqs or len(bucket)
-        for lo in range(0, len(bucket), step):
-            idxs = bucket[lo : lo + step]
-            lens = np.array([len(obs_list[i]) for i in idxs], dtype=np.int64)
-            obs_pad = np.zeros((int(lens.max()), len(idxs)), dtype=np.int64)
-            for col, i in enumerate(idxs):
-                obs_pad[: lens[col], col] = obs_list[i]
-            check_symbols(obs_pad, n_symbols)
-            yield idxs, obs_pad, lens
+
+def _padded_buckets(obs_list: list, n_symbols: int):
+    """:func:`_pad_buckets` for symbol sequences (int64), every bucket
+    range-checked once (:func:`check_symbols`)."""
+    for idxs, obs_pad, lens in _pad_buckets(obs_list, np.int64):
+        check_symbols(obs_pad, n_symbols)
+        yield idxs, obs_pad, lens
+
+
+def symbol_emit(table: np.ndarray):
+    """The discrete family's ``emit``: symbols (any shape) -> rows of
+    ``table.T``; ``table`` is B, or log B for Viterbi."""
+    return np.ascontiguousarray(table.T).__getitem__
+
+
+def _valid(obs_pad: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """(Tmax, S) mask: step t exists in sequence s."""
+    return np.arange(obs_pad.shape[0])[:, None] < lens[None, :]
+
+
+def forward_backward_batch(
+    pi: np.ndarray, A: np.ndarray, emit, obs_pad: np.ndarray, lens: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The recurrences of :func:`forward_backward` across all S sequences
+    of one padded bucket ``obs_pad`` (Tmax, S) with lengths ``lens``, so
+    the Python-level loop runs Tmax times, not sum(T_s) times. ``emit`` is
+    called once per step, so no (Tmax, S, N) emission block is built.
+
+    Returns padded ``(alpha_hat, beta_hat, scale)``. Past a sequence's end
+    its scale is pinned to 1, alpha is carried unchanged and beta is 1
+    (which also seeds beta[len-1] = 1 exactly); callers mask by validity.
+    A sequence with probability 0 gets a zero scale where its forward mass
+    dies and NaN after it; its batch-mates are untouched."""
+    t_max, s = obs_pad.shape
+    n = A.shape[0]
+    valid = _valid(obs_pad, lens)
+
+    alpha = np.empty((t_max, s, n))
+    scale = np.ones((t_max, s))
+    a = pi[None, :] * emit(obs_pad[0])  # (S, N); every sequence has T >= 1
+    sc = a.sum(axis=1)
+    alpha[0] = a / sc[:, None]
+    scale[0] = sc
+    for t in range(1, t_max):
+        a = (alpha[t - 1] @ A) * emit(obs_pad[t])
+        v = valid[t]
+        sc = np.where(v, a.sum(axis=1), 1.0)
+        alpha[t] = np.where(v[:, None], a / sc[:, None], alpha[t - 1])
+        scale[t] = sc
+
+    beta = np.empty((t_max, s, n))
+    beta[t_max - 1] = 1.0
+    for t in range(t_max - 2, -1, -1):
+        bt = (emit(obs_pad[t + 1]) * beta[t + 1]) @ A.T / scale[t + 1][:, None]
+        # invalid t+1 (t >= len-1): beta[t] = 1 — exact for t == len-1,
+        # don't-care (masked) beyond
+        beta[t] = np.where(valid[t + 1][:, None], bt, 1.0)
+    return alpha, beta, scale
+
+
+def transition_factors(
+    alpha: np.ndarray, beta: np.ndarray, scale: np.ndarray, emit,
+    obs_pad: np.ndarray, valid: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(wa, wb)``, (K, N) over the bucket's K transitions, such that
+    sum_t xi[t] = ``A * (wa.T @ wb)`` (module doc). Needs Tmax > 1."""
+    w = emit(obs_pad[1:])  # (Tmax-1, S, N), a fresh array
+    w *= beta[1:]
+    w /= scale[1:, :, None]
+    trans = valid[1:]  # transition t -> t+1 exists iff t+1 is valid
+    return alpha[:-1][trans], w[trans]
+
+
+def loglik_batch(
+    pi: np.ndarray, A: np.ndarray, emit, obs_pad: np.ndarray, lens: np.ndarray
+) -> np.ndarray:
+    """Forward-only pass over one padded bucket (arguments as in
+    :func:`forward_backward_batch`), keeping no alpha history. Returns the
+    (Tmax, S) per-step log P(o_t | o_0..t-1) = log scale[t], 0 past each
+    sequence's end: a sequence's loglik is its column sum.
+
+    A sequence with probability 0 gets ``-inf`` from the step its forward
+    mass dies: its alpha row stays all zeros rather than NaN (0/0), so its
+    batch-mates are untouched."""
+    t_max = obs_pad.shape[0]
+    log_sc = np.empty((t_max, obs_pad.shape[1]))
+    with np.errstate(divide="ignore"):
+        a = pi[None, :] * emit(obs_pad[0])  # (S, N)
+        sc = a.sum(axis=1)
+        log_sc[0] = np.log(sc)
+        alpha = a / np.where(sc > 0, sc, 1.0)[:, None]
+        for t in range(1, t_max):
+            a = (alpha @ A) * emit(obs_pad[t])
+            sc = a.sum(axis=1)
+            log_sc[t] = np.where(t < lens, np.log(sc), 0.0)
+            alpha = a / np.where(sc > 0, sc, 1.0)[:, None]
+    return log_sc
 
 
 def viterbi_batch(
-    log_pi: np.ndarray,
-    log_A: np.ndarray,
-    log_B: np.ndarray,
-    obs_list: list,
+    log_pi: np.ndarray, log_A: np.ndarray, log_emit, obs_pad: np.ndarray,
+    lens: np.ndarray,
 ) -> tuple[list[np.ndarray], np.ndarray]:
-    """Log-space Viterbi for a batch of sequences: returns (paths, scores)
-    aligned with ``obs_list`` — each path an int32 array of its sequence's
-    length, each score the best path's joint log-probability.
-
-    Per octave length bucket (:func:`_padded_buckets`) the max-product
-    recursion runs across all S sequences at once, so the Python-level loop
-    runs max_T times per bucket, not sum(T_s) times. BITWISE equal to
-    looping ``decode._viterbi_one``: every DP cell is the same two-operand
-    IEEE add (delta + log A, then + log B), and the argmax over the
-    previous state is first-max like np.argmax (the candidate block is laid
-    out (S, cur, prev) so that reduction runs over the contiguous axis).
-    Past a sequence's end its delta row is carried unchanged, so the final
-    block holds each sequence's delta at its own last step; the backtrack
-    is vectorized and starts each sequence at its own T-1.
-
-    A sequence with probability 0 under the model scores ``-inf``; its
-    path is then arbitrary (first-max over all -inf). A symbol outside
-    ``0..M-1`` raises ``ValueError``."""
+    """Log-space Viterbi across one padded bucket (arguments as in
+    :func:`forward_backward_batch`, with log-emission rows): returns
+    (paths, scores) aligned with its columns — each path an int32 array of
+    its sequence's length, each score the best path's joint log-probability.
+    BITWISE equal to looping ``decode._viterbi_one``: every DP cell is the same
+    two-operand IEEE add (delta + log A, then + log b), and the argmax
+    over the previous state is first-max like np.argmax (the candidate
+    block is laid out (S, cur, prev) so that reduction runs over the
+    contiguous axis). Past a sequence's end its delta row is carried
+    unchanged, so the final block holds each sequence's delta at its own
+    last step; the backtrack is vectorized and starts each sequence at its
+    own T-1. The bucket is split on the sequence axis so one step's
+    candidate block stays under ``_VITERBI_CAND_BUDGET`` cells. A sequence
+    with probability 0 scores ``-inf`` (path arbitrary)."""
     n = log_pi.shape[0]
     log_AT = np.ascontiguousarray(log_A.T)  # [cur, prev]
-    log_BT = np.ascontiguousarray(log_B.T)  # [symbol, state]
-    paths: list = [None] * len(obs_list)
-    scores = np.empty(len(obs_list))
-    max_seqs = max(1, _VITERBI_CAND_BUDGET // (n * n))
-    for idxs, obs_pad, lens in _padded_buckets(obs_list, log_B.shape[1], max_seqs):
-        t_max, s = obs_pad.shape
-        delta = log_pi[None, :] + log_BT[obs_pad[0]]  # (S, N)
+    cap = max(1, _VITERBI_CAND_BUDGET // (n * n))
+    paths: list = []
+    scores = np.empty(len(lens))
+    for lo in range(0, len(lens), cap):
+        part = slice(lo, lo + cap)
+        cl = lens[part]
+        pad = obs_pad[: int(cl.max()), part]
+        t_max, s = pad.shape
+        delta = log_pi[None, :] + log_emit(pad[0])  # (S, N)
         psi = np.zeros((t_max, s, n), dtype=np.min_scalar_type(n - 1))
         for t in range(1, t_max):
             cand = delta[:, None, :] + log_AT  # (S, N cur, N prev)
             arg = cand.argmax(axis=2)
             psi[t] = arg
             step = np.take_along_axis(cand, arg[:, :, None], axis=2)[:, :, 0]
-            delta = np.where((t < lens)[:, None], step + log_BT[obs_pad[t]], delta)
-        best = delta.max(axis=1)
+            delta = np.where((t < cl)[:, None], step + log_emit(pad[t]), delta)
+        scores[part] = delta.max(axis=1)
         state = delta.argmax(axis=1)
         path_pad = np.empty((t_max, s), dtype=np.int32)
         cols = np.arange(s)
         for t in range(t_max - 1, 0, -1):
             path_pad[t] = state
-            state = np.where(t < lens, psi[t, cols, state], state)
+            state = np.where(t < cl, psi[t, cols, state], state)
         path_pad[0] = state
         rows = np.ascontiguousarray(path_pad.T)
-        for col, i in enumerate(idxs):
-            paths[i] = rows[col, : lens[col]]
-        scores[idxs] = best
+        paths.extend(rows[c, : cl[c]] for c in range(s))
     return paths, scores
 
 
-def loglik_batch(
-    pi: np.ndarray, A: np.ndarray, B: np.ndarray, obs_list: list
-) -> np.ndarray:
-    """Per-sequence marginal log-likelihood log P(O|λ), aligned with
-    ``obs_list``: the scaled forward recursion of :func:`forward_backward`
-    only — no backward pass, no stored alpha history — run across each
-    octave length bucket at once (:func:`_padded_buckets`). The loglik is
-    the sum of log scale factors accumulated step by step; it agrees with
-    ``forward_backward``'s (whose sum is pairwise) to ~1e-15 relative.
-
-    Padding follows the batched E-step: past a sequence's end its scale is
-    pinned to 1, so it adds nothing. A sequence with probability 0 under
-    the model (a zero scale factor) scores ``-inf``: its alpha row is left
-    unnormalized (all zeros) rather than turned NaN by 0/0, so it stays
-    ``-inf`` and every other sequence in the bucket is untouched. A symbol
-    outside ``0..M-1`` raises ``ValueError``."""
-    BT = np.ascontiguousarray(B.T)  # [symbol, state]
-    out = np.empty(len(obs_list))
-    with np.errstate(divide="ignore"):
-        for idxs, obs_pad, lens in _padded_buckets(obs_list, B.shape[1]):
-            a = pi[None, :] * BT[obs_pad[0]]  # (S, N)
-            sc = a.sum(axis=1)
-            ll = np.log(sc)
-            alpha = a / np.where(sc > 0, sc, 1.0)[:, None]
-            for t in range(1, obs_pad.shape[0]):
-                a = (alpha @ A) * BT[obs_pad[t]]
-                sc = np.where(t < lens, a.sum(axis=1), 1.0)
-                ll += np.log(sc)
-                alpha = a / np.where(sc > 0, sc, 1.0)[:, None]
-            out[idxs] = ll
-    return out
+def viterbi_paths(
+    log_pi: np.ndarray, log_A: np.ndarray, log_emit, buckets, n_seqs: int
+) -> tuple[list[np.ndarray], np.ndarray]:
+    """:func:`viterbi_batch` over every ``(idxs, obs_pad, lens)`` bucket of
+    ``n_seqs`` sequences: (paths, scores) aligned with the sequences."""
+    paths: list = [None] * n_seqs
+    scores = np.empty(n_seqs)
+    for idxs, obs_pad, lens in buckets:
+        bucket_paths, scores[idxs] = viterbi_batch(log_pi, log_A, log_emit, obs_pad, lens)
+        for i, path in zip(idxs, bucket_paths):
+            paths[i] = path
+    return paths, scores
 
 
 def e_step_counts_batch(
@@ -332,49 +409,12 @@ def e_step_counts_batch(
     out_B: np.ndarray,
     weights: np.ndarray | None = None,
 ) -> float:
-    """Length-skew-hardened batched E-step: sequences are octave-bucketed
-    by length (:func:`_length_buckets`) and each bucket runs through the
-    vectorized core, so padding waste is bounded at 2× the true DP work no
-    matter how skewed an Arrow batch's length distribution is. Counts
-    accumulate into the same out arrays; the summed loglik is returned.
-    Equality with the per-sequence kernel is pinned by the same batch
-    tests (bucket boundaries only change float accumulation ORDER, which
-    the existing 1e-10 pins already absorb). The buckets come from
-    :func:`_padded_buckets`, so a symbol outside ``0..M-1`` raises
-    ``ValueError``."""
-    warr = None if weights is None else np.asarray(weights, dtype=np.float64)
-    total = 0.0
-    for idxs, obs_pad, lens in _padded_buckets(obs_list, B.shape[1]):
-        total += _e_step_counts_batch_core(
-            pi, A, B, obs_pad, lens, out_pi, out_A, out_B,
-            None if warr is None else warr[idxs],
-        )
-    return total
-
-
-def _e_step_counts_batch_core(
-    pi: np.ndarray,
-    A: np.ndarray,
-    B: np.ndarray,
-    obs_pad: np.ndarray,
-    lens: np.ndarray,
-    out_pi: np.ndarray,
-    out_A: np.ndarray,
-    out_B: np.ndarray,
-    weights: np.ndarray | None = None,
-) -> float:
-    """Batched E-step: the same expected counts as looping e_step_counts over
-    one padded bucket (``obs_pad`` (Tmax, S), zero past each of the
-    ``lens``, from :func:`_padded_buckets`), but vectorized ACROSS sequences
-    so the Python-level loop runs max_T times, not sum(T_s) times. This is
-    the hot kernel inside the distributed fit's Arrow batches (entered via
-    the length-bucketing wrapper e_step_counts_batch).
-
-    Padding semantics: for t beyond a sequence's end, scale is pinned to 1
-    (no loglik contribution), alpha is carried forward unchanged, and beta's
-    don't-care region is 1 (which also seeds beta[len-1] = 1 exactly);
-    gamma/xi contributions are masked by validity, so the result matches the
-    per-sequence kernel to machine precision (asserted in tests).
+    """Batched E-step, the hot kernel of the distributed fit: the expected
+    counts of looping :func:`e_step_counts`, accumulated into the same out
+    arrays (pinned at 1e-10), with the summed loglik returned. One
+    :func:`forward_backward_batch` per :func:`_padded_buckets` bucket (a
+    symbol outside ``0..M-1`` raises ``ValueError``), counts masked by
+    validity.
 
     ``weights`` (optional, per sequence): every count contribution and the
     log-likelihood of sequence s scale by weights[s] — the multiplicity
@@ -383,61 +423,37 @@ def _e_step_counts_batch_core(
     numerically equivalent to physically replicating the sequence w times,
     asserted in tests; fractional weights give importance weighting). The
     weights=None path is byte-identical to the unweighted kernel.
-
-    Returns the (weighted) summed log-likelihood of the batch.
     """
-    Tmax, S = obs_pad.shape
-    N, M = A.shape[0], B.shape[1]
-    valid = np.arange(Tmax)[:, None] < lens[None, :]  # (T, S)
+    M = B.shape[1]
+    emit = symbol_emit(B)
+    warr = None if weights is None else np.asarray(weights, dtype=np.float64)
+    total = 0.0
+    for idxs, obs_pad, lens in _padded_buckets(obs_list, M):
+        alpha, beta, scale = forward_backward_batch(pi, A, emit, obs_pad, lens)
+        valid = _valid(obs_pad, lens)
+        gamma = alpha * beta  # (T, S, N); rows at valid t sum to 1
+        if warr is None:
+            out_pi += gamma[0].sum(axis=0)
+        else:
+            wgt = warr[idxs]
+            grid = np.broadcast_to(wgt[None, :], obs_pad.shape)
+            out_pi += wgt @ gamma[0]  # (S,) @ (S, N)
 
-    alpha = np.empty((Tmax, S, N))
-    scale = np.ones((Tmax, S))
-    a = pi[None, :] * B[:, obs_pad[0]].T  # (S, N); every sequence has T >= 1
-    sc = a.sum(axis=1)
-    alpha[0] = a / sc[:, None]
-    scale[0] = sc
-    for t in range(1, Tmax):
-        a = (alpha[t - 1] @ A) * B[:, obs_pad[t]].T
-        v = valid[t]
-        sc = np.where(v, a.sum(axis=1), 1.0)
-        alpha[t] = np.where(v[:, None], a / sc[:, None], alpha[t - 1])
-        scale[t] = sc
+        flat_gamma = gamma[valid]  # (K, N)
+        if warr is not None:
+            flat_gamma = flat_gamma * grid[valid][:, None]
+        BT = np.zeros((M, A.shape[0]))
+        np.add.at(BT, obs_pad[valid], flat_gamma)
+        out_B += BT.T
 
-    beta = np.empty((Tmax, S, N))
-    beta[Tmax - 1] = 1.0
-    w = np.empty((Tmax, S, N))  # w[t] = B[:,o_t] * beta[t] / scale[t]
-    w[Tmax - 1] = (B[:, obs_pad[Tmax - 1]].T * beta[Tmax - 1]) / scale[Tmax - 1][:, None]
-    for t in range(Tmax - 2, -1, -1):
-        bt = (B[:, obs_pad[t + 1]].T * beta[t + 1]) @ A.T / scale[t + 1][:, None]
-        # invalid t+1 (t >= len-1): beta[t] = 1 — exact for t == len-1,
-        # don't-care (masked) beyond
-        beta[t] = np.where(valid[t + 1][:, None], bt, 1.0)
-        w[t] = (B[:, obs_pad[t]].T * beta[t]) / scale[t][:, None]
+        if obs_pad.shape[0] > 1:
+            wa, wb = transition_factors(alpha, beta, scale, emit, obs_pad, valid)
+            if warr is not None:
+                wb = wb * grid[1:][valid[1:]][:, None]
+            out_A += A * (wa.T @ wb)
 
-    gamma = alpha * beta  # (T, S, N); rows at valid t sum to 1
-    if weights is None:
-        out_pi += gamma[0].sum(axis=0)
-    else:
-        wgt = np.asarray(weights, dtype=np.float64)
-        grid = np.broadcast_to(wgt[None, :], (Tmax, S))
-        out_pi += wgt @ gamma[0]  # (S,) @ (S, N)
-
-    flat_obs = obs_pad[valid]          # (K,)
-    flat_gamma = gamma[valid]          # (K, N)
-    if weights is not None:
-        flat_gamma = flat_gamma * grid[valid][:, None]
-    BT = np.zeros((M, N))
-    np.add.at(BT, flat_obs, flat_gamma)
-    out_B += BT.T
-
-    if Tmax > 1:
-        trans_valid = valid[1:]        # transition t -> t+1 exists iff valid[t+1]
-        wa = alpha[:-1][trans_valid]   # (K2, N)
-        wb = w[1:][trans_valid]        # (K2, N)
-        if weights is not None:
-            wb = wb * grid[1:][trans_valid][:, None]
-        out_A += A * (wa.T @ wb)
-
-    if weights is None:
-        return float(np.log(scale).sum())
-    return float(np.log(scale).sum(axis=0) @ wgt)
+        if warr is None:
+            total += float(np.log(scale).sum())
+        else:
+            total += float(np.log(scale).sum(axis=0) @ wgt)
+    return total

@@ -11,12 +11,12 @@ Bayesian HMM inference (Gibbs sampling over state paths, Scott 2002,
 estimates no point decode can give.
 
 Algorithm (standard, e.g. Carter & Kohn 1994 for the linear-Gaussian
-analogue): run the scaled forward pass (``kernel.forward_backward``'s
-alpha_hat rows are the filtered marginals P(s_t | o_1..t)), sample
-s_T ~ alpha_hat[T-1], then backward for t = T-2..0 sample
-s_t ~ alpha_hat[t] * A[:, s_{t+1}] (normalized). All ``n_samples`` draws
-for a sequence vectorize across the sample axis (one categorical draw per
-(t, sample) via inverse-CDF on a shared uniform block).
+analogue): run the scaled forward pass (alpha_hat rows are the filtered
+marginals P(s_t | o_1..t)), sample s_T ~ alpha_hat[T-1], then backward for
+t = T-2..0 sample s_t ~ alpha_hat[t] * A[:, s_{t+1}] (normalized). Both
+operators here take alpha from ``kernel.forward_backward_batch``
+(``decode._posterior_buckets``); the draws and the entropy recursion
+vectorize across a length bucket's sequences (and FFBS's samples).
 
 Determinism: every uniform is the counter-based portable hash
 ``portable_hash60(seed:seq_id:sample_id:t) / 2^60`` (same convention as
@@ -43,6 +43,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from baum_welch_spark.hmm.decode import _nonempty, _posterior_buckets
 from baum_welch_spark.hmm.model import HMM
 
 SAMPLE_SCHEMA = "seq_id bigint, sample_id int, path_str string"
@@ -69,30 +70,31 @@ def _u01_block(seed: int, seq_id: int, n_samples: int, t_len: int) -> np.ndarray
     )
 
 
-def _ffbs_one(
-    pi: np.ndarray, A: np.ndarray, B: np.ndarray, obs: np.ndarray,
-    u: np.ndarray,
+def _ffbs_batch(
+    A: np.ndarray, alpha: np.ndarray, lens: np.ndarray, u: np.ndarray
 ) -> np.ndarray:
-    """(n_samples, T) posterior path draws for one sequence, from the
-    (n_samples, T) uniform block ``u``."""
-    from baum_welch_spark.hmm.kernel import forward_backward
-
-    alpha, _, _, _ = forward_backward(pi, A, B, obs)
-    T = obs.shape[0]
-    N = pi.shape[0]
-    out = np.empty((u.shape[0], T), dtype=np.int32)
-    # s_T ~ filtered marginal at T-1 (alpha_hat rows are normalized); the
-    # clip guards u == 1.0 (possible for counter uniforms: 2^60-adjacent
-    # hashes round up), which searchsorted would map to N
-    cdf = np.cumsum(alpha[T - 1])
-    out[:, T - 1] = np.minimum(
-        np.searchsorted(cdf, u[:, T - 1] * cdf[-1], side="right"), N - 1
-    )
-    for t in range(T - 2, -1, -1):
-        # w[k] proportional to alpha[t] * A[:, s_{t+1}[k]], per sample k
-        w = alpha[t][None, :] * A[:, out[:, t + 1]].T  # (n_samples, N)
-        cdfs = np.cumsum(w, axis=1)
-        out[:, t] = (cdfs < (u[:, t] * cdfs[:, -1])[:, None]).sum(axis=1)
+    """(Tmax, S, n_samples) posterior path draws for one padded bucket
+    from its ``alpha`` (Tmax, S, N) and uniforms ``u`` (Tmax, S,
+    n_samples); 0 past each sequence's end. The draw at a sequence's last
+    step counts cumsum thresholds <= u·total (searchsorted side='right'),
+    clipped to N-1 since a counter uniform can be exactly 1.0; the
+    backward draws count thresholds < u·total (as ffbs_oracle_sql)."""
+    n = A.shape[0]
+    AT = np.ascontiguousarray(A.T)  # row j is A[:, j]
+    out = np.zeros(u.shape, dtype=np.int32)
+    for t in range(alpha.shape[0] - 1, -1, -1):
+        last = lens - 1 == t
+        if last.any():
+            cdf = np.cumsum(alpha[t, last], axis=1)  # (S_last, N)
+            v = u[t, last] * cdf[:, -1:]
+            out[t, last] = np.minimum((cdf[:, None, :] <= v[:, :, None]).sum(axis=2), n - 1)
+        inner = t < lens - 1
+        if inner.any():
+            # w[s, k] proportional to alpha[t] * A[:, s_{t+1}[s, k]]
+            w = alpha[t, inner][:, None, :] * AT[out[t + 1, inner]]  # (S_in, K, N)
+            cdfs = np.cumsum(w, axis=2)
+            v = u[t, inner] * cdfs[:, :, -1]
+            out[t, inner] = (cdfs < v[:, :, None]).sum(axis=2)
     return out
 
 
@@ -104,24 +106,31 @@ def posterior_sample(
     seed: int = 42,
 ) -> DataFrame:
     """sequences(seq_id, obs) -> (seq_id, sample_id, path_str): exact FFBS
-    draws from P(path | obs, model), ``n_samples`` per sequence."""
+    draws from P(path | obs, model), ``n_samples`` per sequence. A
+    sequence with probability 0 under the model has no posterior: each of
+    its ``n_samples`` rows carries a NULL ``path_str``. A symbol outside
+    ``0..M-1`` raises ``ValueError``."""
     model = model.validate()
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
 
     def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pi, A, B = bc.value
         for pdf in batches:
-            ids, sids, paths = [], [], []
-            for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
-                if obs is None or len(obs) == 0:
-                    continue
-                u = _u01_block(seed, int(seq_id), n_samples, len(obs))
-                draws = _ffbs_one(pi, A, B, np.asarray(obs, dtype=np.int64), u)
-                for k in range(n_samples):
-                    ids.append(int(seq_id))
-                    sids.append(k)
-                    paths.append(",".join(str(int(s)) for s in draws[k]))
-            yield pd.DataFrame({"seq_id": ids, "sample_id": sids, "path_str": paths})
+            ids, obs_list = _nonempty(pdf)
+            paths = [[None] * n_samples for _ in ids]
+            for idxs, lens, alpha, _, _, ok in _posterior_buckets(pi, A, B, obs_list):
+                u = np.zeros((alpha.shape[0], len(idxs), n_samples))
+                for col, i in enumerate(idxs):
+                    u[: lens[col], col] = _u01_block(seed, int(ids[i]), n_samples, int(lens[col])).T
+                draws = np.ascontiguousarray(_ffbs_batch(A, alpha, lens, u).transpose(1, 2, 0))
+                for col, i in enumerate(idxs):
+                    if ok[col]:
+                        paths[i] = [",".join(map(str, d[: lens[col]].tolist())) for d in draws[col]]
+            yield pd.DataFrame({
+                "seq_id": np.repeat(np.asarray(ids, dtype=np.int64), n_samples),
+                "sample_id": np.tile(np.arange(n_samples, dtype=np.int32), len(ids)),
+                "path_str": [p for per_seq in paths for p in per_seq],
+            })
 
     return sequences.mapInPandas(sample, schema=SAMPLE_SCHEMA)
 
@@ -197,30 +206,29 @@ FROM samp GROUP BY 1, 2
 ENTROPY_SCHEMA = "seq_id bigint, t_len int, loglik double, entropy double, entropy_rate double"
 
 
-def _entropy_one(pi, A, B, obs) -> tuple[float, float]:
-    """(loglik, H(S_1..T | O)) for one sequence via the forward entropy
-    recursion (Hernando, Crespi, Cybenko 2005: H_t(j), the entropy of the
-    state prefix conditional on s_t = j and o_1..t, updates with the chain
-    rule H_t(j) = sum_i p_ij (H_{t-1}(i) - log p_ij) where
+def _entropy_batch(A: np.ndarray, alpha: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """(S,) H(S_1..T | O) for one padded bucket from its forward filter
+    ``alpha`` (Tmax, S, N), via the forward entropy recursion (Hernando,
+    Crespi, Cybenko 2005: H_t(j), the entropy of the state prefix
+    conditional on s_t = j and o_1..t, updates with the chain rule
+    H_t(j) = sum_i p_ij (H_{t-1}(i) - log p_ij) where
     p_ij = P(s_{t-1} = i | s_t = j, o_1..t) prop alpha_{t-1}(i) A[i, j]) —
-    O(T N^2), no path enumeration."""
-    from baum_welch_spark.hmm.kernel import forward_backward
-
-    alpha, _, _, ll = forward_backward(pi, A, B, obs)
-    T, N = alpha.shape
-    H = np.zeros(N)
-    for t in range(1, T):
-        W = alpha[t - 1][:, None] * A  # (i prev, j cur), unnormalized p_ij
-        s = W.sum(axis=0)
-        s[s == 0.0] = 1.0
-        P = W / s  # column-stochastic
-        with np.errstate(divide="ignore", invalid="ignore"):
-            logP = np.where(P > 0, np.log(P), 0.0)
-        H = (P * (H[:, None] - logP)).sum(axis=0)
-    a = alpha[T - 1]
+    O(T N^2), no path enumeration. Past a sequence's end its H is carried
+    unchanged, so the final step reads each sequence's own H_{T-1}."""
+    t_max, s, n = alpha.shape
+    H = np.zeros((s, n))
     with np.errstate(divide="ignore", invalid="ignore"):
+        for t in range(1, t_max):
+            W = alpha[t - 1][:, :, None] * A  # (S, i prev, j cur), unnormalized p_ij
+            z = W.sum(axis=1)
+            z[z == 0.0] = 1.0
+            P = W / z[:, None, :]  # column-stochastic
+            logP = np.where(P > 0, np.log(P), 0.0)
+            step = (P * (H[:, :, None] - logP)).sum(axis=1)
+            H = np.where((t < lens)[:, None], step, H)
+        a = alpha[lens - 1, np.arange(s)]
         loga = np.where(a > 0, np.log(a), 0.0)
-    return ll, float((a * (H - loga)).sum())
+    return (a * (H - loga)).sum(axis=1)
 
 
 def posterior_entropy(
@@ -232,27 +240,28 @@ def posterior_entropy(
     one path (e.g. deterministic topologies); upper-bounded by T ln N. The
     quantity a confidence-aware decode pipeline thresholds on — Viterbi's
     MAP path says nothing about how dominant that path is. Same scale shape
-    as the decoders: broadcast model, narrow map, no shuffle."""
+    as the decoders: broadcast model, narrow map, no shuffle.
+
+    A sequence with probability 0 under the model has no posterior: its
+    loglik is ``-inf`` and its entropy and entropy_rate are NULL. A symbol
+    outside ``0..M-1`` raises ``ValueError``."""
     model = model.validate()
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pi, A, B = bc.value
         for pdf in batches:
-            ids, tls, lls, hs, rates = [], [], [], [], []
-            for seq_id, obs in zip(pdf["seq_id"], pdf["obs"]):
-                if obs is None or len(obs) == 0:
-                    continue
-                o = np.asarray(obs, dtype=np.int64)
-                ll, h = _entropy_one(pi, A, B, o)
-                ids.append(int(seq_id))
-                tls.append(len(o))
-                lls.append(ll)
-                hs.append(h)
-                rates.append(h / len(o))
+            ids, obs_list = _nonempty(pdf)
+            tls = np.array([len(o) for o in obs_list], dtype=np.int32)
+            # NaN crosses Arrow as NULL: the impossible sequences' entropies
+            lls, hs = np.empty(len(ids)), np.empty(len(ids))
+            for idxs, lens, alpha, _, scale, ok in _posterior_buckets(pi, A, B, obs_list):
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    lls[idxs] = np.where(ok, np.log(scale).sum(axis=0), -np.inf)
+                hs[idxs] = np.where(ok, _entropy_batch(A, alpha, lens), np.nan)
             yield pd.DataFrame(
-                {"seq_id": ids, "t_len": tls, "loglik": lls,
-                 "entropy": hs, "entropy_rate": rates}
+                {"seq_id": np.asarray(ids, dtype=np.int64), "t_len": tls, "loglik": lls,
+                 "entropy": hs, "entropy_rate": hs / tls}
             )
 
     return sequences.mapInPandas(compute, schema=ENTROPY_SCHEMA)
@@ -280,37 +289,22 @@ def posterior_entropy_face(
 
 def entropy_oracle_sql(model: HMM) -> str:
     """ANSI-SQL (DuckDB) oracle for posterior_entropy_face: the scaled
-    forward recursion (normalized alphas + running log-likelihood, exactly
-    score_oracle_sql's alpha CTE) plus the Hernando H_t(j) entropy
-    recursion as a second recursive CTE.
+    forward recursion (decode._forward_ctes) plus the Hernando H_t(j)
+    entropy recursion as a second recursive CTE.
 
-    Mirrors _entropy_one operation-for-operation: per step the backward
+    Mirrors _entropy_batch operation-for-operation: per step the backward
     transition posterior P_ij = alpha_t(i) A[i,j] / s_j (s_j==0 guarded to
     1, matching the NumPy ``s[s == 0] = 1``), zero-probability terms
     contribute 0 (the ``np.where(P > 0, log P, 0)`` guard), and sums run
     in the same i/j order — values agree to ~1e-12; both sides round to 6
     decimals. MATERIALIZED on every CTE a recursion references (see
-    score_oracle_sql's note: DuckDB otherwise re-runs the upstream
-    recursion per step of the downstream one)."""
-    from baum_welch_spark.hmm.decode import _CODED_SQL, _blist, _lit
+    _forward_ctes' note)."""
+    from baum_welch_spark.hmm.decode import _CODED_SQL, _forward_ctes, _lit, _symbol_emis
 
     model = model.validate()
     N = model.pi.shape[0]
-    pi, A, B = model.pi, model.A, model.B
+    A = model.A
     j1 = range(1, N + 1)
-    base_u = ",\n         ".join(
-        f"{_lit(pi[j - 1])} * ({_blist(B[j - 1])})[c.sym + 1] AS u{j}" for j in j1
-    )
-    step_u = ",\n         ".join(
-        "("
-        + " + ".join(f"a.p{i} * {_lit(A[i - 1][j - 1])}" for i in j1)
-        + f") * ({_blist(B[j - 1])})[c.sym + 1] AS nu{j}"
-        for j in j1
-    )
-    usum = " + ".join(f"u{j}" for j in j1)
-    nusum = " + ".join(f"nu{j}" for j in j1)
-    norm = ", ".join(f"u{j} / s AS p{j}" for j in j1)
-    nnorm = ", ".join(f"nu{j} / ns AS np{j}" for j in j1)
 
     # entropy recursion: base H_0(j) = 0; step H_{t+1}(j) =
     # sum_i P_ij (H_t(i) - ln P_ij), P_ij = alpha_t(i) A[i,j] / s_j.
@@ -350,22 +344,7 @@ def entropy_oracle_sql(model: HMM) -> str:
         f"THEN al.p{j} * (e.h{j} - ln(al.p{j})) ELSE {_lit(0.0)} END"
         for j in j1
     )
-    return f"""
-WITH coded AS MATERIALIZED ({_CODED_SQL}),
-lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
-alpha AS MATERIALIZED (
-  WITH RECURSIVE alpha_r AS (
-    SELECT c.user_id, 0 AS t,
-           {base_u},
-           ({usum}) AS s, ln(s) AS ll, {norm}
-    FROM coded c WHERE c.t = 0
-    UNION ALL
-    SELECT a.user_id, a.t + 1,
-           {step_u},
-           ({nusum}) AS ns, a.ll + ln(ns) AS nll, {nnorm}
-    FROM alpha_r a JOIN coded c ON c.user_id = a.user_id AND c.t = a.t + 1
-  ) SELECT * FROM alpha_r
-),
+    return _forward_ctes(model.pi, A, _symbol_emis(model.B), _CODED_SQL) + f""",
 ent AS MATERIALIZED (
   WITH RECURSIVE ent_r AS (
     SELECT c.user_id, 0 AS t, {base_h}

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from baum_welch_spark.hmm.em import COUNTS_SCHEMA, FitResult, encode
 from baum_welch_spark.hmm.fit import run_discrete_em
-from baum_welch_spark.hmm.kernel import e_step_counts_batch
+from baum_welch_spark.hmm.kernel import check_symbols, e_step_counts_batch
 from baum_welch_spark.hmm.model import (
     HMM,
     KIND_EMISSION,
@@ -51,9 +51,12 @@ from baum_welch_spark.hmm.model import (
 def _labeled_counts(
     log_pi, log_A, log_B, obs_list, states_list, cpi, cA, cB
 ) -> float:
-    """Hard counts + complete-data loglik for labeled sequences."""
+    """Hard counts + complete-data loglik for labeled sequences. A symbol
+    outside ``0..M-1`` raises the E-step's ``ValueError``
+    (``kernel.check_symbols``) instead of wrapping or failing bare."""
     ll = 0.0
     for obs, st in zip(obs_list, states_list):
+        check_symbols(obs, log_B.shape[1])
         cpi[st[0]] += 1.0
         ll += log_pi[st[0]] + log_B[st[0], obs[0]]
         for t in range(1, len(obs)):

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from baum_welch_spark.hmm.decode import _viterbi_one, viterbi_ctes
 from baum_welch_spark.hmm.em import COUNTS_SCHEMA, FitResult, encode, sum_stripes
 from baum_welch_spark.hmm.fit import normalize_counts, run_discrete_em
-from baum_welch_spark.hmm.kernel import m_step, viterbi_batch
+from baum_welch_spark.hmm.kernel import _padded_buckets, m_step, symbol_emit, viterbi_paths
 from baum_welch_spark.hmm.model import (
     HMM,
     KIND_EMISSION,
@@ -50,7 +50,7 @@ from baum_welch_spark.hmm.model import (
 
 def hard_count_udf(bc_log_model):
     """mapInPandas function for one hard-EM pass: Viterbi-decode each Arrow
-    batch with one ``kernel.viterbi_batch`` call, accumulate path counts
+    batch with one ``kernel.viterbi_paths`` call, accumulate path counts
     into local NumPy arrays, and emit ONE stripe block per partition
     (``em.encode``) with the Viterbi joint log-likelihood as its loglik row
     (the in-UDF map-side combine, same shape as fit.e_step_udf).
@@ -61,6 +61,7 @@ def hard_count_udf(bc_log_model):
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         log_pi, log_A, log_B = bc_log_model.value
         n, m = log_A.shape[0], log_B.shape[1]
+        log_emit = symbol_emit(log_B)
         cpi = np.zeros(n)
         cA = np.zeros((n, n))
         cB = np.zeros((n, m))
@@ -71,7 +72,9 @@ def hard_count_udf(bc_log_model):
             if not obs_list:
                 continue
             saw_data = True
-            paths, scores = viterbi_batch(log_pi, log_A, log_B, obs_list)
+            paths, scores = viterbi_paths(
+                log_pi, log_A, log_emit, _padded_buckets(obs_list, m), len(obs_list)
+            )
             for score in scores:
                 ll += score
             np.add.at(cpi, [p[0] for p in paths], 1.0)

@@ -330,36 +330,52 @@ def test_zero_probability_sequence_scores_minus_inf(spark):
 
 
 def test_zero_probability_sequence_has_null_posterior(spark):
-    """posterior_decode and state_occupancy give the impossible sequence a
-    NULL result (NULL path_str; N rows of NULL occupancy), not the argmax
-    of an all-NaN posterior (state 0); every other sequence in its Arrow
-    batch gets exactly the rows it gets without it."""
+    """posterior_decode, state_occupancy, posterior_sample and
+    posterior_entropy give the impossible sequence a NULL result (NULL
+    path_str; N rows of NULL occupancy; a NULL path_str per sample; NULL
+    entropy and entropy_rate with a -inf loglik), not the argmax of an
+    all-NaN posterior (state 0), a plausible sampled path or NaN; every
+    other sequence in its Arrow batch gets exactly the rows it gets
+    without it."""
     from baum_welch_spark.hmm.decode import posterior_decode, state_occupancy
+    from baum_welch_spark.hmm.sample import posterior_entropy, posterior_sample
 
     mixed = _one_batch(spark, GOOD_SEQS + [(2, [1, 0, 1])])
     clean = _one_batch(spark, GOOD_SEQS)
-    for op, key, col, n_rows in (
-        (posterior_decode, ("seq_id",), "path_str", 1),
-        (state_occupancy, ("seq_id", "state"), "occupancy", ZERO_MODEL.n_hidden),
+    for name, op, key, cols, n_rows in (
+        ("posterior_decode", posterior_decode, ("seq_id",), ("path_str",), 1),
+        ("state_occupancy", state_occupancy, ("seq_id", "state"), ("occupancy",),
+         ZERO_MODEL.n_hidden),
+        ("posterior_sample",
+         lambda s, d, m: posterior_sample(s, d, m, n_samples=3, seed=5),
+         ("seq_id", "sample_id"), ("path_str",), 3),
+        ("posterior_entropy", posterior_entropy, ("seq_id",),
+         ("entropy", "entropy_rate"), 1),
     ):
         got = {tuple(r[k] for k in key): r for r in op(spark, mixed, ZERO_MODEL).collect()}
         ref = {tuple(r[k] for k in key): r for r in op(spark, clean, ZERO_MODEL).collect()}
         bad = [r for k, r in got.items() if k[0] == 2]
-        assert len(bad) == n_rows and all(r[col] is None for r in bad), (op.__name__, bad)
-        assert {k: r for k, r in got.items() if k[0] != 2} == ref, op.__name__
-        assert all(r[col] is not None for r in ref.values()), op.__name__
+        assert len(bad) == n_rows, (name, bad)
+        assert all(r[c] is None for r in bad for c in cols), (name, bad)
+        assert {k: r for k, r in got.items() if k[0] != 2} == ref, name
+        assert all(r[c] is not None for r in ref.values() for c in cols), name
+        if name == "posterior_entropy":
+            assert bad[0].loglik == -np.inf
+            assert all(np.isfinite(r.loglik) for r in ref.values())
 
 
 @pytest.mark.parametrize("bad", [-1, 5])
 def test_out_of_range_symbol_raises(spark, bad):
-    """A symbol id outside 0..M-1 fails the decode, top-k, score and
-    posterior jobs with a ValueError naming it and M; before, -1 wrapped
-    to the last symbol."""
+    """A symbol id outside 0..M-1 fails the decode, top-k, score,
+    posterior, sampling and entropy jobs with a ValueError naming it and
+    M; before, -1 wrapped to the last symbol."""
     from pyspark.errors import PythonException
 
     from baum_welch_spark.hmm.decode import posterior_decode, state_occupancy, viterbi_topk
+    from baum_welch_spark.hmm.sample import posterior_entropy, posterior_sample
 
     df = _one_batch(spark, [(1, [0, 1, 2]), (2, [0, bad, 0])])
-    for op in (score_sequences, viterbi_decode, viterbi_topk, posterior_decode, state_occupancy):
+    for op in (score_sequences, viterbi_decode, viterbi_topk, posterior_decode,
+               state_occupancy, posterior_sample, posterior_entropy):
         with pytest.raises(PythonException, match=rf"ValueError: observation symbol {bad} .*M=5"):
             op(spark, df, MODEL).collect()

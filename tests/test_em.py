@@ -233,22 +233,29 @@ def test_online_update_raises_on_zero_probability_sequence(spark, one_batch):
 
 @pytest.mark.parametrize("bad", [-1, 5])
 def test_fit_estep_raises_on_out_of_range_symbol(spark, bad):
-    """fit, OnlineEM.update and em_reestimate fail with the decode
-    operators' ValueError on a symbol outside 0..M-1; before, -1 wrapped
-    to the last symbol and M failed with a bare IndexError."""
+    """fit, OnlineEM.update, em_reestimate and the labeled rows of
+    fit_semisupervised fail with the decode operators' ValueError on a
+    symbol outside 0..M-1; before, -1 wrapped to the last symbol and M
+    failed with a bare IndexError."""
     from pyspark.errors import PythonException
 
     from baum_welch_spark.hmm.fit import em_reestimate
     from baum_welch_spark.hmm.online import OnlineEM
+    from baum_welch_spark.hmm.semisup import fit_semisupervised
 
     model = HMM.random(2, 5, seed=3)
     seqs = spark.createDataFrame(
         [(1, [0, 1, 2]), (2, [0, bad, 0])], "seq_id bigint, obs array<int>"
     ).coalesce(1)
+    labeled = spark.createDataFrame(
+        [(1, [0, 1, 2], None), (2, [0, bad], [0, 1])],
+        "seq_id bigint, obs array<int>, states array<int>",
+    ).coalesce(1)
     runs = {
         "fit": lambda: fit(spark, seqs, model, max_iter=1),
         "online": lambda: OnlineEM(model=model).update(spark, seqs),
         "em_reestimate": lambda: em_reestimate(spark, seqs, model).collect(),
+        "semisup_labeled": lambda: fit_semisupervised(spark, labeled, model, max_iter=1),
     }
     for run in runs.values():
         with pytest.raises(PythonException, match=rf"ValueError: observation symbol {bad} .*M=5"):

@@ -1,22 +1,31 @@
-"""Gaussian-emission HMM (hmm/gaussian.py): kernel vs brute-force path
-enumeration, distributed EM vs the sequential NumPy oracle, and the DuckDB
-face parity is covered by the driver board (ghmm_viterbi / ghmm_score)."""
+"""Gaussian-emission HMM (hmm/gaussian.py): the batched kernels under the
+Gaussian emission term vs brute-force path enumeration and the
+per-sequence reference, distributed EM vs the sequential NumPy oracle, and
+the DuckDB face parity is covered by tools/check_oracle.py (ghmm_viterbi /
+ghmm_score)."""
 
 import numpy as np
 import pytest
 
 from baum_welch_spark.hmm.gaussian import (
     GaussianHMM,
+    _check_mass,
+    _emit,
     build_value_sequences,
     e_step_moments,
+    e_step_moments_batch,
     fit_gaussian,
-    forward_backward_gauss,
-    log_emissions,
+    log_density,
     m_step_gauss,
     score_gauss,
     sequential_gauss_em,
     viterbi_gauss,
-    _viterbi_gauss_one,
+)
+from baum_welch_spark.hmm.kernel import (
+    _pad_buckets,
+    forward_backward_batch,
+    loglik_batch,
+    viterbi_paths,
 )
 from baum_welch_spark.sources.io import load_table
 
@@ -33,7 +42,7 @@ def _enum_joint(model, x):
     """All N^T path joint log-densities by brute force."""
     import itertools
 
-    logb = log_emissions(model, x)
+    logb = log_density(model)(x)
     with np.errstate(divide="ignore"):
         lpi, lA = np.log(model.pi), np.log(model.A)
     T = len(x)
@@ -47,33 +56,60 @@ def _enum_joint(model, x):
 
 
 def test_forward_backward_matches_enumeration():
+    """The batched forward-backward and forward-only kernels under the
+    Gaussian emission term, on one padded bucket of lengths 6 and 4."""
     rng = np.random.default_rng(0)
     model = _model()
-    x = rng.uniform(0, 10, size=6)
-    joint = _enum_joint(model, x)
-    total = np.logaddexp.reduce(list(joint.values()))
-    alpha, beta, scale, ll = forward_backward_gauss(model, x)
-    assert ll == pytest.approx(total, abs=1e-10)
-    # posterior marginals from enumeration == alpha*beta (gamma)
-    gamma = alpha * beta
-    for t in range(len(x)):
-        for q in range(N):
-            marg = np.logaddexp.reduce(
-                [v for p, v in joint.items() if p[t] == q]
-            )
-            assert gamma[t, q] == pytest.approx(np.exp(marg - total), abs=1e-10)
+    xs = [rng.uniform(0, 10, size=6), rng.uniform(0, 10, size=4)]
+    [(idxs, x_pad, lens)] = _pad_buckets(xs, np.float64)
+    alpha, beta, scale = forward_backward_batch(model.pi, model.A, _emit(model), x_pad, lens)
+    lls = loglik_batch(model.pi, model.A, _emit(model), x_pad, lens).sum(axis=0)
+    for col, i in enumerate(idxs):
+        x = xs[i]
+        joint = _enum_joint(model, x)
+        total = np.logaddexp.reduce(list(joint.values()))
+        assert np.log(scale[:, col]).sum() == pytest.approx(total, abs=1e-10)
+        assert lls[col] == pytest.approx(total, abs=1e-10)
+        # posterior marginals from enumeration == alpha*beta (gamma)
+        gamma = alpha[:, col] * beta[:, col]
+        for t in range(len(x)):
+            for q in range(N):
+                marg = np.logaddexp.reduce(
+                    [v for p, v in joint.items() if p[t] == q]
+                )
+                assert gamma[t, q] == pytest.approx(np.exp(marg - total), abs=1e-10)
 
 
 def test_viterbi_matches_enumeration():
     rng = np.random.default_rng(1)
     model = _model()
-    for trial in range(5):
-        x = rng.uniform(0, 10, size=5)
+    xs = [rng.uniform(0, 10, size=t) for t in (5, 5, 4, 6, 5)]
+    with np.errstate(divide="ignore"):
+        lpi, lA = np.log(model.pi), np.log(model.A)
+    paths, scores = viterbi_paths(
+        lpi, lA, log_density(model), _pad_buckets(xs, np.float64), len(xs)
+    )
+    for x, path, ll in zip(xs, paths, scores):
         joint = _enum_joint(model, x)
         best = max(joint, key=joint.get)
-        path, ll = _viterbi_gauss_one(model, x)
         assert tuple(path) == best
         assert ll == pytest.approx(joint[best], abs=1e-10)
+
+
+def test_e_step_moments_batch_matches_per_sequence():
+    """The batched Gaussian E-step over one mixed-length batch (several
+    octave buckets, padding inside each) equals e_step_moments summed per
+    sequence to 1e-10."""
+    rng = np.random.default_rng(3)
+    model = _model()
+    xs = [rng.uniform(0, 10, size=t) for t in (1, 2, 3, 5, 7, 8, 13, 16, 40, 300, 2, 9)]
+    ref = [np.zeros(N), np.zeros((N, N)), np.zeros((N, 3))]
+    ref_ll = sum(e_step_moments(model, x, *ref) for x in xs)
+    got = [np.zeros(N), np.zeros((N, N)), np.zeros((N, 3))]
+    ll = e_step_moments_batch(model, xs, *got)
+    assert ll == pytest.approx(ref_ll, rel=1e-10)
+    for a, b in zip(got, ref):
+        np.testing.assert_allclose(a, b, rtol=1e-10, atol=1e-10)
 
 
 def test_e_step_moments_identities():
@@ -156,24 +192,39 @@ def test_decode_score_consistency(spark):
 
 def test_forward_backward_underflow_raises_not_nan():
     """A far-outlier observation with collapsed variances must raise a
-    descriptive error, not silently NaN every downstream alpha/loglik
-    (ADVICE-r8: scale[t] == 0 guard)."""
-    import numpy as np
-
-    from baum_welch_spark.hmm.gaussian import GaussianHMM, forward_backward_gauss
-
+    descriptive error naming the step, not silently NaN every downstream
+    alpha/loglik (ADVICE-r8: scale[t] == 0 guard), in the batched E-step
+    and the batched scoring pass alike. Only valid steps count: the
+    padding (0.0, ~1e4 sigma from both means) underflows every state's
+    density and must not raise."""
     m = GaussianHMM(
         pi=np.array([0.5, 0.5]),
         A=np.array([[0.9, 0.1], [0.1, 0.9]]),
-        mu=np.array([0.0, 1.0]),
+        mu=np.array([10.0, 11.0]),
         sigma2=np.array([1e-6, 1e-6]),
     )
-    # in-range observations still work under the floored variance
-    a, b, s, ll = forward_backward_gauss(m, np.array([0.0, 1.0, 0.0]))
-    assert np.isfinite(ll) and np.isfinite(a).all()
+
+    def run(xs):
+        counts = [np.zeros(2), np.zeros((2, 2)), np.zeros((2, 3))]
+        ll = e_step_moments_batch(m, xs, *counts)
+        [(_, x_pad, lens)] = _pad_buckets(xs, np.float64)
+        log_scale = loglik_batch(m.pi, m.A, _emit(m), x_pad, lens)
+        _check_mass(log_scale)
+        return ll, counts, log_scale.sum(axis=0)
+
+    # in-range observations still work under the floored variance, with
+    # the shorter sequence padded past its end
+    ll, counts, lls = run([np.array([10.0, 11.0, 10.0]), np.array([10.0, 11.0])])
+    assert np.isfinite(ll) and np.isfinite(lls).all()
+    assert all(np.isfinite(c).all() for c in counts)
     # an observation ~1e4 sigma away underflows every state's density
-    with pytest.raises(FloatingPointError, match="zero forward mass"):
-        forward_backward_gauss(m, np.array([0.0, 50.0]))
+    with pytest.raises(FloatingPointError, match="zero forward mass at t=1"):
+        e_step_moments_batch(
+            m, [np.array([10.0, 11.0, 10.0]), np.array([10.0, 60.0])],
+            np.zeros(2), np.zeros((2, 2)), np.zeros((2, 3)),
+        )
+    with pytest.raises(FloatingPointError, match="zero forward mass at t=1"):
+        run([np.array([10.0, 60.0])])
 
 
 def test_fit_gaussian_resume_from_parquet_equals_straight_run(spark, tmp_path):

@@ -249,6 +249,24 @@ def _log_model(m: HMM):
         return np.log(m.pi), np.log(m.A), np.log(m.B)
 
 
+def _viterbi(log_pi, log_A, log_B, seqs):
+    """kernel.viterbi_batch over every symbol bucket of ``seqs``."""
+    from baum_welch_spark.hmm.kernel import _padded_buckets, symbol_emit, viterbi_paths
+
+    buckets = _padded_buckets(seqs, log_B.shape[1])
+    return viterbi_paths(log_pi, log_A, symbol_emit(log_B), buckets, len(seqs))
+
+
+def _logliks(m: HMM, seqs):
+    """kernel.loglik_batch over every symbol bucket of ``seqs``, summed."""
+    from baum_welch_spark.hmm.kernel import _padded_buckets, loglik_batch, symbol_emit
+
+    out = np.empty(len(seqs))
+    for idxs, obs_pad, lens in _padded_buckets(seqs, m.n_observed):
+        out[idxs] = loglik_batch(m.pi, m.A, symbol_emit(m.B), obs_pad, lens).sum(axis=0)
+    return out
+
+
 @pytest.mark.parametrize(
     "model", [MODEL_ZEROS, HMM.random(4, 5, seed=42)], ids=["structural-zeros", "random"]
 )
@@ -257,13 +275,12 @@ def test_batch_decode_kernels_match_per_sequence(model):
     path dtype and scores), and loglik_batch agrees with forward_backward's
     loglik to 1e-12 relative, over one length-skewed batch."""
     from baum_welch_spark.hmm.decode import _viterbi_one
-    from baum_welch_spark.hmm.kernel import loglik_batch, viterbi_batch
 
     rng = np.random.default_rng(41)
     seqs = [rng.integers(0, model.n_observed, size=t) for t in SKEW_LENS]
     lp, lA, lB = _log_model(model)
-    paths, scores = viterbi_batch(lp, lA, lB, seqs)
-    lls = loglik_batch(model.pi, model.A, model.B, seqs)
+    paths, scores = _viterbi(lp, lA, lB, seqs)
+    lls = _logliks(model, seqs)
     assert len(paths) == len(scores) == len(lls) == len(seqs)
     for obs, path, score, ll in zip(seqs, paths, scores, lls):
         ref_path, ref_score = _viterbi_one(lp, lA, lB, obs)
@@ -281,9 +298,9 @@ def test_viterbi_batch_seq_chunk_cap_is_bitwise_invisible(monkeypatch):
     rng = np.random.default_rng(43)
     seqs = [rng.integers(0, 3, size=t) for t in SKEW_LENS]
     lp, lA, lB = _log_model(MODEL_ZEROS)
-    full_paths, full_scores = kernel.viterbi_batch(lp, lA, lB, seqs)
+    full_paths, full_scores = _viterbi(lp, lA, lB, seqs)
     monkeypatch.setattr(kernel, "_VITERBI_CAND_BUDGET", 1)
-    paths, scores = kernel.viterbi_batch(lp, lA, lB, seqs)
+    paths, scores = _viterbi(lp, lA, lB, seqs)
     assert np.array_equal(scores, full_scores)
     assert all(np.array_equal(a, b) for a, b in zip(paths, full_paths))
 
@@ -292,8 +309,6 @@ def test_batch_decode_kernels_zero_probability_sequence():
     """[1, 0, 1] under pi = [1, 0], B[0] = [1, 0] has probability 0: it
     scores -inf in both kernels (forward_backward gives NaN), and its
     batch-mates score bit-for-bit what they score without it."""
-    from baum_welch_spark.hmm.kernel import loglik_batch, viterbi_batch
-
     m = HMM(
         pi=np.array([1.0, 0.0]),
         A=np.full((2, 2), 0.5),
@@ -303,22 +318,20 @@ def test_batch_decode_kernels_zero_probability_sequence():
     good = [np.array([0, 0, 1]), np.array([0, 1, 0]), np.array([0, 1, 1])]
     mixed = [good[0], np.array([1, 0, 1]), good[1], good[2]]
     with np.errstate(invalid="raise", divide="raise"):
-        lls = loglik_batch(m.pi, m.A, m.B, mixed)
-        _, scores = viterbi_batch(lp, lA, lB, mixed)
+        lls = _logliks(m, mixed)
+        _, scores = _viterbi(lp, lA, lB, mixed)
     assert lls[1] == -np.inf and scores[1] == -np.inf
     keep = [0, 2, 3]
-    assert np.array_equal(lls[keep], loglik_batch(m.pi, m.A, m.B, good))
-    assert np.array_equal(scores[keep], viterbi_batch(lp, lA, lB, good)[1])
+    assert np.array_equal(lls[keep], _logliks(m, good))
+    assert np.array_equal(scores[keep], _viterbi(lp, lA, lB, good)[1])
     assert np.all(np.isfinite(lls[keep]))
 
 
 @pytest.mark.parametrize("bad", [-1, 5])
 def test_batch_decode_kernels_reject_out_of_range_symbols(bad):
-    from baum_welch_spark.hmm.kernel import loglik_batch, viterbi_batch
-
     m = HMM.random(3, 5, seed=5)
     seqs = [np.array([0, 1, 2]), np.array([0, bad, 0])]
     with pytest.raises(ValueError, match=rf"symbol {bad} .*M=5"):
-        loglik_batch(m.pi, m.A, m.B, seqs)
+        _logliks(m, seqs)
     with pytest.raises(ValueError, match=rf"symbol {bad} .*M=5"):
-        viterbi_batch(*_log_model(m), seqs)
+        _viterbi(*_log_model(m), seqs)

@@ -127,21 +127,24 @@ def test_ffbs_kernel_clips_unit_uniform():
     """Counter uniforms CAN be exactly 1.0 (a hash in the top 2^7 of 2^60
     rounds up in the int->double conversion); the t = T-1 draw must clip to
     N-1 instead of indexing out of range, and the backward draws' strict-
-    less count already tops out at N-1."""
+    less count already tops out at N-1. One padded bucket of lengths 4 and
+    5, drawn by the batched kernel."""
     import numpy as np
 
-    from baum_welch_spark.hmm.sample import _ffbs_one
+    from baum_welch_spark.hmm.kernel import _padded_buckets, forward_backward_batch, symbol_emit
+    from baum_welch_spark.hmm.sample import _ffbs_batch
 
     pi = np.array([0.5, 0.5])
     A = np.array([[0.9, 0.1], [0.1, 0.9]])
     B = np.array([[0.7, 0.3], [0.2, 0.8]])
-    obs = np.array([0, 1, 0, 1])
-    u = np.ones((3, 4))  # every draw at the extreme
-    draws = _ffbs_one(pi, A, B, obs, u)
-    assert draws.shape == (3, 4)
+    [(_, obs_pad, lens)] = _padded_buckets([np.array([0, 1, 0, 1]), np.array([1, 1, 0, 0, 1])], 2)
+    alpha, _, _ = forward_backward_batch(pi, A, symbol_emit(B), obs_pad, lens)
+    u = np.ones((5, 2, 3))  # every draw at the extreme
+    draws = _ffbs_batch(A, alpha, lens, u)
+    assert draws.shape == (5, 2, 3)
     assert ((draws >= 0) & (draws <= 1)).all()
     # u = 0 hits the other edge (first bucket everywhere)
-    draws0 = _ffbs_one(pi, A, B, obs, np.zeros((2, 4)))
+    draws0 = _ffbs_batch(A, alpha, lens, np.zeros((5, 2, 3)))
     assert ((draws0 >= 0) & (draws0 <= 1)).all()
 
 
