@@ -38,12 +38,13 @@ from pyspark.sql import functions as F
 
 from baum_welch_spark.hmm.kernel import (
     _padded_buckets,
-    forward_backward_batch,
+    backward_batch,
+    forward_batch,
     loglik_batch,
     symbol_emit,
     viterbi_paths,
 )
-from baum_welch_spark.hmm.model import HMM
+from baum_welch_spark.hmm.model import HMM, KIND_INITIAL, KIND_TRANSITION
 
 DECODE_SCHEMA = "seq_id bigint, loglik double, path array<int>"
 SCORE_SCHEMA = "seq_id bigint, t_len int, loglik double, avg_loglik double"
@@ -122,16 +123,27 @@ def viterbi_decode_face(spark: SparkSession, sequences: DataFrame, model: HMM) -
 
 
 def _posterior_buckets(pi, A, B, obs_list):
-    """Yield ``(idxs, lens, alpha, beta, scale, ok)`` per range-checked
-    bucket of the non-empty ``obs_list`` (one
-    ``kernel.forward_backward_batch`` each). ``ok[s]`` is False for a
-    sequence with probability 0, whose NaN alpha has no posterior: callers
-    emit NULL for it, never its argmax (state 0)."""
+    """Yield ``(idxs, obs_pad, lens, alpha, scale, ok)`` per range-checked
+    bucket of the non-empty ``obs_list`` (one ``kernel.forward_batch``
+    each). ``ok[s]`` is False for a sequence with probability 0, whose NaN
+    alpha has no posterior: callers emit NULL for it, never its argmax
+    (state 0)."""
     emit = symbol_emit(B)
     for idxs, obs_pad, lens in _padded_buckets(obs_list, B.shape[1]):
         with np.errstate(divide="ignore", invalid="ignore"):
-            alpha, beta, scale = forward_backward_batch(pi, A, emit, obs_pad, lens)
-        yield idxs, lens, alpha, beta, scale, (scale > 0).all(axis=0)
+            alpha, scale = forward_batch(pi, A, emit, obs_pad, lens)
+        yield idxs, obs_pad, lens, alpha, scale, (scale > 0).all(axis=0)
+
+
+def _gamma_buckets(pi, A, B, obs_list):
+    """Yield ``(idxs, lens, gamma, ok)`` per bucket of
+    :func:`_posterior_buckets`, with the unnormalized posteriors
+    gamma = alpha * beta (``kernel.backward_batch``)."""
+    emit = symbol_emit(B)
+    for idxs, obs_pad, lens, alpha, scale, ok in _posterior_buckets(pi, A, B, obs_list):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            beta = backward_batch(A, emit, obs_pad, lens, scale)
+        yield idxs, lens, alpha * beta, ok
 
 
 def posterior_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> DataFrame:
@@ -146,7 +158,7 @@ def posterior_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> D
 
     Output: (seq_id, path_str) with path_str the comma-joined argmax states;
     NULL for a sequence with probability 0 under the model, which has no
-    posterior (:func:`_posterior_buckets`). A symbol outside ``0..M-1``
+    posterior (:func:`_gamma_buckets`). A symbol outside ``0..M-1``
     raises ``ValueError``.
     """
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
@@ -156,8 +168,8 @@ def posterior_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> D
         for pdf in batches:
             ids, obs_list = _nonempty(pdf)
             paths = [None] * len(ids)
-            for idxs, lens, alpha, beta, _, ok in _posterior_buckets(pi, A, B, obs_list):
-                states = np.ascontiguousarray((alpha * beta).argmax(axis=2).T)
+            for idxs, lens, gamma, ok in _gamma_buckets(pi, A, B, obs_list):
+                states = np.ascontiguousarray(gamma.argmax(axis=2).T)
                 for col, i in enumerate(idxs):
                     if ok[col]:
                         paths[i] = ",".join(map(str, states[col, : lens[col]].tolist()))
@@ -223,62 +235,203 @@ def _symbol_emis(table: np.ndarray):
     return lambda j: f"({_blist(table[j - 1])})[c.sym + 1]"
 
 
-def _alpha_terms(pi: np.ndarray, A: np.ndarray, emis) -> tuple[str, ...]:
-    """(base_u, step_u, usum, nusum, norm, nnorm): the column lists of the
-    scaled forward recursion's base and recursive members, with the model
-    embedded as full-precision literals and ``emis(j)`` the emission term
-    of state j (:func:`_symbol_emis`, or the Gaussian density)."""
-    j1 = range(1, pi.shape[0] + 1)
-    base_u = ",\n         ".join(f"{_lit(pi[j - 1])} * {emis(j)} AS u{j}" for j in j1)
+def _literal(pi: np.ndarray, A: np.ndarray):
+    """``(pi(j), a(i, j))``: the term builders of a lap whose model is
+    embedded as full-precision literals (states 1-based)."""
+    return (lambda j: _lit(pi[j - 1])), (lambda i, j: _lit(A[i - 1][j - 1]))
+
+
+#: the term builders of a chained lap: pi and A read from the one-row
+#: model pivot joined as ``m`` (:func:`_pivot_cte`)
+_PIVOT_TERMS = ((lambda j: f"m.pi{j}"), (lambda i, j: f"m.a{i}_{j}"))
+
+
+def _coded_ctes(coded: str) -> str:
+    """WITH-prefix of the forward-backward oracles: the ``coded`` events
+    query and the per-sequence ``lens``. Ends with a comma."""
+    return f"""
+WITH coded AS MATERIALIZED ({coded}),
+lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
+"""
+
+
+def _lap_ctes(
+    n: int, pi, a, emis, k="", coded: str = "coded", mw: str = "",
+    ll: bool = False, backward: bool = True,
+) -> str:
+    """The scaled forward recursion (kernel.forward_batch, reference M2) as
+    the recursive CTE ``alpha{k}`` and, if ``backward``, the scaled
+    backward recursion (kernel.backward_batch, M3) as ``beta{k}``, over the
+    ``coded`` rows of an n-state model. The model enters as SQL term
+    builders: ``pi(j)``, ``a(i, j)`` and ``emis(j)``, the emission term of
+    state j at the coded row ``c`` (:func:`_symbol_emis`, or the Gaussian
+    density) — literals (:func:`_literal`) or the columns of the one-row
+    model ``mw`` CROSS JOINed as ``m`` (:data:`_PIVOT_TERMS`).
+
+    Per step alpha carries the unnormalized alphas u_j, their sum s and the
+    normalized alphas p_j as plain columns (lateral aliases); ``ll`` adds
+    the running log-likelihood ll += ln(s), only for the consumers that read
+    it: DuckDB raises on ln(0), so a zero-mass sequence would turn a
+    γ-based oracle into an error. Ends at the last CTE's closing
+    parenthesis."""
+    j1 = range(1, n + 1)
+    cj = f" CROSS JOIN {mw} m" if mw else ""
+    base_u = ",\n         ".join(f"{pi(j)} * {emis(j)} AS u{j}" for j in j1)
     # recursive member: FRESH alias names (nu/ns/...) — unqualified u1/s/ll
     # would bind to the working table's same-named columns, not the lateral
     # aliases, silently freezing the recursion. Output names are positional.
     step_u = ",\n         ".join(
-        "("
-        + " + ".join(f"a.p{i} * {_lit(A[i - 1][j - 1])}" for i in j1)
-        + f") * {emis(j)} AS nu{j}"
+        "(" + " + ".join(f"a.p{i} * {a(i, j)}" for i in j1) + f") * {emis(j)} AS nu{j}"
         for j in j1
     )
-    return (
-        base_u,
-        step_u,
-        " + ".join(f"u{j}" for j in j1),
-        " + ".join(f"nu{j}" for j in j1),
-        ", ".join(f"u{j} / s AS p{j}" for j in j1),
-        ", ".join(f"nu{j} / ns AS np{j}" for j in j1),
-    )
-
-
-def _forward_ctes(pi: np.ndarray, A: np.ndarray, emis, coded: str) -> str:
-    """WITH-prefix of the scaled forward recursion (kernel.loglik_batch,
-    reference M2) as recursive CTEs over the ``coded`` events query:
-    coded, lens and ``alpha``, which carries per step the unnormalized
-    alphas u_j, their sum s, the running log-likelihood ll += ln(s) and the
-    normalized alphas p_j as plain columns (lateral aliases). Ends at
-    alpha's closing parenthesis."""
-    base_u, step_u, usum, nusum, norm, nnorm = _alpha_terms(pi, A, emis)
+    usum = " + ".join(f"u{j}" for j in j1)
+    nusum = " + ".join(f"nu{j}" for j in j1)
+    norm = ", ".join(f"u{j} / s AS p{j}" for j in j1)
+    nnorm = ", ".join(f"nu{j} / ns AS np{j}" for j in j1)
+    lls, nlls = ("ln(s) AS ll, ", "a.ll + ln(ns) AS nll, ") if ll else ("", "")
     # MATERIALIZED on every CTE a recursion references: DuckDB (1.0)
     # otherwise INLINES the referenced CTE into each recursive iteration —
-    # coded's window functions would re-run per step, and in the two-CTE
-    # oracles below a whole upstream RECURSION re-runs per step of the
-    # downstream one (quadratic; state_occupancy took 25+ min at sf0.01
-    # before this). The inner WITH RECURSIVE inside a materialized CTE
-    # evaluates once; values are bit-identical either way.
-    return f"""
-WITH coded AS MATERIALIZED ({coded}),
-lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
-alpha AS MATERIALIZED (
-  WITH RECURSIVE alpha_r AS (
+    # coded's window functions would re-run per step, and alpha (a whole
+    # recursion) would re-run per step of beta's (quadratic; state_occupancy
+    # took 25+ min at sf0.01 before this). The inner WITH RECURSIVE inside a
+    # materialized CTE evaluates once; values are bit-identical either way.
+    sql = f"""alpha{k} AS MATERIALIZED (
+  WITH RECURSIVE alpha{k}_r AS (
     SELECT c.user_id, 0 AS t,
            {base_u},
-           ({usum}) AS s, ln(s) AS ll, {norm}
-    FROM coded c WHERE c.t = 0
+           ({usum}) AS s, {lls}{norm}
+    FROM {coded} c{cj} WHERE c.t = 0
     UNION ALL
     SELECT a.user_id, a.t + 1,
            {step_u},
-           ({nusum}) AS ns, a.ll + ln(ns) AS nll, {nnorm}
-    FROM alpha_r a JOIN coded c ON c.user_id = a.user_id AND c.t = a.t + 1
-  ) SELECT * FROM alpha_r
+           ({nusum}) AS ns, {nlls}{nnorm}
+    FROM alpha{k}_r a JOIN {coded} c ON c.user_id = a.user_id AND c.t = a.t + 1{cj}
+  ) SELECT * FROM alpha{k}_r
+)"""
+    if not backward:
+        return sql
+    base_b = ", ".join(f"{_lit(1.0)} AS b{j}" for j in j1)
+    step_b = ",\n         ".join(
+        "(" + " + ".join(f"{a(i, j)} * {emis(j)} * b.b{j}" for j in j1) + f") / a.s AS nb{i}"
+        for i in j1
+    )
+    return sql + f""",
+beta{k} AS MATERIALIZED (
+  WITH RECURSIVE beta{k}_r AS (
+    SELECT l.user_id, l.t_len - 1 AS t, {base_b}
+    FROM lens l
+    UNION ALL
+    SELECT b.user_id, b.t - 1,
+           {step_b}
+    FROM beta{k}_r b
+    JOIN {coded} c ON c.user_id = b.user_id AND c.t = b.t
+    JOIN alpha{k} a ON a.user_id = b.user_id AND a.t = b.t{cj}
+    WHERE b.t > 0
+  ) SELECT * FROM beta{k}_r
+)"""
+
+
+def _fb_ctes(model: HMM, **lap) -> str:
+    """WITH-prefix of the discrete single-lap oracles: :func:`_lap_ctes`
+    (keyword options ``lap``) under ``model`` as literals, over the coded
+    events. Ends at the last CTE's closing parenthesis."""
+    return _coded_ctes(_CODED_SQL) + _lap_ctes(
+        model.pi.shape[0], *_literal(model.pi, model.A), _symbol_emis(model.B), **lap
+    )
+
+
+def _count_branch(cols: str, agg: str, src: str, group_expr=None, keys=()) -> str:
+    """One UNION ALL branch of a lap's raw counts: ``cols`` and ``agg`` AS
+    weight over ``src`` (aliased ``g``), grouped by the optional
+    per-sequence ``group_expr`` (``{u}`` is the sequence id) and ``keys``.
+    HAVING > 0 on every branch: the Spark faces drop exactly-zero count
+    cells (sparse-output contract), so the oracle must too — a branch with
+    no GROUP BY would otherwise always emit a row."""
+    grp = "" if group_expr is None else group_expr.format(u="g.user_id") + " AS grp, "
+    by = ", ".join((["1"] if group_expr is not None else []) + list(keys))
+    gby = f"GROUP BY {by} " if by else ""
+    return f"  SELECT {grp}{cols}, {agg} AS weight FROM {src} {gby}HAVING {agg} > 0"
+
+
+def _gamma_xi_ctes(
+    n: int, a, emis, k="", coded: str = "coded", mw: str = "",
+    group_expr=None, extra=(),
+) -> str:
+    """Lap k's E-step over alpha{k}/beta{k} (:func:`_lap_ctes`, same term
+    builders): ``g{k}``, γ = p_j·b_j (the kernel's convention — not per-step
+    renormalized, it already sums to 1); ``xi{k}``, ξ_t(i,j) = p_i(t)·a(i,j)
+    ·emis_j(t+1)·b_j(t+1)/s(t+1) (kernel.py module doc); and ``raw{k}``, the
+    initial (γ at t = 0) and transition (Σ_t ξ) count branches
+    (:func:`_count_branch`) followed by the family's ``extra`` branches."""
+    j1 = range(1, n + 1)
+    gcols = ",\n         ".join(f"al.p{j} * bt.b{j} AS g{j}" for j in j1)
+    xcols = ",\n         ".join(
+        f"al.p{i} * {a(i, j)} * {emis(j)} * bt.b{j} / a2.s AS x{i}_{j}"
+        for i in j1
+        for j in j1
+    )
+    branches = [
+        _count_branch(f"'{KIND_INITIAL}' AS kind, 0 AS i, {j - 1} AS j", f"sum(g.g{j})",
+                      f"g{k} g WHERE g.t = 0", group_expr)
+        for j in j1
+    ] + [
+        _count_branch(f"'{KIND_TRANSITION}', {i - 1}, {j - 1}", f"sum(g.x{i}_{j})",
+                      f"xi{k} g", group_expr)
+        for i in j1
+        for j in j1
+    ]
+    raw = "\n  UNION ALL\n".join(branches + list(extra))
+    cj = f" CROSS JOIN {mw} m" if mw else ""
+    return f"""g{k} AS MATERIALIZED (
+  SELECT al.user_id, al.t,
+         {gcols}
+  FROM alpha{k} al JOIN beta{k} bt ON bt.user_id = al.user_id AND bt.t = al.t
+),
+xi{k} AS MATERIALIZED (
+  SELECT al.user_id, al.t,
+         {xcols}
+  FROM alpha{k} al
+  JOIN alpha{k} a2 ON a2.user_id = al.user_id AND a2.t = al.t + 1
+  JOIN {coded} c ON c.user_id = al.user_id AND c.t = al.t + 1
+  JOIN beta{k} bt ON bt.user_id = al.user_id AND bt.t = al.t + 1{cj}
+),
+raw{k} AS (
+{raw}
+)"""
+
+
+def _normalized(k, col: str, group_expr=None) -> str:
+    """The M-step normalize of ``raw{k}``: the same count/Σcount window over
+    ([group,] kind, i) as the Spark side (fit.normalize_counts), rounded to
+    6 dp into column ``col``."""
+    out, win = ('grp AS "group", ', "grp, ") if group_expr is not None else ("", "")
+    return (
+        f"SELECT {out}kind, i::INTEGER AS i, j::INTEGER AS j,\n"
+        f"       round(weight / sum(weight) OVER (PARTITION BY {win}kind, i), 6) AS {col}\n"
+        f"FROM raw{k}"
+    )
+
+
+def _pick(col: str, kind: str, **at: int) -> str:
+    """The ``col`` value of a lap output's (kind, i, j) cell as a pivot
+    aggregate, 0 when the sparse output has no such row."""
+    cond = " AND ".join([f"kind = '{kind}'"] + [f"{c} = {v}" for c, v in at.items()])
+    return f"coalesce(max(CASE WHEN {cond} THEN {col} END), 0.0)"
+
+
+def _pivot_cte(n: int, p, col: str, extra=()) -> str:
+    """``mw{p}``: lap p's rounded output ``m{p}`` (value column ``col``)
+    pivoted into the one-row model of lap p+1 — columns pi{j} and a{i}_{j},
+    read by :data:`_PIVOT_TERMS`, then the family's ``extra`` columns."""
+    j1 = range(1, n + 1)
+    cols = [f"{_pick(col, KIND_INITIAL, j=j - 1)} AS pi{j}" for j in j1] + [
+        f"{_pick(col, KIND_TRANSITION, i=i - 1, j=j - 1)} AS a{i}_{j}" for i in j1 for j in j1
+    ]
+    body = ",\n    ".join(cols + list(extra))
+    return f"""mw{p} AS MATERIALIZED (
+  SELECT
+    {body}
+  FROM m{p}
 )"""
 
 
@@ -292,10 +445,10 @@ FROM alpha a JOIN lens l ON l.user_id = a.user_id AND a.t = l.t_len - 1
 
 def score_oracle_sql(model: HMM) -> str:
     """ANSI-SQL (DuckDB) oracle for score_sequences_face: the scaled forward
-    recursion (:func:`_forward_ctes`) read at each sequence's last step.
+    recursion (:func:`_lap_ctes`) read at each sequence's last step.
     Values agree with the NumPy kernel to ~1e-12; both sides round to 6
     decimals."""
-    return _forward_ctes(model.pi, model.A, _symbol_emis(model.B), _CODED_SQL) + _SCORE_SELECT_SQL
+    return _fb_ctes(model, ll=True, backward=False) + _SCORE_SELECT_SQL
 
 
 def _argmax_case(cand: list[str]) -> str:
@@ -310,10 +463,9 @@ def _argmax_case(cand: list[str]) -> str:
 
 
 def posterior_oracle_sql(model: HMM) -> str:
-    """ANSI-SQL (DuckDB) oracle for posterior_decode: the scaled forward
-    recursion (normalized alphas, as in score_oracle_sql) plus the scaled
-    backward recursion as a second recursive CTE running t_len-1 -> 0, then
-    per-step argmax of gamma_j = p_j * b_j.
+    """ANSI-SQL (DuckDB) oracle for posterior_decode: the scaled forward and
+    backward recursions (:func:`_lap_ctes`, the backward one running
+    t_len-1 -> 0), then per-step argmax of gamma_j = p_j * b_j.
 
     The two engines accumulate the recursions in different float-summation
     orders (agreeing to ~1e-12); argmax is stable because distinct gammas
@@ -322,7 +474,8 @@ def posterior_oracle_sql(model: HMM) -> str:
     N = model.pi.shape[0]
     j1 = range(1, N + 1)
     gamma_argmax = _argmax_case([f"al.p{j} * bt.b{j}" for j in j1])
-    return _fb_ctes(model) + f"""
+    return _fb_ctes(model) + f""",
+
 g AS (
   SELECT al.user_id, al.t, ({gamma_argmax}) AS state
   FROM alpha al JOIN beta bt ON bt.user_id = al.user_id AND bt.t = al.t
@@ -330,61 +483,6 @@ g AS (
 SELECT user_id AS seq_id,
        string_agg(state::VARCHAR, ',' ORDER BY t) AS path_str
 FROM g GROUP BY user_id
-"""
-
-
-def _fb_ctes(model: HMM) -> str:
-    """Shared WITH-prefix for the discrete γ-based oracles
-    (:func:`_fb_sql`)."""
-    return _fb_sql(model.pi, model.A, _symbol_emis(model.B), _CODED_SQL)
-
-
-def _fb_sql(pi: np.ndarray, A: np.ndarray, emis, coded: str) -> str:
-    """WITH-prefix for γ-based oracles over the ``coded`` events query:
-    coded/lens/alpha/beta CTEs (scaled forward + scaled backward recursions
-    with the model embedded as full-precision literals, ``emis`` as in
-    :func:`_alpha_terms`). Ends with a trailing comma — append the
-    consuming CTE/SELECT."""
-    j1 = range(1, pi.shape[0] + 1)
-    base_u, step_u, usum, nusum, norm, nnorm = _alpha_terms(pi, A, emis)
-    base_b = ", ".join(f"{_lit(1.0)} AS b{j}" for j in j1)
-    step_b = ",\n         ".join(
-        "("
-        + " + ".join(f"{_lit(A[i - 1][j - 1])} * {emis(j)} * b.b{j}" for j in j1)
-        + f") / a.s AS nb{i}"
-        for i in j1
-    )
-    # MATERIALIZED is load-bearing: without it DuckDB inlines alpha (a full
-    # recursion) into EVERY step of beta's recursion — see _forward_ctes
-    return f"""
-WITH coded AS MATERIALIZED ({coded}),
-lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
-alpha AS MATERIALIZED (
-  WITH RECURSIVE alpha_r AS (
-    SELECT c.user_id, 0 AS t,
-           {base_u},
-           ({usum}) AS s, {norm}
-    FROM coded c WHERE c.t = 0
-    UNION ALL
-    SELECT a.user_id, a.t + 1,
-           {step_u},
-           ({nusum}) AS ns, {nnorm}
-    FROM alpha_r a JOIN coded c ON c.user_id = a.user_id AND c.t = a.t + 1
-  ) SELECT * FROM alpha_r
-),
-beta AS MATERIALIZED (
-  WITH RECURSIVE beta_r AS (
-    SELECT l.user_id, l.t_len - 1 AS t, {base_b}
-    FROM lens l
-    UNION ALL
-    SELECT b.user_id, b.t - 1,
-           {step_b}
-    FROM beta_r b
-    JOIN coded c ON c.user_id = b.user_id AND c.t = b.t
-    JOIN alpha a ON a.user_id = b.user_id AND a.t = b.t
-    WHERE b.t > 0
-  ) SELECT * FROM beta_r
-),
 """
 
 
@@ -396,7 +494,7 @@ def state_occupancy(spark: SparkSession, sequences: DataFrame, model: HMM) -> Da
     the decodes: model broadcast, narrow map, no shuffle; output is
     N rows per sequence. A sequence with probability 0 under the model has
     no posterior: its N rows carry a NULL occupancy
-    (:func:`_posterior_buckets`). A symbol outside ``0..M-1`` raises
+    (:func:`_gamma_buckets`). A symbol outside ``0..M-1`` raises
     ``ValueError``.
     """
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
@@ -408,8 +506,7 @@ def state_occupancy(spark: SparkSession, sequences: DataFrame, model: HMM) -> Da
             ids, obs_list = _nonempty(pdf)
             # NaN crosses Arrow as NULL: the impossible sequences' rows
             occ = np.full((len(ids), n), np.nan)
-            for idxs, lens, alpha, beta, _, ok in _posterior_buckets(pi, A, B, obs_list):
-                g = alpha * beta
+            for idxs, lens, g, ok in _gamma_buckets(pi, A, B, obs_list):
                 g = g / g.sum(axis=2, keepdims=True)
                 valid = np.arange(len(g))[:, None] < lens
                 occ[idxs] = np.where(
@@ -447,7 +544,8 @@ def occupancy_oracle_sql(model: HMM) -> str:
     )
     return (
         _fb_ctes(model)
-        + f"""
+        + f""",
+
 g AS MATERIALIZED (
   SELECT al.user_id, al.t,
          {gcols}
@@ -477,7 +575,7 @@ def viterbi_ctes(model: HMM) -> str:
 def _viterbi_sql(lpi: np.ndarray, lA: np.ndarray, emis, coded: str) -> str:
     """:func:`viterbi_ctes` over the ``coded`` events query, with
     ``emis(j)`` the log-emission term of state j (as in
-    :func:`_alpha_terms`)."""
+    :func:`_lap_ctes`)."""
     j1 = range(1, lpi.shape[0] + 1)
     base_d = ",\n         ".join(f"{_lit(lpi[j - 1])} + {emis(j)} AS d{j}" for j in j1)
     step_d = ",\n         ".join(
@@ -499,7 +597,7 @@ def _viterbi_sql(lpi: np.ndarray, lA: np.ndarray, emis, coded: str) -> str:
     back_argmax = _argmax_case(back_cand)
     dmax = ", ".join(f"d.d{j}" for j in j1)
     # MATERIALIZED is load-bearing: without it DuckDB inlines delta (a full
-    # recursion) into EVERY step of back's recursion — see _forward_ctes
+    # recursion) into EVERY step of back's recursion — see _lap_ctes
     return f"""coded AS MATERIALIZED ({coded}),
 lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
 delta AS MATERIALIZED (

@@ -25,6 +25,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from baum_welch_spark.hmm.decode import (
+    _CODED_SQL,
+    _PIVOT_TERMS,
+    _coded_ctes,
+    _count_branch,
+    _gamma_xi_ctes,
+    _lap_ctes,
+    _literal,
+    _normalized,
+    _pivot_cte,
+    _symbol_emis,
+)
 from baum_welch_spark.hmm.em import (
     COUNTS_SCHEMA,
     GROUPED_COUNTS_SCHEMA,
@@ -400,91 +412,64 @@ def em_reestimate(
 
 
 def em_reestimate_oracle_sql(model: HMM, group_expr: str | None = None) -> str:
-    """ANSI-SQL (DuckDB) oracle for em_reestimate: the shared scaled
-    forward/backward CTEs (decode._fb_ctes), γ as alpha_hat * beta_hat
-    (the kernel's own convention — NOT per-step renormalized, it already
-    sums to 1), ξ_t(i,j) = p_i(t) · A_ij · B_j(o_{t+1}) · b_j(t+1) / s(t+1)
-    (kernel.py module doc), summed by plain GROUP BYs and normalized with
-    the same count/Σcount window as the Spark side. The two engines sum γ/ξ
-    in different float orders (~1e-12 agreement); both round to 6 dp.
+    """ANSI-SQL (DuckDB) oracle for em_reestimate: one literal-model lap of
+    :func:`_em_laps` — γ/ξ from the scaled forward/backward recursive CTEs,
+    summed by plain GROUP BYs and normalized with the same count/Σcount
+    window as the Spark side. The two engines sum γ/ξ in different float
+    orders (~1e-12 agreement); both round to 6 dp.
 
     ``group_expr``: optional SQL expression with a ``{u}`` placeholder for
     the sequence id — when given, the oracle becomes the grouped twin
     (em_reestimate_grouped): every branch additionally groups by it and
     the normalize window partitions by (group, kind, i)."""
-    from baum_welch_spark.hmm.decode import _blist, _fb_ctes, _lit
-    from baum_welch_spark.hmm.model import (
-        KIND_EMISSION,
-        KIND_INITIAL,
-        KIND_TRANSITION,
-    )
+    group = '"group", ' if group_expr is not None else ""
+    return _em_laps(model, 1, group_expr) + f"\nSELECT {group}kind, i, j, prob FROM m1\n"
 
-    N = model.pi.shape[0]
-    A, B = model.A, model.B
-    j1 = range(1, N + 1)
-    gcols = ",\n         ".join(f"al.p{j} * bt.b{j} AS g{j}" for j in j1)
-    xcols = ",\n         ".join(
-        f"al.p{i} * {_lit(A[i - 1][j - 1])} * ({_blist(B[j - 1])})[c.sym + 1]"
-        f" * bt.b{j} / a2.s AS x{i}_{j}"
-        for i in j1
-        for j in j1
-    )
 
-    def grp(alias: str) -> str:
-        # leading select-list / group-by fragments for the grouped variant
-        if group_expr is None:
-            return ""
-        return group_expr.format(u=f"{alias}user_id") + " AS grp, "
-
-    gby1 = "GROUP BY 1 " if group_expr is not None else ""
-    gby1c = "GROUP BY 1, " if group_expr is not None else "GROUP BY "
-    # HAVING > 0 on every branch: the Spark face drops exactly-zero count
-    # cells (sparse-output contract), so the oracle must too — an initial/
-    # transition branch with no WHERE would otherwise always emit a row
-    init_branches = "\n  UNION ALL\n".join(
-        f"  SELECT {grp('')}'{KIND_INITIAL}' AS kind, 0 AS i, {j - 1} AS j, sum(g{j}) AS weight FROM g WHERE t = 0 {gby1}HAVING sum(g{j}) > 0"
-        for j in j1
-    )
-    trans_branches = "\n  UNION ALL\n".join(
-        f"  SELECT {grp('')}'{KIND_TRANSITION}', {i - 1}, {j - 1}, sum(x{i}_{j}) FROM xi {gby1}HAVING sum(x{i}_{j}) > 0"
-        for i in j1
-        for j in j1
-    )
-    emit_branches = "\n  UNION ALL\n".join(
-        f"  SELECT {grp('g.')}'{KIND_EMISSION}', {j - 1}, c.sym, sum(g.g{j})"
-        f" FROM g JOIN coded c ON c.user_id = g.user_id AND c.t = g.t {gby1c}c.sym HAVING sum(g.g{j}) > 0"
-        for j in j1
-    )
-    out_group = 'grp AS "group", ' if group_expr is not None else ""
-    win_group = "grp, " if group_expr is not None else ""
-    return (
-        _fb_ctes(model)
-        + f"""
-g AS MATERIALIZED (
-  SELECT al.user_id, al.t,
-         {gcols}
-  FROM alpha al JOIN beta bt ON bt.user_id = al.user_id AND bt.t = al.t
-),
-xi AS MATERIALIZED (
-  SELECT al.user_id, al.t,
-         {xcols}
-  FROM alpha al
-  JOIN alpha a2 ON a2.user_id = al.user_id AND a2.t = al.t + 1
-  JOIN coded c ON c.user_id = al.user_id AND c.t = al.t + 1
-  JOIN beta bt ON bt.user_id = al.user_id AND bt.t = al.t + 1
-),
-raw AS (
-{init_branches}
-  UNION ALL
-{trans_branches}
-  UNION ALL
-{emit_branches}
-)
-SELECT {out_group}kind, i::INTEGER AS i, j::INTEGER AS j,
-       round(weight / sum(weight) OVER (PARTITION BY {win_group}kind, i), 6) AS prob
-FROM raw
-"""
-    )
+def _em_laps(model: HMM, n_iters: int, group_expr: str | None = None) -> str:
+    """WITH-prefix of the discrete EM oracles: ``n_iters`` chained laps,
+    lap k being alpha{k}/beta{k} (decode._lap_ctes), g{k}/xi{k}/raw{k}
+    (decode._gamma_xi_ctes, plus the per-symbol emission branches) and
+    ``m{k}``, its re-estimate rounded to 6 dp. Lap 1 embeds ``model`` as
+    full-precision literals; every later lap reads the previous lap's m as
+    the one-row pivot ``mw{k-1}`` (pi, A) and ``bsym{k-1}``, its emission
+    probs pre-joined per (t, state) onto the coded sequence, so the chaining
+    runs entirely inside DuckDB. ``group_expr`` (see
+    :func:`em_reestimate_oracle_sql`) is for a single lap only."""
+    if n_iters < 1:
+        raise ValueError(f"n_iters must be >= 1, got {n_iters}")
+    n = model.pi.shape[0]
+    j1 = range(1, n + 1)
+    pi, a = _literal(model.pi, model.A)
+    emis, coded, mw = _symbol_emis(model.B), "coded", ""
+    ctes = []
+    for k in range(1, n_iters + 1):
+        if k > 1:
+            p = k - 1
+            bjoin = "\n  ".join(
+                f"LEFT JOIN m{p} e{j} ON e{j}.kind = '{KIND_EMISSION}' AND e{j}.i = {j - 1} AND e{j}.j = c.sym"
+                for j in j1
+            )
+            bcols = ", ".join(f"coalesce(e{j}.prob, 0.0) AS b{j}" for j in j1)
+            ctes += [_pivot_cte(n, p, "prob"), f"""bsym{p} AS MATERIALIZED (
+  SELECT c.user_id, c.t, c.sym, {bcols}
+  FROM coded c
+  {bjoin}
+)"""]
+            pi, a = _PIVOT_TERMS
+            emis, coded, mw = (lambda j: f"c.b{j}"), f"bsym{p}", f"mw{p}"
+        emission = [
+            _count_branch(f"'{KIND_EMISSION}', {j - 1}, c.sym", f"sum(g.g{j})",
+                          f"g{k} g JOIN coded c ON c.user_id = g.user_id AND c.t = g.t",
+                          group_expr, ("c.sym",))
+            for j in j1
+        ]
+        ctes += [
+            _lap_ctes(n, pi, a, emis, k, coded, mw),
+            _gamma_xi_ctes(n, a, emis, k, coded, mw, group_expr, emission),
+            f"m{k} AS MATERIALIZED (\n{_normalized(k, 'prob', group_expr)}\n)",
+        ]
+    return _coded_ctes(_CODED_SQL) + ",\n".join(ctes)
 
 
 def em_trace(
@@ -526,187 +511,12 @@ def em_trace(
 
 
 def em_trace_oracle_sql(model: HMM, n_iters: int = 2) -> str:
-    """ANSI-SQL (DuckDB) oracle for :func:`em_trace`: iteration 1 is the
-    :func:`em_reestimate_oracle_sql` body verbatim (model embedded as
-    full-precision literals); every later iteration re-derives alpha/beta/
-    gamma/xi recursions whose model parameters come from the PREVIOUS
-    iteration's rounded output CTE — pi and A pivoted into a one-row
-    ``mw{k}`` CTE (conditional aggregates, absent sparse cells coalesced
-    to 0), emission probs pre-joined per (t, state) onto the coded
-    sequence (``bsym{k}``), so the recursive CTEs reference model values
-    as columns instead of literals. The chaining is therefore computed
-    entirely inside DuckDB, mirroring the engine's modelOut -> modelIn
-    hand-off."""
-    from baum_welch_spark.hmm.decode import _blist, _fb_ctes, _lit
-
-    if n_iters < 1:
-        raise ValueError(f"n_iters must be >= 1, got {n_iters}")
-    N, M = model.pi.shape[0], model.B.shape[1]
-    A, B = model.A, model.B
-    j1 = range(1, N + 1)
-
-    def raw_block(gname: str, xname: str, csym: str) -> str:
-        init = "\n  UNION ALL\n".join(
-            f"  SELECT '{KIND_INITIAL}' AS kind, 0 AS i, {j - 1} AS j, sum(g{j}) AS weight FROM {gname} WHERE t = 0 HAVING sum(g{j}) > 0"
-            for j in j1
-        )
-        trans = "\n  UNION ALL\n".join(
-            f"  SELECT '{KIND_TRANSITION}', {i - 1}, {j - 1}, sum(x{i}_{j}) FROM {xname} HAVING sum(x{i}_{j}) > 0"
-            for i in j1
-            for j in j1
-        )
-        emit = "\n  UNION ALL\n".join(
-            f"  SELECT '{KIND_EMISSION}', {j - 1}, c.sym, sum(g.g{j})"
-            f" FROM {gname} g JOIN {csym} c ON c.user_id = g.user_id AND c.t = g.t GROUP BY c.sym HAVING sum(g.g{j}) > 0"
-            for j in j1
-        )
-        return f"{init}\n  UNION ALL\n{trans}\n  UNION ALL\n{emit}"
-
-    norm_select = (
-        "SELECT kind, i::INTEGER AS i, j::INTEGER AS j,\n"
-        "       round(weight / sum(weight) OVER (PARTITION BY kind, i), 6) AS prob"
-    )
-
-    # ---- iteration 1: literal-model lap (the em_reestimate body) ----------
-    gcols = ",\n         ".join(f"al.p{j} * bt.b{j} AS g{j}" for j in j1)
-    xcols = ",\n         ".join(
-        f"al.p{i} * {_lit(A[i - 1][j - 1])} * ({_blist(B[j - 1])})[c.sym + 1]"
-        f" * bt.b{j} / a2.s AS x{i}_{j}"
-        for i in j1
-        for j in j1
-    )
-    sql = (
-        _fb_ctes(model)
-        + f"""
-g1 AS MATERIALIZED (
-  SELECT al.user_id, al.t,
-         {gcols}
-  FROM alpha al JOIN beta bt ON bt.user_id = al.user_id AND bt.t = al.t
-),
-xi1 AS MATERIALIZED (
-  SELECT al.user_id, al.t,
-         {xcols}
-  FROM alpha al
-  JOIN alpha a2 ON a2.user_id = al.user_id AND a2.t = al.t + 1
-  JOIN coded c ON c.user_id = al.user_id AND c.t = al.t + 1
-  JOIN beta bt ON bt.user_id = al.user_id AND bt.t = al.t + 1
-),
-raw1 AS (
-{raw_block('g1', 'xi1', 'coded')}
-),
-m1 AS MATERIALIZED (
-{norm_select}
-FROM raw1
-),
-"""
-    )
-
-    # ---- iterations 2..n: model columns come from m{k-1} -------------------
-    for k in range(2, n_iters + 1):
-        p = k - 1
-        pivot_pi = ",\n    ".join(
-            f"coalesce(max(CASE WHEN kind = '{KIND_INITIAL}' AND j = {j - 1} THEN prob END), 0.0) AS pi{j}"
-            for j in j1
-        )
-        pivot_a = ",\n    ".join(
-            f"coalesce(max(CASE WHEN kind = '{KIND_TRANSITION}' AND i = {i - 1} AND j = {j - 1} THEN prob END), 0.0) AS a{i}_{j}"
-            for i in j1
-            for j in j1
-        )
-        bjoin = "\n  ".join(
-            f"LEFT JOIN m{p} e{j} ON e{j}.kind = '{KIND_EMISSION}' AND e{j}.i = {j - 1} AND e{j}.j = c.sym"
-            for j in j1
-        )
-        bcols = ", ".join(f"coalesce(e{j}.prob, 0.0) AS b{j}" for j in j1)
-        base_u = ",\n           ".join(f"m.pi{j} * c.b{j} AS u{j}" for j in j1)
-        step_u = ",\n           ".join(
-            "(" + " + ".join(f"a.p{i} * m.a{i}_{j}" for i in j1) + f") * c.b{j} AS nu{j}"
-            for j in j1
-        )
-        usum = " + ".join(f"u{j}" for j in j1)
-        nusum = " + ".join(f"nu{j}" for j in j1)
-        norm = ", ".join(f"u{j} / s AS p{j}" for j in j1)
-        nnorm = ", ".join(f"nu{j} / ns AS np{j}" for j in j1)
-        base_b = ", ".join(f"CAST(1.0 AS DOUBLE) AS b{j}" for j in j1)
-        step_b = ",\n           ".join(
-            "("
-            + " + ".join(f"m.a{i}_{j} * c.b{j} * b.b{j}" for j in j1)
-            + f") / a.s AS nb{i}"
-            for i in j1
-        )
-        gcols_k = ",\n         ".join(f"al.p{j} * bt.b{j} AS g{j}" for j in j1)
-        xcols_k = ",\n         ".join(
-            f"al.p{i} * m.a{i}_{j} * c.b{j} * bt.b{j} / a2.s AS x{i}_{j}"
-            for i in j1
-            for j in j1
-        )
-        sql += f"""
-mw{p} AS MATERIALIZED (
-  SELECT
-    {pivot_pi},
-    {pivot_a}
-  FROM m{p}
-),
-bsym{p} AS MATERIALIZED (
-  SELECT c.user_id, c.t, c.sym, {bcols}
-  FROM coded c
-  {bjoin}
-),
-alpha{k} AS MATERIALIZED (
-  WITH RECURSIVE alpha{k}_r AS (
-    SELECT c.user_id, 0 AS t,
-           {base_u},
-           ({usum}) AS s, {norm}
-    FROM bsym{p} c CROSS JOIN mw{p} m WHERE c.t = 0
-    UNION ALL
-    SELECT a.user_id, a.t + 1,
-           {step_u},
-           ({nusum}) AS ns, {nnorm}
-    FROM alpha{k}_r a
-    JOIN bsym{p} c ON c.user_id = a.user_id AND c.t = a.t + 1
-    CROSS JOIN mw{p} m
-  ) SELECT * FROM alpha{k}_r
-),
-beta{k} AS MATERIALIZED (
-  WITH RECURSIVE beta{k}_r AS (
-    SELECT l.user_id, l.t_len - 1 AS t, {base_b}
-    FROM lens l
-    UNION ALL
-    SELECT b.user_id, b.t - 1,
-           {step_b}
-    FROM beta{k}_r b
-    JOIN bsym{p} c ON c.user_id = b.user_id AND c.t = b.t
-    JOIN alpha{k} a ON a.user_id = b.user_id AND a.t = b.t
-    CROSS JOIN mw{p} m
-    WHERE b.t > 0
-  ) SELECT * FROM beta{k}_r
-),
-g{k} AS MATERIALIZED (
-  SELECT al.user_id, al.t,
-         {gcols_k}
-  FROM alpha{k} al JOIN beta{k} bt ON bt.user_id = al.user_id AND bt.t = al.t
-),
-xi{k} AS MATERIALIZED (
-  SELECT al.user_id, al.t,
-         {xcols_k}
-  FROM alpha{k} al
-  JOIN alpha{k} a2 ON a2.user_id = al.user_id AND a2.t = al.t + 1
-  JOIN bsym{p} c ON c.user_id = al.user_id AND c.t = al.t + 1
-  JOIN beta{k} bt ON bt.user_id = al.user_id AND bt.t = al.t + 1
-  CROSS JOIN mw{p} m
-),
-raw{k} AS (
-{raw_block(f'g{k}', f'xi{k}', 'coded')}
-),
-m{k} AS MATERIALIZED (
-{norm_select}
-FROM raw{k}
-),
-"""
-
-    # ---- final union across iterations -------------------------------------
-    sql = sql.rstrip().rstrip(",")
+    """ANSI-SQL (DuckDB) oracle for :func:`em_trace`: the chained laps of
+    :func:`_em_laps` — lap 1 is the :func:`em_reestimate_oracle_sql` lap,
+    every later lap takes its model from the previous lap's rounded output
+    CTE, mirroring the engine's modelOut -> modelIn hand-off — and every
+    lap's model as ``(iter, kind, i, j, prob)``."""
     union = "\nUNION ALL\n".join(
         f"SELECT {k} AS iter, kind, i, j, prob FROM m{k}" for k in range(1, n_iters + 1)
     )
-    return sql + f"\n{union}\n"
+    return _em_laps(model, n_iters) + f"\n{union}\n"

@@ -46,7 +46,20 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from baum_welch_spark.hmm.decode import _nonempty
+from baum_welch_spark.hmm.decode import (
+    _PIVOT_TERMS,
+    _SCORE_SELECT_SQL,
+    _coded_ctes,
+    _gamma_xi_ctes,
+    _lap_ctes,
+    _lit,
+    _literal,
+    _nonempty,
+    _normalized,
+    _pick,
+    _pivot_cte,
+    _viterbi_sql,
+)
 from baum_welch_spark.hmm.em import (
     COUNTS_SCHEMA,
     FitResult,
@@ -139,20 +152,18 @@ class GaussianHMM:
 
     @staticmethod
     def read(spark: SparkSession, path: str) -> "GaussianHMM":
+        """The tidy parquet of :meth:`write`, decoded by ``em.decode``: a
+        row of unknown kind raises ``ValueError``."""
+        # imported here: viterbi_gauss's local ``decode`` must not resolve to it
+        from baum_welch_spark.hmm.em import decode
+
         rows = spark.read.parquet(path).collect()
         n = max(r.j for r in rows if r.kind == KIND_INITIAL) + 1
-        pi = np.zeros(n)
-        A = np.zeros((n, n))
-        mu = np.zeros(n)
-        s2 = np.zeros(n)
-        for r in rows:
-            if r.kind == KIND_INITIAL:
-                pi[r.j] = r.value
-            elif r.kind == KIND_TRANSITION:
-                A[r.i, r.j] = r.value
-            elif r.kind == KIND_MOMENT:
-                (mu if r.j == 0 else s2)[r.i] = r.value
-        return GaussianHMM(pi=pi, A=A, mu=mu, sigma2=s2).validate()
+        b, _ = decode(
+            rows, {KIND_INITIAL: (n,), KIND_TRANSITION: (n, n), KIND_MOMENT: (n, 2)}, "value"
+        )
+        mu, s2 = b[KIND_MOMENT].T
+        return GaussianHMM(pi=b[KIND_INITIAL], A=b[KIND_TRANSITION], mu=mu, sigma2=s2).validate()
 
     def distance(self, other: "GaussianHMM") -> float:
         return float(
@@ -469,9 +480,9 @@ def score_gauss_face(
     )
 
 
-# SQL oracle machinery: decode.py's forward, forward-backward and Viterbi
-# CTE generators with the Gaussian emission term (_gauss_emis) and coded
-# events query in place of the symbol lookup.
+# SQL oracle machinery: decode.py's lap (forward-backward, γ/ξ, counts,
+# pivot) and Viterbi CTE generators with the Gaussian emission term
+# (_gauss_emis) and coded events query in place of the symbol lookup.
 
 _GCODED_SQL = """
   SELECT user_id,
@@ -484,8 +495,6 @@ _GCODED_SQL = """
 def _logb_expr(model: GaussianHMM, j: int, xref: str) -> str:
     """SQL for log N(x; μ_j, σ²_j) with the exact literal/operation shape
     log_density uses: c1 − (x − μ)·(x − μ)·c2."""
-    from baum_welch_spark.hmm.decode import _lit
-
     c1, c2 = _log_coeffs(model)
     mu = _lit(model.mu[j])
     return f"({_lit(c1[j])} - ({xref} - {mu}) * ({xref} - {mu}) * {_lit(c2[j])})"
@@ -493,7 +502,7 @@ def _logb_expr(model: GaussianHMM, j: int, xref: str) -> str:
 
 def _gauss_emis(model: GaussianHMM):
     """The family's SQL emission term of state j (1-based) at the coded row
-    ``c`` (decode._alpha_terms): the density exp(logb) inline."""
+    ``c`` (decode._lap_ctes): the density exp(logb) inline."""
     return lambda j: f"exp({_logb_expr(model, j - 1, 'c.x')})"
 
 
@@ -502,8 +511,6 @@ def gauss_viterbi_oracle_sql(model: GaussianHMM) -> str:
     recursive CTEs (decode.viterbi_ctes) with the emission lookup replaced
     by the inline Gaussian log-density. Deltas are the same two-operand
     IEEE sums both engines compute; ties resolve first-max."""
-    from baum_welch_spark.hmm.decode import _viterbi_sql
-
     model = model.validate()
     with np.errstate(divide="ignore"):
         lpi, lA = np.log(model.pi), np.log(model.A)
@@ -516,11 +523,12 @@ FROM back WHERE t = 0
 
 def gauss_score_oracle_sql(model: GaussianHMM) -> str:
     """DuckDB oracle for score_gauss_face: the scaled forward recursion
-    (decode._forward_ctes) with densities exp(logb) inline."""
-    from baum_welch_spark.hmm.decode import _SCORE_SELECT_SQL, _forward_ctes
-
+    (decode._lap_ctes) with densities exp(logb) inline."""
     model = model.validate()
-    return _forward_ctes(model.pi, model.A, _gauss_emis(model), _GCODED_SQL) + _SCORE_SELECT_SQL
+    return _coded_ctes(_GCODED_SQL) + _lap_ctes(
+        model.pi.shape[0], *_literal(model.pi, model.A), _gauss_emis(model),
+        ll=True, backward=False,
+    ) + _SCORE_SELECT_SQL
 
 
 def ghmm_reestimate(
@@ -588,75 +596,13 @@ def _ghmm_reestimate_unchecked(
 
 
 def gauss_reestimate_oracle_sql(model: GaussianHMM) -> str:
-    """ANSI-SQL (DuckDB) oracle for ghmm_reestimate: γ = alpha_hat·beta_hat
-    (already sums to 1 per step), ξ_t(i,j) = p_i(t)·A_ij·exp(logb_j(x_{t+1}))
-    ·b_j(t+1)/s(t+1), moments Σγ/Σγx/Σγx² by plain GROUP BYs, then the same
+    """ANSI-SQL (DuckDB) oracle for ghmm_reestimate: one literal-model lap of
+    :func:`_gauss_laps` — γ/ξ from the scaled forward/backward recursive
+    CTEs, moments Σγ/Σγx/Σγx² by plain GROUP BYs, then the same
     count/Σcount window normalize and closed-form mu/var expressions as the
     Spark side. Engines sum in different float orders (~1e-12 agreement);
-    both round to 6 dp. The alpha/beta CTEs are decode._fb_sql's."""
-    from baum_welch_spark.hmm.decode import _fb_sql, _lit
-
-    model = model.validate()
-    N = model.pi.shape[0]
-    A = model.A
-    j1 = range(1, N + 1)
-    gcols = ",\n         ".join(f"al.p{j} * bt.b{j} AS g{j}" for j in j1)
-    xcols = ",\n         ".join(
-        f"al.p{i} * {_lit(A[i - 1][j - 1])} * exp({_logb_expr(model, j - 1, 'c.x')})"
-        f" * bt.b{j} / a2.s AS x{i}_{j}"
-        for i in j1
-        for j in j1
-    )
-    init_branches = "\n  UNION ALL\n".join(
-        f"  SELECT 'initial' AS kind, 0 AS i, {j - 1} AS j, sum(g{j}) AS weight FROM g WHERE t = 0 HAVING sum(g{j}) > 0"
-        for j in j1
-    )
-    trans_branches = "\n  UNION ALL\n".join(
-        f"  SELECT 'transition', {i - 1}, {j - 1}, sum(x{i}_{j}) FROM xi HAVING sum(x{i}_{j}) > 0"
-        for i in j1
-        for j in j1
-    )
-    moment_branches = "\n  UNION ALL\n".join(
-        f"  SELECT {j - 1} AS i, sum(g.g{j}) AS m0, sum(g.g{j} * c.x) AS m1,"
-        f" sum(g.g{j} * c.x * c.x) AS m2"
-        f" FROM g JOIN coded c ON c.user_id = g.user_id AND c.t = g.t"
-        for j in j1
-    )
-    return (
-        _fb_sql(model.pi, A, _gauss_emis(model), _GCODED_SQL)
-        + f"""
-g AS MATERIALIZED (
-  SELECT al.user_id, al.t,
-         {gcols}
-  FROM alpha al JOIN beta bt ON bt.user_id = al.user_id AND bt.t = al.t
-),
-xi AS MATERIALIZED (
-  SELECT al.user_id, al.t,
-         {xcols}
-  FROM alpha al
-  JOIN alpha a2 ON a2.user_id = al.user_id AND a2.t = al.t + 1
-  JOIN coded c ON c.user_id = al.user_id AND c.t = al.t + 1
-  JOIN beta bt ON bt.user_id = al.user_id AND bt.t = al.t + 1
-),
-raw AS (
-{init_branches}
-  UNION ALL
-{trans_branches}
-),
-m AS (
-{moment_branches}
-)
-SELECT kind, i::INTEGER AS i, j::INTEGER AS j,
-       round(weight / sum(weight) OVER (PARTITION BY kind, i), 6) AS val
-FROM raw
-UNION ALL
-SELECT 'mu', i::INTEGER, 0, round(m1 / m0, 6) FROM m
-UNION ALL
-SELECT 'var', i::INTEGER, 0,
-       round(greatest(m2 / m0 - (m1 / m0) * (m1 / m0), {_lit(VAR_FLOOR)}), 6)
-FROM m
-"""
-    )
+    both round to 6 dp."""
+    return _gauss_laps(model, 1) + "\nSELECT kind, i, j, val FROM m1\n"
 
 
 def _tidy_gauss_model(rows, n_hidden: int) -> GaussianHMM:
@@ -740,25 +686,20 @@ def ghmm_loglik_trace(
 
 
 def gauss_trace_oracle_sql(model: GaussianHMM, n_iters: int = 2) -> str:
-    """ANSI-SQL (DuckDB) oracle for :func:`ghmm_em_trace`: lap 1 runs the
-    gauss_reestimate_oracle_sql recursions from full-precision literals;
-    every later lap's pi/A/mu/var come from the previous lap's rounded
-    output CTE pivoted into a one-row ``mw{k}`` CTE, with the log-density
-    coefficients c1_j = -0.5 * ln(2*pi*var_j) and c2_j = 1/(2*var_j)
-    computed as lateral columns in the pivot — the identical two-operand
-    expression shapes _log_coeffs uses, so the only cross-engine delta is
-    the ~1-ulp libm ln/exp class the existing exact faces already carry."""
+    """ANSI-SQL (DuckDB) oracle for :func:`ghmm_em_trace`: the chained laps
+    of :func:`_gauss_laps` and every lap's model as
+    ``(iter, kind, i, j, val)``."""
     union = "\nUNION ALL\n".join(
         f"SELECT {k} AS iter, kind, i, j, val FROM m{k}"
         for k in range(1, n_iters + 1)
     )
-    return _gauss_trace_ctes(model, n_iters) + f"\n{union}\n"
+    return _gauss_laps(model, n_iters) + f"\n{union}\n"
 
 
 def gauss_loglik_trace_oracle_sql(model: GaussianHMM, n_iters: int = 2) -> str:
-    """ANSI-SQL (DuckDB) oracle for :func:`ghmm_loglik_trace`: the shared
-    chained-lap CTE prefix already carries the sequentially-accumulated
-    ``ll`` column (ln(s) at t=0, then a.ll + ln(ns) — the exact
+    """ANSI-SQL (DuckDB) oracle for :func:`ghmm_loglik_trace`: the chained
+    laps of :func:`_gauss_laps` with alpha's sequentially-accumulated ``ll``
+    column (ln(s) at t=0, then a.ll + ln(ns) — the exact
     gauss_score_oracle_sql accumulation order ``kernel.loglik_batch``
     uses), so each lap's per-sequence loglik is one join against lens."""
     union = "\nUNION ALL\n".join(
@@ -766,183 +707,62 @@ def gauss_loglik_trace_oracle_sql(model: GaussianHMM, n_iters: int = 2) -> str:
         f"FROM alpha{k} a JOIN lens l ON l.user_id = a.user_id AND a.t = l.t_len - 1"
         for k in range(1, n_iters + 1)
     )
-    return _gauss_trace_ctes(model, n_iters) + f"\n{union}\n"
+    return _gauss_laps(model, n_iters, ll=True) + f"\n{union}\n"
 
 
-def _gauss_trace_ctes(model: GaussianHMM, n_iters: int = 2) -> str:
-    """Shared WITH-prefix for the chained-lap oracles (gauss_trace_oracle_sql
-    and gauss_loglik_trace_oracle_sql): per lap k, alpha{k}/beta{k}
-    recursions (alpha carrying the sequential ll accumulator), gamma/xi
-    frames, the m{k} rounded re-estimate, and (for k>1) the mw{k-1} pivot
-    feeding lap k's model. Ends WITHOUT a trailing comma — append the
-    consuming final SELECT after a newline."""
-    from baum_welch_spark.hmm.decode import _lit
-
+def _gauss_laps(model: GaussianHMM, n_iters: int, ll: bool = False) -> str:
+    """WITH-prefix of the Gaussian EM oracles: ``n_iters`` chained laps,
+    lap k being alpha{k}/beta{k} (decode._lap_ctes; ``ll`` adds alpha's
+    log-likelihood column), g{k}/xi{k}/raw{k} (decode._gamma_xi_ctes), the
+    moments ``mo{k}`` and ``m{k}``, its re-estimate rounded to 6 dp. Lap 1
+    embeds ``model`` as full-precision literals; every later lap's
+    pi/A/mu/var come from the previous lap's m pivoted into the one-row
+    ``mw{k-1}``, with the log-density coefficients c1_j = -0.5 *
+    ln(2*pi*var_j) and c2_j = 1/(2*var_j) computed as lateral columns in the
+    pivot — the identical two-operand expression shapes _log_coeffs uses,
+    so the only cross-engine delta is the ~1-ulp libm ln/exp class the
+    single-lap faces already carry."""
     if n_iters < 1:
         raise ValueError(f"n_iters must be >= 1, got {n_iters}")
     model = model.validate()
-    N = model.pi.shape[0]
-    j1 = range(1, N + 1)
+    n = model.pi.shape[0]
+    j1 = range(1, n + 1)
     two_pi = _lit(2.0 * np.pi)
-
-    sql = f"""
-WITH coded AS MATERIALIZED ({_GCODED_SQL}),
-lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
-"""
-
+    pi, a = _literal(model.pi, model.A)
+    emis, mw = _gauss_emis(model), ""
+    ctes = []
     for k in range(1, n_iters + 1):
-        p = k - 1
-        if k == 1:
-            # literal-model lap
-            def pi_e(j):
-                return _lit(model.pi[j - 1])
-
-            def a_e(i, j):
-                return _lit(model.A[i - 1][j - 1])
-
-            def emis(j, xref):
-                return f"exp({_logb_expr(model, j - 1, xref)})"
-
-            mjoin = ""
-        else:
-            def pi_e(j):
-                return f"m.pi{j}"
-
-            def a_e(i, j):
-                return f"m.a{i}_{j}"
-
-            def emis(j, xref):
-                return (
-                    f"exp(m.c1_{j} - ({xref} - m.mu{j}) * ({xref} - m.mu{j})"
-                    f" * m.c2_{j})"
-                )
-
-            mjoin = f"\n    CROSS JOIN mw{p} m"
-            pivot_pi = ",\n    ".join(
-                f"coalesce(max(CASE WHEN kind = '{KIND_INITIAL}' AND j = {j - 1} THEN val END), 0.0) AS pi{j}"
-                for j in j1
-            )
-            pivot_a = ",\n    ".join(
-                f"coalesce(max(CASE WHEN kind = '{KIND_TRANSITION}' AND i = {i - 1} AND j = {j - 1} THEN val END), 0.0) AS a{i}_{j}"
-                for i in j1
-                for j in j1
-            )
-            pivot_muvar = ",\n    ".join(
-                f"coalesce(max(CASE WHEN kind = 'mu' AND i = {j - 1} THEN val END), 0.0) AS mu{j},\n"
-                f"    coalesce(max(CASE WHEN kind = 'var' AND i = {j - 1} THEN val END), 0.0) AS var{j},\n"
+        if k > 1:
+            p = k - 1
+            ctes.append(_pivot_cte(n, p, "val", [
+                f"{_pick('val', 'mu', i=j - 1)} AS mu{j},\n"
+                f"    {_pick('val', 'var', i=j - 1)} AS var{j},\n"
                 f"    ({_lit(-0.5)} * ln({two_pi} * var{j})) AS c1_{j},\n"
                 f"    ({_lit(1.0)} / ({_lit(2.0)} * var{j})) AS c2_{j}"
                 for j in j1
-            )
-            sql += f"""
-mw{p} AS MATERIALIZED (
-  SELECT
-    {pivot_pi},
-    {pivot_a},
-    {pivot_muvar}
-  FROM m{p}
-),
-"""
-        base_u = ",\n           ".join(
-            f"{pi_e(j)} * {emis(j, 'c.x')} AS u{j}" for j in j1
-        )
-        step_u = ",\n           ".join(
-            "(" + " + ".join(f"a.p{i} * {a_e(i, j)}" for i in j1) + f") * {emis(j, 'c.x')} AS nu{j}"
-            for j in j1
-        )
-        usum = " + ".join(f"u{j}" for j in j1)
-        nusum = " + ".join(f"nu{j}" for j in j1)
-        norm = ", ".join(f"u{j} / s AS p{j}" for j in j1)
-        nnorm = ", ".join(f"nu{j} / ns AS np{j}" for j in j1)
-        base_b = ", ".join(f"{_lit(1.0)} AS b{j}" for j in j1)
-        step_b = ",\n           ".join(
-            "("
-            + " + ".join(f"{a_e(i, j)} * {emis(j, 'c.x')} * b.b{j}" for j in j1)
-            + f") / a.s AS nb{i}"
-            for i in j1
-        )
-        gcols = ",\n         ".join(f"al.p{j} * bt.b{j} AS g{j}" for j in j1)
-        xcols = ",\n         ".join(
-            f"al.p{i} * {a_e(i, j)} * {emis(j, 'c.x')} * bt.b{j} / a2.s AS x{i}_{j}"
-            for i in j1
-            for j in j1
-        )
-        init = "\n  UNION ALL\n".join(
-            f"  SELECT '{KIND_INITIAL}' AS kind, 0 AS i, {j - 1} AS j, sum(g{j}) AS weight FROM g{k} WHERE t = 0 HAVING sum(g{j}) > 0"
-            for j in j1
-        )
-        trans = "\n  UNION ALL\n".join(
-            f"  SELECT '{KIND_TRANSITION}', {i - 1}, {j - 1}, sum(x{i}_{j}) FROM xi{k} HAVING sum(x{i}_{j}) > 0"
-            for i in j1
-            for j in j1
-        )
+            ]))
+            pi, a = _PIVOT_TERMS
+            emis, mw = (
+                lambda j: f"exp(m.c1_{j} - (c.x - m.mu{j}) * (c.x - m.mu{j}) * m.c2_{j})"
+            ), f"mw{p}"
         moments = "\n  UNION ALL\n".join(
             f"  SELECT {j - 1} AS i, sum(g.g{j}) AS m0, sum(g.g{j} * c.x) AS m1,"
             f" sum(g.g{j} * c.x * c.x) AS m2"
             f" FROM g{k} g JOIN coded c ON c.user_id = g.user_id AND c.t = g.t"
             for j in j1
         )
-        xjoin = f"\n  CROSS JOIN mw{p} m" if k > 1 else ""
-        sql += f"""
-alpha{k} AS MATERIALIZED (
-  WITH RECURSIVE alpha{k}_r AS (
-    SELECT c.user_id, 0 AS t,
-           {base_u},
-           ({usum}) AS s, ln(s) AS ll, {norm}
-    FROM coded c{mjoin} WHERE c.t = 0
-    UNION ALL
-    SELECT a.user_id, a.t + 1,
-           {step_u},
-           ({nusum}) AS ns, a.ll + ln(ns) AS nll, {nnorm}
-    FROM alpha{k}_r a
-    JOIN coded c ON c.user_id = a.user_id AND c.t = a.t + 1{mjoin}
-  ) SELECT * FROM alpha{k}_r
-),
-beta{k} AS MATERIALIZED (
-  WITH RECURSIVE beta{k}_r AS (
-    SELECT l.user_id, l.t_len - 1 AS t, {base_b}
-    FROM lens l
-    UNION ALL
-    SELECT b.user_id, b.t - 1,
-           {step_b}
-    FROM beta{k}_r b
-    JOIN coded c ON c.user_id = b.user_id AND c.t = b.t
-    JOIN alpha{k} a ON a.user_id = b.user_id AND a.t = b.t{mjoin}
-    WHERE b.t > 0
-  ) SELECT * FROM beta{k}_r
-),
-g{k} AS MATERIALIZED (
-  SELECT al.user_id, al.t,
-         {gcols}
-  FROM alpha{k} al JOIN beta{k} bt ON bt.user_id = al.user_id AND bt.t = al.t
-),
-xi{k} AS MATERIALIZED (
-  SELECT al.user_id, al.t,
-         {xcols}
-  FROM alpha{k} al
-  JOIN alpha{k} a2 ON a2.user_id = al.user_id AND a2.t = al.t + 1
-  JOIN coded c ON c.user_id = al.user_id AND c.t = al.t + 1
-  JOIN beta{k} bt ON bt.user_id = al.user_id AND bt.t = al.t + 1{xjoin}
-),
-raw{k} AS (
-{init}
-  UNION ALL
-{trans}
-),
-mo{k} AS (
-{moments}
-),
-m{k} AS MATERIALIZED (
-SELECT kind, i::INTEGER AS i, j::INTEGER AS j,
-       round(weight / sum(weight) OVER (PARTITION BY kind, i), 6) AS val
-FROM raw{k}
+        ctes += [
+            _lap_ctes(n, pi, a, emis, k, mw=mw, ll=ll),
+            _gamma_xi_ctes(n, a, emis, k, mw=mw),
+            f"mo{k} AS (\n{moments}\n)",
+            f"""m{k} AS MATERIALIZED (
+{_normalized(k, "val")}
 UNION ALL
 SELECT 'mu', i::INTEGER, 0, round(m1 / m0, 6) FROM mo{k}
 UNION ALL
 SELECT 'var', i::INTEGER, 0,
        round(greatest(m2 / m0 - (m1 / m0) * (m1 / m0), {_lit(VAR_FLOOR)}), 6)
 FROM mo{k}
-),
-"""
-
-    return sql.rstrip().rstrip(",")
+)""",
+        ]
+    return _coded_ctes(_GCODED_SQL) + ",\n".join(ctes)

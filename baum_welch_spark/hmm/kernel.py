@@ -257,19 +257,19 @@ def _valid(obs_pad: np.ndarray, lens: np.ndarray) -> np.ndarray:
     return np.arange(obs_pad.shape[0])[:, None] < lens[None, :]
 
 
-def forward_backward_batch(
+def forward_batch(
     pi: np.ndarray, A: np.ndarray, emit, obs_pad: np.ndarray, lens: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The recurrences of :func:`forward_backward` across all S sequences
-    of one padded bucket ``obs_pad`` (Tmax, S) with lengths ``lens``, so
-    the Python-level loop runs Tmax times, not sum(T_s) times. ``emit`` is
-    called once per step, so no (Tmax, S, N) emission block is built.
+) -> tuple[np.ndarray, np.ndarray]:
+    """The forward recurrence of :func:`forward_backward` across all S
+    sequences of one padded bucket ``obs_pad`` (Tmax, S) with lengths
+    ``lens``, so the Python-level loop runs Tmax times, not sum(T_s) times.
+    ``emit`` is called once per step, so no (Tmax, S, N) emission block is
+    built.
 
-    Returns padded ``(alpha_hat, beta_hat, scale)``. Past a sequence's end
-    its scale is pinned to 1, alpha is carried unchanged and beta is 1
-    (which also seeds beta[len-1] = 1 exactly); callers mask by validity.
-    A sequence with probability 0 gets a zero scale where its forward mass
-    dies and NaN after it; its batch-mates are untouched."""
+    Returns padded ``(alpha_hat, scale)``. Past a sequence's end its scale
+    is pinned to 1 and alpha is carried unchanged; callers mask by
+    validity. A sequence with probability 0 gets a zero scale where its
+    forward mass dies and NaN after it; its batch-mates are untouched."""
     t_max, s = obs_pad.shape
     n = A.shape[0]
     valid = _valid(obs_pad, lens)
@@ -286,15 +286,35 @@ def forward_backward_batch(
         sc = np.where(v, a.sum(axis=1), 1.0)
         alpha[t] = np.where(v[:, None], a / sc[:, None], alpha[t - 1])
         scale[t] = sc
+    return alpha, scale
 
-    beta = np.empty((t_max, s, n))
+
+def backward_batch(
+    A: np.ndarray, emit, obs_pad: np.ndarray, lens: np.ndarray, scale: np.ndarray
+) -> np.ndarray:
+    """The backward recurrence of :func:`forward_backward` over one padded
+    bucket (arguments as in :func:`forward_batch`, ``scale`` its output).
+    Returns the padded beta_hat: 1 past a sequence's end (which also seeds
+    beta[len-1] = 1 exactly); callers mask by validity."""
+    t_max = obs_pad.shape[0]
+    valid = _valid(obs_pad, lens)
+    beta = np.empty((t_max, obs_pad.shape[1], A.shape[0]))
     beta[t_max - 1] = 1.0
     for t in range(t_max - 2, -1, -1):
         bt = (emit(obs_pad[t + 1]) * beta[t + 1]) @ A.T / scale[t + 1][:, None]
         # invalid t+1 (t >= len-1): beta[t] = 1 — exact for t == len-1,
         # don't-care (masked) beyond
         beta[t] = np.where(valid[t + 1][:, None], bt, 1.0)
-    return alpha, beta, scale
+    return beta
+
+
+def forward_backward_batch(
+    pi: np.ndarray, A: np.ndarray, emit, obs_pad: np.ndarray, lens: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`forward_batch` then :func:`backward_batch`: the padded
+    ``(alpha_hat, beta_hat, scale)`` of one bucket."""
+    alpha, scale = forward_batch(pi, A, emit, obs_pad, lens)
+    return alpha, backward_batch(A, emit, obs_pad, lens, scale), scale
 
 
 def transition_factors(

@@ -14,9 +14,10 @@ Algorithm (standard, e.g. Carter & Kohn 1994 for the linear-Gaussian
 analogue): run the scaled forward pass (alpha_hat rows are the filtered
 marginals P(s_t | o_1..t)), sample s_T ~ alpha_hat[T-1], then backward for
 t = T-2..0 sample s_t ~ alpha_hat[t] * A[:, s_{t+1}] (normalized). Both
-operators here take alpha from ``kernel.forward_backward_batch``
-(``decode._posterior_buckets``); the draws and the entropy recursion
-vectorize across a length bucket's sequences (and FFBS's samples).
+operators here take alpha from the forward half ``kernel.forward_batch``
+(``decode._posterior_buckets``) and run no backward pass; the draws and
+the entropy recursion vectorize across a length bucket's sequences (and
+FFBS's samples).
 
 Determinism: every uniform is the counter-based portable hash
 ``portable_hash60(seed:seq_id:sample_id:t) / 2^60`` (same convention as
@@ -43,7 +44,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from baum_welch_spark.hmm.decode import _nonempty, _posterior_buckets
+from baum_welch_spark.hmm.decode import _fb_ctes, _lit, _nonempty, _posterior_buckets
 from baum_welch_spark.hmm.model import HMM
 
 SAMPLE_SCHEMA = "seq_id bigint, sample_id int, path_str string"
@@ -118,7 +119,7 @@ def posterior_sample(
         for pdf in batches:
             ids, obs_list = _nonempty(pdf)
             paths = [[None] * n_samples for _ in ids]
-            for idxs, lens, alpha, _, _, ok in _posterior_buckets(pi, A, B, obs_list):
+            for idxs, _, lens, alpha, _, ok in _posterior_buckets(pi, A, B, obs_list):
                 u = np.zeros((alpha.shape[0], len(idxs), n_samples))
                 for col, i in enumerate(idxs):
                     u[: lens[col], col] = _u01_block(seed, int(ids[i]), n_samples, int(lens[col])).T
@@ -147,25 +148,20 @@ def ffbs_oracle_sql(model: HMM, n_samples: int = 1, seed: int = 42) -> str:
     (``WHEN u' <= c_k``). Thresholds are products/sums of alpha values that
     agree across engines to ~1e-12 (see module docstring for the accepted
     flip-risk argument)."""
-    from baum_welch_spark.hmm.decode import _fb_ctes, _lit
-
     model = model.validate()
     N = model.pi.shape[0]
     A = model.A
     j1 = range(1, N + 1)
 
-    def u_expr(t_expr: str) -> str:
-        key = f"'{seed}:' || s.user_id || ':' || s.sample_id || ':' || {t_expr}"
-        return f"(('0x' || substr(md5({key}), 1, 15))::BIGINT / {_HASH_SCALE!r})"
-
-    def u_top(t_expr: str) -> str:
-        key = f"'{seed}:' || a.user_id || ':' || k.sample_id || ':' || {t_expr}"
+    def u_expr(seq: str, sample: str) -> str:
+        # the counter uniform of (sequence, sample) at step a.t (_u01_block)
+        key = f"'{seed}:' || {seq}.user_id || ':' || {sample}.sample_id || ':' || a.t"
         return f"(('0x' || substr(md5({key}), 1, 15))::BIGINT / {_HASH_SCALE!r})"
 
     # t = T-1 pick: u' = u * (p1+..+pN); searchsorted-right over the cumsum
     top_total = " + ".join(f"a.p{i}" for i in j1)
     top_branches = " ".join(
-        f"WHEN ({u_top('a.t')} * ({top_total})) < ({' + '.join(f'a.p{m}' for m in range(1, i + 1))}) THEN {i - 1}"
+        f"WHEN ({u_expr('a', 'k')} * ({top_total})) < ({' + '.join(f'a.p{m}' for m in range(1, i + 1))}) THEN {i - 1}"
         for i in range(1, N)
     )
     top_pick = f"CASE {top_branches} ELSE {N - 1} END"
@@ -176,7 +172,7 @@ def ffbs_oracle_sql(model: HMM, n_samples: int = 1, seed: int = 42) -> str:
         w = [f"a.p{i} * {_lit(A[i - 1][j - 1])}" for i in j1]
         total = " + ".join(w)
         branches = " ".join(
-            f"WHEN ({u_expr('a.t')} * ({total})) <= ({' + '.join(w[:i])}) THEN {i - 1}"
+            f"WHEN ({u_expr('s', 's')} * ({total})) <= ({' + '.join(w[:i])}) THEN {i - 1}"
             for i in range(1, N)
         )
         return f"CASE {branches} ELSE {N - 1} END"
@@ -184,7 +180,8 @@ def ffbs_oracle_sql(model: HMM, n_samples: int = 1, seed: int = 42) -> str:
     back = " ".join(f"WHEN s.s = {j - 1} THEN ({back_pick(j)})" for j in j1)
     return (
         _fb_ctes(model)
-        + f"""
+        + f""",
+
 samples AS (SELECT range::INTEGER AS sample_id FROM range(0, {n_samples})),
 samp AS MATERIALIZED (
   WITH RECURSIVE samp_r AS (
@@ -255,7 +252,7 @@ def posterior_entropy(
             tls = np.array([len(o) for o in obs_list], dtype=np.int32)
             # NaN crosses Arrow as NULL: the impossible sequences' entropies
             lls, hs = np.empty(len(ids)), np.empty(len(ids))
-            for idxs, lens, alpha, _, scale, ok in _posterior_buckets(pi, A, B, obs_list):
+            for idxs, _, lens, alpha, scale, ok in _posterior_buckets(pi, A, B, obs_list):
                 with np.errstate(divide="ignore", invalid="ignore"):
                     lls[idxs] = np.where(ok, np.log(scale).sum(axis=0), -np.inf)
                 hs[idxs] = np.where(ok, _entropy_batch(A, alpha, lens), np.nan)
@@ -289,7 +286,7 @@ def posterior_entropy_face(
 
 def entropy_oracle_sql(model: HMM) -> str:
     """ANSI-SQL (DuckDB) oracle for posterior_entropy_face: the scaled
-    forward recursion (decode._forward_ctes) plus the Hernando H_t(j)
+    forward recursion (decode._lap_ctes) plus the Hernando H_t(j)
     entropy recursion as a second recursive CTE.
 
     Mirrors _entropy_batch operation-for-operation: per step the backward
@@ -298,9 +295,7 @@ def entropy_oracle_sql(model: HMM) -> str:
     contribute 0 (the ``np.where(P > 0, log P, 0)`` guard), and sums run
     in the same i/j order — values agree to ~1e-12; both sides round to 6
     decimals. MATERIALIZED on every CTE a recursion references (see
-    _forward_ctes' note)."""
-    from baum_welch_spark.hmm.decode import _CODED_SQL, _forward_ctes, _lit, _symbol_emis
-
+    decode._lap_ctes' note)."""
     model = model.validate()
     N = model.pi.shape[0]
     A = model.A
@@ -344,7 +339,7 @@ def entropy_oracle_sql(model: HMM) -> str:
         f"THEN al.p{j} * (e.h{j} - ln(al.p{j})) ELSE {_lit(0.0)} END"
         for j in j1
     )
-    return _forward_ctes(model.pi, A, _symbol_emis(model.B), _CODED_SQL) + f""",
+    return _fb_ctes(model, ll=True, backward=False) + f""",
 ent AS MATERIALIZED (
   WITH RECURSIVE ent_r AS (
     SELECT c.user_id, 0 AS t, {base_h}

@@ -247,6 +247,13 @@ def test_fit_gaussian_resume_from_parquet_equals_straight_run(spark, tmp_path):
     np.testing.assert_array_equal(resumed.mu, straight.mu)
     np.testing.assert_array_equal(resumed.sigma2, straight.sigma2)
 
+    # a row of unknown kind is a corrupt model, not one to skip
+    spark.createDataFrame(
+        [("bogus", 0, 0, 1.0)], schema="kind string, i int, j int, value double"
+    ).write.mode("append").parquet(str(tmp_path / "gm"))
+    with pytest.raises(ValueError, match="unexpected stripe kind 'bogus'"):
+        GaussianHMM.read(spark, str(tmp_path / "gm"))
+
 
 def test_ghmm_reestimate_matches_numpy_estep(spark):
     """The r10 DuckDB-exact face against the in-memory oracle: one
