@@ -1878,12 +1878,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "hmm_fit_grouped_dist": _q_hmm_fit_grouped_dist,
         "hmm_select": _q_hmm_select,
         "hmm_fit_restarts": _q_hmm_fit_restarts,
+        # Model-codec block: HMM's model table moved onto the stripe codec
+        # (HMM.blocks / from_blocks through em.encode / em.decode), which
+        # re-hashes every face whose closure holds the HMM class. These two
+        # rotated in from below the window; both are oracle-exact after the
+        # change (tools/check_oracle.py, sf0.01 and sf0.001).
+        "score_stream": _q_score_stream,
+        "hmm_generate": _q_hmm_generate,
         # r15 window residents, code-unchanged since their r15 evidence, keep
         # their slots up to the 50 cap (the TPC-H/spend block, the rows-only
         # IVF-PQ serving family, bm25_topk / hybrid_search /
         # neardup_incremental, kmeans_parity, knn_ivf / basket_rules /
-        # doc_quality and then simhash / copy_spans / ivm_segment_stats /
-        # knn_brute rotated out to make room):
+        # doc_quality, then simhash / copy_spans / ivm_segment_stats /
+        # knn_brute and then cdc_time_travel / convergence_distance rotated
+        # out to make room):
         "pca_power_parity": _q_pca_power_parity,
         "logreg_gd_parity": _q_logreg_gd_parity,
         "decontaminate_bloom": _q_decontaminate_bloom,
@@ -1905,11 +1913,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cdc_changes": _q_cdc_changes,
         "cdc_compact": _q_cdc_compact,
         "cdc_schema_evolution": _q_cdc_schema_evolution,
-        "cdc_time_travel": _q_cdc_time_travel,
-        "convergence_distance": _q_model_half_distance,
         # ---- the 50-entry correctness window ends here. Below: faces
         # verified green in earlier rounds and code-unchanged since (face-hash
         # manifest), headed by those displaced from the window this round.
+        "cdc_time_travel": _q_cdc_time_travel,
+        "convergence_distance": _q_model_half_distance,
         "simhash": _q_simhash,
         "copy_spans": _q_copy_spans,
         "ivm_segment_stats": _q_ivm_segment_stats,
@@ -1960,7 +1968,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "view_purchase_stream_join": _q_view_purchase_stream_join,
         "windowed_counts_stream": _q_windowed_counts_stream,
         "sessions_stream": _q_sessions_stream,
-        "score_stream": _q_score_stream,
         "hll_distinct_stream": _q_hll_distinct_stream,
         "q9_product_profit": _q_q9_product_profit,
         "bucketed_segment_spend": _q_bucketed_segment_spend,
@@ -2030,7 +2037,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q21_waiting_suppliers": _q_q21_waiting_suppliers,
         "dq_report_orders": _q_dq_report,
         "skew_report_events": _q_skew_report,
-        "hmm_generate": _q_hmm_generate,
         "emb_pca": _q_emb_pca,
         "quality_classifier": _q_quality_classifier,
         "knn_pq": _q_knn_pq,

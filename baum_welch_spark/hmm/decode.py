@@ -247,8 +247,9 @@ _PIVOT_TERMS = ((lambda j: f"m.pi{j}"), (lambda i, j: f"m.a{i}_{j}"))
 
 
 def _coded_ctes(coded: str) -> str:
-    """WITH-prefix of the forward-backward oracles: the ``coded`` events
-    query and the per-sequence ``lens``. Ends with a comma."""
+    """WITH-prefix of the forward-backward and Viterbi oracles: the
+    ``coded`` events query and the per-sequence ``lens``. Ends with a
+    comma."""
     return f"""
 WITH coded AS MATERIALIZED ({coded}),
 lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
@@ -557,10 +558,10 @@ g AS MATERIALIZED (
 
 
 def viterbi_ctes(model: HMM) -> str:
-    """Shared CTE block (``coded``, ``lens``, ``delta``, ``back``) computing
+    """Shared WITH block (``coded``, ``lens``, ``delta``, ``back``) computing
     per-(seq, t) Viterbi states — the DP core of both the decode oracle and
-    the hard-EM re-estimation oracle (hmm.viterbi_train). Returned WITHOUT
-    the leading ``WITH`` so callers can append their own CTEs.
+    the hard-EM re-estimation oracle (hmm.viterbi_train). It ends after
+    ``back``, so callers can append their own CTEs.
 
     The log-model entries are embedded as repr() literals of the exact NumPy
     doubles the Spark operator broadcasts, and every DP cell is the same
@@ -569,13 +570,13 @@ def viterbi_ctes(model: HMM) -> str:
     paths match exactly, not just approximately."""
     with np.errstate(divide="ignore"):
         lpi, lA, lB = np.log(model.pi), np.log(model.A), np.log(model.B)
-    return _viterbi_sql(lpi, lA, _symbol_emis(lB), _CODED_SQL)
+    return _coded_ctes(_CODED_SQL) + _viterbi_sql(lpi, lA, _symbol_emis(lB))
 
 
-def _viterbi_sql(lpi: np.ndarray, lA: np.ndarray, emis, coded: str) -> str:
-    """:func:`viterbi_ctes` over the ``coded`` events query, with
-    ``emis(j)`` the log-emission term of state j (as in
-    :func:`_lap_ctes`)."""
+def _viterbi_sql(lpi: np.ndarray, lA: np.ndarray, emis) -> str:
+    """The ``delta``/``back`` CTEs of :func:`viterbi_ctes` over the
+    ``coded``/``lens`` prefix (:func:`_coded_ctes`), with ``emis(j)`` the
+    log-emission term of state j (as in :func:`_lap_ctes`)."""
     j1 = range(1, lpi.shape[0] + 1)
     base_d = ",\n         ".join(f"{_lit(lpi[j - 1])} + {emis(j)} AS d{j}" for j in j1)
     step_d = ",\n         ".join(
@@ -598,9 +599,7 @@ def _viterbi_sql(lpi: np.ndarray, lA: np.ndarray, emis, coded: str) -> str:
     dmax = ", ".join(f"d.d{j}" for j in j1)
     # MATERIALIZED is load-bearing: without it DuckDB inlines delta (a full
     # recursion) into EVERY step of back's recursion — see _lap_ctes
-    return f"""coded AS MATERIALIZED ({coded}),
-lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
-delta AS MATERIALIZED (
+    return f"""delta AS MATERIALIZED (
   WITH RECURSIVE delta_r AS (
     SELECT c.user_id, 0 AS t,
            {base_d}
@@ -630,8 +629,7 @@ back AS MATERIALIZED (
 
 def viterbi_oracle_sql(model: HMM) -> str:
     """ANSI-SQL (DuckDB) oracle for viterbi_decode_face — see viterbi_ctes."""
-    return f"""
-WITH {viterbi_ctes(model)}
+    return f"""{viterbi_ctes(model)}
 SELECT b.user_id AS seq_id, round(b.loglik, 6) AS loglik, b.path AS path_str
 FROM back b WHERE b.t = 0
 """
@@ -708,10 +706,7 @@ def viterbi_topk_oracle_sql(model: HMM, k: int = 3) -> str:
     # schema stays exactly the (d, p) state block — sl{j} as lateral
     # aliases in the outer select would become extra output columns and
     # break positional matching with the base member
-    return f"""
-WITH coded AS MATERIALIZED ({_CODED_SQL}),
-lens AS MATERIALIZED (SELECT user_id, count(*) AS t_len FROM coded GROUP BY user_id),
-dp AS MATERIALIZED (
+    return _coded_ctes(_CODED_SQL) + f"""dp AS MATERIALIZED (
   WITH RECURSIVE dp_r AS (
     SELECT c.user_id, 0 AS t,
            {base}

@@ -66,42 +66,66 @@ def encode(
     return out
 
 
+def block_shapes(blocks: dict[str, np.ndarray]) -> dict[str, tuple[int, ...]]:
+    """The kinds and shapes of named blocks: what :func:`decode` fills."""
+    return {kind: np.shape(arr) for kind, arr in blocks.items()}
+
+
+def stripe_table(rows, value: str = "weight") -> pa.Table:
+    """Stripe rows as an Arrow table: an Arrow table as is, a pandas frame,
+    or a sequence of Spark Rows, dicts or ``(kind, i, j, value)`` tuples,
+    with the cell value in column ``value``."""
+    if isinstance(rows, pa.Table):
+        return rows
+    if isinstance(rows, pd.DataFrame):
+        return pa.Table.from_pandas(rows, preserve_index=False)
+    names = ("kind", "i", "j", value)
+    return pa.Table.from_pylist(
+        [r.asDict() if isinstance(r, Row) else r if isinstance(r, dict) else dict(zip(names, r))
+         for r in rows],
+        pa.schema([("kind", pa.string()), ("i", pa.int64()), ("j", pa.int64()),
+                   (value, pa.float64())]),
+    )
+
+
 def decode(
     rows, shapes: dict[str, tuple[int, ...]], value: str = "weight"
 ) -> tuple[dict[str, np.ndarray], float]:
-    """Stripe rows -> ({kind: array of ``shapes[kind]``}, loglik). ``rows``
-    is an Arrow table (what :func:`run_em` collects) or a sequence of Spark
-    Rows or dicts, with the cell value in column ``value``.
+    """Stripe rows (anything :func:`stripe_table` reads) -> ({kind: array
+    of ``shapes[kind]``}, loglik), the blocks in ``shapes`` order.
 
     Rows of the same cell add up, in row order: the unsummed per-partition
     stripes :func:`run_em` collects (partition order, so the sum is the same
     on every run) and already-summed rows alike (0.0 + x == x, so those
-    decode bit for bit). Absent cells and an absent loglik row read 0.
+    decode bit for bit). Absent cells read 0. A row of a kind ``shapes``
+    does not list, or outside its block, raises ``ValueError``. The
+    ``(loglik, 0, 0, value)`` rows count only when ``shapes`` lists
+    ``KIND_LOGLIK`` (shape ``(1,)``), and the loglik reads 0 otherwise, so a
+    model table carrying one is rejected.
 
     A non-finite count array raises ``FloatingPointError`` naming its kind:
     NaN counts (a sequence with probability 0 under the model poisons its
     whole Arrow batch) must never reach an M-step as a plausible-looking
-    model. The NaN crosses Arrow as a null, which reads NaN here."""
-    if not isinstance(rows, pa.Table):
-        rows = pa.Table.from_pylist(
-            [r.asDict() if isinstance(r, Row) else r for r in rows],
-            pa.schema([("kind", pa.string()), ("i", pa.int64()), ("j", pa.int64()),
-                       (value, pa.float64())]),
-        )
+    model. The NaN crosses Arrow as a null, which reads NaN here. The
+    loglik may be non-finite."""
+    rows = stripe_table(rows, value)
     kinds = pc.dictionary_encode(rows.column("kind")).combine_chunks()
     codes = kinds.indices.to_numpy(zero_copy_only=False)
     ii, jj = (rows.column(c).to_numpy().astype(np.int64) for c in ("i", "j"))
     w = rows.column(value).to_numpy()
     out = {kind: np.zeros(shape) for kind, shape in shapes.items()}
-    ll = np.zeros(1)  # the loglik rows are (loglik, 0, 0, value)
-    cells = {**out, KIND_LOGLIK: ll}
     for code, kind in enumerate(kinds.dictionary.to_pylist()):
-        arr = cells.get(kind)
+        arr = out.get(kind)
         if arr is None:
             raise ValueError(f"decode: unexpected stripe kind {kind!r}")
         sel = codes == code
+        i, j = ii[sel], jj[sel]
         # 1-D blocks ride on i = 0, so i * cols + j is the flat cell either way
-        np.add.at(arr.reshape(-1), ii[sel] * arr.shape[-1] + jj[sel], w[sel])
+        n_rows, cols = (1, arr.shape[0]) if arr.ndim == 1 else arr.shape
+        if ((i < 0) | (i >= n_rows) | (j < 0) | (j >= cols)).any():
+            raise ValueError(f"decode: {kind!r} cell outside its block shape {arr.shape}")
+        np.add.at(arr.reshape(-1), i * cols + j, w[sel])
+    ll = out.pop(KIND_LOGLIK, np.zeros(1))
     for kind, arr in out.items():
         if not np.isfinite(arr).all():
             raise FloatingPointError(
@@ -184,7 +208,7 @@ def run_em(
                 stripes = estep(data, bc).toArrow()
             finally:
                 bc.unpersist()
-            blocks, ll = decode(stripes, shapes)
+            blocks, ll = decode(stripes, {**shapes, KIND_LOGLIK: (1,)})
             trace.append(ll)
             new_model = mstep(model, blocks)
             if model_out is not None:

@@ -42,6 +42,7 @@ from baum_welch_spark.hmm.em import (
     GROUPED_COUNTS_SCHEMA,
     KIND_LOGLIK,
     FitResult,
+    block_shapes,
     cached,
     decode,
     encode,
@@ -50,12 +51,7 @@ from baum_welch_spark.hmm.em import (
     sum_stripes,
 )
 from baum_welch_spark.hmm.kernel import e_step_counts_batch, m_step
-from baum_welch_spark.hmm.model import (
-    HMM,
-    KIND_EMISSION,
-    KIND_INITIAL,
-    KIND_TRANSITION,
-)
+from baum_welch_spark.hmm.model import HMM, KIND_EMISSION
 
 
 def e_step_udf(bc_model, weighted: bool = False):
@@ -71,10 +67,7 @@ def e_step_udf(bc_model, weighted: bool = False):
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pi, A, B = bc_model.value
-        n, m = A.shape[0], B.shape[1]
-        cpi = np.zeros(n)
-        cA = np.zeros((n, n))
-        cB = np.zeros((n, m))
+        counts = HMM(*map(np.zeros_like, (pi, A, B)))  # the model's block layout
         ll = 0.0
         saw_data = False
         for pdf in batches:
@@ -102,11 +95,11 @@ def e_step_udf(bc_model, weighted: bool = False):
             # batched padded DP: Python loop is O(max_T) per Arrow batch,
             # not O(sum T) — see kernel.e_step_counts_batch
             ll += e_step_counts_batch(
-                pi, A, B, obs_list, cpi, cA, cB,
+                pi, A, B, obs_list, counts.pi, counts.A, counts.B,
                 weights=np.array([wt for _, wt in kept]) if weighted else None,
             )
         if saw_data:
-            yield encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_EMISSION: cB}, ll)
+            yield encode(counts.blocks(), ll)
 
     return compute
 
@@ -132,15 +125,6 @@ def expected_counts(
     """One E-step over the corpus -> aggregated count DataFrame
     (kind, i, j, weight), including the loglik side-channel row."""
     return sum_stripes(e_step_stripes(sequences, bc_model, weight_col))
-
-
-def count_shapes(n_hidden: int, n_observed: int) -> dict[str, tuple[int, ...]]:
-    """Block shapes of the discrete count stripes (and tidy model rows)."""
-    return {
-        KIND_INITIAL: (n_hidden,),
-        KIND_TRANSITION: (n_hidden, n_hidden),
-        KIND_EMISSION: (n_hidden, n_observed),
-    }
 
 
 def grouped_e_step_udf(bc_models):
@@ -175,18 +159,11 @@ def grouped_e_step_udf(bc_models):
                 ]
                 if not obs_list:
                     continue
-                a = acc.setdefault(
-                    str(group),
-                    [np.zeros_like(pi), np.zeros_like(A), np.zeros(B.shape), 0.0],
-                )
-                a[3] += e_step_counts_batch(pi, A, B, obs_list, a[0], a[1], a[2])
+                a = acc.setdefault(str(group), [HMM(*map(np.zeros_like, triple)), 0.0])
+                a[1] += e_step_counts_batch(pi, A, B, obs_list, a[0].pi, a[0].A, a[0].B)
         if acc:
             yield pd.concat(
-                [
-                    encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_EMISSION: cB},
-                           ll, group=group)
-                    for group, (cpi, cA, cB, ll) in acc.items()
-                ],
+                [encode(c.blocks(), ll, group=group) for group, (c, ll) in acc.items()],
                 ignore_index=True,
             )
 
@@ -265,12 +242,12 @@ def run_discrete_em(
         model = _masked(model, topology_mask)
 
     def mstep(_, blocks: dict[str, np.ndarray]) -> HMM:
-        new = m_step(blocks[KIND_INITIAL], blocks[KIND_TRANSITION], blocks[KIND_EMISSION])
+        new = m_step(*blocks.values())
         return new if topology_mask is None else _masked(new, topology_mask)
 
     return run_em(
         spark, sequences, model, estep=estep, payload=payload, mstep=mstep,
-        shapes=count_shapes(model.n_hidden, model.n_observed),
+        shapes=block_shapes(model.blocks()),
         max_iter=max_iter, tol=tol, model_out=model_out,
     )
 
@@ -496,13 +473,12 @@ def em_trace(
     model-sized (N^2 + N*M + N rows) — the same driver-side footprint as
     :func:`fit`'s convergence test.
     """
-    shapes = count_shapes(model.n_hidden, model.n_observed)
+    shapes = block_shapes(model.blocks())
 
     def next_model(rows) -> HMM:
         # the rounded rows verbatim: no validate/renormalize — they sum to 1
         # only within ~2e-6, and the oracle does not renormalize either
-        b, _ = decode(rows, shapes, "prob")
-        return HMM(pi=b[KIND_INITIAL], A=b[KIND_TRANSITION], B=b[KIND_EMISSION])
+        return HMM.from_blocks(decode(rows, shapes, "prob")[0])
 
     return lap_trace(
         spark, sequences, model, n_iters,

@@ -63,9 +63,11 @@ from baum_welch_spark.hmm.decode import (
 from baum_welch_spark.hmm.em import (
     COUNTS_SCHEMA,
     FitResult,
+    block_shapes,
     encode,
     lap_trace,
     run_em,
+    stripe_table,
     sum_stripes,
 )
 from baum_welch_spark.hmm.kernel import (
@@ -74,6 +76,7 @@ from baum_welch_spark.hmm.kernel import (
     forward_backward,
     forward_backward_batch,
     loglik_batch,
+    normalize_rows,
     transition_factors,
     viterbi_paths,
 )
@@ -130,40 +133,43 @@ class GaussianHMM:
             mu=mu, sigma2=sigma2,
         ).validate()
 
+    def blocks(self) -> dict[str, np.ndarray]:
+        """The model as the stripe codec's named blocks (``em.encode``), in
+        row order — the Gaussian family's one model-table layout: pi, A and
+        the (N, 2) moment block of μ (j=0) and σ² (j=1)."""
+        return {KIND_INITIAL: self.pi, KIND_TRANSITION: self.A,
+                KIND_MOMENT: np.column_stack([self.mu, self.sigma2])}
+
+    @staticmethod
+    def from_blocks(blocks: dict[str, np.ndarray]) -> "GaussianHMM":
+        """The model of :meth:`blocks`' layout, unvalidated."""
+        mu, s2 = blocks[KIND_MOMENT].T
+        return GaussianHMM(pi=blocks[KIND_INITIAL], A=blocks[KIND_TRANSITION], mu=mu, sigma2=s2)
+
     def to_df(self, spark: SparkSession) -> DataFrame:
-        """Tidy model frame (kind, i, j, value): initial/transition rows
-        carry probabilities; moment rows carry μ (j=0) and σ² (j=1)."""
-        n = self.pi.shape[0]
-        rows = []
-        for j in range(n):
-            rows.append((KIND_INITIAL, 0, j, float(self.pi[j])))
-        for i in range(n):
-            for j in range(n):
-                rows.append((KIND_TRANSITION, i, j, float(self.A[i][j])))
-        for i in range(n):
-            rows.append((KIND_MOMENT, i, 0, float(self.mu[i])))
-            rows.append((KIND_MOMENT, i, 1, float(self.sigma2[i])))
-        return spark.createDataFrame(rows, schema="kind string, i int, j int, value double")
+        """Tidy model frame (kind, i, j, value): :meth:`blocks` through
+        ``em.encode``."""
+        return spark.createDataFrame(
+            encode(self.blocks()).rename(columns={"weight": "value"}),
+            schema="kind string, i int, j int, value double",
+        )
 
     def write(self, spark: SparkSession, path: str) -> None:
         """Persist as the tidy (kind, i, j, value) parquet — the Gaussian
         twin of HMM.write's model codec (S3)."""
-        self.to_df(spark).repartition(1).write.mode("overwrite").parquet(path)
+        self.to_df(spark).coalesce(1).write.mode("overwrite").parquet(path)
 
     @staticmethod
     def read(spark: SparkSession, path: str) -> "GaussianHMM":
         """The tidy parquet of :meth:`write`, decoded by ``em.decode``: a
-        row of unknown kind raises ``ValueError``."""
+        row of any other kind raises ``ValueError``."""
         # imported here: viterbi_gauss's local ``decode`` must not resolve to it
         from baum_welch_spark.hmm.em import decode
 
-        rows = spark.read.parquet(path).collect()
-        n = max(r.j for r in rows if r.kind == KIND_INITIAL) + 1
-        b, _ = decode(
-            rows, {KIND_INITIAL: (n,), KIND_TRANSITION: (n, n), KIND_MOMENT: (n, 2)}, "value"
-        )
-        mu, s2 = b[KIND_MOMENT].T
-        return GaussianHMM(pi=b[KIND_INITIAL], A=b[KIND_TRANSITION], mu=mu, sigma2=s2).validate()
+        rows = stripe_table(spark.read.parquet(path).collect(), "value")
+        n = 1 + int(rows.to_pandas().groupby("kind")["j"].max()[KIND_INITIAL])
+        b, _ = decode(rows, block_shapes(GaussianHMM.random(n).blocks()), "value")
+        return GaussianHMM.from_blocks(b).validate()
 
     def distance(self, other: "GaussianHMM") -> float:
         return float(
@@ -286,22 +292,23 @@ def m_step_gauss(
 ) -> GaussianHMM:
     """Closed-form M-step; zero-mass states keep their previous emission
     parameters (standard EM practice for starved components) and uniform
-    pi/A rows (the discrete m_step convention)."""
-
-    def norm(xx: np.ndarray) -> np.ndarray:
-        s = xx.sum(axis=-1, keepdims=True)
-        safe = np.where(s > 0, s, 1.0)
-        uniform = np.full_like(xx, 1.0 / xx.shape[-1])
-        return np.where(s > 0, xx / safe, uniform)
-
+    pi/A rows (``kernel.normalize_rows``, the discrete M-step's)."""
     c0 = moments[:, 0]
     ok = c0 > 0
     mu = np.where(ok, moments[:, 1] / np.where(ok, c0, 1.0), prev.mu)
     ex2 = np.where(ok, moments[:, 2] / np.where(ok, c0, 1.0), prev.sigma2 + prev.mu**2)
     sigma2 = np.maximum(ex2 - mu * mu, var_floor)
     return GaussianHMM(
-        pi=norm(count_pi), A=norm(count_A), mu=mu, sigma2=sigma2
+        pi=normalize_rows(count_pi), A=normalize_rows(count_A), mu=mu, sigma2=sigma2
     ).validate()
+
+
+def _moment_counts(n: int) -> dict[str, np.ndarray]:
+    """Zero E-step statistics as the stripe codec's named blocks, in the
+    order of :func:`e_step_moments` / :func:`m_step_gauss`'s arguments:
+    γ₀ (N,), the ξ sums (N, N) and the moments Σγ, Σγx, Σγx² (N, 3)."""
+    return {KIND_INITIAL: np.zeros(n), KIND_TRANSITION: np.zeros((n, n)),
+            KIND_MOMENT: np.zeros((n, 3))}
 
 
 def sequential_gauss_em(
@@ -311,13 +318,12 @@ def sequential_gauss_em(
     model = init.validate()
     trace: list[float] = []
     for _ in range(max_iter):
-        n = model.pi.shape[0]
-        cpi, cA, cm = np.zeros(n), np.zeros((n, n)), np.zeros((n, 3))
+        c = _moment_counts(model.pi.shape[0])
         ll = 0.0
         for x in sequences:
-            ll += e_step_moments(model, np.asarray(x, dtype=np.float64), cpi, cA, cm)
+            ll += e_step_moments(model, np.asarray(x, dtype=np.float64), *c.values())
         trace.append(ll)
-        model = m_step_gauss(model, cpi, cA, cm)
+        model = m_step_gauss(model, *c.values())
     return model, trace
 
 
@@ -351,16 +357,15 @@ def build_value_sequences(
 def _gauss_estep_udf(bc_model):
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = bc_model.value
-        n = model.pi.shape[0]
-        cpi, cA, cm = np.zeros(n), np.zeros((n, n)), np.zeros((n, 3))
+        c = _moment_counts(model.pi.shape[0])
         ll, saw = 0.0, False
         for pdf in batches:
             x_list = [o for o in pdf["obs"] if o is not None and len(o) > 0]
             if x_list:
                 saw = True
-                ll += e_step_moments_batch(model, x_list, cpi, cA, cm)
+                ll += e_step_moments_batch(model, x_list, *c.values())
         if saw:
-            yield encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_MOMENT: cm}, ll)
+            yield encode(c, ll)
 
     return compute
 
@@ -383,12 +388,10 @@ def fit_gaussian(
     """Distributed EM for the Gaussian family on :func:`em.run_em`: the
     moment E-step under the broadcast model, then the closed-form
     :func:`m_step_gauss`."""
-    n = init.pi.shape[0]
     return run_em(
         spark, sequences, init.validate(), estep=_gauss_stripes, payload=lambda m: m,
-        mstep=lambda m, b: m_step_gauss(m, b[KIND_INITIAL], b[KIND_TRANSITION], b[KIND_MOMENT]),
-        shapes={KIND_INITIAL: (n,), KIND_TRANSITION: (n, n), KIND_MOMENT: (n, 3)},
-        max_iter=max_iter, tol=tol,
+        mstep=lambda m, b: m_step_gauss(m, *b.values()),
+        shapes=block_shapes(_moment_counts(init.pi.shape[0])), max_iter=max_iter, tol=tol,
     )
 
 
@@ -514,8 +517,9 @@ def gauss_viterbi_oracle_sql(model: GaussianHMM) -> str:
     model = model.validate()
     with np.errstate(divide="ignore"):
         lpi, lA = np.log(model.pi), np.log(model.A)
-    return f"""
-WITH {_viterbi_sql(lpi, lA, lambda j: _logb_expr(model, j - 1, "c.x"), _GCODED_SQL)}
+    return _coded_ctes(_GCODED_SQL) + _viterbi_sql(
+        lpi, lA, lambda j: _logb_expr(model, j - 1, "c.x")
+    ) + """
 SELECT user_id AS seq_id, round(loglik, 6) AS loglik, path AS path_str
 FROM back WHERE t = 0
 """

@@ -23,9 +23,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from baum_welch_spark.hmm.em import encode
 from baum_welch_spark.hmm.model import HMM
 
-#: output schema: tidy model rows per group — kind in {'pi','A','B'}
+#: output schema: each group's ``HMM.to_rows`` model rows (kinds initial,
+#: transition, emission; value in ``weight``) with its loglik and n_seqs
 GROUPED_MODEL_SCHEMA = (
     "group string, kind string, i int, j int, weight double, loglik double, n_seqs long"
 )
@@ -62,20 +64,9 @@ def fit_grouped(
         model, trace = batched_baum_welch(
             HMM(pi=pi0.copy(), A=A0.copy(), B=B0.copy()), seqs, max_iter=max_iter
         )
-        rows = []
-        for i in range(n_hidden):
-            rows.append(("pi", i, -1, model.pi[i]))
-        for i in range(n_hidden):
-            for j in range(n_hidden):
-                rows.append(("A", i, j, model.A[i, j]))
-        for i in range(n_hidden):
-            for j in range(n_observed):
-                rows.append(("B", i, j, model.B[i, j]))
-        out = pd.DataFrame(rows, columns=["kind", "i", "j", "weight"])
-        out.insert(0, "group", group)
-        out["loglik"] = trace[-1] if trace else float("nan")
-        out["n_seqs"] = len(seqs)
-        return out
+        return encode(model.blocks(), group=group).assign(
+            loglik=trace[-1] if trace else float("nan"), n_seqs=len(seqs)
+        )
 
     return (
         sequences_with_group.select("group", "seq_id", "obs")
@@ -123,17 +114,12 @@ def fit_grouped_distributed(
 
     Output: the same tidy GROUPED_MODEL_SCHEMA rows as fit_grouped.
     """
-    from baum_welch_spark.hmm.em import cached, decode
-    from baum_welch_spark.hmm.fit import count_shapes, expected_counts_grouped
+    from baum_welch_spark.hmm.em import KIND_LOGLIK, block_shapes, cached, decode
+    from baum_welch_spark.hmm.fit import expected_counts_grouped
     from baum_welch_spark.hmm.kernel import m_step
-    from baum_welch_spark.hmm.model import (
-        KIND_EMISSION,
-        KIND_INITIAL,
-        KIND_TRANSITION,
-    )
 
     init = HMM.random(n_hidden, n_observed, seed=seed)
-    shapes = count_shapes(n_hidden, n_observed)
+    shapes = {**block_shapes(init.blocks()), KIND_LOGLIK: (1,)}
     # cast the group key to string up front: the broadcast model dict is
     # keyed by str, and a non-string group column would otherwise miss the
     # lookup inside the E-step UDF and silently drop the group
@@ -175,29 +161,22 @@ def fit_grouped_distributed(
             # counts (-> uniform model, loglik 0.0) — parity demands the
             # same here
             for g in sorted(active):
-                blocks, last_ll[g] = decode(by_group.get(g, []), shapes)
-                new_model = m_step(
-                    blocks[KIND_INITIAL], blocks[KIND_TRANSITION], blocks[KIND_EMISSION]
-                )
+                counts, last_ll[g] = decode(by_group.get(g, []), shapes)
+                new_model = m_step(*counts.values())
                 delta = models[g].distance(new_model)
                 models[g] = new_model
                 if tol > 0 and delta < tol:
                     active.discard(g)
 
-    out_rows = []
-    for g in sorted(models):
-        m = models[g]
-        ll = last_ll.get(g, float("nan"))
-        ns = n_seqs[g]
-        for i in range(n_hidden):
-            out_rows.append((g, "pi", i, -1, float(m.pi[i]), ll, ns))
-        for i in range(n_hidden):
-            for j in range(n_hidden):
-                out_rows.append((g, "A", i, j, float(m.A[i, j]), ll, ns))
-        for i in range(n_hidden):
-            for j in range(n_observed):
-                out_rows.append((g, "B", i, j, float(m.B[i, j]), ll, ns))
-    return spark.createDataFrame(out_rows, schema=GROUPED_MODEL_SCHEMA)
+    frames = [
+        encode(models[g].blocks(), group=g).assign(
+            loglik=last_ll.get(g, float("nan")), n_seqs=n_seqs[g]
+        )
+        for g in sorted(models)
+    ]
+    return spark.createDataFrame(
+        pd.concat(frames, ignore_index=True) if frames else [], schema=GROUPED_MODEL_SCHEMA
+    )
 
 
 def decode_grouped(
@@ -229,26 +208,16 @@ def decode_grouped(
                 {"group": [], "seq_id": [], "loglik": [], "path_str": []}
             )
         group = str(models_pdf["group"].iloc[0])
-        n = int(models_pdf.loc[models_pdf["kind"] == "pi", "i"].max()) + 1
-        m = int(models_pdf.loc[models_pdf["kind"] == "B", "j"].max()) + 1
-        pi = np.zeros(n)
-        A = np.zeros((n, n))
-        B = np.zeros((n, m))
-        for r in models_pdf.itertuples():
-            if r.kind == "pi":
-                pi[r.i] = r.weight
-            elif r.kind == "A":
-                A[r.i, r.j] = r.weight
-            elif r.kind == "B":
-                B[r.i, r.j] = r.weight
+        model = HMM.from_rows(models_pdf.rename(columns={"weight": "prob"}))
         with np.errstate(divide="ignore"):
-            log_pi, log_A, log_B = np.log(pi), np.log(A), np.log(B)
+            log_pi, log_A, log_B = np.log(model.pi), np.log(model.A), np.log(model.B)
         seqs_pdf = seqs_pdf.sort_values("seq_id")
         keep = [o is not None and len(o) > 0 for o in seqs_pdf["obs"]]
         seqs_pdf = seqs_pdf[keep]
         obs_list = list(seqs_pdf["obs"])
         paths, lls = viterbi_paths(
-            log_pi, log_A, symbol_emit(log_B), _padded_buckets(obs_list, m), len(obs_list)
+            log_pi, log_A, symbol_emit(log_B), _padded_buckets(obs_list, model.n_observed),
+            len(obs_list),
         )
         return pd.DataFrame(
             {

@@ -108,21 +108,24 @@ def e_step_counts(
     return loglik
 
 
+def normalize_rows(x: np.ndarray) -> np.ndarray:
+    """Expected counts -> distributions over the last axis (reference
+    reducer A4, BaumWelchReducer.java:133-149); a row with zero mass turns
+    uniform. The M-step normalize of both HMM families."""
+    x = np.asarray(x, dtype=np.float64)
+    s = x.sum(axis=-1, keepdims=True)
+    uniform = np.full_like(x, 1.0 / x.shape[-1])
+    return np.where(s > 0, x / np.where(s > 0, s, 1.0), uniform)
+
+
 def m_step(
     count_pi: np.ndarray, count_A: np.ndarray, count_B: np.ndarray
 ) -> HMM:
-    """Normalize expected counts to distributions (reference reducer A4,
-    BaumWelchReducer.java:133-149). Rows with zero mass stay uniform."""
-
-    def norm(x: np.ndarray) -> np.ndarray:
-        x = np.asarray(x, dtype=np.float64)
-        s = x.sum(axis=-1, keepdims=True)
-        safe = np.where(s > 0, s, 1.0)
-        out = x / safe
-        uniform = np.full_like(out, 1.0 / x.shape[-1])
-        return np.where(s > 0, out, uniform)
-
-    return HMM(pi=norm(count_pi), A=norm(count_A), B=norm(count_B)).validate()
+    """The discrete M-step: each count block row-normalized
+    (:func:`normalize_rows`)."""
+    return HMM(
+        pi=normalize_rows(count_pi), A=normalize_rows(count_A), B=normalize_rows(count_B)
+    ).validate()
 
 
 def sequential_baum_welch(

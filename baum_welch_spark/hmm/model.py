@@ -6,8 +6,9 @@ Capability parity with the reference's model layer:
   * ``BuildRandomModel``                   (BaumWelchUtils.java:127-134) -> :meth:`HMM.random`
   * ``BuildHmmModelFromDistributions``     (BaumWelchUtils.java:136-145) -> :meth:`HMM.from_distributions`
   * stripe-encoded SequenceFile model IO   (BaumWelchUtils.java:147-226) -> tidy
-    DataFrame ``(kind, i, j, prob)`` + Parquet, :meth:`HMM.to_rows` /
-    :meth:`HMM.from_rows` / :func:`write_model` / :func:`read_model`
+    DataFrame ``(kind, i, j, prob)`` + Parquet through the shared stripe
+    codec (``em.encode`` / ``em.decode``): :meth:`HMM.to_rows` /
+    :meth:`HMM.from_rows` / :meth:`HMM.write` / :meth:`HMM.read`
 
 Unlike the reference's stripe keys (single-character state IDs,
 ``BaumWelchUtils.java:100-111`` — breaks at N >= 10 states), the tidy schema
@@ -20,6 +21,9 @@ import json
 from dataclasses import dataclass, field
 
 import numpy as np
+import pandas as pd
+
+from baum_welch_spark.hmm.em import block_shapes, decode, encode, stripe_table
 
 MODEL_SCHEMA = "kind string, i int, j int, prob double"
 
@@ -148,44 +152,38 @@ class HMM:
             observed_names=list(observed_names or []),
         ).validate()
 
-    # -- tidy-row codec -----------------------------------------------------
+    # -- stripe codec -------------------------------------------------------
 
-    def to_rows(self) -> list[tuple[str, int, int, float]]:
-        """Flatten to tidy ``(kind, i, j, prob)`` rows — the Spark-side model
-        encoding (replaces the stripe SequenceFile, BaumWelchUtils.java:147-226)."""
-        rows: list[tuple[str, int, int, float]] = []
-        for j in range(self.n_hidden):
-            rows.append((KIND_INITIAL, 0, j, float(self.pi[j])))
-        for i in range(self.n_hidden):
-            for j in range(self.n_hidden):
-                rows.append((KIND_TRANSITION, i, j, float(self.A[i, j])))
-        for i in range(self.n_hidden):
-            for k in range(self.n_observed):
-                rows.append((KIND_EMISSION, i, k, float(self.B[i, k])))
-        return rows
+    def blocks(self) -> dict[str, np.ndarray]:
+        """(pi, A, B) as the stripe codec's named blocks (``em.encode``), in
+        row order — the discrete family's one block layout, shared by the
+        model table and the E-step's count stripes."""
+        return {KIND_INITIAL: self.pi, KIND_TRANSITION: self.A, KIND_EMISSION: self.B}
+
+    @staticmethod
+    def from_blocks(blocks: dict[str, np.ndarray]) -> "HMM":
+        """The HMM of :meth:`blocks`' layout, unvalidated (rounded model rows
+        sum to 1 only within ~2e-6)."""
+        return HMM(pi=blocks[KIND_INITIAL], A=blocks[KIND_TRANSITION], B=blocks[KIND_EMISSION])
+
+    def to_rows(self) -> pd.DataFrame:
+        """The tidy ``(kind, i, j, prob)`` model rows: :meth:`blocks` through
+        ``em.encode`` (replaces the stripe SequenceFile,
+        BaumWelchUtils.java:147-226)."""
+        return encode(self.blocks()).rename(columns={"weight": "prob"})
 
     @staticmethod
     def from_rows(rows, n_hidden: int | None = None, n_observed: int | None = None) -> "HMM":
-        """Rebuild from tidy rows (reference: CreateHmmModel,
-        BaumWelchUtils.java:56-125 — minus the charAt() key surgery)."""
-        rows = list(rows)
-        if n_hidden is None:
-            n_hidden = 1 + max(r[2] for r in rows if r[0] == KIND_INITIAL)
-        if n_observed is None:
-            n_observed = 1 + max(r[2] for r in rows if r[0] == KIND_EMISSION)
-        pi = np.zeros(n_hidden)
-        A = np.zeros((n_hidden, n_hidden))
-        B = np.zeros((n_hidden, n_observed))
-        for kind, i, j, p in rows:
-            if kind == KIND_INITIAL:
-                pi[j] = p
-            elif kind == KIND_TRANSITION:
-                A[i, j] = p
-            elif kind == KIND_EMISSION:
-                B[i, j] = p
-            else:
-                raise ValueError(f"unknown kind {kind!r}")
-        return HMM(pi=pi, A=A, B=B).validate()
+        """Rebuild from tidy ``(kind, i, j, prob)`` rows through ``em.decode``
+        (reference: CreateHmmModel, BaumWelchUtils.java:56-125 — minus the
+        charAt() key surgery). ``rows`` is anything ``em.stripe_table``
+        reads; a row of any other kind raises ``ValueError``."""
+        rows = stripe_table(rows, "prob")
+        last = rows.to_pandas().groupby("kind")["j"].max()
+        n = n_hidden or 1 + int(last[KIND_INITIAL])
+        m = n_observed or 1 + int(last[KIND_EMISSION])
+        blocks, _ = decode(rows, block_shapes(HMM.uniform(n, m).blocks()), "prob")
+        return HMM.from_blocks(blocks).validate()
 
     # -- Spark / Parquet ----------------------------------------------------
 
@@ -202,8 +200,7 @@ class HMM:
     def read(spark, path: str) -> "HMM":
         """Model scan (reference: CreateHmmModel glob+filter, BaumWelchUtils.java:56-125).
         The model is tiny (N^2 + N*M doubles) so collect() to NumPy is correct."""
-        rows = spark.read.parquet(path).collect()
-        return HMM.from_rows((r.kind, r.i, r.j, r.prob) for r in rows)
+        return HMM.from_rows(spark.read.parquet(path).collect())
 
     def to_json(self) -> str:
         return json.dumps(

@@ -13,7 +13,8 @@ running sufficient statistics then take a stepwise-decaying interpolation
     s  <-  (1 - eta_t) * s + eta_t * (batch_counts / batch_sequences)
     eta_t = (t + 2) ** -alpha          (alpha in (0.5, 1])
 
-and the model re-normalizes from s (``kernel.m_step``). On a stationary
+and the model re-normalizes from s (``kernel.m_step``); s is kept as
+count blocks in the model's layout (``HMM.blocks``). On a stationary
 stream this converges to the batch-EM fixed point while touching each
 record once — the training loop a 100 TB/day corpus needs when "cache the
 corpus and iterate" stops being an option.
@@ -21,8 +22,8 @@ corpus and iterate" stops being an option.
 One update is one step, not a loop, so it does not run on ``em.run_em``:
 one job and one stage over the micro-batch (no shuffle), a model-sized
 Arrow collect, a driver-side re-normalize, one broadcast. State is the
-O(N^2 + N*M) stats triple on the driver (checkpoint-friendly: it is
-re-derivable from the written model trail). Nothing batch-sized ever
+stats blocks, O(N^2 + N*M) doubles on the driver (checkpoint-friendly: it
+is re-derivable from the written model trail). Nothing batch-sized ever
 reaches the driver.
 """
 
@@ -34,15 +35,10 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 
-from baum_welch_spark.hmm.em import decode
-from baum_welch_spark.hmm.fit import count_shapes, e_step_stripes
+from baum_welch_spark.hmm.em import KIND_LOGLIK, block_shapes, decode
+from baum_welch_spark.hmm.fit import e_step_stripes
 from baum_welch_spark.hmm.kernel import m_step
-from baum_welch_spark.hmm.model import (
-    HMM,
-    KIND_EMISSION,
-    KIND_INITIAL,
-    KIND_TRANSITION,
-)
+from baum_welch_spark.hmm.model import HMM, KIND_INITIAL
 
 
 @dataclass
@@ -53,37 +49,31 @@ class OnlineEM:
     model: HMM
     alpha: float = 0.7
     t: int = 0
-    s_pi: np.ndarray | None = None
-    s_A: np.ndarray | None = None
-    s_B: np.ndarray | None = None
+    stats: dict[str, np.ndarray] | None = None  # s, in the model's block layout
     loglik_trace: list[float] = field(default_factory=list)
 
     def update(self, spark: SparkSession, batch: DataFrame) -> HMM:
-        n, m = self.model.n_hidden, self.model.n_observed
         sc = spark.sparkContext
         bc = sc.broadcast((self.model.pi, self.model.A, self.model.B))
         try:
             stripes = e_step_stripes(batch, bc).toArrow()
         finally:
             bc.unpersist()
-        blocks, ll = decode(stripes, count_shapes(n, m))
-        cpi, cA, cB = blocks[KIND_INITIAL], blocks[KIND_TRANSITION], blocks[KIND_EMISSION]
-        n_seqs = float(cpi.sum())  # every sequence contributes exactly 1 to pi
+        counts, ll = decode(stripes, {**block_shapes(self.model.blocks()), KIND_LOGLIK: (1,)})
+        n_seqs = float(counts[KIND_INITIAL].sum())  # every sequence adds exactly 1 to pi
         if n_seqs == 0:
             return self.model  # empty micro-batch: state unchanged
         self.loglik_trace.append(ll / n_seqs)
         # per-sequence-normalized batch stats keep s on a fixed scale, so
         # eta controls the mixing rate independently of batch sizing
-        bpi, bA, bB = cpi / n_seqs, cA / n_seqs, cB / n_seqs
         eta = (self.t + 2.0) ** -self.alpha
-        if self.s_pi is None:
-            self.s_pi, self.s_A, self.s_B = bpi, bA, bB
-        else:
-            self.s_pi = (1.0 - eta) * self.s_pi + eta * bpi
-            self.s_A = (1.0 - eta) * self.s_A + eta * bA
-            self.s_B = (1.0 - eta) * self.s_B + eta * bB
+        self.stats = {
+            kind: c / n_seqs if self.stats is None
+            else (1.0 - eta) * self.stats[kind] + eta * (c / n_seqs)
+            for kind, c in counts.items()
+        }
         self.t += 1
-        self.model = m_step(self.s_pi, self.s_A, self.s_B)
+        self.model = m_step(*self.stats.values())
         return self.model
 
 

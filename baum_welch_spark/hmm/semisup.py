@@ -40,12 +40,7 @@ from pyspark.sql import functions as F
 from baum_welch_spark.hmm.em import COUNTS_SCHEMA, FitResult, encode
 from baum_welch_spark.hmm.fit import run_discrete_em
 from baum_welch_spark.hmm.kernel import check_symbols, e_step_counts_batch
-from baum_welch_spark.hmm.model import (
-    HMM,
-    KIND_EMISSION,
-    KIND_INITIAL,
-    KIND_TRANSITION,
-)
+from baum_welch_spark.hmm.model import HMM
 
 
 def _labeled_counts(
@@ -70,12 +65,10 @@ def _labeled_counts(
 def _semisup_udf(bc_model):
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pi, A, B = bc_model.value
-        n, m = A.shape[0], B.shape[1]
+        n = A.shape[0]
         with np.errstate(divide="ignore"):
             log_pi, log_A, log_B = np.log(pi), np.log(A), np.log(B)
-        cpi = np.zeros(n)
-        cA = np.zeros((n, n))
-        cB = np.zeros((n, m))
+        c = HMM(*map(np.zeros_like, (pi, A, B)))  # counts in the model's block layout
         ll = 0.0
         saw = False
         for pdf in batches:
@@ -105,12 +98,12 @@ def _semisup_udf(bc_model):
                     unlab.append(o)
             if lab_o:
                 saw = True
-                ll += _labeled_counts(log_pi, log_A, log_B, lab_o, lab_s, cpi, cA, cB)
+                ll += _labeled_counts(log_pi, log_A, log_B, lab_o, lab_s, c.pi, c.A, c.B)
             if unlab:
                 saw = True
-                ll += e_step_counts_batch(pi, A, B, unlab, cpi, cA, cB)
+                ll += e_step_counts_batch(pi, A, B, unlab, c.pi, c.A, c.B)
         if saw:
-            yield encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_EMISSION: cB}, ll)
+            yield encode(c.blocks(), ll)
 
     return compute
 

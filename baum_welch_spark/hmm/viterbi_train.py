@@ -60,11 +60,9 @@ def hard_count_udf(bc_log_model):
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         log_pi, log_A, log_B = bc_log_model.value
-        n, m = log_A.shape[0], log_B.shape[1]
+        m = log_B.shape[1]
         log_emit = symbol_emit(log_B)
-        cpi = np.zeros(n)
-        cA = np.zeros((n, n))
-        cB = np.zeros((n, m))
+        c = HMM(*map(np.zeros_like, (log_pi, log_A, log_B)))  # counts in the model's block layout
         ll = 0.0
         saw_data = False
         for pdf in batches:
@@ -77,13 +75,13 @@ def hard_count_udf(bc_log_model):
             )
             for score in scores:
                 ll += score
-            np.add.at(cpi, [p[0] for p in paths], 1.0)
+            np.add.at(c.pi, [p[0] for p in paths], 1.0)
             src = np.concatenate([p[:-1] for p in paths])
             dst = np.concatenate([p[1:] for p in paths])
-            np.add.at(cA, (src, dst), 1.0)
-            np.add.at(cB, (np.concatenate(paths), np.concatenate(obs_list)), 1.0)
+            np.add.at(c.A, (src, dst), 1.0)
+            np.add.at(c.B, (np.concatenate(paths), np.concatenate(obs_list)), 1.0)
         if saw_data:
-            yield encode({KIND_INITIAL: cpi, KIND_TRANSITION: cA, KIND_EMISSION: cB}, ll)
+            yield encode(c.blocks(), ll)
 
     return compute
 
@@ -127,8 +125,7 @@ def viterbi_reestimate_oracle_sql(model: HMM) -> str:
     ``back`` holds the Viterbi state at every step, ``coded`` the emitted
     symbol, so init / transition / emission counts are one GROUP BY each and
     the normalize is the same count/count window as the Spark side."""
-    return f"""
-WITH {viterbi_ctes(model)},
+    return f"""{viterbi_ctes(model)},
 states AS MATERIALIZED (SELECT user_id, t, state FROM back),
 raw AS (
   SELECT '{KIND_INITIAL}' AS kind, 0 AS i, state AS j, count(*)::DOUBLE AS weight

@@ -102,9 +102,10 @@ def label_propagation(
                 # LAZY checkpoint (r15, same A/B-backed cut as pagerank):
                 # the round's aggregation job materializes the frame; both
                 # consumers (edge join + self-vote union) read the cached
-                # blocks, partitions compute exactly once, all-integer
-                # arithmetic unchanged. Matched-load min-of-4 A/B: 4.26 vs
-                # 4.87 s on label_prop_docs, pairwise consistent.
+                # blocks (at most one cached copy per partition; the two
+                # may race to compute one before its block lands), all-
+                # integer arithmetic unchanged. Matched-load min-of-4 A/B:
+                # 4.26 vs 4.87 s on label_prop_docs, pairwise consistent.
                 labels = labels.localCheckpoint(eager=False)
             # the self-vote guarantees every node appears in the step output
             # (no-in-edge nodes keep their label by winning their own

@@ -559,10 +559,11 @@ def clean_corpus(
     This is the composition a production corpus build runs before training;
     each stage is independently oracle-checked, and this face is too.
 
-    Scale shape: the drop list (non-canonical cluster members) and the two
-    gate lists are doc_id-only join sides — the anti/semi joins against the
-    100 TB corpus shuffle ids, never text. The LM is trained on the FULL
-    corpus (pre-filter), matching the oracle.
+    Scale shape: the quality gate is a map-side filter on the corpus scan;
+    the drop list (non-canonical cluster members) and the LM gate list are
+    doc_id-only join sides — the anti/semi joins against the 100 TB corpus
+    shuffle ids, never text. The LM is trained on the FULL corpus
+    (pre-filter), matching the oracle.
 
     ``pair_generator`` picks the near-dup pair source: ``None`` (default)
     uses exact trigram Jaccard (`dedup.neardup_jaccard`) for oracle parity —

@@ -124,8 +124,10 @@ def pagerank(
             # ran one dedicated materialization job per iteration; lazy
             # folds the materialization into the iteration's own dangling-
             # broadcast/step job — the checkpoint still truncates lineage at
-            # compile time and each partition is computed exactly once (the
-            # two consumers read the cached blocks). Nothing unpersists
+            # compile time and keeps at most one cached copy of each
+            # partition (the two consumers read the cached blocks, though
+            # they may race to compute the same partition before its block
+            # lands; the values are deterministic). Nothing unpersists
             # intermediate rank checkpoints, so there is no lost-block
             # hazard (the connected_components counter-case). Matched-load
             # min-of-4 A/B: 6.42 vs 6.75 s on pagerank_docs, every lazy run

@@ -13,17 +13,22 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from baum_welch_spark.hmm import HMM
-from baum_welch_spark.hmm.em import KIND_LOGLIK, decode, encode
-from baum_welch_spark.hmm.fit import count_shapes, fit
+from baum_welch_spark.hmm.em import KIND_LOGLIK, block_shapes, decode, encode
+from baum_welch_spark.hmm.fit import fit
 from baum_welch_spark.operators.sequences import build_sequences
 from baum_welch_spark.sources.io import load_table
 
 from conftest import SF0001
 
 
+def _shapes(n_hidden, n_observed):
+    """The discrete model's block shapes, plus the loglik row's."""
+    return {**block_shapes(HMM.uniform(n_hidden, n_observed).blocks()), KIND_LOGLIK: (1,)}
+
+
 def _roundtrip(blocks, loglik=None, group=None):
     frame = encode(blocks, loglik, group=group)
-    shapes = {k: np.shape(v) for k, v in blocks.items()}
+    shapes = {**block_shapes(blocks), KIND_LOGLIK: (1,)}
     return frame, decode(frame.to_dict("records"), shapes)
 
 
@@ -78,7 +83,7 @@ def test_codec_roundtrip_grouped_blocks_bit_exact():
     assert list(frame.columns) == ["group", "kind", "i", "j", "weight"]
     for g, (blocks, ll) in per_group.items():
         rows = frame[frame.group == g].to_dict("records")
-        got, got_ll = decode(rows, {k: v.shape for k, v in blocks.items()})
+        got, got_ll = decode(rows, {**block_shapes(blocks), KIND_LOGLIK: (1,)})
         assert got_ll == ll
         for k, v in blocks.items():
             _assert_bits_equal(got[k], v)
@@ -95,7 +100,7 @@ def test_codec_sparse_model_rows_absent_cells_are_exact_zero():
         {"kind": "transition", "i": 1, "j": 1, "prob": 1.0},
         {"kind": "emission", "i": 1, "j": 2, "prob": 0.123456},
     ]
-    got, ll = decode(rows, count_shapes(2, 3), "prob")
+    got, ll = decode(rows, _shapes(2, 3), "prob")
     assert ll == 0.0
     _assert_bits_equal(got["initial"], np.array([0.0, 1.0]))
     _assert_bits_equal(got["transition"], np.array([[0.25, 0.75], [0.0, 1.0]]))
@@ -107,7 +112,7 @@ def test_codec_sparse_model_rows_absent_cells_are_exact_zero():
 
 def test_decode_rejects_unknown_kind():
     with pytest.raises(ValueError, match="unexpected stripe kind"):
-        decode([{"kind": "bogus", "i": 0, "j": 0, "weight": 1.0}], count_shapes(2, 2))
+        decode([{"kind": "bogus", "i": 0, "j": 0, "weight": 1.0}], _shapes(2, 2))
 
 
 @pytest.mark.parametrize("bad", [np.nan, np.inf])
@@ -115,14 +120,73 @@ def test_decode_raises_on_non_finite_counts_naming_the_kind(bad):
     frame = encode({"initial": np.ones(2), "transition": np.array([[1.0, bad], [1.0, 1.0]]),
                     "emission": np.ones((2, 2))}, loglik=0.0)
     with pytest.raises(FloatingPointError, match="'transition'"):
-        decode(frame.to_dict("records"), count_shapes(2, 2))
+        decode(frame.to_dict("records"), _shapes(2, 2))
+
+
+@pytest.mark.parametrize("cell", [(0, 2), (0, -1), (2, 0), (-1, 1)])
+def test_decode_rejects_a_cell_outside_its_block(cell):
+    """An out-of-range (i, j) would otherwise land in another cell of the
+    flat block (or wrap around from its end) without a trace."""
+    i, j = cell
+    with pytest.raises(ValueError, match="'transition' cell outside its block shape"):
+        decode([{"kind": "transition", "i": i, "j": j, "weight": 1.0}], _shapes(2, 2))
+    rows = HMM.uniform(2, 3).to_rows()
+    rows.loc[len(rows)] = ["transition", i, j, 0.0]
+    with pytest.raises(ValueError, match="cell outside its block shape"):
+        HMM.from_rows(rows)
+
+
+def test_decode_reads_loglik_rows_only_when_listed():
+    """A loglik row is a stripe side channel, not a model cell: decode
+    rejects it unless the caller lists KIND_LOGLIK among its kinds."""
+    rows = [{"kind": "initial", "i": 0, "j": 0, "value": 1.0},
+            {"kind": KIND_LOGLIK, "i": 0, "j": 0, "value": -5.0}]
+    with pytest.raises(ValueError, match="unexpected stripe kind 'loglik'"):
+        decode(rows, {"initial": (1,)}, "value")
+    got, ll = decode(rows, {"initial": (1,), KIND_LOGLIK: (1,)}, "value")
+    assert ll == -5.0 and list(got) == ["initial"]
+
+
+def test_model_readers_reject_a_loglik_row(spark, tmp_path):
+    """Every model-table reader decodes through the codec without the loglik
+    kind, so a loglik row is a corrupt model, not a row to skip."""
+    from pyspark.errors import PythonException
+
+    from baum_welch_spark.hmm.gaussian import GaussianHMM
+    from baum_welch_spark.hmm.grouped import GROUPED_MODEL_SCHEMA, decode_grouped
+
+    loglik_row = pd.DataFrame({"kind": [KIND_LOGLIK], "i": [0], "j": [0], "prob": [-5.0]})
+    rows = pd.concat([HMM.random(2, 3, seed=1).to_rows(), loglik_row], ignore_index=True)
+    with pytest.raises(ValueError, match="unexpected stripe kind 'loglik'"):
+        HMM.from_rows(rows)
+
+    path = str(tmp_path / "gm")
+    GaussianHMM.random(2, seed=1).write(spark, path)
+    spark.createDataFrame(
+        [(KIND_LOGLIK, 0, 0, -5.0)], schema="kind string, i int, j int, value double"
+    ).write.mode("append").parquet(path)
+    with pytest.raises(ValueError, match="unexpected stripe kind 'loglik'"):
+        GaussianHMM.read(spark, path)
+
+    models = spark.createDataFrame(
+        rows.rename(columns={"prob": "weight"}).assign(group="g", loglik=0.0, n_seqs=1)
+        [["group", "kind", "i", "j", "weight", "loglik", "n_seqs"]],
+        schema=GROUPED_MODEL_SCHEMA,
+    )
+    seqs = spark.createDataFrame(
+        [("g", 1, [0, 1, 2])], "group string, seq_id bigint, obs array<int>"
+    )
+    with pytest.raises(
+        PythonException, match="ValueError: decode: unexpected stripe kind 'loglik'"
+    ):
+        decode_grouped(seqs, models).collect()
 
 
 def test_decode_allows_non_finite_loglik():
     """A -inf loglik (e.g. a labeled path the model rules out) is a value,
     not corrupted statistics."""
     frame = encode({"initial": np.ones(2)}, loglik=-np.inf)
-    _, ll = decode(frame.to_dict("records"), {"initial": (2,)})
+    _, ll = decode(frame.to_dict("records"), {"initial": (2,), KIND_LOGLIK: (1,)})
     assert ll == -np.inf
 
 
@@ -147,7 +211,7 @@ def _partition_stripes(n_parts: int, seed: int = 3):
 
 def test_decode_sums_partitions_in_partition_order_bit_exact():
     parts, table = _partition_stripes(7)
-    got, ll = decode(table, count_shapes(3, 4))
+    got, ll = decode(table, _shapes(3, 4))
     want_ll = 0.0
     for _, p_ll in parts:
         want_ll += p_ll
@@ -158,7 +222,7 @@ def test_decode_sums_partitions_in_partition_order_bit_exact():
             want = want + blocks[kind]
         _assert_bits_equal(got[kind], want)
     # the same rows as a list of dicts decode to the same bits
-    records, rec_ll = decode(table.to_pylist(), count_shapes(3, 4))
+    records, rec_ll = decode(table.to_pylist(), _shapes(3, 4))
     assert rec_ll == ll
     for kind, arr in got.items():
         _assert_bits_equal(records[kind], arr)
@@ -175,7 +239,7 @@ def test_decode_raises_on_null_weight_from_arrow():
         table.schema.get_field_index("weight"), "weight", pa.array(w, pa.float64())
     )
     with pytest.raises(FloatingPointError, match="'emission'"):
-        decode(table, count_shapes(3, 4))
+        decode(table, _shapes(3, 4))
 
 
 def test_decode_reads_an_empty_arrow_table_as_zero():
@@ -184,7 +248,7 @@ def test_decode_reads_an_empty_arrow_table_as_zero():
         {"kind": pa.array([], pa.string()), "i": pa.array([], pa.int32()),
          "j": pa.array([], pa.int32()), "weight": pa.array([], pa.float64())}
     )
-    got, ll = decode(table, count_shapes(2, 2))
+    got, ll = decode(table, _shapes(2, 2))
     assert ll == 0.0
     assert all(not arr.any() for arr in got.values())
 

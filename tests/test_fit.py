@@ -278,9 +278,8 @@ def test_em_trace_chains_rounded_models_and_matches_duckdb(spark, sequences_df):
     oracle whose lap-2 model comes from lap 1's own CTE output."""
     import duckdb
 
-    from baum_welch_spark.hmm.em import decode
+    from baum_welch_spark.hmm.em import block_shapes, decode
     from baum_welch_spark.hmm.fit import (
-        count_shapes,
         em_reestimate,
         em_trace,
         em_trace_oracle_sql,
@@ -293,8 +292,8 @@ def test_em_trace_chains_rounded_models_and_matches_duckdb(spark, sequences_df):
     assert it1 and it2
 
     # chaining contract: lap 2 == one fresh step from lap 1's rounded model
-    b1, _ = decode(it1, count_shapes(4, 5), "prob")
-    m1 = HMM(pi=b1["initial"], A=b1["transition"], B=b1["emission"])
+    b1, _ = decode(it1, block_shapes(model.blocks()), "prob")
+    m1 = HMM.from_blocks(b1)
     fresh = {
         (r.kind, r.i, r.j): r.prob
         for r in em_reestimate(spark, sequences_df, m1).collect()

@@ -27,8 +27,8 @@ def test_grouped_fit_matches_per_group_sequential(spark, events):
     got = fit_grouped(seqs, n_hidden=3, n_observed=n_obs, max_iter=4).collect()
     by_group: dict[str, dict] = {}
     for r in got:
-        by_group.setdefault(r["group"], {"rows": {}, "ll": r["loglik"], "n": r["n_seqs"]})
-        by_group[r["group"]]["rows"][(r["kind"], r["i"], r["j"])] = r["weight"]
+        by_group.setdefault(r["group"], {"rows": [], "ll": r["loglik"], "n": r["n_seqs"]})
+        by_group[r["group"]]["rows"].append((r["kind"], r["i"], r["j"], r["weight"]))
 
     local = seqs.select("group", "seq_id", "obs").collect()
     for g in sorted({r["group"] for r in local}):
@@ -43,12 +43,11 @@ def test_grouped_fit_matches_per_group_sequential(spark, events):
         info = by_group[g]
         assert info["n"] == len(obs)
         assert abs(info["ll"] - trace[-1]) < 1e-8
-        for i in range(3):
-            assert abs(info["rows"][("pi", i, -1)] - model.pi[i]) < 1e-12
-            for j in range(3):
-                assert abs(info["rows"][("A", i, j)] - model.A[i, j]) < 1e-12
-            for k in range(n_obs):
-                assert abs(info["rows"][("B", i, k)] - model.B[i, k]) < 1e-12
+        # one row per model cell, read back through the model's own codec
+        assert len(info["rows"]) == 3 + 3 * 3 + 3 * n_obs
+        fitted = HMM.from_rows(info["rows"])
+        for attr in ("pi", "A", "B"):
+            assert np.abs(getattr(fitted, attr) - getattr(model, attr)).max() < 1e-12
 
 
 def test_grouped_fit_partitioning_invariant(spark, events):
@@ -59,7 +58,7 @@ def test_grouped_fit_partitioning_invariant(spark, events):
     groups = {r["group"] for r in out1}
     assert groups == {"seg0", "seg1", "seg2"}
     for g in groups:
-        pi_sum = sum(r["weight"] for r in out1 if r["group"] == g and r["kind"] == "pi")
+        pi_sum = sum(r["weight"] for r in out1 if r["group"] == g and r["kind"] == "initial")
         assert abs(pi_sum - 1.0) < 1e-9
 
 
@@ -68,7 +67,6 @@ def test_decode_grouped_matches_single_model_decoder(spark, events):
     decoder run with that group's model on that group's sequences."""
     from baum_welch_spark.hmm.decode import viterbi_decode
     from baum_welch_spark.hmm.grouped import decode_grouped
-    from baum_welch_spark.hmm.model import KIND_EMISSION  # noqa: F401 (docs)
 
     n_obs = symbol_dictionary(events, "event_type").count()
     seqs = build_sequences(events).withColumn(
@@ -82,19 +80,9 @@ def test_decode_grouped_matches_single_model_decoder(spark, events):
     assert got
     mrows = models.collect()
     for g in ("seg0", "seg1", "seg2"):
-        pi = np.zeros(3); A = np.zeros((3, 3)); B = np.zeros((3, n_obs))
-        for r in mrows:
-            if r.group != g:
-                continue
-            if r.kind == "pi":
-                pi[r.i] = r.weight
-            elif r.kind == "A":
-                A[r.i, r.j] = r.weight
-            elif r.kind == "B":
-                B[r.i, r.j] = r.weight
+        model = HMM.from_rows([(r.kind, r.i, r.j, r.weight) for r in mrows if r.group == g])
         ref = viterbi_decode(
-            spark, seqs.filter(F.col("group") == g).select("seq_id", "obs"),
-            HMM(pi=pi, A=A, B=B),
+            spark, seqs.filter(F.col("group") == g).select("seq_id", "obs"), model
         ).collect()
         assert ref
         for r in ref:
@@ -165,13 +153,11 @@ def test_distributed_grouped_fit_freezes_converged_groups(spark, events):
         model, _ = sequential_baum_welch(
             HMM.random(3, n_obs, seed=42), obs, max_iter=50, tol=1e-3
         )
-        rows = {(r.kind, r.i, r.j): r.weight for r in out if r.group == g}
-        for i in range(3):
-            assert abs(rows[("pi", i, -1)] - model.pi[i]) < 1e-8
-            for j in range(3):
-                assert abs(rows[("A", i, j)] - model.A[i, j]) < 1e-8
-            for k in range(n_obs):
-                assert abs(rows[("B", i, k)] - model.B[i, k]) < 1e-8
+        rows = [(r.kind, r.i, r.j, r.weight) for r in out if r.group == g]
+        assert len(rows) == 3 + 3 * 3 + 3 * n_obs
+        fitted = HMM.from_rows(rows)
+        for attr in ("pi", "A", "B"):
+            assert np.abs(getattr(fitted, attr) - getattr(model, attr)).max() < 1e-8
 
 
 def test_grouped_reestimate_rows_match_ungrouped_on_single_group(spark, events):
