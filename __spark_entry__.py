@@ -1824,6 +1824,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # any face whose code changes, and any NEW face, must be inside the
         # window the round it ships.
         #
+        # The 27 HMM faces of the next four blocks all re-hashed again when
+        # every batched kernel moved onto the packed time-major layout
+        # (kernel.pack, which replaced the padded octave buckets named
+        # below); each is oracle-exact after the change (tools/check_oracle.py,
+        # sf0.01 and sf0.001).
+        #
         # Batched-decode block: the faces whose source hash changed when the
         # Viterbi decode, scoring and grouped-decode operators moved onto the
         # length-bucketed batch kernels (kernel.viterbi_batch/loglik_batch).

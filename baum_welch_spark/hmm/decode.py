@@ -16,9 +16,10 @@ stays distributed. Scale: no shuffle at all for decode/score (narrow map);
 top-k is one tiny global sort of the scores projection.
 
 Each Arrow batch runs through the batched kernels of ``hmm/kernel.py``
-(viterbi_topk: its own batched list-Viterbi), one padded DP per octave
-length bucket, so the Python-level loop runs max_T times per bucket rather
-than sum(T_s) times. Their contracts:
+(viterbi_topk: its own batched list-Viterbi) on the packed time-major
+layout (``kernel.pack``): the Python-level loop runs max_T times per batch,
+each step over only the sequences still alive, rather than sum(T_s) times.
+Their contracts:
 
   * a sequence with probability 0 under the model scores ``-inf`` (Viterbi
     path arbitrary) and has a NULL posterior, never NaN or a plausible
@@ -37,10 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from baum_welch_spark.hmm.kernel import (
-    _padded_buckets,
     backward_batch,
     forward_batch,
     loglik_batch,
+    pack,
     symbol_emit,
     viterbi_paths,
 )
@@ -99,9 +100,7 @@ def viterbi_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> Dat
         log_emit = symbol_emit(log_B)
         for pdf in batches:
             ids, obs_list = _nonempty(pdf)
-            paths, lls = viterbi_paths(
-                log_pi, log_A, log_emit, _padded_buckets(obs_list, log_B.shape[1]), len(ids)
-            )
+            paths, lls = viterbi_paths(log_pi, log_A, log_emit, obs_list, log_B.shape[1])
             yield pd.DataFrame(
                 {"seq_id": ids, "loglik": lls, "path": [p.tolist() for p in paths]}
             )
@@ -122,28 +121,30 @@ def viterbi_decode_face(spark: SparkSession, sequences: DataFrame, model: HMM) -
     )
 
 
-def _posterior_buckets(pi, A, B, obs_list):
-    """Yield ``(idxs, obs_pad, lens, alpha, scale, ok)`` per range-checked
-    bucket of the non-empty ``obs_list`` (one ``kernel.forward_batch``
-    each). ``ok[s]`` is False for a sequence with probability 0, whose NaN
+def _posterior_chunks(pi, A, B, obs_list):
+    """Yield ``(p, alpha, scale, ok)`` per range-checked ``kernel.pack``
+    chunk ``p`` of the non-empty ``obs_list`` (one ``kernel.forward_batch``
+    each). ``ok[i]`` is False for a sequence with probability 0, whose NaN
     alpha has no posterior: callers emit NULL for it, never its argmax
     (state 0)."""
     emit = symbol_emit(B)
-    for idxs, obs_pad, lens in _padded_buckets(obs_list, B.shape[1]):
+    for p in pack(obs_list, A.shape[0], n_symbols=B.shape[1]):
         with np.errstate(divide="ignore", invalid="ignore"):
-            alpha, scale = forward_batch(pi, A, emit, obs_pad, lens)
-        yield idxs, obs_pad, lens, alpha, scale, (scale > 0).all(axis=0)
+            alpha, scale = forward_batch(pi, A, emit(p.obs), p)
+        ok = np.ones(len(p.idx), dtype=bool)
+        ok[p.seq[~(scale > 0)]] = False
+        yield p, alpha, scale, ok
 
 
-def _gamma_buckets(pi, A, B, obs_list):
-    """Yield ``(idxs, lens, gamma, ok)`` per bucket of
-    :func:`_posterior_buckets`, with the unnormalized posteriors
-    gamma = alpha * beta (``kernel.backward_batch``)."""
+def _gamma_chunks(pi, A, B, obs_list):
+    """Yield ``(p, gamma, ok)`` per chunk of :func:`_posterior_chunks`,
+    with the unnormalized posteriors gamma = alpha * beta
+    (``kernel.backward_batch``)."""
     emit = symbol_emit(B)
-    for idxs, obs_pad, lens, alpha, scale, ok in _posterior_buckets(pi, A, B, obs_list):
+    for p, alpha, scale, ok in _posterior_chunks(pi, A, B, obs_list):
         with np.errstate(divide="ignore", invalid="ignore"):
-            beta = backward_batch(A, emit, obs_pad, lens, scale)
-        yield idxs, lens, alpha * beta, ok
+            beta = backward_batch(A, emit(p.obs), p, scale)
+        yield p, alpha * beta, ok
 
 
 def posterior_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> DataFrame:
@@ -158,7 +159,7 @@ def posterior_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> D
 
     Output: (seq_id, path_str) with path_str the comma-joined argmax states;
     NULL for a sequence with probability 0 under the model, which has no
-    posterior (:func:`_gamma_buckets`). A symbol outside ``0..M-1``
+    posterior (:func:`_gamma_chunks`). A symbol outside ``0..M-1``
     raises ``ValueError``.
     """
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
@@ -168,11 +169,10 @@ def posterior_decode(spark: SparkSession, sequences: DataFrame, model: HMM) -> D
         for pdf in batches:
             ids, obs_list = _nonempty(pdf)
             paths = [None] * len(ids)
-            for idxs, lens, gamma, ok in _gamma_buckets(pi, A, B, obs_list):
-                states = np.ascontiguousarray(gamma.argmax(axis=2).T)
-                for col, i in enumerate(idxs):
-                    if ok[col]:
-                        paths[i] = ",".join(map(str, states[col, : lens[col]].tolist()))
+            for p, gamma, ok in _gamma_chunks(pi, A, B, obs_list):
+                for i, good, states in zip(p.idx, ok, p.unpack(gamma.argmax(axis=1))):
+                    if good:
+                        paths[i] = ",".join(map(str, states.tolist()))
             yield pd.DataFrame({"seq_id": ids, "path_str": paths})
 
     return sequences.mapInPandas(decode, schema="seq_id bigint, path_str string")
@@ -495,7 +495,7 @@ def state_occupancy(spark: SparkSession, sequences: DataFrame, model: HMM) -> Da
     the decodes: model broadcast, narrow map, no shuffle; output is
     N rows per sequence. A sequence with probability 0 under the model has
     no posterior: its N rows carry a NULL occupancy
-    (:func:`_gamma_buckets`). A symbol outside ``0..M-1`` raises
+    (:func:`_gamma_chunks`). A symbol outside ``0..M-1`` raises
     ``ValueError``.
     """
     bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
@@ -507,11 +507,9 @@ def state_occupancy(spark: SparkSession, sequences: DataFrame, model: HMM) -> Da
             ids, obs_list = _nonempty(pdf)
             # NaN crosses Arrow as NULL: the impossible sequences' rows
             occ = np.full((len(ids), n), np.nan)
-            for idxs, lens, g, ok in _gamma_buckets(pi, A, B, obs_list):
-                g = g / g.sum(axis=2, keepdims=True)
-                valid = np.arange(len(g))[:, None] < lens
-                occ[idxs] = np.where(
-                    ok[:, None], np.where(valid[:, :, None], g, 0.0).sum(axis=0), np.nan
+            for p, g, ok in _gamma_chunks(pi, A, B, obs_list):
+                occ[p.idx] = np.where(
+                    ok[:, None], p.seq_sum(g / g.sum(axis=1, keepdims=True)), np.nan
                 )
             # round half-AWAY-from-zero to match DuckDB's round():
             # np.round is half-even, so an occupancy landing exactly on
@@ -745,8 +743,8 @@ def score_sequences(spark: SparkSession, sequences: DataFrame, model: HMM) -> Da
             ids, obs_list = _nonempty(pdf)
             lens = np.array([len(o) for o in obs_list], dtype=np.int32)
             lls = np.empty(len(ids))
-            for idxs, obs_pad, bucket_lens in _padded_buckets(obs_list, B.shape[1]):
-                lls[idxs] = loglik_batch(pi, A, emit, obs_pad, bucket_lens).sum(axis=0)
+            for p in pack(obs_list, A.shape[0], n_symbols=B.shape[1]):
+                lls[p.idx] = p.seq_sum(loglik_batch(pi, A, emit(p.obs), p))
             yield pd.DataFrame(
                 {"seq_id": ids, "t_len": lens, "loglik": lls, "avg_loglik": lls / lens}
             )
@@ -807,45 +805,38 @@ def _viterbi_topk_one(log_pi, log_A, log_B, obs, k):
     return out
 
 
-def _viterbi_topk_batch_core(log_pi, log_A, log_B, obs_pad, lens, k):
-    """One padded (S, N, k) list-Viterbi DP over ``obs_pad`` (Tmax, S) and
-    its (S,) ``lens``, for sequences whose lengths are within one octave
-    (see _viterbi_topk_batch). Bitwise-equal to looping
-    :func:`_viterbi_topk_one`: every DP cell is the same
-    two-operand IEEE add in the same order, the candidate flattening is the
-    same i-major/r-minor ravel, and the stable argsort resolves ties by the
-    same flat ordinal — asserted exactly in tests/test_decode.py.
-
-    Padding semantics: past a sequence's end the (N, k) score block is
-    carried forward unchanged, so the final block equals the block at the
-    sequence's own last step; backpointers written at padded steps are
-    never read (backtrack starts at each sequence's own T-1).
-    Returns a list aligned with the columns of obs_pad of [(loglik, path)]
-    best-first."""
-    Tmax, S = obs_pad.shape
+def _viterbi_topk_batch_core(log_pi, log_A, log_B, p, k):
+    """One (n, N, k) list-Viterbi DP over the packed chunk ``p``
+    (kernel.Packed). Bitwise-equal to looping :func:`_viterbi_topk_one`:
+    every DP cell is the same two-operand IEEE add in the same order, the
+    candidate flattening is the same i-major/r-minor ravel, and the stable
+    argsort resolves ties by the same flat ordinal — asserted exactly in
+    tests/test_decode.py. Each sequence's (N, k) score block is kept as
+    it leaves the packed steps, and its backtrack starts at its own last
+    row. Returns a list in chunk order of [(loglik, path)] best-first."""
     N = log_pi.shape[0]
-    valid = np.arange(Tmax)[:, None] < lens[None, :]  # (T, S)
-
-    delta = np.full((S, N, k), -np.inf)
-    delta[:, :, 0] = log_pi[None, :] + log_B[:, obs_pad[0]].T
-    bp = np.zeros((Tmax, S, N, k, 2), dtype=np.int32)
-    for t in range(1, Tmax):
-        # (S, N_prev, N_cur, k) -> (S, N_cur, N_prev*k): i-major/r-minor,
+    log_emit = symbol_emit(log_B)(p.obs)  # (rows, N)
+    sizes = p.sizes + [0]
+    delta = np.full((sizes[0], N, k), -np.inf)
+    delta[:, :, 0] = log_pi[None, :] + log_emit[: sizes[0]]
+    final = delta.copy()
+    bp = np.zeros((len(p.obs), N, k, 2), dtype=np.int32)
+    for t in range(1, len(p.sizes)):
+        lo, n = p.offs[t], sizes[t]
+        # (n, N_prev, N_cur, k) -> (n, N_cur, N_prev*k): i-major/r-minor,
         # the exact ravel order of the serial kernel's per-j cand.ravel()
-        cand = delta[:, :, None, :] + log_A[None, :, :, None]
-        flat = np.ascontiguousarray(cand.transpose(0, 2, 1, 3)).reshape(S, N, N * k)
-        top = np.argsort(-flat, axis=-1, kind="stable")[:, :, :k]  # (S, N, k)
+        cand = delta[:n, :, None, :] + log_A[None, :, :, None]
+        flat = np.ascontiguousarray(cand.transpose(0, 2, 1, 3)).reshape(n, N, N * k)
+        top = np.argsort(-flat, axis=-1, kind="stable")[:, :, :k]  # (n, N, k)
         vals = np.take_along_axis(flat, top, axis=-1)
-        emit = log_B[:, obs_pad[t]].T  # (S, N)
-        nd = np.where(vals > -np.inf, vals + emit[:, :, None], -np.inf)
-        bp[t, :, :, :, 0] = top // k
-        bp[t, :, :, :, 1] = top % k
-        delta = np.where(valid[t][:, None, None], nd, delta)
+        delta = np.where(vals > -np.inf, vals + log_emit[lo : lo + n, :, None], -np.inf)
+        bp[lo : lo + n, :, :, 0] = top // k
+        bp[lo : lo + n, :, :, 1] = top % k
+        final[sizes[t + 1] : n] = delta[sizes[t + 1] :]
 
     out_all = []
-    for s in range(S):
-        T = int(lens[s])
-        flat = delta[s].ravel()
+    for s, T in enumerate(p.lens.tolist()):
+        flat = final[s].ravel()
         order = np.argsort(-flat, kind="stable")
         order = order[flat[order] > -np.inf][:k]
         out = []
@@ -854,45 +845,28 @@ def _viterbi_topk_batch_core(log_pi, log_A, log_B, obs_pad, lens, k):
             path = np.empty(T, dtype=np.int32)
             path[T - 1] = j
             for t in range(T - 1, 0, -1):
-                j, r = int(bp[t, s, j, r, 0]), int(bp[t, s, j, r, 1])
+                row = p.offs[t] + s
+                j, r = int(bp[row, j, r, 0]), int(bp[row, j, r, 1])
                 path[t - 1] = j
             out.append((float(flat[idx]), path))
         out_all.append(out)
     return out_all
 
 
-#: max Tmax × S × N × k DP cells per _viterbi_topk_batch_core call — the
-#: backpointer tensor is (Tmax, S, N, k, 2) int32, so this bounds it at
-#: ~134 MB no matter how many long sequences share an Arrow batch (the
-#: batched E-step streams its alpha the same way length-bucketing bounds
-#: its padding; here the bp tensor must persist until backtrack, so the
-#: bound is an explicit sequence-axis chunk instead)
-_TOPK_DP_BUDGET = 1 << 24
-
-
 def _viterbi_topk_batch(log_pi, log_A, log_B, obs_list, k):
-    """Length-skew-hardened batched list-Viterbi (VERDICT-r10 #2): octave
-    length-bucketing (kernel._length_buckets) bounds padded DP cost at 2×
-    the true work exactly as the batched E-step does, and within a bucket
-    the DP vectorizes across the sequence axis — the per-sequence Python
-    dispatch that made this the slowest decode face is gone. Buckets are
-    further chunked on the sequence axis so the per-call backpointer
-    tensor stays under ``_TOPK_DP_BUDGET`` cells (each sequence's DP is
-    independent, so chunking is bitwise-invisible). A symbol outside
-    ``0..M-1`` raises ``ValueError`` (kernel._padded_buckets), as in the
-    other decode operators. Returns a list aligned with obs_list."""
+    """Batched list-Viterbi over the packed time-major layout
+    (``kernel.pack``): each step runs only the sequences still alive, so
+    length skew costs no padding, and the DP vectorizes across the
+    sequence axis. A chunk's back-pointers (rows, N, k, 2) and per-step
+    candidate block (n, N, N, k) stay under ``kernel._CELL_BUDGET`` cells
+    (each sequence's DP is independent, so chunking is bitwise-invisible).
+    A symbol outside ``0..M-1`` raises ``ValueError``, as in the other
+    decode operators. Returns a list aligned with obs_list."""
     N = log_pi.shape[0]
     results: list = [None] * len(obs_list)
-    for idxs, obs_pad, lens in _padded_buckets(obs_list, log_B.shape[1]):
-        cap = max(1, _TOPK_DP_BUDGET // max(1, obs_pad.shape[0] * N * k))
-        for lo in range(0, len(idxs), cap):
-            sub_lens = lens[lo : lo + cap]
-            sub_pad = obs_pad[: int(sub_lens.max()), lo : lo + cap]
-            outs = _viterbi_topk_batch_core(
-                log_pi, log_A, log_B, sub_pad, sub_lens, k
-            )
-            for i, out in zip(idxs[lo : lo + cap], outs):
-                results[i] = out
+    for p in pack(obs_list, 2 * N * k, N * N * k, n_symbols=log_B.shape[1]):
+        for i, out in zip(p.idx, _viterbi_topk_batch_core(log_pi, log_A, log_B, p, k)):
+            results[i] = out
     return results
 
 
@@ -905,8 +879,8 @@ def viterbi_topk(
     separates a dominant MAP path from a near-tie that posterior_entropy
     flags. Same scale shape as viterbi_decode: broadcast model, narrow
     Arrow map, no shuffle; per-sequence cost O(T N^2 k log k), vectorized
-    across the Arrow batch's sequence axis with octave length-bucketing
-    (same skew bound as the batched E-step)."""
+    across the Arrow batch's sequence axis on the packed layout of the
+    batched E-step."""
     model = model.validate()
     with np.errstate(divide="ignore"):
         bc = spark.sparkContext.broadcast(

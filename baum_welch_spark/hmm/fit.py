@@ -92,7 +92,7 @@ def e_step_udf(bc_model, weighted: bool = False):
                 continue
             obs_list = [o for o, _ in kept]
             saw_data = True
-            # batched padded DP: Python loop is O(max_T) per Arrow batch,
+            # batched packed DP: Python loop is O(max_T) per Arrow batch,
             # not O(sum T) — see kernel.e_step_counts_batch
             ll += e_step_counts_batch(
                 pi, A, B, obs_list, counts.pi, counts.A, counts.B,

@@ -18,7 +18,7 @@ Observations are the ``events.value`` column (sequences built by
 the discrete corpus).
 
 The E-step, score and Viterbi run the discrete family's batched kernels
-(hmm/kernel.py) on length buckets of the padded values; only the emission
+(hmm/kernel.py) on the packed time-major values; only the emission
 term differs: the log-density ``c1_j − (x − μ_j)²·c2_j`` (c1 = −½ln 2πσ²,
 c2 = 1/2σ², :func:`log_density`) and its exp. A zero forward mass raises
 ``FloatingPointError`` naming the step.
@@ -71,13 +71,12 @@ from baum_welch_spark.hmm.em import (
     sum_stripes,
 )
 from baum_welch_spark.hmm.kernel import (
-    _pad_buckets,
-    _valid,
     forward_backward,
     forward_backward_batch,
     loglik_batch,
     normalize_rows,
-    transition_factors,
+    pack,
+    transition_counts,
     viterbi_paths,
 )
 
@@ -210,16 +209,19 @@ def _emit(model: GaussianHMM):
     return lambda x: np.exp(log_emit(x))
 
 
-def _check_mass(log_scale: np.ndarray) -> None:
-    """Raise ``FloatingPointError`` naming the first step (axis 0 of the
-    log scale factors; padding is 0) with zero forward mass. Once a fitted
+def _check_mass(log_scale: np.ndarray, offs) -> None:
+    """Raise ``FloatingPointError`` naming the first step with zero forward
+    mass, from the packed log scale factors and their step offsets
+    (``kernel.Packed.offs``; a single sequence's are 0..T). Once a fitted
     sigma2 hits VAR_FLOOR=1e-6, exp() underflows to 0 beyond |x-mu| ~ 0.04:
     an all-zero emission row would otherwise silently NaN every downstream
     alpha/loglik."""
-    dead = np.isneginf(log_scale).reshape(len(log_scale), -1).any(axis=1)
-    if dead.any():
+    dead = np.flatnonzero(np.isneginf(log_scale))
+    if dead.size:
+        # packed rows run in step order: the first dead row is the first step
+        t = int(np.searchsorted(offs, dead[0], side="right")) - 1
         raise FloatingPointError(
-            f"zero forward mass at t={int(dead.argmax())} — every state's "
+            f"zero forward mass at t={t} — every state's "
             "density underflowed (far-outlier observation or a collapsed "
             "sigma2); widen the variance floor or rescale inputs"
         )
@@ -240,7 +242,7 @@ def e_step_moments(
     with np.errstate(divide="ignore", invalid="ignore"):
         alpha, beta, scale, _ = forward_backward(model.pi, model.A, b.T, np.arange(len(x)))
         log_scale = np.log(scale)
-    _check_mass(log_scale)
+    _check_mass(log_scale, np.arange(len(x) + 1))
     gamma = alpha * beta  # rows sum to 1
     out_pi += gamma[0]
     if x.shape[0] > 1:
@@ -261,24 +263,24 @@ def e_step_moments_batch(
 ) -> float:
     """The E-step over non-empty value sequences: looping
     :func:`e_step_moments`, as one ``kernel.forward_backward_batch`` per
-    length bucket, masked by validity. Returns the summed loglik."""
+    ``kernel.pack`` chunk, the moments flat over its packed rows. Returns
+    the summed loglik."""
     emit = _emit(model)
     total = 0.0
-    for _, x_pad, lens in _pad_buckets(x_list, np.float64):
+    for p in pack(x_list, len(model.pi)):
+        E = emit(p.obs)
         with np.errstate(divide="ignore", invalid="ignore"):
-            alpha, beta, scale = forward_backward_batch(model.pi, model.A, emit, x_pad, lens)
+            alpha, beta, scale = forward_backward_batch(model.pi, model.A, E, p)
             log_scale = np.log(scale)
-        _check_mass(log_scale)
-        valid = _valid(x_pad, lens)
-        gamma = alpha * beta  # (T, S, N); rows at valid t sum to 1
-        out_pi += gamma[0].sum(axis=0)
-        g, x = gamma[valid], x_pad[valid]
-        out_m[:, 0] += g.sum(axis=0)
-        out_m[:, 1] += g.T @ x
-        out_m[:, 2] += g.T @ (x * x)
-        if x_pad.shape[0] > 1:
-            wa, wb = transition_factors(alpha, beta, scale, emit, x_pad, valid)
-            out_A += model.A * (wa.T @ wb)
+        _check_mass(log_scale, p.offs)
+        out_A += transition_counts(model.A, alpha, beta, scale, E, p)
+        gamma = alpha  # alpha * beta in place: rows sum to 1
+        gamma *= beta
+        x = p.obs
+        out_pi += gamma[: p.sizes[0]].sum(axis=0)
+        out_m[:, 0] += gamma.sum(axis=0)
+        out_m[:, 1] += gamma.T @ x
+        out_m[:, 2] += gamma.T @ (x * x)
         total += float(log_scale.sum())
     return total
 
@@ -415,9 +417,7 @@ def viterbi_gauss(
         log_emit = log_density(m)
         for pdf in batches:
             ids, x_list = _nonempty(pdf)
-            paths, lls = viterbi_paths(
-                lpi, lA, log_emit, _pad_buckets(x_list, np.float64), len(ids)
-            )
+            paths, lls = viterbi_paths(lpi, lA, log_emit, x_list)
             yield pd.DataFrame({
                 "seq_id": ids, "loglik": lls,
                 "path_str": [",".join(map(str, p.tolist())) for p in paths],
@@ -438,8 +438,8 @@ def score_gauss(
     spark: SparkSession, sequences: DataFrame, model: GaussianHMM
 ) -> DataFrame:
     """(seq_id, t_len, loglik, avg_loglik): marginal log-likelihood via the
-    scaled forward recursion, one ``kernel.loglik_batch`` call per length
-    bucket of an Arrow batch. A zero forward mass raises
+    scaled forward recursion, one ``kernel.loglik_batch`` call per packed
+    chunk of an Arrow batch. A zero forward mass raises
     ``FloatingPointError``."""
     return _score_gauss_unchecked(spark, sequences, model.validate())
 
@@ -460,10 +460,10 @@ def _score_gauss_unchecked(
             ids, x_list = _nonempty(pdf)
             tls = np.array([len(x) for x in x_list], dtype=np.int32)
             lls = np.empty(len(ids))
-            for idxs, x_pad, lens in _pad_buckets(x_list, np.float64):
-                log_scale = loglik_batch(m.pi, m.A, emit, x_pad, lens)
-                _check_mass(log_scale)
-                lls[idxs] = log_scale.sum(axis=0)
+            for p in pack(x_list, len(m.pi)):
+                log_scale = loglik_batch(m.pi, m.A, emit(p.obs), p)
+                _check_mass(log_scale, p.offs)
+                lls[p.idx] = p.seq_sum(log_scale)
             yield pd.DataFrame(
                 {"seq_id": ids, "t_len": tls, "loglik": lls, "avg_loglik": lls / tls}
             )

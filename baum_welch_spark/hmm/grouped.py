@@ -4,7 +4,7 @@ reference dataflow (reference trains exactly one HMM; SURVEY §2.4 D2).
 
 Spark shape: ``applyInPandas`` over ``groupBy(group_col)`` — each group's
 sequences land in one task, which runs the NumPy batched EM
-(``kernel.batched_baum_welch`` — the same length-bucketed vectorized E-step
+(``kernel.batched_baum_welch`` — the same packed vectorized E-step
 the distributed fit's Arrow batches run, pinned against the per-sequence
 ``sequential_baum_welch`` oracle in tests). This is the right tool when models are many and
 each group's data fits a task (the common per-domain case); the distributed
@@ -57,7 +57,7 @@ def fit_grouped(
         # fixed accumulation order: rows reach the task in partition-
         # dependent order, and float count-summation order would otherwise
         # leak ulp differences into the trained model (the batched kernel's
-        # length-bucketing is deterministic given this sorted order, so the
+        # stable length sort is deterministic given this sorted order, so the
         # result stays partitioning-invariant)
         pdf = pdf.sort_values("seq_id")
         seqs = [np.asarray(o, dtype=np.int64) for o in pdf["obs"]]
@@ -200,7 +200,7 @@ def decode_grouped(
     Output: (group, seq_id, loglik, path_str) — Viterbi joint log-prob and
     the comma-joined best path.
     """
-    from baum_welch_spark.hmm.kernel import _padded_buckets, symbol_emit, viterbi_paths
+    from baum_welch_spark.hmm.kernel import symbol_emit, viterbi_paths
 
     def decode(models_pdf: pd.DataFrame, seqs_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(models_pdf) or not len(seqs_pdf):
@@ -216,8 +216,7 @@ def decode_grouped(
         seqs_pdf = seqs_pdf[keep]
         obs_list = list(seqs_pdf["obs"])
         paths, lls = viterbi_paths(
-            log_pi, log_A, symbol_emit(log_B), _padded_buckets(obs_list, model.n_observed),
-            len(obs_list),
+            log_pi, log_A, symbol_emit(log_B), obs_list, model.n_observed
         )
         return pd.DataFrame(
             {

@@ -1,9 +1,12 @@
 """NumPy DP kernels: one batched scaled forward-backward, forward-only and
 Viterbi recursion for every HMM operator of both emission families.
 
-Each batched kernel runs one padded octave length bucket at once
-(:func:`_pad_buckets`) and sees the observations only through ``emit``,
-which maps a step's observations to their (S, N) emission rows:
+Each batched kernel runs one chunk of an Arrow batch's sequences in the
+packed time-major layout (:class:`Packed`, :func:`pack`): sorted by length,
+longest first, so step t touches only the contiguous rows of the sequences
+still alive, and a recursion runs max T Python steps with no padding or
+validity mask. The kernels see the observations only through their
+(rows, N) emission rows, gathered once per chunk by an ``emit`` function:
 :func:`symbol_emit` of B (or log B) for the discrete family, the Gaussian
 densities in ``hmm/gaussian.py``. The per-sequence :func:`forward_backward`
 and :func:`e_step_counts` stay as the references tests pin them against.
@@ -168,7 +171,7 @@ def batched_baum_welch(
 ) -> tuple[HMM, list[float]]:
     """EM to the same fixed point as :func:`sequential_baum_welch`, with the
     E-step vectorized ACROSS sequences (:func:`e_step_counts_batch` — the
-    same length-bucketed kernel the distributed fit's Arrow batches run).
+    same packed kernel the distributed fit's Arrow batches run).
     Identical quantities modulo float summation order; parity with the
     per-sequence loop is pinned in tests at the same tolerance class as the
     distributed-vs-sequential pin. This is the in-task trainer for
@@ -192,26 +195,13 @@ def batched_baum_welch(
     return model, trace
 
 
-def _length_buckets(lens: list[int]) -> list[list[int]]:
-    """Octave length-bucketing for the batched E-step (VERDICT-r9 #5 /
-    SURVEY §7 hard part #1): indices grouped by bit_length(T), so within a
-    bucket max_T < 2·min_T and the padded DP cost Σ_b (maxT_b × S_b) is
-    bounded by 2 × Σ_s T_s REGARDLESS of length skew. Without this, one
-    pathological 10⁵-length sequence in an Arrow batch of 10³ short ones
-    pads EVERY sequence to 10⁵ — ~10³× the true work (and a (Tmax, S, N)
-    alpha array in the GBs)."""
-    buckets: dict[int, list[int]] = {}
-    for idx, t in enumerate(lens):
-        buckets.setdefault(int(t).bit_length(), []).append(idx)
-    return [buckets[k] for k in sorted(buckets)]
-
-
-#: max S × N × N cells of one Viterbi step's candidate block: buckets are
-#: split on the sequence axis above this, so a wide model on a large Arrow
-#: batch cannot allocate a GB-sized temporary (each sequence's DP is
-#: independent, so the split is bitwise-invisible; N=16 never splits an
-#: Arrow batch of 10k sequences)
-_VITERBI_CAND_BUDGET = 1 << 22
+#: max cells of a packed chunk's largest array (:func:`pack`): the
+#: alpha/beta/psi block (rows, N), Viterbi's per-step candidate block
+#: (n_t, N, N) or top-k's back-pointers (rows, N, k, 2) — 32 MiB of float64,
+#: whatever the Arrow batch holds. Each sequence's DP is independent, so
+#: the split is invisible in the results; an ~80k-symbol batch at N=16 is
+#: one chunk.
+_CELL_BUDGET = 1 << 22
 
 
 def check_symbols(obs: np.ndarray, n_symbols: int) -> None:
@@ -228,25 +218,81 @@ def check_symbols(obs: np.ndarray, n_symbols: int) -> None:
         )
 
 
-def _pad_buckets(seqs: list, dtype):
-    """Yield ``(idxs, pad, lens)`` per octave length bucket of ``seqs``
-    (:func:`_length_buckets`): ``pad`` is the bucket's observations as a
-    (Tmax, S) array of ``dtype``, zero past each sequence's end, and
-    ``lens`` its (S,) lengths."""
-    for idxs in _length_buckets([len(o) for o in seqs]):
-        lens = np.array([len(seqs[i]) for i in idxs], dtype=np.int64)
-        pad = np.zeros((int(lens.max()), len(idxs)), dtype=dtype)
-        for col, i in enumerate(idxs):
-            pad[: lens[col], col] = seqs[i]
-        yield idxs, pad, lens
+class Packed:
+    """S sequences in the packed time-major layout (as PyTorch's
+    ``PackedSequence``): sorted by length, longest first, step t of the
+    i-th sequence sits at row ``offs[t] + i`` of one flat array, for
+    i < ``sizes[t]``, the number of sequences longer than t. A recursion's
+    step t so touches only the contiguous rows ``offs[t] : offs[t] +
+    sizes[t]``, and the same sequences' step t-1 is the prefix of the
+    step before: no padding, no validity mask.
+
+    ``idx``: the sequences' positions in the caller's list, longest first;
+    ``lens``: their lengths; ``obs``: the (rows,) observations; ``seq``:
+    each row's sequence (0..S-1); ``row``: each step's row, in
+    sequence-major order; ``last``: each sequence's last row."""
+
+    def __init__(self, seqs: list, idx: np.ndarray, lens: np.ndarray, dtype):
+        s = len(idx)
+        sizes = s - np.cumsum(np.bincount(lens))[:-1]
+        offs = np.concatenate([[0], np.cumsum(sizes)])
+        self.idx, self.lens = idx, lens
+        self.sizes, self.offs = sizes.tolist(), offs.tolist()
+        seq = np.repeat(np.arange(s), lens)
+        self.row = offs[np.arange(len(seq)) - np.repeat(np.cumsum(lens) - lens, lens)] + seq
+        self.seq = self.pack(seq)
+        self.last = offs[lens - 1] + np.arange(s)
+        self.obs = self.pack(np.concatenate([seqs[i] for i in idx]).astype(dtype, copy=False))
+
+    def pack(self, x: np.ndarray) -> np.ndarray:
+        """Rows in sequence-major order (the sequences' steps
+        concatenated, longest sequence first) -> the packed layout."""
+        out = np.empty_like(x)
+        out[self.row] = x
+        return out
+
+    def unpack(self, x: np.ndarray) -> list[np.ndarray]:
+        """Packed rows -> one array per sequence, longest first."""
+        return np.split(x[self.row], np.cumsum(self.lens)[:-1])
+
+    def seq_sum(self, x: np.ndarray) -> np.ndarray:
+        """Per-sequence sums over the steps of packed ``x`` (rows,) or
+        (rows, N), accumulated in step order (``np.bincount``)."""
+        s = len(self.idx)
+        if x.ndim == 1:
+            return np.bincount(self.seq, weights=x, minlength=s)
+        return np.stack([np.bincount(self.seq, weights=c, minlength=s) for c in x.T], axis=1)
+
+    def prev(self) -> np.ndarray:
+        """The row of step t-1 of the same sequence, for every row of a
+        step t >= 1 (rows ``sizes[0]:``, in order)."""
+        sizes = np.asarray(self.sizes)
+        return np.arange(sizes[0], self.offs[-1]) - np.repeat(sizes[:-1], sizes[1:])
 
 
-def _padded_buckets(obs_list: list, n_symbols: int):
-    """:func:`_pad_buckets` for symbol sequences (int64), every bucket
-    range-checked once (:func:`check_symbols`)."""
-    for idxs, obs_pad, lens in _pad_buckets(obs_list, np.int64):
-        check_symbols(obs_pad, n_symbols)
-        yield idxs, obs_pad, lens
+def pack(seqs: list, row_cells: int, step_cells: int = 0, n_symbols: int | None = None):
+    """Yield ``seqs`` (each non-empty) as :class:`Packed` chunks, longest
+    first. A sequence of length T costs ``T * row_cells +
+    step_cells`` cells (its rows of the kernel's widest per-row array, plus
+    its share of its widest per-step block), and a chunk is the longest run
+    of consecutive sequences whose cost stays within ``_CELL_BUDGET`` (at
+    least one). With ``n_symbols`` the sequences are the discrete family's
+    symbols, int64 and range-checked (:func:`check_symbols`); without, the
+    Gaussian family's float64 values."""
+    lens = np.fromiter(map(len, seqs), np.int64, len(seqs))
+    order = np.argsort(-lens, kind="stable")
+    lens = lens[order]
+    cost = np.cumsum(lens * row_cells + step_cells)
+    dtype = np.float64 if n_symbols is None else np.int64
+    lo = 0
+    while lo < len(lens):
+        spent = cost[lo - 1] if lo else 0
+        hi = max(lo + 1, int(np.searchsorted(cost, spent + _CELL_BUDGET, side="right")))
+        p = Packed(seqs, order[lo:hi], lens[lo:hi], dtype)
+        if n_symbols is not None:
+            check_symbols(p.obs, n_symbols)
+        yield p
+        lo = hi
 
 
 def symbol_emit(table: np.ndarray):
@@ -255,169 +301,139 @@ def symbol_emit(table: np.ndarray):
     return np.ascontiguousarray(table.T).__getitem__
 
 
-def _valid(obs_pad: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """(Tmax, S) mask: step t exists in sequence s."""
-    return np.arange(obs_pad.shape[0])[:, None] < lens[None, :]
-
-
 def forward_batch(
-    pi: np.ndarray, A: np.ndarray, emit, obs_pad: np.ndarray, lens: np.ndarray
+    pi: np.ndarray, A: np.ndarray, E: np.ndarray, p: Packed
 ) -> tuple[np.ndarray, np.ndarray]:
-    """The forward recurrence of :func:`forward_backward` across all S
-    sequences of one padded bucket ``obs_pad`` (Tmax, S) with lengths
-    ``lens``, so the Python-level loop runs Tmax times, not sum(T_s) times.
-    ``emit`` is called once per step, so no (Tmax, S, N) emission block is
-    built.
+    """The forward recurrence of :func:`forward_backward` across all
+    sequences of the packed chunk ``p``, whose (rows, N) emission rows are
+    ``E`` (``emit(p.obs)``): the Python-level loop runs max T times, not
+    sum(T_s) times.
 
-    Returns padded ``(alpha_hat, scale)``. Past a sequence's end its scale
-    is pinned to 1 and alpha is carried unchanged; callers mask by
-    validity. A sequence with probability 0 gets a zero scale where its
-    forward mass dies and NaN after it; its batch-mates are untouched."""
-    t_max, s = obs_pad.shape
-    n = A.shape[0]
-    valid = _valid(obs_pad, lens)
-
-    alpha = np.empty((t_max, s, n))
-    scale = np.ones((t_max, s))
-    a = pi[None, :] * emit(obs_pad[0])  # (S, N); every sequence has T >= 1
-    sc = a.sum(axis=1)
-    alpha[0] = a / sc[:, None]
-    scale[0] = sc
-    for t in range(1, t_max):
-        a = (alpha[t - 1] @ A) * emit(obs_pad[t])
-        v = valid[t]
-        sc = np.where(v, a.sum(axis=1), 1.0)
-        alpha[t] = np.where(v[:, None], a / sc[:, None], alpha[t - 1])
-        scale[t] = sc
+    Returns the packed ``(alpha_hat, scale)``. A sequence with probability
+    0 gets a zero scale where its forward mass dies and NaN after it; its
+    batch-mates are untouched."""
+    alpha = np.empty_like(E)
+    scale = np.empty(len(E))
+    s = p.sizes[0]
+    a = np.multiply(pi, E[:s], out=alpha[:s])
+    np.sum(a, axis=1, out=scale[:s])
+    a /= scale[:s, None]
+    for lo, plo, n in zip(p.offs[1:], p.offs, p.sizes[1:]):
+        a = np.matmul(alpha[plo : plo + n], A, out=alpha[lo : lo + n])
+        a *= E[lo : lo + n]
+        np.sum(a, axis=1, out=scale[lo : lo + n])
+        a /= scale[lo : lo + n, None]
     return alpha, scale
 
 
-def backward_batch(
-    A: np.ndarray, emit, obs_pad: np.ndarray, lens: np.ndarray, scale: np.ndarray
-) -> np.ndarray:
-    """The backward recurrence of :func:`forward_backward` over one padded
-    bucket (arguments as in :func:`forward_batch`, ``scale`` its output).
-    Returns the padded beta_hat: 1 past a sequence's end (which also seeds
-    beta[len-1] = 1 exactly); callers mask by validity."""
-    t_max = obs_pad.shape[0]
-    valid = _valid(obs_pad, lens)
-    beta = np.empty((t_max, obs_pad.shape[1], A.shape[0]))
-    beta[t_max - 1] = 1.0
-    for t in range(t_max - 2, -1, -1):
-        bt = (emit(obs_pad[t + 1]) * beta[t + 1]) @ A.T / scale[t + 1][:, None]
-        # invalid t+1 (t >= len-1): beta[t] = 1 — exact for t == len-1,
-        # don't-care (masked) beyond
-        beta[t] = np.where(valid[t + 1][:, None], bt, 1.0)
+def backward_batch(A: np.ndarray, E: np.ndarray, p: Packed, scale: np.ndarray) -> np.ndarray:
+    """The backward recurrence of :func:`forward_backward` over the packed
+    chunk (arguments as in :func:`forward_batch`, ``scale`` its output):
+    the packed beta_hat, 1 at each sequence's last step."""
+    beta = np.ones_like(E)
+    for t in range(len(p.sizes) - 2, -1, -1):
+        lo, nlo, m = p.offs[t], p.offs[t + 1], p.sizes[t + 1]
+        b = np.matmul(E[nlo : nlo + m] * beta[nlo : nlo + m], A.T, out=beta[lo : lo + m])
+        b /= scale[nlo : nlo + m, None]
     return beta
 
 
 def forward_backward_batch(
-    pi: np.ndarray, A: np.ndarray, emit, obs_pad: np.ndarray, lens: np.ndarray
+    pi: np.ndarray, A: np.ndarray, E: np.ndarray, p: Packed
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """:func:`forward_batch` then :func:`backward_batch`: the padded
-    ``(alpha_hat, beta_hat, scale)`` of one bucket."""
-    alpha, scale = forward_batch(pi, A, emit, obs_pad, lens)
-    return alpha, backward_batch(A, emit, obs_pad, lens, scale), scale
+    """:func:`forward_batch` then :func:`backward_batch`: the packed
+    ``(alpha_hat, beta_hat, scale)`` of one chunk."""
+    alpha, scale = forward_batch(pi, A, E, p)
+    return alpha, backward_batch(A, E, p, scale), scale
 
 
-def transition_factors(
-    alpha: np.ndarray, beta: np.ndarray, scale: np.ndarray, emit,
-    obs_pad: np.ndarray, valid: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray]:
-    """``(wa, wb)``, (K, N) over the bucket's K transitions, such that
-    sum_t xi[t] = ``A * (wa.T @ wb)`` (module doc). Needs Tmax > 1."""
-    w = emit(obs_pad[1:])  # (Tmax-1, S, N), a fresh array
-    w *= beta[1:]
-    w /= scale[1:, :, None]
-    trans = valid[1:]  # transition t -> t+1 exists iff t+1 is valid
-    return alpha[:-1][trans], w[trans]
-
-
-def loglik_batch(
-    pi: np.ndarray, A: np.ndarray, emit, obs_pad: np.ndarray, lens: np.ndarray
+def transition_counts(
+    A: np.ndarray, alpha: np.ndarray, beta: np.ndarray, scale: np.ndarray,
+    E: np.ndarray, p: Packed, w: np.ndarray | None = None,
 ) -> np.ndarray:
-    """Forward-only pass over one padded bucket (arguments as in
-    :func:`forward_backward_batch`), keeping no alpha history. Returns the
-    (Tmax, S) per-step log P(o_t | o_0..t-1) = log scale[t], 0 past each
-    sequence's end: a sequence's loglik is its column sum.
+    """sum_t xi[t] over the chunk's transitions (module doc), each scaled
+    by its row's weight ``w`` when given: ``A * (alpha[prev].T @ wb)``
+    with wb = E * beta / scale at every row of a step t >= 1."""
+    s = p.sizes[0]
+    wb = E[s:] * beta[s:]
+    wb /= scale[s:, None]
+    if w is not None:
+        wb *= w[s:, None]
+    return A * (alpha[p.prev()].T @ wb)
+
+
+def loglik_batch(pi: np.ndarray, A: np.ndarray, E: np.ndarray, p: Packed) -> np.ndarray:
+    """Forward-only pass over the packed chunk (arguments as in
+    :func:`forward_batch`), keeping only the last step's alpha. Returns the
+    packed per-step log P(o_t | o_0..t-1) = log scale[t]: a sequence's
+    loglik is its ``p.seq_sum``.
 
     A sequence with probability 0 gets ``-inf`` from the step its forward
     mass dies: its alpha row stays all zeros rather than NaN (0/0), so its
     batch-mates are untouched."""
-    t_max = obs_pad.shape[0]
-    log_sc = np.empty((t_max, obs_pad.shape[1]))
-    with np.errstate(divide="ignore"):
-        a = pi[None, :] * emit(obs_pad[0])  # (S, N)
+    scale = np.empty(len(E))
+    a = pi * E[: p.sizes[0]]
+    for t, (lo, n) in enumerate(zip(p.offs, p.sizes)):
+        if t:
+            a = (alpha[:n] @ A) * E[lo : lo + n]
         sc = a.sum(axis=1)
-        log_sc[0] = np.log(sc)
+        scale[lo : lo + n] = sc
         alpha = a / np.where(sc > 0, sc, 1.0)[:, None]
-        for t in range(1, t_max):
-            a = (alpha @ A) * emit(obs_pad[t])
-            sc = a.sum(axis=1)
-            log_sc[t] = np.where(t < lens, np.log(sc), 0.0)
-            alpha = a / np.where(sc > 0, sc, 1.0)[:, None]
-    return log_sc
+    with np.errstate(divide="ignore"):
+        return np.log(scale)
 
 
 def viterbi_batch(
-    log_pi: np.ndarray, log_A: np.ndarray, log_emit, obs_pad: np.ndarray,
-    lens: np.ndarray,
+    log_pi: np.ndarray, log_A: np.ndarray, LE: np.ndarray, p: Packed
 ) -> tuple[list[np.ndarray], np.ndarray]:
-    """Log-space Viterbi across one padded bucket (arguments as in
-    :func:`forward_backward_batch`, with log-emission rows): returns
-    (paths, scores) aligned with its columns — each path an int32 array of
-    its sequence's length, each score the best path's joint log-probability.
-    BITWISE equal to looping ``decode._viterbi_one``: every DP cell is the same
-    two-operand IEEE add (delta + log A, then + log b), and the argmax
-    over the previous state is first-max like np.argmax (the candidate
-    block is laid out (S, cur, prev) so that reduction runs over the
-    contiguous axis). Past a sequence's end its delta row is carried
-    unchanged, so the final block holds each sequence's delta at its own
-    last step; the backtrack is vectorized and starts each sequence at its
-    own T-1. The bucket is split on the sequence axis so one step's
-    candidate block stays under ``_VITERBI_CAND_BUDGET`` cells. A sequence
-    with probability 0 scores ``-inf`` (path arbitrary)."""
-    n = log_pi.shape[0]
+    """Log-space Viterbi across the packed chunk ``p`` with log-emission
+    rows ``LE``: returns (paths, scores) in chunk order — each path an
+    int32 array of its sequence's length, each score the best path's joint
+    log-probability. BITWISE equal to looping ``decode._viterbi_one``:
+    every DP cell is the same two-operand IEEE add (delta + log A, then +
+    log b), and the argmax over the previous state is first-max like
+    np.argmax (the candidate block is laid out (n, cur, prev) so that
+    reduction runs over the contiguous axis). The backtrack is vectorized
+    and starts each sequence at its own last row. A sequence with
+    probability 0 scores ``-inf`` (path arbitrary)."""
+    n_states = log_pi.shape[0]
     log_AT = np.ascontiguousarray(log_A.T)  # [cur, prev]
-    cap = max(1, _VITERBI_CAND_BUDGET // (n * n))
-    paths: list = []
-    scores = np.empty(len(lens))
-    for lo in range(0, len(lens), cap):
-        part = slice(lo, lo + cap)
-        cl = lens[part]
-        pad = obs_pad[: int(cl.max()), part]
-        t_max, s = pad.shape
-        delta = log_pi[None, :] + log_emit(pad[0])  # (S, N)
-        psi = np.zeros((t_max, s, n), dtype=np.min_scalar_type(n - 1))
-        for t in range(1, t_max):
-            cand = delta[:, None, :] + log_AT  # (S, N cur, N prev)
-            arg = cand.argmax(axis=2)
-            psi[t] = arg
-            step = np.take_along_axis(cand, arg[:, :, None], axis=2)[:, :, 0]
-            delta = np.where((t < cl)[:, None], step + log_emit(pad[t]), delta)
-        scores[part] = delta.max(axis=1)
-        state = delta.argmax(axis=1)
-        path_pad = np.empty((t_max, s), dtype=np.int32)
-        cols = np.arange(s)
-        for t in range(t_max - 1, 0, -1):
-            path_pad[t] = state
-            state = np.where(t < cl, psi[t, cols, state], state)
-        path_pad[0] = state
-        rows = np.ascontiguousarray(path_pad.T)
-        paths.extend(rows[c, : cl[c]] for c in range(s))
-    return paths, scores
+    delta = np.empty_like(LE)
+    psi = np.empty(LE.shape, dtype=np.min_scalar_type(n_states - 1))
+    s = p.sizes[0]
+    np.add(log_pi, LE[:s], out=delta[:s])
+    for lo, plo, n in zip(p.offs[1:], p.offs, p.sizes[1:]):
+        cand = delta[plo : plo + n, None, :] + log_AT  # (n, N cur, N prev)
+        arg = cand.argmax(axis=2)
+        psi[lo : lo + n] = arg
+        step = np.take_along_axis(cand, arg[:, :, None], axis=2)[:, :, 0]
+        np.add(step, LE[lo : lo + n], out=delta[lo : lo + n])
+    final = delta[p.last]
+    scores = final.max(axis=1)
+    state = final.argmax(axis=1)
+    path = np.empty(len(LE), dtype=np.int32)
+    psi_flat = psi.reshape(-1)
+    cells = np.arange(s) * n_states
+    for t in range(len(p.sizes) - 1, 0, -1):
+        lo, n = p.offs[t], p.sizes[t]
+        path[lo : lo + n] = state[:n]
+        state[:n] = psi_flat[lo * n_states + cells[:n] + state[:n]]
+    path[:s] = state
+    return p.unpack(path), scores
 
 
 def viterbi_paths(
-    log_pi: np.ndarray, log_A: np.ndarray, log_emit, buckets, n_seqs: int
+    log_pi: np.ndarray, log_A: np.ndarray, log_emit, seqs: list, n_symbols: int | None = None
 ) -> tuple[list[np.ndarray], np.ndarray]:
-    """:func:`viterbi_batch` over every ``(idxs, obs_pad, lens)`` bucket of
-    ``n_seqs`` sequences: (paths, scores) aligned with the sequences."""
-    paths: list = [None] * n_seqs
-    scores = np.empty(n_seqs)
-    for idxs, obs_pad, lens in buckets:
-        bucket_paths, scores[idxs] = viterbi_batch(log_pi, log_A, log_emit, obs_pad, lens)
-        for i, path in zip(idxs, bucket_paths):
+    """:func:`viterbi_batch` over every :func:`pack` chunk of the
+    non-empty ``seqs`` (``n_symbols`` as in :func:`pack`): (paths, scores)
+    aligned with ``seqs``."""
+    n = log_pi.shape[0]
+    paths: list = [None] * len(seqs)
+    scores = np.empty(len(seqs))
+    for p in pack(seqs, n, n * n, n_symbols):
+        chunk_paths, scores[p.idx] = viterbi_batch(log_pi, log_A, log_emit(p.obs), p)
+        for i, path in zip(p.idx, chunk_paths):
             paths[i] = path
     return paths, scores
 
@@ -434,49 +450,37 @@ def e_step_counts_batch(
 ) -> float:
     """Batched E-step, the hot kernel of the distributed fit: the expected
     counts of looping :func:`e_step_counts`, accumulated into the same out
-    arrays (pinned at 1e-10), with the summed loglik returned. One
-    :func:`forward_backward_batch` per :func:`_padded_buckets` bucket (a
-    symbol outside ``0..M-1`` raises ``ValueError``), counts masked by
-    validity.
+    arrays (pinned at 1e-12), with the summed loglik returned. One
+    :func:`forward_backward_batch` per :func:`pack` chunk of the non-empty
+    ``obs_list`` (a symbol outside ``0..M-1`` raises ``ValueError``); the
+    counts are flat-array operations over the packed rows (B by a
+    per-state ``np.bincount``, which accumulates in ``np.add.at``'s order).
 
     ``weights`` (optional, per sequence): every count contribution and the
     log-likelihood of sequence s scale by weights[s] — the multiplicity
     semantics for training on a DEDUPLICATED corpus where each kept
     sequence represents `n_copies` originals (an integer weight w is
     numerically equivalent to physically replicating the sequence w times,
-    asserted in tests; fractional weights give importance weighting). The
-    weights=None path is byte-identical to the unweighted kernel.
+    asserted in tests; fractional weights give importance weighting).
     """
-    M = B.shape[1]
+    n, M = B.shape
     emit = symbol_emit(B)
-    warr = None if weights is None else np.asarray(weights, dtype=np.float64)
     total = 0.0
-    for idxs, obs_pad, lens in _padded_buckets(obs_list, M):
-        alpha, beta, scale = forward_backward_batch(pi, A, emit, obs_pad, lens)
-        valid = _valid(obs_pad, lens)
-        gamma = alpha * beta  # (T, S, N); rows at valid t sum to 1
-        if warr is None:
-            out_pi += gamma[0].sum(axis=0)
-        else:
-            wgt = warr[idxs]
-            grid = np.broadcast_to(wgt[None, :], obs_pad.shape)
-            out_pi += wgt @ gamma[0]  # (S,) @ (S, N)
-
-        flat_gamma = gamma[valid]  # (K, N)
-        if warr is not None:
-            flat_gamma = flat_gamma * grid[valid][:, None]
-        BT = np.zeros((M, A.shape[0]))
-        np.add.at(BT, obs_pad[valid], flat_gamma)
-        out_B += BT.T
-
-        if obs_pad.shape[0] > 1:
-            wa, wb = transition_factors(alpha, beta, scale, emit, obs_pad, valid)
-            if warr is not None:
-                wb = wb * grid[1:][valid[1:]][:, None]
-            out_A += A * (wa.T @ wb)
-
-        if warr is None:
-            total += float(np.log(scale).sum())
-        else:
-            total += float(np.log(scale).sum(axis=0) @ wgt)
+    for p in pack(obs_list, n, n_symbols=M):
+        E = emit(p.obs)
+        alpha, beta, scale = forward_backward_batch(pi, A, E, p)
+        w = wr = None
+        if weights is not None:
+            w = np.asarray(weights, dtype=np.float64)[p.idx]
+            wr = w[p.seq]  # each row's weight
+        out_A += transition_counts(A, alpha, beta, scale, E, p, wr)
+        gamma = alpha  # alpha * beta in place: rows sum to 1
+        gamma *= beta
+        if wr is not None:
+            gamma *= wr[:, None]
+        out_pi += gamma[: p.sizes[0]].sum(axis=0)
+        for q, g in enumerate(np.ascontiguousarray(gamma.T)):
+            out_B[q] += np.bincount(p.obs, weights=g, minlength=M)
+        log_scale = np.log(scale)
+        total += float(log_scale.sum() if w is None else p.seq_sum(log_scale) @ w)
     return total

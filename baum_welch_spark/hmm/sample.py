@@ -15,9 +15,10 @@ analogue): run the scaled forward pass (alpha_hat rows are the filtered
 marginals P(s_t | o_1..t)), sample s_T ~ alpha_hat[T-1], then backward for
 t = T-2..0 sample s_t ~ alpha_hat[t] * A[:, s_{t+1}] (normalized). Both
 operators here take alpha from the forward half ``kernel.forward_batch``
-(``decode._posterior_buckets``) and run no backward pass; the draws and
-the entropy recursion vectorize across a length bucket's sequences (and
-FFBS's samples).
+(``decode._posterior_chunks``) and run no backward pass; the draws and
+the entropy recursion run on the same packed time-major layout
+(``kernel.Packed``): each step vectorizes across the sequences still
+alive (and FFBS's samples).
 
 Determinism: every uniform is the counter-based portable hash
 ``portable_hash60(seed:seq_id:sample_id:t) / 2^60`` (same convention as
@@ -44,7 +45,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from baum_welch_spark.hmm.decode import _fb_ctes, _lit, _nonempty, _posterior_buckets
+from baum_welch_spark.hmm.decode import _fb_ctes, _lit, _nonempty, _posterior_chunks
 from baum_welch_spark.hmm.model import HMM
 
 SAMPLE_SCHEMA = "seq_id bigint, sample_id int, path_str string"
@@ -55,47 +56,46 @@ _HASH_SCALE = float(1 << 60)
 
 def _u01_block(seed: int, seq_id: int, n_samples: int, t_len: int) -> np.ndarray:
     """(n_samples, T) counter-RNG uniforms: MD5(seed:seq:k:t)[:15 hex]/2^60,
-    the exact convention ffbs_oracle_sql replays in SQL."""
-    return np.array(
-        [
-            [
-                int(
-                    hashlib.md5(f"{seed}:{seq_id}:{k}:{t}".encode()).hexdigest()[:15],
-                    16,
-                )
-                / _HASH_SCALE
-                for t in range(t_len)
-            ]
-            for k in range(n_samples)
-        ]
-    )
+    the exact convention ffbs_oracle_sql replays in SQL. The
+    ``seed:seq:k:`` prefix is hashed once per sample and copied per step;
+    the first 15 hex digits are the digest's first 60 bits."""
+    steps = [str(t).encode() for t in range(t_len)]
+    digests = []
+    for k in range(n_samples):
+        prefix = hashlib.md5(f"{seed}:{seq_id}:{k}:".encode())
+        for step in steps:
+            h = prefix.copy()
+            h.update(step)
+            digests.append(h.digest())
+    first60 = np.frombuffer(b"".join(digests), dtype=">u8")[::2] >> 4
+    return (first60 / _HASH_SCALE).reshape(n_samples, t_len)
 
 
-def _ffbs_batch(
-    A: np.ndarray, alpha: np.ndarray, lens: np.ndarray, u: np.ndarray
-) -> np.ndarray:
-    """(Tmax, S, n_samples) posterior path draws for one padded bucket
-    from its ``alpha`` (Tmax, S, N) and uniforms ``u`` (Tmax, S,
-    n_samples); 0 past each sequence's end. The draw at a sequence's last
-    step counts cumsum thresholds <= u·total (searchsorted side='right'),
-    clipped to N-1 since a counter uniform can be exactly 1.0; the
-    backward draws count thresholds < u·total (as ffbs_oracle_sql)."""
+def _ffbs_batch(A: np.ndarray, alpha: np.ndarray, p, u: np.ndarray) -> np.ndarray:
+    """(rows, n_samples) posterior path draws for the packed chunk ``p``
+    (kernel.Packed) from its ``alpha`` (rows, N) and packed uniforms ``u``
+    (rows, n_samples). The draw at a sequence's last step counts cumsum
+    thresholds <= u·total (searchsorted side='right'), clipped to N-1
+    since a counter uniform can be exactly 1.0; the backward draws count
+    thresholds < u·total (as ffbs_oracle_sql)."""
     n = A.shape[0]
     AT = np.ascontiguousarray(A.T)  # row j is A[:, j]
-    out = np.zeros(u.shape, dtype=np.int32)
-    for t in range(alpha.shape[0] - 1, -1, -1):
-        last = lens - 1 == t
-        if last.any():
-            cdf = np.cumsum(alpha[t, last], axis=1)  # (S_last, N)
-            v = u[t, last] * cdf[:, -1:]
-            out[t, last] = np.minimum((cdf[:, None, :] <= v[:, :, None]).sum(axis=2), n - 1)
-        inner = t < lens - 1
-        if inner.any():
-            # w[s, k] proportional to alpha[t] * A[:, s_{t+1}[s, k]]
-            w = alpha[t, inner][:, None, :] * AT[out[t + 1, inner]]  # (S_in, K, N)
+    out = np.empty(u.shape, dtype=np.int32)
+    sizes = p.sizes + [0]
+    for t in range(len(p.sizes) - 1, -1, -1):
+        lo, m = p.offs[t], sizes[t + 1]
+        last = slice(lo + m, lo + sizes[t])  # the sequences that end at t
+        if last.start < last.stop:
+            cdf = np.cumsum(alpha[last], axis=1)  # (S_last, N)
+            v = u[last] * cdf[:, -1:]
+            out[last] = np.minimum((cdf[:, None, :] <= v[:, :, None]).sum(axis=2), n - 1)
+        if m:
+            # w[i, k] proportional to alpha[t] * A[:, s_{t+1}[i, k]]
+            nxt = p.offs[t + 1]
+            w = alpha[lo : lo + m][:, None, :] * AT[out[nxt : nxt + m]]  # (m, K, N)
             cdfs = np.cumsum(w, axis=2)
-            v = u[t, inner] * cdfs[:, :, -1]
-            out[t, inner] = (cdfs < v[:, :, None]).sum(axis=2)
+            v = u[lo : lo + m] * cdfs[:, :, -1]
+            out[lo : lo + m] = (cdfs < v[:, :, None]).sum(axis=2)
     return out
 
 
@@ -119,14 +119,15 @@ def posterior_sample(
         for pdf in batches:
             ids, obs_list = _nonempty(pdf)
             paths = [[None] * n_samples for _ in ids]
-            for idxs, _, lens, alpha, _, ok in _posterior_buckets(pi, A, B, obs_list):
-                u = np.zeros((alpha.shape[0], len(idxs), n_samples))
-                for col, i in enumerate(idxs):
-                    u[: lens[col], col] = _u01_block(seed, int(ids[i]), n_samples, int(lens[col])).T
-                draws = np.ascontiguousarray(_ffbs_batch(A, alpha, lens, u).transpose(1, 2, 0))
-                for col, i in enumerate(idxs):
-                    if ok[col]:
-                        paths[i] = [",".join(map(str, d[: lens[col]].tolist())) for d in draws[col]]
+            for p, alpha, _, ok in _posterior_chunks(pi, A, B, obs_list):
+                u = p.pack(np.concatenate([
+                    _u01_block(seed, int(ids[i]), n_samples, t_len).T
+                    for i, t_len in zip(p.idx, p.lens.tolist())
+                ]))
+                draws = p.unpack(_ffbs_batch(A, alpha, p, u))
+                for i, good, d in zip(p.idx, ok, draws):
+                    if good:
+                        paths[i] = [",".join(map(str, row)) for row in d.T.tolist()]
             yield pd.DataFrame({
                 "seq_id": np.repeat(np.asarray(ids, dtype=np.int64), n_samples),
                 "sample_id": np.tile(np.arange(n_samples, dtype=np.int32), len(ids)),
@@ -203,27 +204,25 @@ FROM samp GROUP BY 1, 2
 ENTROPY_SCHEMA = "seq_id bigint, t_len int, loglik double, entropy double, entropy_rate double"
 
 
-def _entropy_batch(A: np.ndarray, alpha: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """(S,) H(S_1..T | O) for one padded bucket from its forward filter
-    ``alpha`` (Tmax, S, N), via the forward entropy recursion (Hernando,
-    Crespi, Cybenko 2005: H_t(j), the entropy of the state prefix
-    conditional on s_t = j and o_1..t, updates with the chain rule
-    H_t(j) = sum_i p_ij (H_{t-1}(i) - log p_ij) where
+def _entropy_batch(A: np.ndarray, alpha: np.ndarray, p) -> np.ndarray:
+    """(S,) H(S_1..T | O) for the packed chunk ``p`` (kernel.Packed) from
+    its forward filter ``alpha`` (rows, N), via the forward entropy
+    recursion (Hernando, Crespi, Cybenko 2005: H_t(j), the entropy of the
+    state prefix conditional on s_t = j and o_1..t, updates with the chain
+    rule H_t(j) = sum_i p_ij (H_{t-1}(i) - log p_ij) where
     p_ij = P(s_{t-1} = i | s_t = j, o_1..t) prop alpha_{t-1}(i) A[i, j]) —
-    O(T N^2), no path enumeration. Past a sequence's end its H is carried
-    unchanged, so the final step reads each sequence's own H_{T-1}."""
-    t_max, s, n = alpha.shape
-    H = np.zeros((s, n))
+    O(T N^2), no path enumeration. Step t updates only the sequences still
+    alive, so each keeps its own H_{T-1}."""
+    H = np.zeros((p.sizes[0], A.shape[0]))
     with np.errstate(divide="ignore", invalid="ignore"):
-        for t in range(1, t_max):
-            W = alpha[t - 1][:, :, None] * A  # (S, i prev, j cur), unnormalized p_ij
+        for plo, n in zip(p.offs, p.sizes[1:]):
+            W = alpha[plo : plo + n][:, :, None] * A  # (n, i prev, j cur), unnormalized p_ij
             z = W.sum(axis=1)
             z[z == 0.0] = 1.0
             P = W / z[:, None, :]  # column-stochastic
             logP = np.where(P > 0, np.log(P), 0.0)
-            step = (P * (H[:, :, None] - logP)).sum(axis=1)
-            H = np.where((t < lens)[:, None], step, H)
-        a = alpha[lens - 1, np.arange(s)]
+            H[:n] = (P * (H[:n, :, None] - logP)).sum(axis=1)
+        a = alpha[p.last]
         loga = np.where(a > 0, np.log(a), 0.0)
     return (a * (H - loga)).sum(axis=1)
 
@@ -252,10 +251,10 @@ def posterior_entropy(
             tls = np.array([len(o) for o in obs_list], dtype=np.int32)
             # NaN crosses Arrow as NULL: the impossible sequences' entropies
             lls, hs = np.empty(len(ids)), np.empty(len(ids))
-            for idxs, _, lens, alpha, scale, ok in _posterior_buckets(pi, A, B, obs_list):
+            for p, alpha, scale, ok in _posterior_chunks(pi, A, B, obs_list):
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    lls[idxs] = np.where(ok, np.log(scale).sum(axis=0), -np.inf)
-                hs[idxs] = np.where(ok, _entropy_batch(A, alpha, lens), np.nan)
+                    lls[p.idx] = np.where(ok, p.seq_sum(np.log(scale)), -np.inf)
+                hs[p.idx] = np.where(ok, _entropy_batch(A, alpha, p), np.nan)
             yield pd.DataFrame(
                 {"seq_id": np.asarray(ids, dtype=np.int64), "t_len": tls, "loglik": lls,
                  "entropy": hs, "entropy_rate": hs / tls}

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from baum_welch_spark.hmm.decode import _viterbi_one, viterbi_ctes
 from baum_welch_spark.hmm.em import COUNTS_SCHEMA, FitResult, encode, sum_stripes
 from baum_welch_spark.hmm.fit import normalize_counts, run_discrete_em
-from baum_welch_spark.hmm.kernel import _padded_buckets, m_step, symbol_emit, viterbi_paths
+from baum_welch_spark.hmm.kernel import m_step, symbol_emit, viterbi_paths
 from baum_welch_spark.hmm.model import (
     HMM,
     KIND_EMISSION,
@@ -70,9 +70,7 @@ def hard_count_udf(bc_log_model):
             if not obs_list:
                 continue
             saw_data = True
-            paths, scores = viterbi_paths(
-                log_pi, log_A, log_emit, _padded_buckets(obs_list, m), len(obs_list)
-            )
+            paths, scores = viterbi_paths(log_pi, log_A, log_emit, obs_list, m)
             for score in scores:
                 ll += score
             np.add.at(c.pi, [p[0] for p in paths], 1.0)

@@ -236,7 +236,7 @@ def test_viterbi_topk_batch_bitwise_equals_serial():
     """The vectorized (S, N, k) list-Viterbi (r11) must be BITWISE equal to
     the serial per-sequence kernel — same adds in the same order, same
     i-major/r-minor candidate ravel, same stable-argsort tiebreaks — across
-    mixed lengths spanning several octave buckets, k > N corners, length-1
+    mixed lengths in one packed chunk, k > N corners, length-1
     sequences, and a model with structural zeros (-inf log entries)."""
     import numpy as np
 
@@ -273,12 +273,14 @@ def test_viterbi_topk_batch_bitwise_equals_serial():
 
 
 def test_viterbi_topk_batch_seq_chunk_cap_is_bitwise_invisible(monkeypatch):
-    """The sequence-axis memory cap (bp tensor <= _TOPK_DP_BUDGET cells)
-    must not change results: force a tiny budget so every bucket splits
-    into single-sequence core calls and compare against the uncapped run."""
+    """The cell budget on a chunk's arrays (back-pointers <= kernel.
+    _CELL_BUDGET cells) must not change results: force a tiny budget so
+    the batch splits into single-sequence core calls and compare against
+    the uncapped run."""
     import numpy as np
 
     import baum_welch_spark.hmm.decode as dec
+    import baum_welch_spark.hmm.kernel as kernel
     from baum_welch_spark.hmm import HMM
 
     model = HMM.random(4, 5, seed=11)
@@ -287,8 +289,14 @@ def test_viterbi_topk_batch_seq_chunk_cap_is_bitwise_invisible(monkeypatch):
     rng = np.random.default_rng(3)
     obs_list = [rng.integers(0, 5, size=t).astype(np.int64) for t in (9, 10, 11, 12, 50, 51)]
     full = dec._viterbi_topk_batch(lp, lA, lB, obs_list, 3)
-    monkeypatch.setattr(dec, "_TOPK_DP_BUDGET", 1)
+    calls = []
+    monkeypatch.setattr(kernel, "_CELL_BUDGET", 1)
+    monkeypatch.setattr(
+        dec, "_viterbi_topk_batch_core",
+        lambda *a, core=dec._viterbi_topk_batch_core: calls.append(a) or core(*a),
+    )
     capped = dec._viterbi_topk_batch(lp, lA, lB, obs_list, 3)
+    assert len(calls) == len(obs_list)
     for a, b in zip(full, capped):
         assert len(a) == len(b)
         for (ll_a, p_a), (ll_b, p_b) in zip(a, b):

@@ -22,9 +22,9 @@ from baum_welch_spark.hmm.gaussian import (
     viterbi_gauss,
 )
 from baum_welch_spark.hmm.kernel import (
-    _pad_buckets,
     forward_backward_batch,
     loglik_batch,
+    pack,
     viterbi_paths,
 )
 from baum_welch_spark.sources.io import load_table
@@ -57,21 +57,23 @@ def _enum_joint(model, x):
 
 def test_forward_backward_matches_enumeration():
     """The batched forward-backward and forward-only kernels under the
-    Gaussian emission term, on one padded bucket of lengths 6 and 4."""
+    Gaussian emission term, on one packed chunk of lengths 6 and 4."""
     rng = np.random.default_rng(0)
     model = _model()
     xs = [rng.uniform(0, 10, size=6), rng.uniform(0, 10, size=4)]
-    [(idxs, x_pad, lens)] = _pad_buckets(xs, np.float64)
-    alpha, beta, scale = forward_backward_batch(model.pi, model.A, _emit(model), x_pad, lens)
-    lls = loglik_batch(model.pi, model.A, _emit(model), x_pad, lens).sum(axis=0)
-    for col, i in enumerate(idxs):
+    [p] = pack(xs, N)
+    E = _emit(model)(p.obs)
+    alpha, beta, scale = forward_backward_batch(model.pi, model.A, E, p)
+    lls = p.seq_sum(loglik_batch(model.pi, model.A, E, p))
+    gammas = p.unpack(alpha * beta)
+    for col, i in enumerate(p.idx):
         x = xs[i]
         joint = _enum_joint(model, x)
         total = np.logaddexp.reduce(list(joint.values()))
-        assert np.log(scale[:, col]).sum() == pytest.approx(total, abs=1e-10)
+        assert p.seq_sum(np.log(scale))[col] == pytest.approx(total, abs=1e-10)
         assert lls[col] == pytest.approx(total, abs=1e-10)
         # posterior marginals from enumeration == alpha*beta (gamma)
-        gamma = alpha[:, col] * beta[:, col]
+        gamma = gammas[col]
         for t in range(len(x)):
             for q in range(N):
                 marg = np.logaddexp.reduce(
@@ -86,9 +88,7 @@ def test_viterbi_matches_enumeration():
     xs = [rng.uniform(0, 10, size=t) for t in (5, 5, 4, 6, 5)]
     with np.errstate(divide="ignore"):
         lpi, lA = np.log(model.pi), np.log(model.A)
-    paths, scores = viterbi_paths(
-        lpi, lA, log_density(model), _pad_buckets(xs, np.float64), len(xs)
-    )
+    paths, scores = viterbi_paths(lpi, lA, log_density(model), xs)
     for x, path, ll in zip(xs, paths, scores):
         joint = _enum_joint(model, x)
         best = max(joint, key=joint.get)
@@ -97,9 +97,9 @@ def test_viterbi_matches_enumeration():
 
 
 def test_e_step_moments_batch_matches_per_sequence():
-    """The batched Gaussian E-step over one mixed-length batch (several
-    octave buckets, padding inside each) equals e_step_moments summed per
-    sequence to 1e-10."""
+    """The batched Gaussian E-step over one mixed-length batch (one packed
+    chunk, sequences ending at many steps) equals e_step_moments summed
+    per sequence to 1e-10."""
     rng = np.random.default_rng(3)
     model = _model()
     xs = [rng.uniform(0, 10, size=t) for t in (1, 2, 3, 5, 7, 8, 13, 16, 40, 300, 2, 9)]
@@ -194,9 +194,8 @@ def test_forward_backward_underflow_raises_not_nan():
     """A far-outlier observation with collapsed variances must raise a
     descriptive error naming the step, not silently NaN every downstream
     alpha/loglik (ADVICE-r8: scale[t] == 0 guard), in the batched E-step
-    and the batched scoring pass alike. Only valid steps count: the
-    padding (0.0, ~1e4 sigma from both means) underflows every state's
-    density and must not raise."""
+    and the batched scoring pass alike. Only a sequence's own steps count:
+    the shorter sequence ending early must not raise."""
     m = GaussianHMM(
         pi=np.array([0.5, 0.5]),
         A=np.array([[0.9, 0.1], [0.1, 0.9]]),
@@ -207,13 +206,13 @@ def test_forward_backward_underflow_raises_not_nan():
     def run(xs):
         counts = [np.zeros(2), np.zeros((2, 2)), np.zeros((2, 3))]
         ll = e_step_moments_batch(m, xs, *counts)
-        [(_, x_pad, lens)] = _pad_buckets(xs, np.float64)
-        log_scale = loglik_batch(m.pi, m.A, _emit(m), x_pad, lens)
-        _check_mass(log_scale)
-        return ll, counts, log_scale.sum(axis=0)
+        [p] = pack(xs, 2)
+        log_scale = loglik_batch(m.pi, m.A, _emit(m)(p.obs), p)
+        _check_mass(log_scale, p.offs)
+        return ll, counts, p.seq_sum(log_scale)
 
     # in-range observations still work under the floored variance, with
-    # the shorter sequence padded past its end
+    # the shorter sequence ending a step early
     ll, counts, lls = run([np.array([10.0, 11.0, 10.0]), np.array([10.0, 11.0])])
     assert np.isfinite(ll) and np.isfinite(lls).all()
     assert all(np.isfinite(c).all() for c in counts)

@@ -155,7 +155,7 @@ def test_single_observation_sequence():
 
 
 def test_batch_e_step_matches_per_sequence():
-    """Batched (padded) kernel == per-sequence kernel to machine precision,
+    """Batched (packed) kernel == per-sequence kernel to machine precision,
     including length-1 and max-length sequences in the same batch."""
     rng = np.random.default_rng(17)
     m = HMM.random(4, 6, seed=17)
@@ -176,9 +176,10 @@ def test_batch_e_step_matches_per_sequence():
 def test_batch_e_step_length_skew_bounded_and_exact():
     """VERDICT-r9 #5 (SURVEY §7 hard part #1): a pathological 10⁵-length
     outlier among 10³ short sequences must NOT inflate the whole batch's
-    padded DP cost — octave bucketing bounds Σ_b(maxT_b · S_b) at 2·Σ T_s
-    — and the bucketed counts must still match the per-sequence kernel."""
-    from baum_welch_spark.hmm.kernel import _length_buckets, e_step_counts_batch
+    DP cost — the packed layout holds exactly Σ T_s rows and its recursion
+    runs max T steps, each over only the sequences still alive — and the
+    packed counts must still match the per-sequence kernel."""
+    from baum_welch_spark.hmm.kernel import e_step_counts_batch, pack
 
     rng = np.random.default_rng(23)
     short = [rng.integers(0, 5, size=int(rng.integers(4, 17))) for _ in range(1000)]
@@ -186,13 +187,13 @@ def test_batch_e_step_length_skew_bounded_and_exact():
     seqs = short + [outlier]
     lens = [len(o) for o in seqs]
 
-    # cost bound: the structural fix, independent of wall-clock noise.
-    # Unbucketed padding would cost max(T)·S ≈ 1e8 cells; bucketed stays
-    # within 2x of the true Σ T_s ≈ 1.1e5.
-    groups = _length_buckets(lens)
-    padded = sum(max(lens[i] for i in g) * len(g) for g in groups)
-    assert padded <= 2 * sum(lens)
-    assert {i for g in groups for i in g} == set(range(len(seqs)))
+    # cost: the structural fix, independent of wall-clock noise. Padding
+    # to max(T) would cost max(T)·S ≈ 1e8 cells; packed rows are Σ T_s.
+    [p] = pack(seqs, 3, n_symbols=5)
+    assert len(p.obs) == p.offs[-1] == sum(lens)
+    assert len(p.sizes) == max(lens)  # the recursion's Python steps
+    assert p.sizes == [sum(t > step for t in lens) for step in range(17)] + [1] * (max(lens) - 17)
+    assert sorted(p.idx.tolist()) == list(range(len(seqs)))
 
     m = HMM.random(3, 5, seed=23)
     p1 = np.zeros(3); A1 = np.zeros((3, 3)); B1 = np.zeros((3, 5))
@@ -206,8 +207,8 @@ def test_batch_e_step_length_skew_bounded_and_exact():
 
 
 def test_batch_e_step_length_skew_weighted_matches():
-    """The weights path follows the bucket permutation: weighted bucketed
-    counts == weighted per-sequence counts with a skewed batch."""
+    """The weights path follows the length-sort permutation: weighted
+    packed counts == weighted per-sequence counts with a skewed batch."""
     from baum_welch_spark.hmm.kernel import e_step_counts_batch
 
     rng = np.random.default_rng(29)
@@ -240,7 +241,7 @@ MODEL_ZEROS = HMM(
     B=np.array([[0.6, 0.3, 0.1], [0.1, 0.6, 0.3], [0.3, 0.1, 0.6]]),
 ).validate()
 
-# one skewed batch: octave edges, repeats inside a bucket, and a >1000 tail
+# one skewed batch: octave edges, repeated lengths, and a >1000 tail
 SKEW_LENS = [1, 2, 3, 4, 7, 8, 15, 16, 1, 16, 40, 1500, 2]
 
 
@@ -250,20 +251,20 @@ def _log_model(m: HMM):
 
 
 def _viterbi(log_pi, log_A, log_B, seqs):
-    """kernel.viterbi_batch over every symbol bucket of ``seqs``."""
-    from baum_welch_spark.hmm.kernel import _padded_buckets, symbol_emit, viterbi_paths
+    """kernel.viterbi_batch over every packed chunk of ``seqs``."""
+    from baum_welch_spark.hmm.kernel import symbol_emit, viterbi_paths
 
-    buckets = _padded_buckets(seqs, log_B.shape[1])
-    return viterbi_paths(log_pi, log_A, symbol_emit(log_B), buckets, len(seqs))
+    return viterbi_paths(log_pi, log_A, symbol_emit(log_B), seqs, log_B.shape[1])
 
 
 def _logliks(m: HMM, seqs):
-    """kernel.loglik_batch over every symbol bucket of ``seqs``, summed."""
-    from baum_welch_spark.hmm.kernel import _padded_buckets, loglik_batch, symbol_emit
+    """kernel.loglik_batch over every packed chunk of ``seqs``, summed per
+    sequence."""
+    from baum_welch_spark.hmm.kernel import loglik_batch, pack, symbol_emit
 
     out = np.empty(len(seqs))
-    for idxs, obs_pad, lens in _padded_buckets(seqs, m.n_observed):
-        out[idxs] = loglik_batch(m.pi, m.A, symbol_emit(m.B), obs_pad, lens).sum(axis=0)
+    for p in pack(seqs, m.n_hidden, n_symbols=m.n_observed):
+        out[p.idx] = p.seq_sum(loglik_batch(m.pi, m.A, symbol_emit(m.B)(p.obs), p))
     return out
 
 
@@ -291,18 +292,45 @@ def test_batch_decode_kernels_match_per_sequence(model):
 
 
 def test_viterbi_batch_seq_chunk_cap_is_bitwise_invisible(monkeypatch):
-    """The sequence-axis cap on the per-step candidate block must not change
-    results: a budget of 1 cell splits every bucket into one-sequence DPs."""
+    """The cell budget on a chunk's arrays (its psi rows and per-step
+    candidate block) must not change results: a budget of 1 cell splits
+    the batch into one-sequence chunks."""
     import baum_welch_spark.hmm.kernel as kernel
 
     rng = np.random.default_rng(43)
     seqs = [rng.integers(0, 3, size=t) for t in SKEW_LENS]
     lp, lA, lB = _log_model(MODEL_ZEROS)
+    assert len(list(kernel.pack(seqs, 3, 9, n_symbols=3))) == 1
     full_paths, full_scores = _viterbi(lp, lA, lB, seqs)
-    monkeypatch.setattr(kernel, "_VITERBI_CAND_BUDGET", 1)
+    monkeypatch.setattr(kernel, "_CELL_BUDGET", 1)
+    assert len(list(kernel.pack(seqs, 3, 9, n_symbols=3))) == len(seqs)
     paths, scores = _viterbi(lp, lA, lB, seqs)
     assert np.array_equal(scores, full_scores)
     assert all(np.array_equal(a, b) for a, b in zip(paths, full_paths))
+
+
+def test_e_step_chunk_cap_is_invisible(monkeypatch):
+    """The cell budget splits the E-step's batch too: one-sequence chunks
+    give the same counts and loglik to 1e-12 (only the summation order
+    across chunks changes), weighted or not."""
+    import baum_welch_spark.hmm.kernel as kernel
+
+    rng = np.random.default_rng(47)
+    m = HMM.random(3, 4, seed=47)
+    seqs = [rng.integers(0, 4, size=t) for t in SKEW_LENS]
+    w = rng.uniform(0.5, 3.0, size=len(seqs))
+
+    def counts(weights):
+        c = [np.zeros(3), np.zeros((3, 3)), np.zeros((3, 4))]
+        return kernel.e_step_counts_batch(m.pi, m.A, m.B, seqs, *c, weights=weights), c
+
+    full = [counts(None), counts(w)]
+    monkeypatch.setattr(kernel, "_CELL_BUDGET", 1)
+    assert len(list(kernel.pack(seqs, 3, n_symbols=4))) == len(seqs)
+    for (ll_full, c_full), (ll, c) in zip(full, [counts(None), counts(w)]):
+        assert ll == pytest.approx(ll_full, rel=1e-12)
+        for a, b in zip(c, c_full):
+            np.testing.assert_allclose(a, b, rtol=1e-12, atol=1e-12)
 
 
 def test_batch_decode_kernels_zero_probability_sequence():
@@ -335,3 +363,103 @@ def test_batch_decode_kernels_reject_out_of_range_symbols(bad):
         _logliks(m, seqs)
     with pytest.raises(ValueError, match=rf"symbol {bad} .*M=5"):
         _viterbi(*_log_model(m), seqs)
+
+
+# -- the packed time-major layout: property test over length mixes ------------
+
+def _packed_case_lens(case: str, rng) -> np.ndarray:
+    return {
+        "random": lambda: rng.integers(1, 80, size=40),
+        "all_one": lambda: np.ones(30, dtype=np.int64),
+        "all_equal": lambda: np.full(20, 17),
+        "long_tail": lambda: np.concatenate([rng.integers(1, 9, size=1000), [2000]]),
+    }[case]()
+
+
+@pytest.mark.parametrize("case", ["random", "all_one", "all_equal", "long_tail"])
+def test_packed_kernels_match_per_sequence_references(case):
+    """Every batched kernel on the packed layout, over a length mix given
+    in shuffled order, against the per-sequence references: discrete
+    counts (weighted or not) and Gaussian moments and loglik at 1e-12,
+    Viterbi bitwise; a zero-probability sequence among batch-mates is
+    loud and leaves theirs alone; a symbol -1 or M raises."""
+    from baum_welch_spark.hmm.decode import _viterbi_one
+    from baum_welch_spark.hmm.gaussian import GaussianHMM, e_step_moments, e_step_moments_batch
+    from baum_welch_spark.hmm.kernel import e_step_counts_batch, pack
+
+    rng = np.random.default_rng(53)
+    lens = _packed_case_lens(case, rng)
+    lens = lens[rng.permutation(len(lens))]
+    m = HMM.random(3, 4, seed=53)
+    seqs = [rng.integers(0, 4, size=int(t)) for t in lens]
+
+    # the layout: Σ T rows, max T steps, longest first (stable), and its
+    # row permutation round-trips
+    [p] = pack(seqs, m.n_hidden, n_symbols=m.n_observed)
+    assert p.offs[-1] == len(p.obs) == lens.sum() and len(p.sizes) == lens.max()
+    assert np.array_equal(p.idx, np.argsort(-lens, kind="stable"))
+    assert all(np.array_equal(a, seqs[i]) for a, i in zip(p.unpack(p.obs), p.idx))
+
+    # discrete counts and loglik, unweighted and weighted
+    w = rng.uniform(0.5, 3.0, size=len(seqs))
+    for weights in (None, w):
+        ref = [np.zeros(3), np.zeros((3, 3)), np.zeros((3, 4))]
+        ref_ll = 0.0
+        for s, o in enumerate(seqs):
+            c = [np.zeros(3), np.zeros((3, 3)), np.zeros((3, 4))]
+            ws = 1.0 if weights is None else weights[s]
+            ref_ll += ws * e_step_counts(m.pi, m.A, m.B, o, *c)
+            for r, x in zip(ref, c):
+                r += ws * x
+        got = [np.zeros(3), np.zeros((3, 3)), np.zeros((3, 4))]
+        ll = e_step_counts_batch(m.pi, m.A, m.B, seqs, *got, weights=weights)
+        assert ll == pytest.approx(ref_ll, rel=1e-12)
+        for a, b in zip(got, ref):
+            np.testing.assert_allclose(a, b, rtol=1e-12, atol=1e-12)
+
+    # Viterbi, bitwise
+    lp, lA, lB = _log_model(m)
+    paths, scores = _viterbi(lp, lA, lB, seqs)
+    for o, path, score in zip(seqs, paths, scores):
+        ref_path, ref_score = _viterbi_one(lp, lA, lB, o)
+        assert path.dtype == ref_path.dtype and np.array_equal(path, ref_path)
+        assert score == ref_score
+
+    # Gaussian moments and loglik
+    g = GaussianHMM.random(3, seed=53, lo=0.0, hi=10.0)
+    xs = [rng.uniform(0, 10, size=int(t)) for t in lens]
+    ref = [np.zeros(3), np.zeros((3, 3)), np.zeros((3, 3))]
+    ref_ll = sum(e_step_moments(g, x, *ref) for x in xs)
+    got = [np.zeros(3), np.zeros((3, 3)), np.zeros((3, 3))]
+    assert e_step_moments_batch(g, xs, *got) == pytest.approx(ref_ll, rel=1e-12)
+    for a, b in zip(got, ref):
+        np.testing.assert_allclose(a, b, rtol=1e-12, atol=1e-12)
+
+    # a zero-probability sequence among batch-mates: every sequence starts
+    # in state 0, which never emits symbol 1
+    z = HMM(
+        pi=np.array([1.0, 0.0]), A=np.full((2, 2), 0.5), B=np.array([[1.0, 0.0], [0.5, 0.5]])
+    ).validate()
+    good = [np.concatenate([[0], rng.integers(0, 2, size=int(t) - 1)]) for t in lens]
+    bad = int(rng.integers(0, len(good) + 1))
+    mixed = good[:bad] + [np.array([1, 0, 1])] + good[bad:]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        lls = _logliks(z, mixed)
+        _, vscores = _viterbi(*_log_model(z), mixed)
+        c = [np.zeros(2), np.zeros((2, 2)), np.zeros((2, 2))]
+        e_step_counts_batch(z.pi, z.A, z.B, mixed, *c)
+    assert lls[bad] == -np.inf and vscores[bad] == -np.inf
+    assert not all(np.isfinite(x).all() for x in c)  # em.decode raises on it
+    keep = np.arange(len(mixed)) != bad
+    ref_lls = np.array([forward_backward(z.pi, z.A, z.B, o)[3] for o in good])
+    assert np.isfinite(lls[keep]).all()
+    np.testing.assert_allclose(lls[keep], ref_lls, rtol=1e-12)
+
+    # out-of-range symbols raise, wherever the sequence sorts
+    for sym in (-1, m.n_observed):
+        broken = list(seqs)
+        broken[int(rng.integers(0, len(seqs)))] = np.array([0, sym, 0])
+        with pytest.raises(ValueError, match=rf"symbol {sym} .*M=4"):
+            e_step_counts_batch(m.pi, m.A, m.B, broken, np.zeros(3), np.zeros((3, 3)), np.zeros((3, 4)))
+        with pytest.raises(ValueError, match=rf"symbol {sym} .*M=4"):
+            _viterbi(lp, lA, lB, broken)

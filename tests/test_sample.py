@@ -127,25 +127,44 @@ def test_ffbs_kernel_clips_unit_uniform():
     """Counter uniforms CAN be exactly 1.0 (a hash in the top 2^7 of 2^60
     rounds up in the int->double conversion); the t = T-1 draw must clip to
     N-1 instead of indexing out of range, and the backward draws' strict-
-    less count already tops out at N-1. One padded bucket of lengths 4 and
+    less count already tops out at N-1. One packed chunk of lengths 4 and
     5, drawn by the batched kernel."""
     import numpy as np
 
-    from baum_welch_spark.hmm.kernel import _padded_buckets, forward_backward_batch, symbol_emit
+    from baum_welch_spark.hmm.kernel import forward_batch, pack, symbol_emit
     from baum_welch_spark.hmm.sample import _ffbs_batch
 
     pi = np.array([0.5, 0.5])
     A = np.array([[0.9, 0.1], [0.1, 0.9]])
     B = np.array([[0.7, 0.3], [0.2, 0.8]])
-    [(_, obs_pad, lens)] = _padded_buckets([np.array([0, 1, 0, 1]), np.array([1, 1, 0, 0, 1])], 2)
-    alpha, _, _ = forward_backward_batch(pi, A, symbol_emit(B), obs_pad, lens)
-    u = np.ones((5, 2, 3))  # every draw at the extreme
-    draws = _ffbs_batch(A, alpha, lens, u)
-    assert draws.shape == (5, 2, 3)
+    [p] = pack([np.array([0, 1, 0, 1]), np.array([1, 1, 0, 0, 1])], 2, n_symbols=2)
+    alpha, _ = forward_batch(pi, A, symbol_emit(B)(p.obs), p)
+    u = np.ones((9, 3))  # every draw at the extreme
+    draws = _ffbs_batch(A, alpha, p, u)
+    assert draws.shape == (9, 3)
     assert ((draws >= 0) & (draws <= 1)).all()
     # u = 0 hits the other edge (first bucket everywhere)
-    draws0 = _ffbs_batch(A, alpha, lens, np.zeros((5, 2, 3)))
+    draws0 = _ffbs_batch(A, alpha, p, np.zeros((9, 3)))
     assert ((draws0 >= 0) & (draws0 <= 1)).all()
+
+
+def test_u01_block_is_the_md5_hex_convention():
+    """The counter uniforms (hashed from a per-sample prefix, the digest's
+    first 60 bits) are bitwise the MD5(seed:seq:k:t)[:15 hex] / 2^60 that
+    ffbs_oracle_sql replays, including t past 9 and 99, negative ids and
+    large seeds."""
+    import hashlib
+
+    from baum_welch_spark.hmm.sample import _HASH_SCALE, _u01_block
+
+    for seed, seq_id, n_samples, t_len in [(42, 7, 3, 120), (0, -5, 1, 1), (2**40, 2**62, 2, 13)]:
+        ref = np.array([
+            [int(hashlib.md5(f"{seed}:{seq_id}:{k}:{t}".encode()).hexdigest()[:15], 16) / _HASH_SCALE
+             for t in range(t_len)]
+            for k in range(n_samples)
+        ])
+        got = _u01_block(seed, seq_id, n_samples, t_len)
+        assert got.shape == ref.shape and got.tobytes() == ref.tobytes()
 
 
 def test_generate_kernel_clips_unit_uniform():

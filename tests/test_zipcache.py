@@ -104,7 +104,7 @@ def test_spark_worker_keeps_pyspark_zip_directory(spark):
     re-reads no archive on ``importlib.invalidate_caches()``."""
     from baum_welch_spark.hmm import HMM
     from baum_welch_spark.hmm.decode import score_sequences
-    from baum_welch_spark.hmm.kernel import loglik_batch, symbol_emit
+    from baum_welch_spark.hmm.kernel import loglik_batch, pack, symbol_emit
 
     model = HMM.random(2, 3, seed=1)
     seqs = spark.createDataFrame([(0, [0, 1, 2])], "seq_id bigint, obs array<int>")
@@ -117,7 +117,8 @@ def test_spark_worker_keeps_pyspark_zip_directory(spark):
             pass
         # referencing a package function makes this a package UDF too, so
         # the worker has the wrapper whichever idle worker runs the task
-        loglik_batch(pi, A, symbol_emit(B), np.array([[0], [1]]), np.array([2]))
+        [p] = pack([np.array([0, 1])], 2, n_symbols=3)
+        loglik_batch(pi, A, symbol_emit(B)(p.obs), p)
         patched = zipimport.zipimporter.invalidate_caches.__module__ == _zipcache.__name__
         n_zip = sum(
             isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
