@@ -1207,8 +1207,8 @@ def _q_vocab_topk_cms(spark, sf):
 
 
 def _q_hmm_select(spark, sf):
-    # rows-only by nature (each candidate runs the distributed EM loop);
-    # pytest pins the BIC/AIC arithmetic and the argmin marking
+    # rows-only by nature (the candidates are the keys of one distributed
+    # EM loop); pytest pins the BIC/AIC arithmetic and the argmin marking
     from baum_welch_spark.hmm.select import select_face
 
     (events,) = _tables(spark, sf, "events")
@@ -1324,8 +1324,8 @@ def _q_posterior_sample(spark, sf):
 
 
 def _q_hmm_fit_restarts(spark, sf):
-    # rows-only by nature (n_restarts EM loops); pytest pins best-of
-    # selection and the shared-cache discipline
+    # rows-only by nature (n_restarts keys of one EM loop); pytest pins
+    # best-of selection and the shared-cache discipline
     from baum_welch_spark.hmm.fit import fit_restarts
     from baum_welch_spark.operators.sequences import build_sequences, symbol_dictionary
 
@@ -1828,7 +1828,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # every batched kernel moved onto the packed time-major layout
         # (kernel.pack, which replaced the padded octave buckets named
         # below); each is oracle-exact after the change (tools/check_oracle.py,
-        # sf0.01 and sf0.001).
+        # sf0.01 and sf0.001). They and the two codec-block faces re-hashed
+        # once more when every trainer moved onto the keyed EM loop
+        # (em.run_em over keyed models, one em.keyed_stripes E-step): all 29
+        # are oracle-exact at sf0.01 and sf0.001 after it.
         #
         # Batched-decode block: the faces whose source hash changed when the
         # Viterbi decode, scoring and grouped-decode operators moved onto the

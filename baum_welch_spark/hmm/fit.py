@@ -1,14 +1,17 @@
-"""Discrete Baum-Welch EM on Spark DataFrames: the soft-EM trainer and the
-faces built on its E-step. The driver loop itself is ``em.run_em``.
+"""Discrete Baum-Welch EM on Spark DataFrames: the soft-EM trainers (one
+model, restarts) and the faces built on their E-step. The driver loop itself
+is ``em.run_em``, over keyed models.
 
 - E-step (reference mapper M2-M6, BaumWelchMapper.java:143-258):
-  :func:`e_step_udf`, whose partitions each emit ONE count block — the
-  map-side combine the reference wrote but disabled (BaumWelchCombiner.java,
-  off at BaumWelchDriver.java:171). The reference shuffles O(S*T*(2N+1))
-  stripe records instead (its T-fold duplicate emission included, SURVEY
-  §2.6 Q1). The trainers sum the blocks on the driver (``em.run_em``, no
-  shuffle); the re-estimation faces sum them with a Catalyst aggregate
-  (:func:`expected_counts`).
+  :func:`e_step_stripes` (every key's model over every sequence) and
+  :func:`grouped_stripes` (each sequence under its group's model), whose
+  partitions each emit ONE count block per key — the map-side combine the
+  reference wrote but disabled (BaumWelchCombiner.java, off at
+  BaumWelchDriver.java:171). The reference shuffles O(S*T*(2N+1)) stripe
+  records instead (its T-fold duplicate emission included, SURVEY §2.6 Q1).
+  The trainers sum the blocks on the driver (``em.e_step``, no shuffle);
+  the re-estimation faces sum them with a Catalyst aggregate
+  (:func:`expected_counts`, :func:`em_reestimate_grouped`).
 - M-step (reference A1-A4, BaumWelchReducer.java:49-149): ``kernel.m_step``
   on the driver for the trainers; :func:`normalize_counts`, a Catalyst
   window, for the DuckDB-exact re-estimation faces (:func:`em_reestimate`,
@@ -16,8 +19,6 @@ faces built on its E-step. The driver loop itself is ``em.run_em``.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -38,14 +39,12 @@ from baum_welch_spark.hmm.decode import (
     _symbol_emis,
 )
 from baum_welch_spark.hmm.em import (
-    COUNTS_SCHEMA,
-    GROUPED_COUNTS_SCHEMA,
     KIND_LOGLIK,
+    SOLE_KEY,
     FitResult,
     block_shapes,
-    cached,
     decode,
-    encode,
+    keyed_stripes,
     lap_trace,
     run_em,
     sum_stripes,
@@ -54,143 +53,101 @@ from baum_welch_spark.hmm.kernel import e_step_counts_batch, m_step
 from baum_welch_spark.hmm.model import HMM, KIND_EMISSION
 
 
-def e_step_udf(bc_model, weighted: bool = False):
-    """Build the mapInPandas function for one E-step pass.
+def _triple(model: HMM) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The soft E-step's broadcast payload: the model's (pi, A, B)."""
+    return model.pi, model.A, model.B
 
-    One stripe block per partition (``em.encode``): the partition's
-    expected counts plus its loglik side-channel row.
 
-    ``weighted``: the input carries a ``weight`` column and every
-    sequence's counts/loglik scale by it (deduplicated-corpus multiplicity
-    semantics — see kernel.e_step_counts_batch).
-    """
+def _count_shapes(model: HMM) -> dict[str, tuple[int, ...]]:
+    """The shapes of a discrete model's count blocks: its own block layout."""
+    return block_shapes(model.blocks())
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pi, A, B = bc_model.value
-        counts = HMM(*map(np.zeros_like, (pi, A, B)))  # the model's block layout
-        ll = 0.0
-        saw_data = False
-        for pdf in batches:
-            if weighted:
-                wts_in = pdf["weight"]
-                # Fail fast: a null weight survives cast("double") as NaN/None
-                # and would silently poison every accumulated count in the
-                # batch (NaN propagates through the += folds).
-                if wts_in.isna().any():
-                    raise ValueError(
-                        "fit(weight_col=...): null/NaN weight encountered — "
-                        "weights must be non-null finite doubles"
-                    )
-            else:
-                wts_in = [1.0] * len(pdf)
-            kept = [
-                (np.asarray(o, dtype=np.int64), float(wt))
-                for o, wt in zip(pdf["obs"], wts_in)
-                if o is not None and len(o) > 0
-            ]
-            if not kept:
-                continue
-            obs_list = [o for o, _ in kept]
-            saw_data = True
-            # batched packed DP: Python loop is O(max_T) per Arrow batch,
-            # not O(sum T) — see kernel.e_step_counts_batch
-            ll += e_step_counts_batch(
-                pi, A, B, obs_list, counts.pi, counts.A, counts.B,
-                weights=np.array([wt for _, wt in kept]) if weighted else None,
-            )
-        if saw_data:
-            yield encode(counts.blocks(), ll)
 
-    return compute
+def _zero_counts(payload) -> dict[str, np.ndarray]:
+    """Zero counts in the model's block layout, for a (pi, A, B) payload
+    (probabilities or their logs)."""
+    return HMM(*map(np.zeros_like, payload)).blocks()
+
+
+def _sequences(pdf: pd.DataFrame) -> tuple[list[np.ndarray], np.ndarray | None] | None:
+    """An Arrow batch's non-empty sequences and, when it carries a
+    ``weight`` column, their weights (see :func:`fit`'s ``weight_col``);
+    None when every sequence is empty."""
+    weighted = "weight" in pdf
+    # Fail fast: a null weight survives cast("double") as NaN/None and would
+    # silently poison every accumulated count in the batch
+    if weighted and pdf["weight"].isna().any():
+        raise ValueError(
+            "fit(weight_col=...): null/NaN weight encountered — "
+            "weights must be non-null finite doubles"
+        )
+    kept = [
+        (np.asarray(o, dtype=np.int64), float(wt))
+        for o, wt in zip(pdf["obs"], pdf["weight"] if weighted else [1.0] * len(pdf))
+        if o is not None and len(o) > 0
+    ]
+    if not kept:
+        return None
+    return [o for o, _ in kept], np.array([wt for _, wt in kept]) if weighted else None
+
+
+def _soft_counts(payload, data, counts: dict[str, np.ndarray], ll: float) -> float:
+    """The soft E-step of one batch under a (pi, A, B) payload: the batched
+    packed DP (``kernel.e_step_counts_batch``, O(max_T) Python steps per
+    batch), its expected counts added into ``counts``."""
+    obs_list, weights = data
+    return ll + e_step_counts_batch(*payload, obs_list, *counts.values(), weights=weights)
 
 
 def e_step_stripes(
-    sequences: DataFrame, bc_model, weight_col: str | None = None
+    sequences: DataFrame, bc_models, weight_col: str | None = None
 ) -> DataFrame:
-    """One E-step over the corpus -> the unsummed stripe frame
-    (kind, i, j, weight): one count block and loglik row per partition,
-    which ``em.decode`` sums on the driver."""
+    """One soft E-step over the corpus under every broadcast ``{key: (pi,
+    A, B)}`` -> the unsummed keyed stripe frame (``em.keyed_stripes``): per
+    partition and key, one count block and loglik row, which ``em.e_step``
+    sums on the driver. With ``weight_col`` every sequence's counts and
+    loglik scale by its weight (kernel.e_step_counts_batch)."""
     if weight_col is None:
         inp = sequences.select("obs")
     else:
         inp = sequences.select("obs", F.col(weight_col).cast("double").alias("weight"))
-    return inp.mapInPandas(
-        e_step_udf(bc_model, weighted=weight_col is not None), schema=COUNTS_SCHEMA
+    return keyed_stripes(inp, bc_models, _sequences, _zero_counts, _soft_counts)
+
+
+def grouped_stripes(sequences_with_group: DataFrame, bc_models) -> DataFrame:
+    """The grouped soft E-step over (group, obs) rows: each sequence under
+    its own group's broadcast (pi, A, B), or under the default key ``None``
+    -> keyed stripes whose key is the group (as a string). A null group
+    raises ``ValueError``."""
+    return keyed_stripes(
+        sequences_with_group.select(F.col("group").cast("string").alias("group"), "obs"),
+        bc_models,
+        _sequences, _zero_counts, _soft_counts, by="group",
     )
 
 
 def expected_counts(
-    sequences: DataFrame, bc_model, weight_col: str | None = None
+    sequences: DataFrame, bc_models, weight_col: str | None = None
 ) -> DataFrame:
-    """One E-step over the corpus -> aggregated count DataFrame
-    (kind, i, j, weight), including the loglik side-channel row."""
-    return sum_stripes(e_step_stripes(sequences, bc_model, weight_col))
-
-
-def grouped_e_step_udf(bc_models):
-    """mapInPandas function for one E-step pass over (group, obs) rows with
-    a PER-GROUP model: ``bc_models.value`` is {group: (pi, A, B)}, with an
-    optional ``None`` key as the shared default (every group not frozen out
-    uses it — the one-step re-estimate case). Groups absent from the dict
-    (and no default) are skipped — that is how the driver loop freezes
-    converged groups without repartitioning the corpus.
-
-    Emits one stripe block per (Arrow batch, group), keyed by a ``group``
-    column: the same in-UDF map-side combine as ``e_step_udf``, so
-    per-iteration shuffle volume is O(partitions × groups-per-partition ×
-    N(N+M)) — corpus-size independent, exactly the single-model posture
-    with a group key added.
-    """
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        models = bc_models.value
-        default = models.get(None)
-        acc: dict[str, list] = {}
-        for pdf in batches:
-            for group, sub in pdf.groupby("group", sort=False):
-                triple = models.get(group, default)
-                if triple is None:
-                    continue
-                pi, A, B = triple
-                obs_list = [
-                    np.asarray(o, dtype=np.int64)
-                    for o in sub["obs"]
-                    if o is not None and len(o) > 0
-                ]
-                if not obs_list:
-                    continue
-                a = acc.setdefault(str(group), [HMM(*map(np.zeros_like, triple)), 0.0])
-                a[1] += e_step_counts_batch(pi, A, B, obs_list, a[0].pi, a[0].A, a[0].B)
-        if acc:
-            yield pd.concat(
-                [encode(c.blocks(), ll, group=group) for group, (c, ll) in acc.items()],
-                ignore_index=True,
-            )
-
-    return compute
-
-
-def expected_counts_grouped(sequences_with_group: DataFrame, bc_models) -> DataFrame:
-    """One grouped E-step over (group, obs) rows -> aggregated counts
-    (group, kind, i, j, weight) including each group's loglik row."""
-    raw = sequences_with_group.select("group", "obs").mapInPandas(
-        grouped_e_step_udf(bc_models), schema=GROUPED_COUNTS_SCHEMA
-    )
-    return sum_stripes(raw, "group")
+    """One E-step over the corpus under a one-key ``{key: (pi, A, B)}``
+    broadcast -> aggregated count DataFrame (kind, i, j, weight), including
+    the loglik side-channel row."""
+    return sum_stripes(e_step_stripes(sequences, bc_models, weight_col))
 
 
 def em_reestimate_grouped(
     spark: SparkSession, sequences_with_group: DataFrame, model: HMM
 ) -> DataFrame:
     """One grouped soft-EM re-estimation step: every group's counts under
-    the same FIXED ``model``, normalized per (group, kind, i) — the grouped
-    twin of :func:`em_reestimate`, and the DuckDB-exact pin for the grouped
-    count shuffle itself (the aggregation path ``fit_grouped_distributed``
-    iterates). Output: (group, kind, i, j, prob) rounded to 6 dp."""
-    bc = spark.sparkContext.broadcast({None: (model.pi, model.A, model.B)})
-    counts = expected_counts_grouped(sequences_with_group, bc)
-    return normalize_counts(counts.filter(F.col("weight") > 0), "group").select(
-        "group", "kind", "i", "j", F.round(F.col("prob"), 6).alias("prob")
+    the same FIXED ``model`` (the default key of :func:`grouped_stripes`),
+    summed per (group, kind, i, j) and normalized per (group, kind, i) —
+    the grouped twin of :func:`em_reestimate`, and the DuckDB-exact pin for
+    the grouped E-step that ``fit_grouped_distributed`` iterates. Output:
+    (group, kind, i, j, prob) rounded to 6 dp."""
+    bc = spark.sparkContext.broadcast({None: _triple(model)})
+    counts = sum_stripes(grouped_stripes(sequences_with_group, bc), "key")
+    return normalize_counts(counts.filter(F.col("weight") > 0), "key").select(
+        F.col("key").alias("group"), "kind", "i", "j", F.round(F.col("prob"), 6).alias("prob")
     )
 
 
@@ -226,28 +183,28 @@ def _masked(model: HMM, mask: np.ndarray) -> HMM:
 def run_discrete_em(
     spark: SparkSession,
     sequences: DataFrame,
-    init: HMM,
-    estep,
-    payload,
-    max_iter: int,
-    tol: float,
+    inits: dict[str, HMM],
+    estep=e_step_stripes,
+    payload=_triple,
+    max_iter: int = 10,
+    tol: float = 0.0,
     topology_mask: np.ndarray | None = None,
     model_out: str | None = None,
-) -> FitResult:
-    """:func:`em.run_em` for a discrete (pi, A, B) model: validated (and
-    masked) init, ``kernel.m_step`` re-estimation (re-masked each time)."""
-    model = init.validate()
+) -> dict[str, FitResult]:
+    """:func:`em.run_em` for keyed discrete (pi, A, B) models: validated
+    (and masked) inits, ``kernel.m_step`` re-estimation (re-masked each
+    time). The E-step defaults to soft EM (:func:`e_step_stripes` under
+    each key's (pi, A, B))."""
     if topology_mask is not None:
         topology_mask = np.asarray(topology_mask, dtype=bool)
-        model = _masked(model, topology_mask)
 
-    def mstep(_, blocks: dict[str, np.ndarray]) -> HMM:
-        new = m_step(*blocks.values())
-        return new if topology_mask is None else _masked(new, topology_mask)
+    def masked(model: HMM) -> HMM:
+        return model if topology_mask is None else _masked(model, topology_mask)
 
     return run_em(
-        spark, sequences, model, estep=estep, payload=payload, mstep=mstep,
-        shapes=block_shapes(model.blocks()),
+        spark, sequences, {key: masked(m.validate()) for key, m in inits.items()},
+        estep=estep, payload=payload, mstep=lambda _, blocks: masked(m_step(*blocks.values())),
+        shapes=_count_shapes,
         max_iter=max_iter, tol=tol, model_out=model_out,
     )
 
@@ -263,9 +220,9 @@ def fit(
     topology_mask: np.ndarray | None = None,
 ) -> FitResult:
     """Distributed soft EM (reference driver D2, BaumWelchDriver.java:114-134)
-    on :func:`em.run_em`: the E-step is :func:`e_step_stripes` under the
-    broadcast (pi, A, B) triple, one job and one stage per iteration whose
-    per-partition stripes the driver sums. Optionally writes
+    on :func:`em.run_em` as one key: the E-step is :func:`e_step_stripes`
+    under the broadcast (pi, A, B) triple, one job and one stage per
+    iteration whose per-partition stripes the driver sums. Optionally writes
     ``{model_out}/model-{it}`` parquet per iteration (reference S3/S4 sinks,
     BaumWelchUtils.java:147-226, BaumWelchDriver.java:128,178).
 
@@ -286,11 +243,10 @@ def fit(
     re-application makes those uniform over ALLOWED transitions instead.
     """
     return run_discrete_em(
-        spark, sequences, init,
+        spark, sequences, {SOLE_KEY: init},
         estep=lambda data, bc: e_step_stripes(data, bc, weight_col=weight_col),
-        payload=lambda m: (m.pi, m.A, m.B),
         max_iter=max_iter, tol=tol, topology_mask=topology_mask, model_out=model_out,
-    )
+    )[SOLE_KEY]
 
 
 def fit_restarts(
@@ -303,59 +259,37 @@ def fit_restarts(
     tol: float = 0.0,
     base_seed: int = 42,
 ) -> tuple[FitResult, list[float]]:
-    """Multi-restart EM: run :func:`fit` from ``n_restarts`` random
-    initializations (seeds ``base_seed + r``) and keep the run with the
-    best final-iteration log-likelihood — the standard guard against EM's
-    local optima that a single random init cannot give (the reference
-    driver trains one init only; this is the robustness wrapper around its
-    D2 loop).
+    """Multi-restart EM: train from ``n_restarts`` random initializations
+    (seeds ``base_seed + r``) and keep the run with the best
+    final-iteration log-likelihood — the standard guard against EM's local
+    optima that a single random init cannot give (the reference driver
+    trains one init only; this is the robustness wrapper around its D2
+    loop).
 
-    The sequence corpus is persisted ONCE here and shared by every restart
-    (fit respects a caller-managed cache), so n_restarts costs n_restarts
-    EM loops over cached data, not n_restarts corpus reads. Restarts run as
-    a small pool of overlapping driver threads (2-3 jobs in flight,
-    optimization guide §2.6): FIFO scheduling lets one restart's tiny
-    per-iteration stages back-fill executors idled by another's stage
-    tail — on a saturated cluster this degrades gracefully to the
-    sequential cost, never worse.
+    The restarts are the keys of one :func:`em.run_em` loop: each
+    iteration is one E-step job in which every Arrow batch runs under every
+    restart's model, over a corpus persisted once. Each restart's model and
+    trace are bit for bit those of a standalone :func:`fit` from its init.
 
     Selection compares the FINAL log-likelihood of each trained model —
     P(O | λ_r) from the same E-step, but not necessarily at the same
     iteration index: with ``tol > 0`` some restarts may converge (and
     stop) earlier than others, which is the intended semantics (best model
-    wins, however long it took).
+    wins, however long it took). The first best restart wins a tie.
 
-    Restart mode does NOT write per-iteration model checkpoints (``fit`` is
-    called without ``model_out``); callers that need the winning restart's
-    checkpoint trail should re-run ``fit`` with the winning seed and
-    ``model_out`` set. Returns (best FitResult, final loglik per restart).
+    Restart mode does NOT write per-iteration model checkpoints; callers
+    that need the winning restart's checkpoint trail should re-run ``fit``
+    with the winning seed and ``model_out`` set. Returns (best FitResult,
+    final loglik per restart).
     """
     if n_restarts < 1:
         raise ValueError("n_restarts must be >= 1")
-    inits = [HMM.random(n_hidden, n_observed, seed=base_seed + r) for r in range(n_restarts)]
-    results = fit_many(spark, sequences, inits, max_iter=max_iter, tol=tol)
-    best: FitResult | None = None
-    finals: list[float] = []
-    for res in results:
-        finals.append(res.loglik_trace[-1])
-        if best is None or res.loglik_trace[-1] > best.loglik_trace[-1]:
-            best = res
-    return best, finals
-
-
-def fit_many(
-    spark: SparkSession, sequences: DataFrame, inits: list[HMM], max_iter: int, tol: float
-) -> list[FitResult]:
-    """:func:`fit` from each of ``inits`` over ONE cached corpus. The fits
-    are independent EM loops, so they overlap as a small pool of driver
-    threads (optimization guide §2.6): each fit's tiny per-iteration stages
-    back-fill executors idled by another's stage tail. Results come back in
-    ``inits`` order and each fit's arithmetic is untouched, so they are
-    bit-identical to a sequential sweep."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with cached(sequences) as data, ThreadPoolExecutor(max_workers=min(3, len(inits))) as pool:
-        return list(pool.map(lambda m: fit(spark, data, m, max_iter=max_iter, tol=tol), inits))
+    fits = run_discrete_em(
+        spark, sequences,
+        {str(r): HMM.random(n_hidden, n_observed, seed=base_seed + r) for r in range(n_restarts)},
+        max_iter=max_iter, tol=tol,
+    ).values()
+    return max(fits, key=lambda f: f.loglik_trace[-1]), [f.loglik_trace[-1] for f in fits]
 
 
 def em_reestimate(
@@ -376,7 +310,7 @@ def em_reestimate(
     the window normalize are checked end-to-end, not just via the pytest
     NumPy oracle. Probabilities are strictly positive here (γ > 0 for a
     dense random model), so plain round needs no signed-zero guard."""
-    bc = spark.sparkContext.broadcast((model.pi, model.A, model.B))
+    bc = spark.sparkContext.broadcast({SOLE_KEY: _triple(model)})
     counts = expected_counts(sequences, bc)
     # weight > 0: the E-step UDF emits the DENSE N x (N+M) accumulator
     # including exactly-zero cells (a symbol absent from the corpus, or a

@@ -61,10 +61,11 @@ from baum_welch_spark.hmm.decode import (
     _viterbi_sql,
 )
 from baum_welch_spark.hmm.em import (
-    COUNTS_SCHEMA,
+    SOLE_KEY,
     FitResult,
     block_shapes,
     encode,
+    keyed_stripes,
     lap_trace,
     run_em,
     stripe_table,
@@ -356,27 +357,22 @@ def build_value_sequences(
     )
 
 
-def _gauss_estep_udf(bc_model):
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = bc_model.value
-        c = _moment_counts(model.pi.shape[0])
-        ll, saw = 0.0, False
-        for pdf in batches:
-            x_list = [o for o in pdf["obs"] if o is not None and len(o) > 0]
-            if x_list:
-                saw = True
-                ll += e_step_moments_batch(model, x_list, *c.values())
-        if saw:
-            yield encode(c, ll)
-
-    return compute
+def _values(pdf: pd.DataFrame) -> list | None:
+    """An Arrow batch's non-empty value sequences; None when there are none."""
+    return [o for o in pdf["obs"] if o is not None and len(o) > 0] or None
 
 
-def _gauss_stripes(sequences: DataFrame, bc_model) -> DataFrame:
-    """One Gaussian E-step over the corpus -> unsummed per-partition moment
-    stripes."""
-    return sequences.select("obs").mapInPandas(
-        _gauss_estep_udf(bc_model), schema=COUNTS_SCHEMA
+def _moments(model: GaussianHMM, x_list, c: dict[str, np.ndarray], ll: float) -> float:
+    """One batch's E-step moments (:func:`e_step_moments_batch`) into ``c``."""
+    return ll + e_step_moments_batch(model, x_list, *c.values())
+
+
+def _gauss_stripes(sequences: DataFrame, bc_models) -> DataFrame:
+    """One Gaussian E-step over the corpus under every broadcast ``{key:
+    model}`` -> unsummed per-partition keyed moment stripes."""
+    return keyed_stripes(
+        sequences.select("obs"), bc_models, _values,
+        lambda m: _moment_counts(m.pi.shape[0]), _moments,
     )
 
 
@@ -391,10 +387,11 @@ def fit_gaussian(
     moment E-step under the broadcast model, then the closed-form
     :func:`m_step_gauss`."""
     return run_em(
-        spark, sequences, init.validate(), estep=_gauss_stripes, payload=lambda m: m,
-        mstep=lambda m, b: m_step_gauss(m, *b.values()),
-        shapes=block_shapes(_moment_counts(init.pi.shape[0])), max_iter=max_iter, tol=tol,
-    )
+        spark, sequences, {SOLE_KEY: init.validate()}, estep=_gauss_stripes,
+        payload=lambda m: m, mstep=lambda m, b: m_step_gauss(m, *b.values()),
+        shapes=lambda m: block_shapes(_moment_counts(m.pi.shape[0])),
+        max_iter=max_iter, tol=tol,
+    )[SOLE_KEY]
 
 
 # --- decode / score (DuckDB-exact faces) -----------------------------------
@@ -566,7 +563,7 @@ def _ghmm_reestimate_unchecked(
     """ghmm_reestimate body without the validate() gate: the chained trace
     (ghmm_em_trace) feeds 6-dp-ROUNDED models whose pi/A sums are off by up
     to ~2e-6 — within the trace contract but outside validate's 1e-8."""
-    bc = spark.sparkContext.broadcast(model)
+    bc = spark.sparkContext.broadcast({SOLE_KEY: model})
     counts = sum_stripes(_gauss_stripes(sequences, bc))
     w = Window.partitionBy("kind", "i")
     probs = (

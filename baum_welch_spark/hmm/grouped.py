@@ -2,18 +2,22 @@
 model per domain / user segment / language" extension of the single-model
 reference dataflow (reference trains exactly one HMM; SURVEY §2.4 D2).
 
-Spark shape: ``applyInPandas`` over ``groupBy(group_col)`` — each group's
-sequences land in one task, which runs the NumPy batched EM
-(``kernel.batched_baum_welch`` — the same packed vectorized E-step
-the distributed fit's Arrow batches run, pinned against the per-sequence
-``sequential_baum_welch`` oracle in tests). This is the right tool when models are many and
-each group's data fits a task (the common per-domain case); the distributed
-``fit`` remains the tool for one model over an unbounded corpus.
+Two trainers, one per data shape:
 
-Scale posture: one shuffle keyed by group; skewed groups are the caveat —
-cap per-group sequence counts upstream (``sampling.cap_per_group``) if one
-group dominates. Model rows come back as data (a DataFrame of per-group
-tidy model rows), never through the driver.
+- :func:`fit_grouped`: ``applyInPandas`` over ``groupBy(group_col)`` — each
+  group's sequences land in one task, which runs the NumPy batched EM
+  (``kernel.batched_baum_welch`` — the same packed vectorized E-step the
+  distributed fit's Arrow batches run, pinned against the per-sequence
+  ``sequential_baum_welch`` oracle in tests). Right when models are many
+  and each group's data fits a task. One shuffle keyed by group; skewed
+  groups are the caveat — cap per-group sequence counts upstream
+  (``sampling.cap_per_group``) if one group dominates. Model rows come
+  back as data, never through the driver.
+- :func:`fit_grouped_distributed`: the groups are the keys of the one EM
+  loop (``em.run_em``), each sequence's E-step under its own group's model
+  (``fit.grouped_stripes``). Right when a few groups hold most of the data.
+
+A null group names no model, so both trainers raise ``ValueError`` on one.
 """
 
 from __future__ import annotations
@@ -33,6 +37,17 @@ GROUPED_MODEL_SCHEMA = (
 )
 
 
+def _group_rows(group: str, model: HMM, loglik: float, n_seqs: int) -> pd.DataFrame:
+    """One group's ``GROUPED_MODEL_SCHEMA`` rows."""
+    rows = encode(model.blocks()).assign(loglik=loglik, n_seqs=n_seqs)
+    rows.insert(0, "group", group)
+    return rows
+
+
+def _null_group() -> ValueError:
+    return ValueError("null group key: every sequence needs a group to train under")
+
+
 def fit_grouped(
     sequences_with_group: DataFrame,
     n_hidden: int,
@@ -45,7 +60,8 @@ def fit_grouped(
     Every group starts from the same ``HMM.random(n_hidden, n_observed,
     seed)`` init, so results are deterministic and comparable across groups.
     Output: tidy model rows (group, kind, i, j, weight) plus each group's
-    final total log-likelihood and sequence count on every row.
+    final total log-likelihood and sequence count on every row. A null
+    group raises ``ValueError`` in its task.
     """
     init = HMM.random(n_hidden, n_observed, seed=seed)
     pi0, A0, B0 = init.pi.copy(), init.A.copy(), init.B.copy()
@@ -53,7 +69,8 @@ def fit_grouped(
     def train(pdf: pd.DataFrame) -> pd.DataFrame:
         from baum_welch_spark.hmm.kernel import batched_baum_welch
 
-        group = str(pdf["group"].iloc[0])
+        if pdf["group"].isna().iloc[0]:
+            raise _null_group()
         # fixed accumulation order: rows reach the task in partition-
         # dependent order, and float count-summation order would otherwise
         # leak ulp differences into the trained model (the batched kernel's
@@ -64,8 +81,8 @@ def fit_grouped(
         model, trace = batched_baum_welch(
             HMM(pi=pi0.copy(), A=A0.copy(), B=B0.copy()), seqs, max_iter=max_iter
         )
-        return encode(model.blocks(), group=group).assign(
-            loglik=trace[-1] if trace else float("nan"), n_seqs=len(seqs)
+        return _group_rows(
+            str(pdf["group"].iloc[0]), model, trace[-1] if trace else float("nan"), len(seqs)
         )
 
     return (
@@ -91,38 +108,34 @@ def fit_grouped_distributed(
     runs sequential EM there: parallelism = group count, wall = the largest
     group. That is right for many small groups, and exactly wrong when a
     few groups hold most of the data (per-domain models over a 100 TB
-    corpus with 10 domains: 10 tasks do all the work). This variant keeps
-    the single-model ``fit`` posture — per iteration ONE job over ALL
-    groups' sequences (parallelism = partitions, wherever the data sits),
-    an in-UDF map-side combine per (batch, group), a
-    groupBy(group, kind, i, j) count shuffle that is model×groups-sized,
-    and a driver M-step per group on the collected tiny counts. The
-    single-model trainers (``em.run_em``) skip that shuffle and sum each
-    partition's stripes on the driver; here the unsummed frame is
-    partitions × groups × model rows, so the shuffle (``em.sum_stripes``)
-    stays and the driver receives groups × model rows. Converged
-    groups freeze out of later iterations (their sequences are filtered
-    before the E-step, so finished groups cost nothing).
+    corpus with 10 domains: 10 tasks do all the work). Here the groups are
+    the keys of the one EM loop (``em.run_em``): per iteration ONE job over
+    ALL groups' sequences (parallelism = partitions, wherever the data
+    sits), each sequence's E-step under its own group's model with an
+    in-UDF combine per (partition, group), no shuffle, and a driver M-step
+    per group. A converged group leaves the broadcast, so its sequences
+    are skipped in the E-step. The group inventory (names and sequence
+    counts) is one collect before the loop; a null group raises
+    ``ValueError`` there.
 
     Same init contract as fit_grouped (every group starts from
     ``HMM.random(n_hidden, n_observed, seed)``); per-group results match
     fit_grouped to float-summation order (pinned at 1e-8 in
     tests/test_grouped.py — the grouped analogue of the fit-vs-sequential
-    pin). Driver memory is O(groups × N(N+M)): fine for the per-domain /
-    per-segment cardinalities this targets; for millions of tiny groups use
-    fit_grouped.
+    pin). Driver memory is O(groups × N(N+M)), and an iteration collects
+    partitions × groups × model rows (``em.run_em``): fine for the
+    per-domain / per-segment cardinalities this targets; for millions of
+    tiny groups use fit_grouped.
 
     Output: the same tidy GROUPED_MODEL_SCHEMA rows as fit_grouped.
     """
-    from baum_welch_spark.hmm.em import KIND_LOGLIK, block_shapes, cached, decode
-    from baum_welch_spark.hmm.fit import expected_counts_grouped
-    from baum_welch_spark.hmm.kernel import m_step
+    from baum_welch_spark.hmm.em import cached
+    from baum_welch_spark.hmm.fit import grouped_stripes, run_discrete_em
 
     init = HMM.random(n_hidden, n_observed, seed=seed)
-    shapes = {**block_shapes(init.blocks()), KIND_LOGLIK: (1,)}
-    # cast the group key to string up front: the broadcast model dict is
-    # keyed by str, and a non-string group column would otherwise miss the
-    # lookup inside the E-step UDF and silently drop the group
+    # cast the group key to string up front: the broadcast models are keyed
+    # by str, and a non-string group column would otherwise miss the lookup
+    # inside the E-step UDF and silently drop the group
     with cached(
         sequences_with_group.select(
             F.col("group").cast("string").alias("group"), "seq_id", "obs"
@@ -132,47 +145,19 @@ def fit_grouped_distributed(
         # collect (the trainer's output is per-group models, so group count
         # bounds driver memory by definition)
         meta = data.groupBy("group").agg(F.count(F.lit(1)).alias("n_seqs")).collect()
-        models: dict[str, HMM] = {str(r.group): init for r in meta}
-        n_seqs = {str(r.group): int(r.n_seqs) for r in meta}
-        last_ll: dict[str, float] = {}
-        active = set(models)
-        sc = spark.sparkContext
-        for _ in range(max_iter):
-            if not active:
-                break
-            src = (
-                data
-                if len(active) == len(models)
-                else data.filter(F.col("group").isin(sorted(active)))
-            )
-            bc = sc.broadcast(
-                {g: (models[g].pi, models[g].A, models[g].B) for g in active}
-            )
-            try:
-                rows = expected_counts_grouped(src, bc).collect()
-            finally:
-                bc.unpersist()
-            by_group: dict[str, list] = {}
-            for r in rows:
-                by_group.setdefault(str(r.group), []).append(r)
-            # iterate over ACTIVE groups, not just groups that produced
-            # counts: a group whose sequences are all empty emits nothing,
-            # and sequential EM (fit_grouped) still runs its M-step on zero
-            # counts (-> uniform model, loglik 0.0) — parity demands the
-            # same here
-            for g in sorted(active):
-                counts, last_ll[g] = decode(by_group.get(g, []), shapes)
-                new_model = m_step(*counts.values())
-                delta = models[g].distance(new_model)
-                models[g] = new_model
-                if tol > 0 and delta < tol:
-                    active.discard(g)
-
-    frames = [
-        encode(models[g].blocks(), group=g).assign(
-            loglik=last_ll.get(g, float("nan")), n_seqs=n_seqs[g]
+        n_seqs = {r.group: int(r.n_seqs) for r in meta}
+        if None in n_seqs:
+            raise _null_group()
+        # a group whose sequences are all empty gets zero counts, so its
+        # M-step gives the uniform model with loglik 0.0, as fit_grouped's
+        # sequential EM does
+        fits = run_discrete_em(
+            spark, data, dict.fromkeys(sorted(n_seqs), init), estep=grouped_stripes,
+            max_iter=max_iter, tol=tol,
         )
-        for g in sorted(models)
+    frames = [
+        _group_rows(g, f.model, f.loglik_trace[-1] if f.loglik_trace else float("nan"), n_seqs[g])
+        for g, f in fits.items()
     ]
     return spark.createDataFrame(
         pd.concat(frames, ignore_index=True) if frames else [], schema=GROUPED_MODEL_SCHEMA

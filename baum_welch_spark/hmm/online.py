@@ -4,11 +4,12 @@ reference trains offline only, BaumWelchDriver.java:114-184; algorithm per
 Cappe & Moulines 2009, "On-line expectation-maximization algorithm for
 latent data models", and Liang & Klein 2009's stepwise-EM formulation).
 
-Per micro-batch t the discrete E-step every trainer uses
+Per micro-batch t the discrete E-step every soft trainer uses
 (``fit.e_step_stripes`` — mapInPandas with in-UDF combine, model
-broadcast) produces the batch's per-partition expected counts, collected
-over Arrow and summed with the shared stripe codec (``em.decode``); the
-running sufficient statistics then take a stepwise-decaying interpolation
+broadcast) produces the batch's per-partition expected counts, in the EM
+loop's round trip (``em.e_step``: broadcast, Arrow collect, partition-order
+decode); the running sufficient statistics then take a stepwise-decaying
+interpolation
 
     s  <-  (1 - eta_t) * s + eta_t * (batch_counts / batch_sequences)
     eta_t = (t + 2) ** -alpha          (alpha in (0.5, 1])
@@ -19,11 +20,11 @@ stream this converges to the batch-EM fixed point while touching each
 record once — the training loop a 100 TB/day corpus needs when "cache the
 corpus and iterate" stops being an option.
 
-One update is one step, not a loop, so it does not run on ``em.run_em``:
-one job and one stage over the micro-batch (no shuffle), a model-sized
-Arrow collect, a driver-side re-normalize, one broadcast. State is the
-stats blocks, O(N^2 + N*M) doubles on the driver (checkpoint-friendly: it
-is re-derivable from the written model trail). Nothing batch-sized ever
+One update is one iteration of ``em.run_em`` with one key and a stepwise
+M-step: one job and one stage over the micro-batch (no shuffle), a
+model-sized Arrow collect, a driver-side re-normalize. State is the stats
+blocks, O(N^2 + N*M) doubles on the driver (checkpoint-friendly: it is
+re-derivable from the written model trail). Nothing batch-sized ever
 reaches the driver.
 """
 
@@ -35,8 +36,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 
-from baum_welch_spark.hmm.em import KIND_LOGLIK, block_shapes, decode
-from baum_welch_spark.hmm.fit import e_step_stripes
+from baum_welch_spark.hmm.em import SOLE_KEY, e_step
+from baum_welch_spark.hmm.fit import _count_shapes, _triple, e_step_stripes
 from baum_welch_spark.hmm.kernel import m_step
 from baum_welch_spark.hmm.model import HMM, KIND_INITIAL
 
@@ -53,13 +54,9 @@ class OnlineEM:
     loglik_trace: list[float] = field(default_factory=list)
 
     def update(self, spark: SparkSession, batch: DataFrame) -> HMM:
-        sc = spark.sparkContext
-        bc = sc.broadcast((self.model.pi, self.model.A, self.model.B))
-        try:
-            stripes = e_step_stripes(batch, bc).toArrow()
-        finally:
-            bc.unpersist()
-        counts, ll = decode(stripes, {**block_shapes(self.model.blocks()), KIND_LOGLIK: (1,)})
+        counts, ll = e_step(
+            spark, batch, {SOLE_KEY: self.model}, e_step_stripes, _triple, _count_shapes
+        )[SOLE_KEY]
         n_seqs = float(counts[KIND_INITIAL].sum())  # every sequence adds exactly 1 to pi
         if n_seqs == 0:
             return self.model  # empty micro-batch: state unchanged

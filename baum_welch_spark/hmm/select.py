@@ -16,11 +16,12 @@ with T_total the total observation count. Smallest BIC wins (BIC's ln T
 penalty is consistent for order selection; AIC is reported for the
 overfit-tolerant reader).
 
-Spark shape: ONE persist of the sequence corpus shared across every
-candidate's EM loop (the fit_restarts cache discipline — each fit reuses
-the resident frame, so k candidates cost k EM loops over one cached scan
-set, not k re-reads), and T_total is one aggregation. Everything that
-leaves the cluster is model-sized.
+Spark shape: the candidates are the keys of ONE EM loop (``em.run_em``,
+as in ``fit.fit_restarts``): each iteration is one E-step job in which
+every Arrow batch runs under every candidate's model (the block shapes
+differ per key), over a corpus persisted once; T_total is one aggregation.
+Each candidate's model and trace are bit for bit those of a standalone
+``fit`` from its init. Everything that leaves the cluster is model-sized.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from baum_welch_spark.hmm.em import FitResult, cached
-from baum_welch_spark.hmm.fit import fit_many
+from baum_welch_spark.hmm.fit import run_discrete_em
 from baum_welch_spark.hmm.model import HMM
 
 
@@ -54,10 +55,13 @@ def select_n_hidden(
 
     Returns (scores DataFrame, {n_hidden: FitResult}). The scores frame has
     one row per candidate: (n_hidden, n_params, loglik, bic, aic, is_best)
-    with is_best marking the BIC argmin (first-min tiebreak).
+    with is_best marking the BIC argmin (first-min tiebreak). Candidates
+    must be unique: each is one key of the EM loop.
     """
     if not candidates:
         raise ValueError("select_n_hidden: no candidates")
+    if len(set(candidates)) != len(candidates):
+        raise ValueError(f"select_n_hidden: duplicate candidates in {tuple(candidates)}")
     with cached(sequences) as data:
         t_total = data.select(F.sum(F.size("obs")).alias("t")).collect()[0].t or 0
         if t_total == 0:
@@ -65,8 +69,11 @@ def select_n_hidden(
                 "select_n_hidden: corpus has zero observations (empty frame "
                 "or all-empty obs arrays) — BIC's ln(T) term is undefined"
             )
-        inits = [HMM.random(n, n_observed, seed=seed) for n in candidates]
-        fits = dict(zip(candidates, fit_many(spark, data, inits, max_iter=max_iter, tol=tol)))
+        keyed = run_discrete_em(
+            spark, data, {str(n): HMM.random(n, n_observed, seed=seed) for n in candidates},
+            max_iter=max_iter, tol=tol,
+        )
+    fits = {n: keyed[str(n)] for n in candidates}
     rows = []
     for n in candidates:
         res = fits[n]

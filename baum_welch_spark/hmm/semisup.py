@@ -22,14 +22,12 @@ iteration (EM monotonicity holds: labeled terms are exact, unlabeled terms
 get the usual Q-function bound).
 
 Runs on the shared EM loop (``em.run_em`` via ``fit.run_discrete_em``):
-the only trainer-specific piece is the E-step UDF below, which splits each
-Arrow batch into its labeled and unlabeled rows and emits one pooled count
-block.
+the only trainer-specific pieces are the E-step's batch split into labeled
+and unlabeled rows and its pooled counts (``em.keyed_stripes`` runs them
+and emits one count block per partition).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -37,8 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from baum_welch_spark.hmm.em import COUNTS_SCHEMA, FitResult, encode
-from baum_welch_spark.hmm.fit import run_discrete_em
+from baum_welch_spark.hmm.em import SOLE_KEY, FitResult, keyed_stripes
+from baum_welch_spark.hmm.fit import _zero_counts, run_discrete_em
 from baum_welch_spark.hmm.kernel import check_symbols, e_step_counts_batch
 from baum_welch_spark.hmm.model import HMM
 
@@ -62,50 +60,48 @@ def _labeled_counts(
     return ll
 
 
-def _semisup_udf(bc_model):
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pi, A, B = bc_model.value
+def _split(pdf: pd.DataFrame):
+    """An Arrow batch's non-empty sequences split into labeled (obs, states)
+    and unlabeled obs; None when every sequence is empty."""
+    lab_o, lab_s, unlab = [], [], []
+    for obs, st in zip(pdf["obs"], pdf["states"]):
+        if obs is None or len(obs) == 0:
+            continue
+        o = np.asarray(obs, dtype=np.int64)
+        if st is not None and len(st) == len(o):
+            lab_o.append(o)
+            lab_s.append(np.asarray(st, dtype=np.int64))
+        else:
+            unlab.append(o)
+    return (lab_o, lab_s, unlab) if lab_o or unlab else None
+
+
+def _mixed_counts(payload, data, c: dict[str, np.ndarray], ll: float) -> float:
+    """One batch's pooled counts under a (pi, A, B) payload: hard counts for
+    the labeled rows, expected counts for the unlabeled ones."""
+    pi, A, B = payload
+    lab_o, lab_s, unlab = data
+    cpi, cA, cB = c.values()
+    if lab_o:
         n = A.shape[0]
+        for s in lab_s:
+            # fail fast on out-of-range labels (mirrors fit()'s null-weight
+            # fail-fast): a negative index — e.g. -1 used as an 'unknown'
+            # sentinel by an annotation source — would silently wrap via
+            # numpy indexing and corrupt the last state's counts; >= n would
+            # crash the executor with an opaque IndexError
+            if s.size and (s.min() < 0 or s.max() >= n):
+                raise ValueError(
+                    f"labeled state out of range [0, {n}): "
+                    f"min={int(s.min())} max={int(s.max())} — use "
+                    "NULL (not a sentinel value) for unlabeled sequences"
+                )
         with np.errstate(divide="ignore"):
             log_pi, log_A, log_B = np.log(pi), np.log(A), np.log(B)
-        c = HMM(*map(np.zeros_like, (pi, A, B)))  # counts in the model's block layout
-        ll = 0.0
-        saw = False
-        for pdf in batches:
-            lab_o, lab_s, unlab = [], [], []
-            for obs, st in zip(pdf["obs"], pdf["states"]):
-                if obs is None or len(obs) == 0:
-                    continue
-                o = np.asarray(obs, dtype=np.int64)
-                if st is not None and len(st) == len(o):
-                    s = np.asarray(st, dtype=np.int64)
-                    # fail fast on out-of-range labels (mirrors fit()'s
-                    # null-weight fail-fast): a negative index — e.g. -1
-                    # used as an 'unknown' sentinel by an annotation
-                    # source — would silently wrap via numpy indexing and
-                    # corrupt the last state's counts; >= n would crash
-                    # the executor with an opaque IndexError
-                    if s.size and (s.min() < 0 or s.max() >= n):
-                        raise ValueError(
-                            f"labeled state out of range [0, {n}): "
-                            f"min={int(s.min())} max={int(s.max())} — use "
-                            "NULL (not a sentinel value) for unlabeled "
-                            "sequences"
-                        )
-                    lab_o.append(o)
-                    lab_s.append(s)
-                else:
-                    unlab.append(o)
-            if lab_o:
-                saw = True
-                ll += _labeled_counts(log_pi, log_A, log_B, lab_o, lab_s, c.pi, c.A, c.B)
-            if unlab:
-                saw = True
-                ll += e_step_counts_batch(pi, A, B, unlab, c.pi, c.A, c.B)
-        if saw:
-            yield encode(c.blocks(), ll)
-
-    return compute
+        ll += _labeled_counts(log_pi, log_A, log_B, lab_o, lab_s, cpi, cA, cB)
+    if unlab:
+        ll += e_step_counts_batch(pi, A, B, unlab, cpi, cA, cB)
+    return ll
 
 
 def fit_semisupervised(
@@ -122,10 +118,10 @@ def fit_semisupervised(
     length-mismatched, treated as unlabeled) for EM rows. The loglik trace
     is the mixed objective."""
     return run_discrete_em(
-        spark, sequences, init,
-        estep=lambda data, bc: data.select(
-            "obs", F.col(states_col).alias("states")
-        ).mapInPandas(_semisup_udf(bc), schema=COUNTS_SCHEMA),
-        payload=lambda m: (m.pi, m.A, m.B),
+        spark, sequences, {SOLE_KEY: init},
+        estep=lambda data, bc: keyed_stripes(
+            data.select("obs", F.col(states_col).alias("states")),
+            bc, _split, _zero_counts, _mixed_counts,
+        ),
         max_iter=max_iter, tol=tol,
-    )
+    )[SOLE_KEY]

@@ -10,9 +10,9 @@ re-estimates from the resulting HARD counts:
     B_ik  = #(path visits i while emitting symbol k)      / #(i in path)
 
 The distributed trainer runs on the shared EM loop (``em.run_em`` via
-``fit.run_discrete_em``); what is specific here is the hard-count UDF and
-its broadcast payload, the log-model. The Viterbi joint log-likelihood
-(sum of best-path scores) is the loglik trace.
+``fit.run_discrete_em``); what is specific here is the per-batch hard
+counts and their broadcast payload, the log-model. The Viterbi joint
+log-likelihood (sum of best-path scores) is the loglik trace.
 
 It converges in far fewer, far cheaper iterations than soft EM (each pass is
 a single max-product DP, no backward sweep / xi accumulation) at the cost of
@@ -28,17 +28,14 @@ a sequential NumPy oracle to 1e-12.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from baum_welch_spark.hmm.decode import _viterbi_one, viterbi_ctes
-from baum_welch_spark.hmm.em import COUNTS_SCHEMA, FitResult, encode, sum_stripes
-from baum_welch_spark.hmm.fit import normalize_counts, run_discrete_em
+from baum_welch_spark.hmm.em import SOLE_KEY, FitResult, keyed_stripes, sum_stripes
+from baum_welch_spark.hmm.fit import _sequences, _zero_counts, normalize_counts, run_discrete_em
 from baum_welch_spark.hmm.kernel import m_step, symbol_emit, viterbi_paths
 from baum_welch_spark.hmm.model import (
     HMM,
@@ -48,47 +45,33 @@ from baum_welch_spark.hmm.model import (
 )
 
 
-def hard_count_udf(bc_log_model):
-    """mapInPandas function for one hard-EM pass: Viterbi-decode each Arrow
-    batch with one ``kernel.viterbi_paths`` call, accumulate path counts
-    into local NumPy arrays, and emit ONE stripe block per partition
-    (``em.encode``) with the Viterbi joint log-likelihood as its loglik row
-    (the in-UDF map-side combine, same shape as fit.e_step_udf).
-
-    Counts are integers, so their summation order is immaterial; the
-    loglik is accumulated in sequence order, like the sequential loop."""
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        log_pi, log_A, log_B = bc_log_model.value
-        m = log_B.shape[1]
-        log_emit = symbol_emit(log_B)
-        c = HMM(*map(np.zeros_like, (log_pi, log_A, log_B)))  # counts in the model's block layout
-        ll = 0.0
-        saw_data = False
-        for pdf in batches:
-            obs_list = [o for o in pdf["obs"] if o is not None and len(o) > 0]
-            if not obs_list:
-                continue
-            saw_data = True
-            paths, scores = viterbi_paths(log_pi, log_A, log_emit, obs_list, m)
-            for score in scores:
-                ll += score
-            np.add.at(c.pi, [p[0] for p in paths], 1.0)
-            src = np.concatenate([p[:-1] for p in paths])
-            dst = np.concatenate([p[1:] for p in paths])
-            np.add.at(c.A, (src, dst), 1.0)
-            np.add.at(c.B, (np.concatenate(paths), np.concatenate(obs_list)), 1.0)
-        if saw_data:
-            yield encode(c.blocks(), ll)
-
-    return compute
+def _hard_counts(log_model, data, c: dict[str, np.ndarray], ll: float) -> float:
+    """One hard-EM batch: Viterbi-decode it with one ``kernel.viterbi_paths``
+    call, add its path counts into ``c`` and the Viterbi joint
+    log-likelihood to ``ll``. Counts are integers, so their summation order
+    is immaterial; the loglik is accumulated in sequence order, like the
+    sequential loop."""
+    log_pi, log_A, log_B = log_model
+    obs_list, _ = data
+    cpi, cA, cB = c.values()
+    paths, scores = viterbi_paths(log_pi, log_A, symbol_emit(log_B), obs_list, log_B.shape[1])
+    for score in scores:
+        ll += score
+    np.add.at(cpi, [p[0] for p in paths], 1.0)
+    src = np.concatenate([p[:-1] for p in paths])
+    dst = np.concatenate([p[1:] for p in paths])
+    np.add.at(cA, (src, dst), 1.0)
+    np.add.at(cB, (np.concatenate(paths), np.concatenate(obs_list)), 1.0)
+    return ll
 
 
-def hard_count_stripes(sequences: DataFrame, bc_log_model) -> DataFrame:
-    """One hard-EM pass over the corpus -> the unsummed per-partition
-    (kind, i, j, weight) stripes, including the loglik side-channel rows."""
-    return sequences.select("obs").mapInPandas(
-        hard_count_udf(bc_log_model), schema=COUNTS_SCHEMA
+def hard_count_stripes(sequences: DataFrame, bc_log_models) -> DataFrame:
+    """One hard-EM pass over the corpus under every broadcast ``{key: log
+    model}`` -> the unsummed per-partition keyed stripes
+    (``em.keyed_stripes``: one count block and loglik row per partition and
+    key, the same in-UDF map-side combine as ``fit.e_step_stripes``)."""
+    return keyed_stripes(
+        sequences.select("obs"), bc_log_models, _sequences, _zero_counts, _hard_counts
     )
 
 
@@ -111,7 +94,7 @@ def viterbi_reestimate(
     loop applies the uniform fallback driver-side (kernel.m_step).
     Integer-count / integer-count division is one exact IEEE op on both
     engines, so the oracle needs no rounding."""
-    bc = spark.sparkContext.broadcast(_log_model(model))
+    bc = spark.sparkContext.broadcast({SOLE_KEY: _log_model(model)})
     counts = sum_stripes(hard_count_stripes(sequences, bc))
     return normalize_counts(counts.filter(F.col("weight") > 0))
 
@@ -165,9 +148,9 @@ def fit_viterbi(
     # hard EM's loglik is not monotone in general; convergence is on the
     # model-space distance, like the reference's D4 test
     return run_discrete_em(
-        spark, sequences, init, estep=hard_count_stripes, payload=_log_model,
+        spark, sequences, {SOLE_KEY: init}, estep=hard_count_stripes, payload=_log_model,
         max_iter=max_iter, tol=tol, topology_mask=topology_mask,
-    )
+    )[SOLE_KEY]
 
 
 def sequential_viterbi_train(

@@ -26,8 +26,8 @@ def _shapes(n_hidden, n_observed):
     return {**block_shapes(HMM.uniform(n_hidden, n_observed).blocks()), KIND_LOGLIK: (1,)}
 
 
-def _roundtrip(blocks, loglik=None, group=None):
-    frame = encode(blocks, loglik, group=group)
+def _roundtrip(blocks, loglik=None, key=None):
+    frame = encode(blocks, loglik, key=key)
     shapes = {**block_shapes(blocks), KIND_LOGLIK: (1,)}
     return frame, decode(frame.to_dict("records"), shapes)
 
@@ -78,11 +78,11 @@ def test_codec_roundtrip_grouped_blocks_bit_exact():
         for g in ("seg0", "seg1", "seg2")
     }
     frame = pd.concat(
-        [encode(b, ll, group=g) for g, (b, ll) in per_group.items()], ignore_index=True
+        [encode(b, ll, key=g) for g, (b, ll) in per_group.items()], ignore_index=True
     )
-    assert list(frame.columns) == ["group", "kind", "i", "j", "weight"]
+    assert list(frame.columns) == ["key", "kind", "i", "j", "weight"]
     for g, (blocks, ll) in per_group.items():
-        rows = frame[frame.group == g].to_dict("records")
+        rows = frame[frame.key == g].to_dict("records")
         got, got_ll = decode(rows, {**block_shapes(blocks), KIND_LOGLIK: (1,)})
         assert got_ll == ll
         for k, v in blocks.items():
@@ -180,6 +180,30 @@ def test_model_readers_reject_a_loglik_row(spark, tmp_path):
         PythonException, match="ValueError: decode: unexpected stripe kind 'loglik'"
     ):
         decode_grouped(seqs, models).collect()
+
+
+def test_e_step_decodes_per_key_and_rejects_a_key_it_did_not_broadcast(spark):
+    """em.e_step sums each key's rows apart (a key without rows reads zero
+    blocks and loglik 0) and raises on stripes of a key it did not
+    broadcast."""
+    from baum_welch_spark.hmm.em import STRIPE_SCHEMA, e_step
+
+    rows = [("a", "initial", 0, 1, 2.0), ("a", "loglik", 0, 0, -1.5),
+            ("a", "initial", 0, 1, 0.5), ("b", "initial", 0, 0, 4.0)]
+
+    def estep(data, bc):
+        return spark.createDataFrame(rows, STRIPE_SCHEMA)
+
+    def shapes(model):
+        return {"initial": (2,)}
+
+    got = e_step(spark, None, {"a": 0, "b": 0, "c": 0}, estep, lambda m: m, shapes)
+    assert list(got) == ["a", "b", "c"]
+    assert got["a"][0]["initial"].tolist() == [0.0, 2.5] and got["a"][1] == -1.5
+    assert got["b"][0]["initial"].tolist() == [4.0, 0.0] and got["b"][1] == 0.0
+    assert got["c"][0]["initial"].tolist() == [0.0, 0.0] and got["c"][1] == 0.0
+    with pytest.raises(ValueError, match=r"unknown keys \['b'\]"):
+        e_step(spark, None, {"a": 0}, estep, lambda m: m, shapes)
 
 
 def test_decode_allows_non_finite_loglik():
@@ -345,13 +369,16 @@ def test_fit_is_deterministic_across_partitions(spark):
 
 # Jobs each trainer on the shared loop launches for max_iter=3 on a cached,
 # materialized corpus: one per iteration, the E-step's Arrow collect of its
-# unsummed per-partition stripes (the driver sums them; there is no shuffle
-# stage). More means a lost cache or an extra action per iteration.
+# unsummed per-partition keyed stripes (the driver sums them; there is no
+# shuffle stage), however many keys the loop trains. More means a lost
+# cache or an extra action per iteration.
 JOBS_3_ITERS = 3
-# fit_grouped_distributed keeps the Catalyst stripe sum (its driver volume
-# would grow with partitions x groups), so it keeps its count: 3 jobs for
-# the group inventory, then a shuffle-map job and a collect per iteration.
-GROUPED_JOBS_3_ITERS = 9
+# select_n_hidden adds its T_total aggregate before the loop: a shuffle-map
+# job and a result job.
+SELECT_JOBS_3_ITERS = 5
+# fit_grouped_distributed: 3 jobs for the group inventory, then 1 per
+# iteration.
+GROUPED_JOBS_3_ITERS = 6
 
 
 def _jobs(spark, fn) -> int:
@@ -368,9 +395,11 @@ def _jobs(spark, fn) -> int:
 
 
 def test_trainers_launch_no_more_jobs_per_iteration(spark):
+    from baum_welch_spark.hmm.fit import fit_restarts
     from baum_welch_spark.hmm.gaussian import GaussianHMM, build_value_sequences, fit_gaussian
     from baum_welch_spark.hmm.grouped import fit_grouped_distributed
     from baum_welch_spark.hmm.online import OnlineEM
+    from baum_welch_spark.hmm.select import select_n_hidden
     from baum_welch_spark.hmm.semisup import fit_semisupervised
     from baum_welch_spark.hmm.viterbi_train import fit_viterbi
 
@@ -395,7 +424,14 @@ def test_trainers_launch_no_more_jobs_per_iteration(spark):
             "fit_gaussian": _jobs(
                 spark, lambda: fit_gaussian(spark, values, ginit, max_iter=3)
             ),
+            # K = 3 keys, still one job per iteration
+            "fit_restarts": _jobs(
+                spark, lambda: fit_restarts(spark, seqs, 3, 5, n_restarts=3, max_iter=3)
+            ),
         }
+        select = _jobs(
+            spark, lambda: select_n_hidden(spark, seqs, 5, candidates=(2, 3, 4), max_iter=3)
+        )
         online = _jobs(spark, lambda: OnlineEM(model=init).update(spark, seqs))
         grouped = _jobs(
             spark,
@@ -408,6 +444,7 @@ def test_trainers_launch_no_more_jobs_per_iteration(spark):
         for f in frames:
             f.unpersist()
     assert got == dict.fromkeys(got, JOBS_3_ITERS), got
+    assert select == SELECT_JOBS_3_ITERS
     assert online == 1
     assert grouped == GROUPED_JOBS_3_ITERS
 

@@ -214,3 +214,25 @@ def test_distributed_grouped_fit_edge_parity(spark):
     )
     out = fit_grouped_distributed(spark, df_int, 2, 2, max_iter=2).collect()
     assert {r.group for r in out} == {"7", "9"}
+
+
+def test_grouped_trainers_reject_a_null_group(spark):
+    """A null group names no model: both trainers raise instead of training
+    it as the group 'None' (fit_grouped) or dropping its rows from the
+    E-step and emitting a uniform model for it (fit_grouped_distributed);
+    the grouped re-estimation raises too."""
+    from pyspark.errors import PythonException
+
+    from baum_welch_spark.hmm.fit import em_reestimate_grouped
+    from baum_welch_spark.hmm.grouped import fit_grouped_distributed
+
+    df = spark.createDataFrame(
+        [("g0", 1, [0, 1, 0]), ("g0", 2, [1, 1]), (None, 3, [1, 0, 0]), (None, 4, [0, 0])],
+        "group string, seq_id long, obs array<int>",
+    )
+    with pytest.raises(ValueError, match="null group key"):
+        fit_grouped_distributed(spark, df, 2, 2, max_iter=2)
+    with pytest.raises(PythonException, match="ValueError: null group key"):
+        fit_grouped(df, 2, 2, max_iter=2).collect()
+    with pytest.raises(PythonException, match="ValueError: null 'group' key"):
+        em_reestimate_grouped(spark, df, HMM.random(2, 2, seed=1)).collect()

@@ -39,19 +39,16 @@ ALLOWED = {
     "operators/pq.py": {"collect": 5, "toPandas": 0},
     "operators/sequences.py": {"collect": 1, "toPandas": 0},
     "hmm/model.py": {"collect": 1, "toPandas": 0},
-    # the one EM loop's per-iteration Arrow collect of the unsummed stripes
-    # (partitions x (N^2 + N*M + N + 1) rows; every trainer — fit,
-    # fit_semisupervised, fit_viterbi, fit_gaussian — runs on it) +
-    # lap_trace's per-lap chained-model collect (em_trace and ghmm_em_trace,
-    # r12/r13 EM-loop pins)
+    # the one EM loop's per-iteration Arrow collect of the unsummed keyed
+    # stripes (partitions x keys x (N^2 + N*M + N + 1) rows; every trainer —
+    # fit, fit_restarts, select_n_hidden, fit_grouped_distributed,
+    # fit_semisupervised, fit_viterbi, fit_gaussian — and OnlineEM.update
+    # run on it) + lap_trace's per-lap chained-model collect (em_trace and
+    # ghmm_em_trace, r12/r13 EM-loop pins)
     "hmm/em.py": {"collect": 1, "toPandas": 0, "toArrow": 1},
-    # distributed grouped EM: one group-cardinality meta collect + the
-    # per-iteration (groups x model)-sized count-stripe collect — the
-    # grouped analogue of fit.py's site (groups bound driver memory by
-    # the trainer's own output contract)
-    "hmm/grouped.py": {"collect": 2, "toPandas": 0},
-    # online EM: the same model-sized stripe collect, one step per batch
-    "hmm/online.py": {"collect": 0, "toPandas": 0, "toArrow": 1},
+    # distributed grouped EM: one group-cardinality meta collect (groups
+    # bound driver memory by the trainer's own output contract)
+    "hmm/grouped.py": {"collect": 1, "toPandas": 0},
     # Gaussian-emission EM: the model-codec read (tidy model rows) +
     # ghmm_loglik_trace's per-lap chained-model collect (r13 EM-loop pin);
     # its fit and ghmm_em_trace run on hmm/em.py

@@ -1,5 +1,6 @@
 """HMM order selection (BIC/AIC sweep): arithmetic pinned against the
-per-candidate fits, argmin marking, and cache discipline."""
+per-candidate fits, argmin marking, unique candidates, and each keyed
+candidate bit for bit a standalone fit."""
 
 import numpy as np
 import pytest
@@ -37,14 +38,24 @@ def test_select_scores_match_standalone_fits(spark, corpus):
     for n in (2, 3):
         solo = fit(spark, seqs, HMM.random(n, n_obs, seed=42), max_iter=2)
         ll = solo.loglik_trace[-1]
-        assert abs(fits[n].loglik_trace[-1] - ll) < 1e-9  # shared-cache fit identical
+        # each candidate is one key of the shared loop: bit for bit the
+        # standalone fit from the same init
+        assert np.array(fits[n].loglik_trace).tobytes() == np.array(solo.loglik_trace).tobytes()
+        for attr in ("pi", "A", "B"):
+            assert getattr(fits[n].model, attr).tobytes() == getattr(solo.model, attr).tobytes()
         p = free_params(n, n_obs)
-        assert abs(rows[n].loglik - ll) < 1e-9
+        assert rows[n].loglik == ll
         assert abs(rows[n].bic - (p * np.log(t_total) - 2 * ll)) < 1e-6
         assert abs(rows[n].aic - (2 * p - 2 * ll)) < 1e-6
     best = [r for r in rows.values() if r.is_best]
     assert len(best) == 1
     assert best[0].bic == min(r.bic for r in rows.values())
+
+
+def test_select_rejects_duplicate_candidates(spark, corpus):
+    seqs, n_obs = corpus
+    with pytest.raises(ValueError, match="duplicate candidates"):
+        select_n_hidden(spark, seqs, n_obs, candidates=(2, 2, 3), max_iter=1)
 
 
 def test_select_face_shape(spark):
